@@ -103,13 +103,19 @@ def get_spark(
     # unpartitioned-window audit in tests/test_plans.py pins an
     # explicit per-key allowlist, so an UNPLANNED global window fails
     # pytest rather than scrolling past in a log tail.
+    # ResolveWriteToStream warns "spark.sql.adaptive.enabled is not
+    # supported in streaming" on EVERY streaming query start (twice
+    # per sync tick) — a fixed fact of this session's conf, not news.
     try:
         jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        for logger in (
             "org.apache.spark.sql.execution.window.WindowExec",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
-    except Exception:  # non-log4j2 logging backends: keep the warning
+            "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        ):
+            jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+                logger, jvm.org.apache.logging.log4j.Level.ERROR
+            )
+    except Exception:  # non-log4j2 logging backends: keep the warnings
         pass
     # extraJavaOptions only applies when THIS call launches the JVM
     # (client-mode conf is forwarded pre-launch by pyspark's

@@ -59,36 +59,57 @@ def overwrite_by_key_into(
 ) -> None:
     """K3 (delete-then-insert per key) against parquet storage.
 
-    1. bucket-prune: only buckets containing incoming keys are read
-       back (partition filter on ``key_bucket``);
-    2. survivors: rows of those buckets whose key is NOT incoming
-       (broadcast anti-join against the incoming key set);
-    3. dynamic partition overwrite writes incoming ∪ survivors —
-       rewriting exactly the touched buckets, no others.
+    1. the bucketed incoming frame is persisted once, and one collect
+       of its distinct (key, bucket) pairs yields both the touched
+       buckets and the incoming key list (an empty frame is a no-op;
+       the list is batch-sized, as a broadcast key set would be);
+    2. bucket-prune: only the touched ``key_bucket=`` directories that
+       exist are read back (``basePath`` plus per-bucket paths,
+       existence checked on the Hadoop FileSystem);
+    3. survivors: rows of those buckets whose key is NOT among the
+       collected keys — a null-safe NOT IN with left-anti semantics:
+       target rows with a NULL key survive, NULL incoming keys match
+       nothing;
+    4. dynamic partition overwrite writes incoming ∪ survivors —
+       rewriting exactly the touched buckets, no others — and the
+       persisted frame is released.
 
     The result equals ``operators.sync.overwrite_by_key`` applied to
     the stored table (pinned in tests), but the I/O is proportional
     to the touched buckets, not the table.
     """
     spark = incoming.sparkSession
-    inc = incoming.withColumn(BUCKET_COL, bucket_of(key_col, n_buckets))
-    touched = [
-        r[BUCKET_COL] for r in inc.select(BUCKET_COL).distinct().collect()
-    ]
-    existing = read_keyed_target(spark, path).where(
-        F.col(BUCKET_COL).isin(touched)
-    )
-    survivors = existing.join(
-        F.broadcast(inc.select(key_col).distinct()), key_col, "left_anti"
-    )
-    out = inc.unionByName(survivors)
-    (
-        out.repartition(BUCKET_COL)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
-    )
+    inc = incoming.withColumn(BUCKET_COL, bucket_of(key_col, n_buckets)).persist()
+    try:
+        pairs = inc.select(key_col, BUCKET_COL).distinct().collect()
+        if not pairs:
+            return
+        keys = [k for k, _ in pairs if k is not None]
+        parts = _existing_buckets(spark, path, sorted({b for _, b in pairs}))
+        out = inc
+        if parts:
+            existing = spark.read.option("basePath", path).parquet(*parts)
+            incoming_key = F.coalesce(F.col(key_col).isin(keys), F.lit(False))
+            out = inc.unionByName(existing.where(~incoming_key))
+        (
+            out.repartition(BUCKET_COL)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .parquet(path)
+        )
+    finally:
+        inc.unpersist()
+
+
+def _existing_buckets(spark: SparkSession, path: str, buckets) -> list[str]:
+    """the ``key_bucket=`` directories of ``path`` among ``buckets``
+    that exist on storage."""
+    jvm = spark.sparkContext._jvm
+    base = jvm.org.apache.hadoop.fs.Path(path)
+    fs = base.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    dirs = [f"{path}/{BUCKET_COL}={b}" for b in buckets]
+    return [d for d in dirs if fs.exists(jvm.org.apache.hadoop.fs.Path(d))]
 
 
 def upsert_into(

@@ -18,10 +18,14 @@ so a replayed batch converges to the same state — the property the
 reference gets from ``ON DUPLICATE KEY UPDATE``, tested here by
 re-running the stream over the same files.
 
-At 100 TB: the stream carries only (key, table) tuples; the keyed
-re-fetch broadcasts the batch's key set against the source table;
-writes touch O(batch keys / n_buckets) partitions. Nothing in the
-plan grows with target size.
+At 100 TB: the stream carries only (key, table) tuples, and each
+micro-batch is read exactly once — one job collects its valid keys to
+the driver (deduped there, no ``distinct`` shuffle). The key set is
+bounded by the batch, not the table, and a broadcast join would route
+it through the driver anyway. The re-fetch filters the source by that
+literal key list; the sink caches the fetched rows once for its key
+and bucket collect and its write, and writes touch O(batch keys /
+n_buckets) partitions. Nothing in the plan grows with target size.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from rsbsa_etl_spark.streaming.plan_capture import finish
 
 from rsbsa_etl_spark.functions.strings import apply_table_rules
-from rsbsa_etl_spark.operators.scans import keyed_scan_df
+from rsbsa_etl_spark.operators.scans import keyed_scan
 from rsbsa_etl_spark.sources import sinks
 
 CHANGELOG_STREAM_SCHEMA = "log_id bigint, rsbsa_no string, table string"
@@ -57,18 +61,19 @@ def sync_stream(
     """
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        keys = (
+        rows = (
             batch.where(
                 F.col(key_col).isNotNull()
                 & F.col("table").isNotNull()
                 & (F.col("table") == table)
             )
             .select(key_col)
-            .distinct()
+            .collect()
         )
-        if not keys.take(1):  # empty tick — nothing to merge
+        keys = sorted({r[0] for r in rows})
+        if not keys:  # empty tick — nothing to merge
             return
-        fetched = apply_table_rules(keyed_scan_df(source, key_col, keys), table)
+        fetched = apply_table_rules(keyed_scan(source, key_col, keys), table)
         sinks.overwrite_by_key_into(fetched, target_path, key_col, n_buckets)
 
     stream = spark.readStream.schema(CHANGELOG_STREAM_SCHEMA).parquet(changelog_dir)

@@ -25,11 +25,43 @@ def _snapshot_files(path):
     }
 
 
+def _assert_untouched_buckets_kept(before, after):
+    """every untouched bucket keeps its original files byte-for-byte
+    (same path, same mtime); at least one bucket was rewritten."""
+    touched_dirs = {
+        os.path.dirname(p) for p in after if p not in before
+    }
+    untouched = {p: t for p, t in before.items() if os.path.dirname(p) not in touched_dirs}
+    assert untouched, "expected some untouched buckets at 8 buckets"
+    for p, t in untouched.items():
+        assert os.path.exists(p) and os.path.getmtime(p) == t
+    assert touched_dirs, "expected some rewritten buckets"
+
+
+def _stored(spark, path, cols):
+    return sorted(
+        map(tuple, sinks.read_keyed_target(spark, path).select(*cols).collect()),
+        key=repr,
+    )
+
+
+def _merged(target, incoming, key, cols):
+    return sorted(
+        map(tuple, overwrite_by_key(target, incoming, key).select(*cols).collect()),
+        key=repr,
+    )
+
+
+LI_COLS = ("l_orderkey", "l_linenumber", "l_quantity")
+
+
+def _lineitem(spark):
+    return load(spark, SF_DIR, "lineitem").select(*LI_COLS)
+
+
 def test_overwrite_by_key_into_matches_plan_semantics(spark, tmp_path):
     path = str(tmp_path / "target")
-    li = load(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
+    li = _lineitem(spark)
     target = li.where(F.col("l_orderkey") < 400)
     # a handful of keys (CDC-sized batch) so hash-bucketing leaves
     # most of the 8 buckets untouched — the point of the layout
@@ -44,29 +76,100 @@ def test_overwrite_by_key_into_matches_plan_semantics(spark, tmp_path):
     sinks.overwrite_by_key_into(incoming, path, "l_orderkey", N_BUCKETS)
     after = _snapshot_files(path)
 
-    got = sorted(
-        map(
-            tuple,
-            sinks.read_keyed_target(spark, path)
-            .select("l_orderkey", "l_linenumber", "l_quantity")
-            .collect(),
-        )
+    assert _stored(spark, path, LI_COLS) == _merged(
+        target, incoming, "l_orderkey", LI_COLS
     )
-    want = sorted(
-        map(tuple, overwrite_by_key(target, incoming, "l_orderkey").collect())
-    )
-    assert got == want
+    _assert_untouched_buckets_kept(before, after)
 
-    # every untouched bucket keeps its original files byte-for-byte
-    # (same path, same mtime); at least one bucket was rewritten
-    touched_dirs = {
-        os.path.dirname(p) for p in after if p not in before
+
+def test_overwrite_by_key_into_null_keys_follow_left_anti(spark, tmp_path):
+    """NULL keys on both sides: the target's NULL-key rows survive
+    (NULL matches no incoming key) and the incoming NULL-key rows are
+    inserted without deleting anything — exactly the left-anti join
+    of ``operators.sync.overwrite_by_key``."""
+    path = str(tmp_path / "target_nulls")
+    li = _lineitem(spark)
+    null_key = F.lit(None).cast("long").alias("l_orderkey")
+    target = li.where(F.col("l_orderkey") < 400).unionByName(
+        li.where(F.col("l_orderkey") == 3).select(null_key, "l_linenumber", "l_quantity")
+    )
+    incoming = (
+        li.where(F.col("l_orderkey").isin([200, 450]))
+        .unionByName(
+            li.where(F.col("l_orderkey") == 5).select(
+                null_key, "l_linenumber", "l_quantity"
+            )
+        )
+        .withColumn("l_quantity", F.col("l_quantity") + 1000)
+    )
+
+    sinks.write_keyed_target(target, path, "l_orderkey", N_BUCKETS)
+    before = _snapshot_files(path)
+    sinks.overwrite_by_key_into(incoming, path, "l_orderkey", N_BUCKETS)
+    after = _snapshot_files(path)
+
+    got = _stored(spark, path, LI_COLS)
+    assert got == _merged(target, incoming, "l_orderkey", LI_COLS)
+    assert sum(r[0] is None for r in got) == (
+        target.where(F.col("l_orderkey").isNull()).count()
+        + incoming.where(F.col("l_orderkey").isNull()).count()
+    )
+    _assert_untouched_buckets_kept(before, after)
+
+
+def test_overwrite_by_key_into_creates_missing_bucket(spark, tmp_path):
+    """an incoming key whose bucket directory does not exist yet: the
+    read-back skips it and the write creates it."""
+    path = str(tmp_path / "target_sparse")
+    li = _lineitem(spark)
+    target = li.where(F.col("l_orderkey").isin([1, 2]))
+    sinks.write_keyed_target(target, path, "l_orderkey", N_BUCKETS)
+    before = _snapshot_files(path)
+    present = {os.path.basename(os.path.dirname(p)) for p in before}
+
+    buckets = (
+        li.select("l_orderkey", sinks.bucket_of("l_orderkey", N_BUCKETS).alias("b"))
+        .where(F.col("l_orderkey") < 400)
+        .distinct()
+        .collect()
+    )
+    absent = {
+        r.l_orderkey: f"{sinks.BUCKET_COL}={r.b}"
+        for r in buckets
+        if f"{sinks.BUCKET_COL}={r.b}" not in present
     }
-    untouched = {p: t for p, t in before.items() if os.path.dirname(p) not in touched_dirs}
-    assert untouched, "expected some untouched buckets at 8 buckets"
-    for p, t in untouched.items():
-        assert os.path.exists(p) and os.path.getmtime(p) == t
-    assert touched_dirs, "expected some rewritten buckets"
+    new_key = min(absent)
+    new_dir = os.path.join(path, absent[new_key])
+    assert not os.path.exists(new_dir)
+    incoming = li.where(F.col("l_orderkey").isin([1, new_key])).withColumn(
+        "l_quantity", F.col("l_quantity") + 1000
+    )
+
+    sinks.overwrite_by_key_into(incoming, path, "l_orderkey", N_BUCKETS)
+    after = _snapshot_files(path)
+
+    assert os.path.isdir(new_dir)
+    assert _stored(spark, path, LI_COLS) == _merged(
+        target, incoming, "l_orderkey", LI_COLS
+    )
+    _assert_untouched_buckets_kept(before, after)
+
+
+def test_overwrite_by_key_into_empty_incoming_is_a_no_op(spark, tmp_path):
+    path = str(tmp_path / "target_empty")
+    li = _lineitem(spark)
+    target = li.where(F.col("l_orderkey") < 400)
+    incoming = li.where(F.lit(False))
+    sinks.write_keyed_target(target, path, "l_orderkey", N_BUCKETS)
+    before = _snapshot_files(path)
+    sinks.overwrite_by_key_into(incoming, path, "l_orderkey", N_BUCKETS)
+    after = _snapshot_files(path)
+
+    assert _stored(spark, path, LI_COLS) == _merged(
+        target, incoming, "l_orderkey", LI_COLS
+    )
+    # no bucket rewritten: every file keeps its path and mtime
+    assert after == before
 
 
 def test_upsert_into_matches_plan_semantics(spark, tmp_path):
