@@ -104,22 +104,6 @@ def _make_cosine_parts():
     return stack, mm
 
 
-def _make_cosine_kernel():
-    """the whole-block form of ``_make_cosine_parts`` — two embedding
-    Series → the full quantized cosine matrix. For callers whose
-    block sizes are bounded by construction (IVF cells ~√n rows,
-    bipartite ingest tiles); the all-pairs tile operators use the
-    parts directly with the chunked sweep."""
-    stack, mm = _make_cosine_parts()
-
-    def series_kernel(L_emb, R_emb):
-        A, na = stack(L_emb)
-        B, nb = stack(R_emb)
-        return mm(A, na, B, nb)
-
-    return series_kernel
-
-
 def cosine_pairs_hof(
     emb: DataFrame, threshold: float = COSINE_THRESHOLD
 ) -> DataFrame:
