@@ -62,6 +62,14 @@ def safe_div(num: Column, den: Column) -> Column:
     return F.when(den != 0, num / den)
 
 
+def _row_count(df: DataFrame) -> int:
+    """``df.count()`` as ONE narrow job, for build-time sizing counts:
+    ``count()`` plans a partial aggregate, an exchange and a final
+    aggregate, which AQE runs as two jobs; counting the rows of the
+    empty projection's RDD runs one job with no exchange."""
+    return df.select()._jdf.queryExecution().toRdd().count()
+
+
 #: per-task cap on the materialized cosine-block size, in MATRIX
 #: ELEMENTS (float64): 1<<24 = 128 MB per in-flight block. The tiled
 #: all-pairs operators' per-task memory is (tile × tile) — at a fixed
@@ -79,29 +87,71 @@ MAX_BLOCK_ELEMS = 1 << 24
 
 def _make_cosine_parts():
     """factory for the shared tiled-block BLAS primitives, shipped BY
-    VALUE into applyInPandas closures (a module-level function
+    VALUE into applyInArrow closures (a module-level function
     referenced from a closure pickles by name and crashes Python
     workers whenever the driver runs outside the repo root — see the
-    verify notes). Returns ``(stack, mm)``: ``stack`` decodes an
-    embedding Series to a dense float64 matrix + norms once per
-    block side; ``mm`` multiplies any (sub)matrix pair into the
-    1e-4-quantized cosine block — ONE implementation for
-    cosine_pairs / knn_graph / cosine_pairs_bipartite / the IVF
-    cells, so the quantization scale and the zero-norm (0/0 → NaN,
-    masked by the callers) contract cannot drift between an operator
-    and its oracle. Callers sweep the left side in row chunks
-    against ``MAX_BLOCK_ELEMS`` to keep the q matrix bounded.
+    verify notes). Returns ``(stack, mm, table)``:
+
+    - ``stack`` decodes one block side's ``list<float|double>`` Arrow
+      column (an Array or a multi-chunk ChunkedArray) into a dense
+      float64 matrix + norms with ONE ``flatten()`` + ``reshape``.
+      Widening float32 to float64 is exact, so the matrix is
+      bit-identical to a per-row ``np.asarray(v, dtype=float64)``
+      decode; a NULL element decodes to NaN and is masked by the
+      callers like a zero norm. A NULL or ragged vector raises
+      ``ValueError``: ``flatten()`` skips NULL lists and ragged rows
+      can still sum to n·d (63 + 65 = 2·64), so a plain reshape would
+      silently misread both.
+    - ``mm`` multiplies any (sub)matrix pair into the 1e-4-quantized
+      cosine block — ONE implementation for cosine_pairs / knn_graph
+      / cosine_pairs_bipartite / the IVF cells, so the quantization
+      scale and the zero-norm (0/0 → NaN, masked by the callers)
+      contract cannot drift between an operator and its oracle.
+      Callers sweep the left side in row chunks against
+      ``MAX_BLOCK_ELEMS`` to keep the q matrix bounded.
+    - ``table`` concatenates the per-chunk output arrays into the
+      block's ``pa.Table`` (``cosine`` double, every other column
+      bigint), empty when no chunk ran. Each part holds one array per
+      name; arrays past the last name (the kNN kernels' labels when
+      ``diff_label`` is off) are dropped.
     """
     import numpy as np
+    import pyarrow as pa
 
-    def stack(emb_series):
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in emb_series])
+    def stack(col):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        if col.null_count:
+            raise ValueError(
+                f"cosine block: {col.null_count} NULL embedding vector(s);"
+                " a NULL vector has no cosine"
+            )
+        lens = col.value_lengths().to_numpy()
+        d = int(lens[0]) if len(lens) else 0
+        if (lens != d).any():
+            raise ValueError(
+                "cosine block: ragged embedding vectors (lengths"
+                f" {lens.min()}..{lens.max()}); every vector must have"
+                " the same dimension"
+            )
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        A = flat.astype(np.float64).reshape(len(col), d)
         return A, np.sqrt((A * A).sum(axis=1))
 
     def mm(A, na, B, nb):
         return np.floor((A @ B.T) / np.outer(na, nb) * 1e4 + 0.5) / 1e4
 
-    return stack, mm
+    def table(names, parts):
+        cols = list(zip(*parts)) if parts else [()] * len(names)
+        out = {}
+        for name, chunks in zip(names, cols):
+            dt = np.float64 if name == "cosine" else np.int64
+            out[name] = np.concatenate([np.empty(0, dt), *chunks]).astype(
+                dt, copy=False
+            )
+        return pa.table(out)
+
+    return stack, mm, table
 
 
 def cosine_pairs_hof(
@@ -134,12 +184,16 @@ def cosine_pairs(
     block-matmul (exact; no driver-side corpus materialization).
 
     Rows hash to ``n_tiles`` deterministic tiles (vec_id mod n_tiles);
-    every unordered tile pair (ta ≤ tb) becomes one ``applyInPandas``
-    group holding exactly the two tiles, which runs the ``A @ B.T``
-    BLAS block in bounded row chunks (``MAX_BLOCK_ELEMS``) and emits
-    only the above-threshold pairs. Each row is replicated n_tiles+1
-    ways through a single shuffle — the O(n·√tasks) replication that
-    distributed exact all-pairs costs. Per-task memory is two tiles
+    every unordered tile pair (ta ≤ tb) becomes one ``applyInArrow``
+    group holding exactly the two tiles as one Arrow table. The
+    kernel decodes each side's vectors straight from the Arrow list
+    column (``_make_cosine_parts``' ``stack``: one ``flatten()`` +
+    ``reshape``, no pandas), runs the ``A @ B.T`` BLAS block in
+    bounded row chunks (``MAX_BLOCK_ELEMS``) and returns only the
+    above-threshold pairs as a ``pa.Table``. A NULL or ragged vector
+    fails the block with ``ValueError``. Each row is replicated
+    n_tiles+1 ways through a single shuffle — the O(n·√tasks)
+    replication that distributed exact all-pairs costs. Per-task memory is two tiles
     of EMBEDDINGS plus one ≤128 MB q chunk: before round 9 the full
     tile×tile q matrix materialized at once, which grows
     quadratically with the corpus at fixed n_tiles (measured: 25k²
@@ -153,7 +207,6 @@ def cosine_pairs(
     so results stay oracle-exact.
     """
     import numpy as np
-    import pandas as pd
 
     t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
     e = emb.select("vec_id", "embedding", t.alias("t"))
@@ -172,65 +225,51 @@ def cosine_pairs(
         F.lit(False).alias("is_left"),
     )
 
-    stack, mm = _make_cosine_parts()
+    stack, mm, table = _make_cosine_parts()
     max_elems = MAX_BLOCK_ELEMS
 
-    def block(key, pdf):
-        ta, tb = key
-        L = pdf[pdf["is_left"]]
-        R = pdf[~pdf["is_left"]]
-        if L.empty or R.empty:
-            return pd.DataFrame(
-                {
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "cosine": np.array([], dtype=np.float64),
-                }
-            )
-        A, na = stack(L["embedding"])
-        B, nb = stack(R["embedding"])
-        all_la = L["vec_id"].to_numpy()
-        all_rb = R["vec_id"].to_numpy()
-        # chunked sweep: never materialize more than MAX_BLOCK_ELEMS
-        # of the q matrix at once — at a fixed n_tiles the full tile²
-        # block grows quadratically with the corpus and OOMs workers
-        step = max(1, max_elems // max(len(all_rb), 1))
-        outs_a, outs_b, outs_s = [], [], []
-        for lo in range(0, len(all_la), step):
-            q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)
-            # NaN (zero-norm 0/0) fails the >= comparison and drops
-            # out, same as safe_div's NULL under the threshold
-            # predicate; isfinite makes that contract explicit.
-            ia, ib = np.where(np.isfinite(q) & (q >= threshold))
-            la = all_la[lo : lo + step][ia]
-            rb = all_rb[ib]
-            sims = q[ia, ib]
-            if ta == tb:
-                # diagonal tile: both roles hold the full tile, so
-                # each pair shows up in both orders — keep (a < b)
-                keep = la < rb
-                la, rb, sims = la[keep], rb[keep], sims[keep]
-                va, vb = la, rb
-            else:
-                # off-diagonal: each unordered pair appears exactly
-                # once; normalize to (min, max) for the contract
-                va = np.minimum(la, rb)
-                vb = np.maximum(la, rb)
-            outs_a.append(va)
-            outs_b.append(vb)
-            outs_s.append(sims)
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(outs_a),
-                "vec_b": np.concatenate(outs_b),
-                "cosine": np.concatenate(outs_s),
-            }
-        )
+    def block(key, tbl):
+        diagonal = key[0].as_py() == key[1].as_py()
+        is_left = tbl.column("is_left").to_numpy()
+        L = tbl.filter(is_left)
+        R = tbl.filter(~is_left)
+        parts = []
+        if L.num_rows and R.num_rows:
+            A, na = stack(L.column("embedding"))
+            B, nb = stack(R.column("embedding"))
+            all_la = L.column("vec_id").to_numpy()
+            all_rb = R.column("vec_id").to_numpy()
+            # chunked sweep: never materialize more than MAX_BLOCK_ELEMS
+            # of the q matrix at once — at a fixed n_tiles the full
+            # tile² block grows quadratically with the corpus and OOMs
+            # workers
+            step = max(1, max_elems // max(len(all_rb), 1))
+            for lo in range(0, len(all_la), step):
+                q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)
+                # NaN (zero-norm 0/0) fails the >= comparison and drops
+                # out, same as safe_div's NULL under the threshold
+                # predicate; isfinite makes that contract explicit.
+                ia, ib = np.where(np.isfinite(q) & (q >= threshold))
+                la = all_la[lo : lo + step][ia]
+                rb = all_rb[ib]
+                sims = q[ia, ib]
+                if diagonal:
+                    # diagonal tile: both roles hold the full tile, so
+                    # each pair shows up in both orders — keep (a < b)
+                    keep = la < rb
+                    parts.append((la[keep], rb[keep], sims[keep]))
+                else:
+                    # off-diagonal: each unordered pair appears exactly
+                    # once; normalize to (min, max) for the contract
+                    parts.append(
+                        (np.minimum(la, rb), np.maximum(la, rb), sims)
+                    )
+        return table(("vec_a", "vec_b", "cosine"), parts)
 
     return (
         left.unionByName(right)
         .groupBy("ta", "tb")
-        .applyInPandas(block, "vec_a bigint, vec_b bigint, cosine double")
+        .applyInArrow(block, "vec_a bigint, vec_b bigint, cosine double")
     )
 
 
@@ -264,7 +303,6 @@ def knn_graph(
     ``label`` column.
     """
     import numpy as np
-    import pandas as pd
 
     t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
     cols = ["vec_id", "embedding"] + (["label"] if diff_label else [])
@@ -282,34 +320,27 @@ def knn_graph(
         F.lit(False).alias("is_left"),
     )
 
-    stack, mm = _make_cosine_parts()
+    stack, mm, table = _make_cosine_parts()
     max_elems = MAX_BLOCK_ELEMS
+    names = ("vec_id", "neighbor_id", "cosine") + (
+        ("label", "neighbor_label") if diff_label else ()
+    )
 
-    def block(key, pdf):
-        ta, tb = key
-
-        def frame(srcs, dsts, sims, slabs, dlabs):
-            out = {
-                "vec_id": np.array(srcs, dtype=np.int64),
-                "neighbor_id": np.array(dsts, dtype=np.int64),
-                "cosine": np.array(sims, dtype=np.float64),
-            }
-            if diff_label:
-                out["label"] = np.array(slabs, dtype=np.int64)
-                out["neighbor_label"] = np.array(dlabs, dtype=np.int64)
-            return pd.DataFrame(out)
-
-        L = pdf[pdf["is_left"]]
-        R = pdf[~pdf["is_left"]]
-        if L.empty or R.empty:
-            return frame([], [], [], [], [])
-        A, na = stack(L["embedding"])
-        B, nb = stack(R["embedding"])
-        la = L["vec_id"].to_numpy()
-        rb = R["vec_id"].to_numpy()
+    def block(key, tbl):
+        diagonal = key[0].as_py() == key[1].as_py()
+        is_left = tbl.column("is_left").to_numpy()
+        L = tbl.filter(is_left)
+        R = tbl.filter(~is_left)
+        parts = []  # one (srcs, dsts, sims, slabs, dlabs) per top-k pass
+        if not (L.num_rows and R.num_rows):
+            return table(names, parts)
+        A, na = stack(L.column("embedding"))
+        B, nb = stack(R.column("embedding"))
+        la = L.column("vec_id").to_numpy()
+        rb = R.column("vec_id").to_numpy()
         if diff_label:
-            la_lab = L["label"].to_numpy()
-            rb_lab = R["label"].to_numpy()
+            la_lab = L.column("label").to_numpy()
+            rb_lab = R.column("label").to_numpy()
         else:
             la_lab = np.zeros(len(la), dtype=np.int64)
             rb_lab = np.zeros(len(rb), dtype=np.int64)
@@ -326,14 +357,12 @@ def knn_graph(
             # like safe_div's NULL — and same-label pairs in the
             # hard-negative variant) get a +inf key: ranked past
             # every real candidate and cut by the validity check.
-            if sim.shape[0] == 0 or sim.shape[1] == 0:
-                return [], [], [], [], []
             ord_d = np.argsort(dst_ids, kind="stable")
             sim_s = sim[:, ord_d]
             dst_s = dst_ids[ord_d]
+            dlab_s = dst_lab[ord_d]
             bad = ~np.isfinite(sim_s) | (dst_s[None, :] == src_ids[:, None])
             if diff_label:
-                dlab_s = dst_lab[ord_d]
                 bad |= dlab_s[None, :] == src_lab[:, None]
             key = np.where(bad, np.inf, -sim_s)
             kw = min(k, key.shape[1])
@@ -342,38 +371,26 @@ def knn_graph(
             valid = np.isfinite(kk)
             ri, ci = np.nonzero(valid)
             picked = ord2[ri, ci]
-            srcs = src_ids[ri]
-            dsts = dst_s[picked]
-            sims = sim_s[ri, picked]
-            if diff_label:
-                return (
-                    srcs,
-                    dsts,
-                    sims,
+            parts.append(
+                (
+                    src_ids[ri],
+                    dst_s[picked],
+                    sim_s[ri, picked],
                     src_lab[ri],
                     dlab_s[picked],
                 )
-            return srcs, dsts, sims, [], []
-
-        def _cat(a, b):
-            if len(b) == 0:
-                return a
-            if len(a) == 0:
-                return b
-            return np.concatenate((np.asarray(a), np.asarray(b)))
+            )
 
         if len(la) * len(rb) <= max_elems:
             # small block: one matmul, transpose reused for the
             # reverse direction (the pre-round-9 fast path)
             q = mm(A, na, B, nb)
-            r1 = topk_rows(q, la, rb, la_lab, rb_lab)
-            if ta == tb:
-                # diagonal: L and R hold the same tile — one
-                # direction already covers every source in the tile
-                r2 = ([], [], [], [], [])
-            else:
-                r2 = topk_rows(q.T, rb, la, rb_lab, la_lab)
-            return frame(*(_cat(a, b) for a, b in zip(r1, r2)))
+            topk_rows(q, la, rb, la_lab, rb_lab)
+            # diagonal: L and R hold the same tile — one direction
+            # already covers every source in the tile
+            if not diagonal:
+                topk_rows(q.T, rb, la, rb_lab, la_lab)
+            return table(names, parts)
 
         # large block: sweep each direction in bounded row chunks —
         # at a fixed n_tiles the full tile² q matrix grows
@@ -381,28 +398,24 @@ def knn_graph(
         # 200k vectors, round 9). Off-diagonal pays the reverse
         # matmul again instead of transposing; memory-bounded beats
         # 2× FLOPs exactly where blocks are too big to hold.
-        acc = ([], [], [], [], [])
-
         def sweep(S, ns, sids, slab, T, nt, tids, tlab):
             step = max(1, max_elems // max(len(tids), 1))
             for lo in range(0, len(sids), step):
                 qc = mm(S[lo : lo + step], ns[lo : lo + step], T, nt)
-                r = topk_rows(qc, sids[lo : lo + step], tids, slab[lo : lo + step], tlab)
-                for a, b in zip(acc, r):
-                    a.extend(b)
+                topk_rows(
+                    qc, sids[lo : lo + step], tids, slab[lo : lo + step], tlab
+                )
 
         sweep(A, na, la, la_lab, B, nb, rb, rb_lab)
-        if ta != tb:
+        if not diagonal:
             sweep(B, nb, rb, rb_lab, A, na, la, la_lab)
-        return frame(*acc)
+        return table(names, parts)
 
     schema = "vec_id bigint, neighbor_id bigint, cosine double" + (
         ", label bigint, neighbor_label bigint" if diff_label else ""
     )
     per_block = (
-        left.unionByName(right)
-        .groupBy("ta", "tb")
-        .applyInPandas(block, schema)
+        left.unionByName(right).groupBy("ta", "tb").applyInArrow(block, schema)
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -460,7 +473,7 @@ def knn_graph_auto(
     budget = (
         KNN_GRAPH_AUTO_MAX_VECTORS if max_vectors is None else max_vectors
     )
-    if emb.count() <= budget:
+    if _row_count(emb) <= budget:
         return knn_graph(emb, k)
     if target_recall is not None:
         if geometry == "auto":
@@ -706,8 +719,10 @@ def knn_graph_ivf(
     member/prober union (the r8 advisor flagged the windowed form
     as re-introducing the exact shuffle the argmin fold avoids).
     Candidates then meet in ONE cid-keyed shuffle into per-cell
-    BLAS blocks (``applyInPandas``, block-local top-k — the
-    lossless-cut argument of ``knn_graph``: every member belongs to
+    BLAS blocks (``applyInArrow``: each cell arrives as one Arrow
+    table whose vectors ``stack`` decodes with one ``flatten()``;
+    block-local top-k — the lossless-cut argument of ``knn_graph``:
+    every member belongs to
     exactly one cell, so a source's global candidate top-k is the
     union of its per-cell top-k under the same total order); a
     final per-source window keeps the global top-k over n·nprobe·k
@@ -728,15 +743,10 @@ def knn_graph_ivf(
     import math
 
     import numpy as np
-    import pandas as pd
 
     if n_centroids is None:
-        n_centroids = max(16, int(math.floor(math.sqrt(emb.count()))))
-
-    e = with_norm(emb)
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("_vd").alias("vc")
-    )
+        n_centroids = max(16, int(math.floor(math.sqrt(_row_count(emb)))))
+    is_cent = F.col("vec_id") < n_centroids
 
     # ONE pass scores the top-nprobe cell ids per vector (pos==0 is
     # the argmin member cell — same (d2, cid) order as
@@ -747,6 +757,11 @@ def knn_graph_ivf(
     # pre-shuffle, one scan, no union.
     lab_cols = ["label"] if diff_label else []
     if _use_arrow_assign():
+        # the kernel widens the stored vectors itself (float32 →
+        # float64 is exact), so the centroids need no ``_vd`` column
+        cents = emb.where(is_cent).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("vc")
+        )
         probed = _assign_cells_arrow(
             emb.select("vec_id", "embedding", *lab_cols),
             cents,
@@ -760,6 +775,10 @@ def knn_graph_ivf(
             F.posexplode("probes").alias("pos", "cid"),
         )
     else:
+        e = with_norm(emb)
+        cents = e.where(is_cent).select(
+            F.col("vec_id").alias("cid"), F.col("_vd").alias("vc")
+        )
         carr = F.broadcast(_collected_centroids(cents))
         probe_cids = _top_cells(F.col("_vd"), F.col("cs"), nprobe)
         probed = e.join(carr).select(
@@ -776,36 +795,34 @@ def knn_graph_ivf(
         (F.col("pos") == 0).alias("is_member"),
     )
 
-    stack, mm = _make_cosine_parts()
+    stack, mm, table = _make_cosine_parts()
     max_elems = MAX_BLOCK_ELEMS
+    names = ("vec_id", "neighbor_id", "cosine") + (
+        ("label", "neighbor_label") if diff_label else ()
+    )
 
-    def block(key, pdf):
-        empty_cols = {
-            "vec_id": np.array([], dtype=np.int64),
-            "neighbor_id": np.array([], dtype=np.int64),
-            "cosine": np.array([], dtype=np.float64),
-        }
-        if diff_label:
-            empty_cols["label"] = np.array([], dtype=np.int64)
-            empty_cols["neighbor_label"] = np.array([], dtype=np.int64)
-        M = pdf[pdf["is_member"]]
-        if pdf.empty or M.empty:
-            return pd.DataFrame(empty_cols)
+    def block(tbl):
+        member = tbl.column("is_member").to_numpy()
+        parts = []  # one (srcs, dsts, sims, slabs, dlabs) per chunk
+        if not member.any():
+            return table(names, parts)
         # every row probes this cell (members probe their own)
-        A, na = stack(pdf["embedding"])
-        B, nb = stack(M["embedding"])
-        src_all = pdf["vec_id"].to_numpy()
-        dst = M["vec_id"].to_numpy()
+        emb_col = tbl.column("embedding")
+        A, na = stack(emb_col)
+        B, nb = stack(emb_col.filter(member))
+        src_all = tbl.column("vec_id").to_numpy()
+        dst = src_all[member]
         if diff_label:
-            slab_all = pdf["label"].to_numpy()
-            dlab = M["label"].to_numpy()
-        srcs, dsts, sims, slabs, dlabs = [], [], [], [], []
+            slab_all = tbl.column("label").to_numpy()
+        else:
+            slab_all = np.zeros(len(src_all), dtype=np.int64)
+        dlab = slab_all[member]
         # columns pre-sorted by neighbor id so the stable row-wise
         # argsort's ties resolve dst-ascending — the (cosine desc,
         # neighbor asc) order the old per-row np.lexsort used
         ord_d = np.argsort(dst, kind="stable")
         dst_s = dst[ord_d]
-        dlab_s = dlab[ord_d] if diff_label else None
+        dlab_s = dlab[ord_d]
         # chunked sweep: a hot Voronoi cell on clustered corpora can
         # hold far more than √n rows — bound the q block like the
         # all-pairs tile operators do. Inside each chunk the block-
@@ -817,35 +834,25 @@ def knn_graph_ivf(
         for lo in range(0, len(src_all), step):
             q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)[:, ord_d]
             src = src_all[lo : lo + step]
+            slab = slab_all[lo : lo + step]
             bad = ~np.isfinite(q) | (dst_s[None, :] == src[:, None])
             if diff_label:
-                bad |= dlab_s[None, :] == slab_all[lo : lo + step, None]
+                bad |= dlab_s[None, :] == slab[:, None]
             key = np.where(bad, np.inf, -q)
             kw = min(k, key.shape[1])
             ord2 = np.argsort(key, axis=1, kind="stable")[:, :kw]
             kk = np.take_along_axis(key, ord2, axis=1)
             ri, ci = np.nonzero(np.isfinite(kk))
             picked = ord2[ri, ci]
-            srcs.extend(src[ri])
-            dsts.extend(dst_s[picked])
-            sims.extend(q[ri, picked])
-            if diff_label:
-                slabs.extend(slab_all[lo : lo + step][ri])
-                dlabs.extend(dlab_s[picked])
-        out = {
-            "vec_id": np.array(srcs, dtype=np.int64),
-            "neighbor_id": np.array(dsts, dtype=np.int64),
-            "cosine": np.array(sims, dtype=np.float64),
-        }
-        if diff_label:
-            out["label"] = np.array(slabs, dtype=np.int64)
-            out["neighbor_label"] = np.array(dlabs, dtype=np.int64)
-        return pd.DataFrame(out)
+            parts.append(
+                (src[ri], dst_s[picked], q[ri, picked], slab[ri], dlab_s[picked])
+            )
+        return table(names, parts)
 
     schema = "vec_id bigint, neighbor_id bigint, cosine double" + (
         ", label bigint, neighbor_label bigint" if diff_label else ""
     )
-    per_cell = exploded.groupBy("cid").applyInPandas(block, schema)
+    per_cell = exploded.groupBy("cid").applyInArrow(block, schema)
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -3275,7 +3282,7 @@ def embedding_dedup_auto(
         if max_vectors is None
         else max_vectors
     )
-    if emb.count() <= budget:
+    if _row_count(emb) <= budget:
         return cosine_pairs(emb, threshold)
     sem = semantic_dedup(emb, threshold)
     return sem.where(~F.col("keep")).select(
@@ -3487,14 +3494,15 @@ def cosine_pairs_bipartite(
     (each corpus row shuffled exactly ONCE — work linear in the
     corpus); only the new batch is replicated n_tiles ways, which is
     the cheap side by definition at ingest time. One BLAS
-    ``A @ B.T`` per tile group via ``applyInPandas``; per-task
-    memory is one corpus tile + the new batch, so ``n_tiles`` sizes
-    tasks to executor memory at any corpus size. Zero-norm vectors
+    ``A @ B.T`` per tile group via ``applyInArrow`` (vectors decoded
+    from the group's Arrow table by ``stack``; NULL or ragged vectors
+    raise ``ValueError``); per-task memory is one corpus tile + the
+    new batch, so ``n_tiles`` sizes tasks to executor memory at any
+    corpus size. Zero-norm vectors
     drop out (non-finite sims masked), matching the ``nrm > 0``
     oracle guard and safe_div semantics.
     """
     import numpy as np
-    import pandas as pd
 
     t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
     c = corpus.select(
@@ -3507,46 +3515,32 @@ def cosine_pairs_bipartite(
         F.lit(True).alias("is_left"),
     )
 
-    stack, mm = _make_cosine_parts()
+    stack, mm, table = _make_cosine_parts()
     max_elems = MAX_BLOCK_ELEMS
 
-    def block(key, pdf):
-        L = pdf[pdf["is_left"]]
-        R = pdf[~pdf["is_left"]]
-        if L.empty or R.empty:
-            return pd.DataFrame(
-                {
-                    "new_id": np.array([], dtype=np.int64),
-                    "corpus_id": np.array([], dtype=np.int64),
-                    "cosine": np.array([], dtype=np.float64),
-                }
-            )
-        A, na = stack(L["embedding"])
-        B, nb = stack(R["embedding"])
-        lids = L["vec_id"].to_numpy()
-        rids = R["vec_id"].to_numpy()
-        # same bounded chunk sweep as cosine_pairs: batch × tile can
-        # exceed worker memory when both sides grow
-        step = max(1, max_elems // max(len(rids), 1))
-        outs = []
-        for lo in range(0, len(lids), step):
-            q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)
-            ia, ib = np.where(np.isfinite(q) & (q >= threshold))
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "new_id": lids[lo : lo + step][ia],
-                        "corpus_id": rids[ib],
-                        "cosine": q[ia, ib],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+    def block(tbl):
+        is_left = tbl.column("is_left").to_numpy()
+        L = tbl.filter(is_left)
+        R = tbl.filter(~is_left)
+        parts = []
+        if L.num_rows and R.num_rows:
+            A, na = stack(L.column("embedding"))
+            B, nb = stack(R.column("embedding"))
+            lids = L.column("vec_id").to_numpy()
+            rids = R.column("vec_id").to_numpy()
+            # same bounded chunk sweep as cosine_pairs: batch × tile can
+            # exceed worker memory when both sides grow
+            step = max(1, max_elems // max(len(rids), 1))
+            for lo in range(0, len(lids), step):
+                q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)
+                ia, ib = np.where(np.isfinite(q) & (q >= threshold))
+                parts.append((lids[lo : lo + step][ia], rids[ib], q[ia, ib]))
+        return table(("new_id", "corpus_id", "cosine"), parts)
 
     return (
         nw.unionByName(c)
         .groupBy("tb")
-        .applyInPandas(block, "new_id bigint, corpus_id bigint, cosine double")
+        .applyInArrow(block, "new_id bigint, corpus_id bigint, cosine double")
     )
 
 

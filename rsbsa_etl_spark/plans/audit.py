@@ -30,7 +30,8 @@ COUNTER_PATTERNS: dict[str, tuple[str, str]] = {
     "arrow": (
         "python (Arrow) stages",
         "MapInPandas|MapInArrow|FlatMapGroupsInPandas"
-        "|FlatMapCoGroupsInPandas|ArrowEvalPython",
+        "|FlatMapCoGroupsInPandas|FlatMapGroupsInArrow"
+        "|FlatMapCoGroupsInArrow|ArrowEvalPython",
     ),
     "rowpy": ("row-at-a-time python UDFs", "BatchEvalPython"),
 }

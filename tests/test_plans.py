@@ -469,8 +469,9 @@ def test_registry_plan_hygiene(spark):
     - no CartesianProduct anywhere (join_cross is explicit and
       compiles to BroadcastNestedLoopJoin, which is allowed);
     - no BatchEvalPython (row-at-a-time Python UDF) — every Python
-      path must be Arrow-batched (MapInPandas / FlatMapGroupsInPandas
-      / ArrowEvalPython / PythonUDTF).
+      path must be Arrow-batched (MapInPandas / MapInArrow /
+      FlatMapGroupsInArrow / FlatMapCoGroupsInPandas /
+      ArrowEvalPython / PythonUDTF).
 
     Streaming replays are excluded (building them runs real
     streaming jobs; their semantics are value-checked elsewhere).
@@ -510,27 +511,30 @@ def test_curation_pipeline_fused(spark):
     # BLAS stage, no second corpus scan
     assert "Join" not in plan, "composed pipeline grew a join stage"
     assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsInArrow" not in plan
 
 
 def test_dedup_embedding_is_tiled_not_driver_collected(spark):
-    # exact all-pairs cosine must run as the tiled applyInPandas
+    # exact all-pairs cosine must run as the tiled applyInArrow
     # block-matmul — the plan contains the grouped-map node and the
     # tile-pair shuffle, and building the DataFrame must not touch
     # the data (the old implementation did a driver-side toPandas()
     # of the whole corpus at plan-construction time)
     plan = _plan(QUERIES["dedup_embedding"](spark, SF_DIR))
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
     assert "Exchange hashpartitioning(ta" in plan
 
 
 def test_knn_graph_is_tiled_with_blockwise_topk(spark):
     # the kNN graph must run as the tiled grouped-map block-matmul
-    # (FlatMapGroupsInPandas over tile pairs) feeding a per-source
+    # (FlatMapGroupsInArrow over tile pairs) feeding a per-source
     # ranking window — NOT an n² pair shuffle into the window: the
-    # window input is the applyInPandas output, whose volume is
+    # window input is the applyInArrow output, whose volume is
     # n·√tasks·k by the block-local top-k cut
     plan = _plan(QUERIES["knn_graph"](spark, SF_DIR))
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
     assert "row_number" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
@@ -754,10 +758,11 @@ def test_group_sample_gets_window_group_limit(spark):
 
 def test_hard_negatives_mines_inside_tile_blocks(spark):
     # the label-mismatch mask must be applied inside the tiled
-    # block-matmul (same FlatMapGroupsInPandas shape as knn_graph),
+    # block-matmul (same FlatMapGroupsInArrow shape as knn_graph),
     # not as a post-hoc join of an unfiltered n² pair set
     plan = _plan(QUERIES["hard_negatives"](spark, SF_DIR))
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
@@ -801,7 +806,8 @@ def test_bipartite_embedding_screen_shuffles_corpus_once(spark):
     # numpy block)
     plan = _plan(QUERIES["dedup_embedding_incremental"](spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning") == 1
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan
 
@@ -933,7 +939,7 @@ def test_committed_planaudit_matches_live_plans(spark):
         "source_overlap_kmv", "source_overlap_kmv_sketch",
         "winsorize_stats", "token_gini",
         "stream_tail", "ann_eval", "scan_orc_roundtrip",
-        "bpe_train", "mmr_rerank",
+        "bpe_train", "mmr_rerank", "knn_graph_ivf",
     ]
     drift = {}
     for k in sample:

@@ -451,7 +451,7 @@ def test_continuation_operators_handle_empty_input(spark):
 
 
 def test_block_knn_zero_norm_drops_out(spark):
-    """the pandas-block kNN family must give a zero-norm embedding
+    """the Arrow-block kNN family must give a zero-norm embedding
     the same NULL-drops-out treatment as safe_div: numpy computes
     0/0 = NaN, which lexsort ranks LAST in the block but Spark's
     ORDER BY cosine DESC ranks FIRST — so non-finite sims are masked
