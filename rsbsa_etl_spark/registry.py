@@ -417,36 +417,6 @@ SCALE_DIAL_OF: dict[str, list[str]] = {}
 for _exact, (_dial, _why) in SCALE_DIALS.items():
     SCALE_DIAL_OF.setdefault(_dial, []).append(_exact)
 
-# The driver's correctness sweep walks QUERIES in dict order and
-# checks the first ~50 keys per round. The ordering rule below is
-# data-driven and openly stated (it is also pinned by
-# tests/test_sweep_rotation.py so it can't silently drift):
-#
-#   1. keys whose LATEST committed driver row is red come first, so a
-#      fix is re-verified the very next round;
-#   2. then keys with NO driver row in any committed
-#      CORRECTNESS_r*.json, in the curated risk order of
-#      _UNTESTED_PRIORITY (streaming/stateful first — the riskiest
-#      surface — then curation, windows, extension joins, …);
-#   3. keys already driver-green demote to the tail, ordered
-#      (narrow-changed, closure-changed, AGE): greens whose own fn or
-#      oracle was edited since their latest driver row first, then
-#      greens whose transitive closure changed, then oldest committed
-#      round first (registry order within a segment+round). Their
-#      evidence stays on record, and every one of them is still
-#      value-checked against its DuckDB oracle locally on every
-#      pytest run (tests/test_oracle_parity.py covers ALL keys at
-#      sf0.001, including result-type parity), so demotion never
-#      removes correctness coverage. Once the backlog is drained
-#      (round 6), this makes the sweep a rolling freshness check:
-#      each round re-confirms the ~50 changed-or-stalest greens
-#      against current code.
-#
-# Because the green set is parsed from the committed driver records at
-# import time, the rotation is self-maintaining: when a round's
-# CORRECTNESS file lands in the repo, its greens demote automatically
-# and the next untested tranche surfaces.
-
 
 #: keys whose DataFrame BUILD executes work (streaming replays,
 #: write paths, iterative driver loops) — excluded from PLAN-ONLY
@@ -477,552 +447,3 @@ AUDIT_EXCLUDE = frozenset({
     # once — r9; see ann_eval's docstring)
     "ann_recall", "ann_mrr", "ann_eval",
 })
-
-
-def _driver_latest_rows_and_rounds() -> tuple[dict, dict]:
-    """Latest committed driver-correctness row per key, plus the round
-    number that row came from (the age tier's sort key).
-
-    Reads the in-repo ``CORRECTNESS_r*.json`` records the external
-    driver writes each round (sorted so later rounds override).
-    """
-    import json as _json
-    import re as _re
-    from pathlib import Path as _Path
-
-    rows: dict = {}
-    rounds: dict = {}
-    root = _Path(__file__).resolve().parent.parent
-
-    def _round_of(p: _Path) -> int:
-        m = _re.search(r"r(\d+)", p.name)
-        return int(m.group(1)) if m else 0
-
-    # sort by the PARSED round number, not the filename: lexicographic
-    # order breaks at r100 ('r100' < 'r99') and for unpadded rN, and
-    # the later-round-overrides rule below depends on iteration order
-    # (r7 advisor).
-    for p in sorted(root.glob("CORRECTNESS_r*.json"), key=_round_of):
-        try:
-            data = _json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        rnd = _round_of(p)
-        if isinstance(data, dict):
-            for k, v in data.items():
-                if isinstance(v, dict):
-                    rows[k] = v
-                    rounds[k] = rnd
-    return rows, rounds
-
-
-def _driver_latest_rows() -> dict:
-    """Latest committed driver-correctness row per key (rows only)."""
-    return _driver_latest_rows_and_rounds()[0]
-
-
-def _is_green(row: dict) -> bool:
-    # Rows-only keys (no oracle) record hash_match/schema_match as
-    # null/absent — count them green on rows_match; an explicit
-    # False on ANY of the driver's three flags stays red.
-    return bool(
-        row.get("rows_match")
-        and row.get("err") is None
-        and row.get("hash_match") is not False
-        and row.get("schema_match") is not False
-    )
-
-
-def _dep_closure(fn) -> dict[str, str]:
-    """Transitive, FUNCTION-granular dependency closure of a registry
-    callable inside the ``rsbsa_etl_spark`` package: every function /
-    class whose source the key's execution can reach (resolved
-    statically — AST ``Name`` and ``module.attr`` references through
-    each function's globals), plus the ``repr`` of every package
-    constant it reads (so a ``params`` change flags exactly the keys
-    that read that constant, not the whole registry).
-
-    Returns ``{dep_id: source_or_repr}`` with stable ids
-    (``module.qualname``) and deterministic values (sets are sorted
-    before repr — PYTHONHASHSEED must not leak into the hash).
-
-    Granularity rationale (r10, replacing a module-bytes prototype):
-    whole-module hashing flagged 71 of 253 keys as changed after a
-    routine round of edits — so coarse the change tier would crowd
-    the age tier out of the driver's 50-key sweep head. Function
-    granularity flags a key only when code it actually executes (or
-    a constant it actually reads) changed.
-
-    FUNCTION-LOCAL IMPORTS are resolved since round 12: the registry
-    wrapper style is ``from rsbsa_etl_spark.x import y`` inside each
-    wrapper body, and those names never reach ``__globals__`` — the
-    globals-only walk left the entire implementation module OUT of
-    ~150 keys' closures (discovered when a round of retrieval.py
-    edits flagged zero keys). KEYHASHES was re-seeded from each
-    key's driver-tested tree under the extended algorithm the same
-    round. Remaining known blind spots, all covered by the full
-    local oracle-parity pytest gate: dynamic dispatch through
-    strings, and source reached only via data tables of callables.
-    """
-    import sys as _sys
-    import types as _types
-
-    out: dict[str, str] = {}
-    seen: set[str] = set()
-
-    def _det_repr(v) -> str:
-        if isinstance(v, (set, frozenset)):
-            return "{" + ", ".join(sorted(repr(x) for x in v)) + "}"
-        if isinstance(v, dict):
-            return (
-                "{"
-                + ", ".join(
-                    f"{k!r}: {_det_repr(x)}"
-                    for k, x in sorted(v.items(), key=lambda kv: repr(kv[0]))
-                )
-                + "}"
-            )
-        if isinstance(v, (list, tuple)):
-            inner = ", ".join(_det_repr(x) for x in v)
-            return f"[{inner}]" if isinstance(v, list) else f"({inner})"
-        r = repr(v)
-        # id-based reprs (functions, instances without __repr__) embed
-        # process-specific addresses — substitute a stable stand-in so
-        # a key is never flagged changed-forever by a memory address
-        # (r10 advice item 5; mirrored in tools/snapshot_keyhashes.py)
-        if " at 0x" in r:
-            return (
-                f"<{type(v).__module__}.{type(v).__qualname__}:"
-                f"{getattr(v, '__qualname__', '')}>"
-            )
-        return r
-
-    def _unwrap(obj):
-        # pandas_udf / functools wrappers: hash the wrapped source
-        inner = getattr(obj, "func", None) or getattr(obj, "__wrapped__", None)
-        return inner if callable(inner) else obj
-
-    def _node(obj, dep_id: str, mod: str):
-        """Parse one dependency once per process: its source plus
-        the AST-discovered direct children (callables to recurse
-        into) and constants it reads. getsource + ast.parse dominate
-        closure cost, so memoizing the node (keyed by dep_id — a
-        function's source and globals are fixed within a process)
-        turns the all-keys sweep from ~2s of re-parsing shared
-        helpers 253× into one parse per function (r10 advice item 4).
-        Const VALUES are kept by reference; their reprs are taken at
-        walk time so semantics match the uncached form exactly (the
-        tool's mirror stays uncached — byte-equal digests are pinned
-        by tests/test_sweep_rotation.py)."""
-        import ast as _ast
-        import inspect as _inspect
-        import textwrap as _textwrap
-
-        cached = _DEP_NODE_CACHE.get(dep_id)
-        if cached is not None:
-            return cached
-        try:
-            src = _inspect.getsource(obj)
-        except (OSError, TypeError):
-            node = (dep_id, (), ())  # deterministic stand-in
-            _DEP_NODE_CACHE[dep_id] = node
-            return node
-        children: list = []
-        consts: list = []
-        g = getattr(obj, "__globals__", None)
-        if g is None:  # classes: resolve through their module
-            g = getattr(_sys.modules.get(mod), "__dict__", {})
-        try:
-            tree = _ast.parse(_textwrap.dedent(src))
-        except SyntaxError:
-            tree = None
-        refs: list = []
-        # pass 1 (round 12): FUNCTION-LOCAL package imports. The
-        # registry style is `from rsbsa_etl_spark.x import y` inside
-        # each wrapper body — those names never reach the function's
-        # __globals__, so the globals-only resolution below was blind
-        # to the entire implementation module of ~150 keys (found in
-        # round 12: editing functions/retrieval.py flagged NOTHING).
-        # Resolve the imported objects directly; imported modules
-        # join a local alias map consulted by the Attribute handler.
-        local_mods: dict = {}
-        if tree is not None:
-            import importlib as _importlib
-
-            for node in _ast.walk(tree):
-                if isinstance(node, _ast.ImportFrom):
-                    if node.level or not (node.module or "").startswith(
-                        "rsbsa_etl_spark"
-                    ):
-                        continue
-                    try:
-                        m = _importlib.import_module(node.module)
-                    except Exception:
-                        continue
-                    for a in node.names:
-                        if a.name == "*":
-                            continue
-                        val = getattr(m, a.name, None)
-                        if val is None:
-                            # `from rsbsa_etl_spark.functions import
-                            # spatial` style: the name is a SUBMODULE
-                            # not yet imported anywhere, so it isn't
-                            # an attribute of the package object —
-                            # the r14 blind spot that left
-                            # spatial.radius_pairs out of
-                            # join_spatial_grid's closure
-                            try:
-                                val = _importlib.import_module(
-                                    f"{node.module}.{a.name}"
-                                )
-                            except Exception:
-                                pass
-                        if isinstance(val, _types.ModuleType):
-                            local_mods[a.asname or a.name] = val
-                        else:
-                            refs.append((a.name, val))
-                elif isinstance(node, _ast.Import):
-                    for a in node.names:
-                        if a.name.startswith("rsbsa_etl_spark") and a.asname:
-                            try:
-                                local_mods[a.asname] = (
-                                    _importlib.import_module(a.name)
-                                )
-                            except Exception:
-                                pass
-        if tree is not None:
-            for node in _ast.walk(tree):
-                if isinstance(node, _ast.Attribute) and isinstance(
-                    node.value, _ast.Name
-                ):
-                    base = local_mods.get(node.value.id, g.get(node.value.id))
-                    if isinstance(base, _types.ModuleType) and (
-                        base.__name__.startswith("rsbsa_etl_spark")
-                    ):
-                        refs.append(
-                            (f"{base.__name__}.{node.attr}",
-                             getattr(base, node.attr, None))
-                        )
-                elif isinstance(node, _ast.Name):
-                    refs.append((node.id, g.get(node.id)))
-        for name, val in refs:
-            if val is None or isinstance(val, _types.ModuleType):
-                continue
-            if callable(val):
-                children.append(val)
-                continue
-            # a package CONSTANT the code reads (params thresholds,
-            # rule tables, …) — include its value; constants imported
-            # into a function's globals came from an rsbsa module by
-            # definition of our import style, so include any
-            # non-callable global that is not a dunder/builtin
-            if name.startswith("__"):
-                continue
-            consts.append((f"const.{name}", val))
-        node = (src, tuple(children), tuple(consts))
-        _DEP_NODE_CACHE[dep_id] = node
-        return node
-
-    def _visit(obj):
-        obj = _unwrap(obj)
-        mod = getattr(obj, "__module__", "") or ""
-        if not mod.startswith("rsbsa_etl_spark"):
-            return
-        if not isinstance(obj, (_types.FunctionType, type)):
-            return
-        dep_id = f"{mod}.{getattr(obj, '__qualname__', '?')}"
-        if dep_id in seen:
-            return
-        seen.add(dep_id)
-        entry, children, consts = _node(obj, dep_id, mod)
-        out[dep_id] = entry
-        for key, val in consts:
-            if key not in out:
-                try:
-                    out[key] = _det_repr(val)
-                except Exception:
-                    out[key] = key[len("const."):]
-        for child in children:
-            _visit(child)
-
-    _visit(fn)
-    return out
-
-
-#: per-process memo for ``_dep_closure`` nodes: dep_id → (source,
-#: child callables, (const_key, value) pairs). Shared helpers are
-#: parsed once instead of once per registry key.
-_DEP_NODE_CACHE: dict = {}
-
-
-def _key_code_hash(key: str, fn=None, oracle: str | None = None) -> str:
-    """Content hash of what a key's driver-correctness row attests
-    to: the registered function's transitive function-level source
-    closure (``_dep_closure``) plus its DuckDB oracle string. Equal
-    hash ⇒ the code the driver verified is byte-identical to the
-    code that would run today; a mismatch sends the key back to the
-    sweep head (``_changed_since_checked``). The algorithm is
-    duplicated in ``tools/snapshot_keyhashes.py`` (which must run
-    inside historical trees that predate this helper) — the two are
-    pinned byte-equal by tests/test_sweep_rotation.py.
-    """
-    import hashlib as _hashlib
-
-    if fn is None:
-        fn = QUERIES[key]
-    if oracle is None:
-        from rsbsa_etl_spark.oracles import ORACLES as _O
-
-        oracle = _O.get(key, "")
-    closure = _dep_closure(fn)
-    h = _hashlib.sha256()
-    h.update((oracle or "").encode())
-    for dep_id in sorted(closure):
-        h.update(b"\x00")
-        h.update(dep_id.encode())
-        h.update(b"\x01")
-        h.update(closure[dep_id].encode())
-    return h.hexdigest()
-
-
-def _key_narrow_hash(key: str, fn=None, oracle: str | None = None) -> str:
-    """Narrow content hash: ONLY the key's registered function source
-    plus its DuckDB oracle string — no transitive closure. The
-    closure hash (``_key_code_hash``) is the sensitive tier but
-    saturates under shared-helper churn (one ``load`` edit flags all
-    253 keys — the r10 failure); this one cannot: a mismatch means
-    the key ITSELF or its correctness contract was edited since its
-    last driver row, the strongest possible re-sweep signal. The
-    algorithm is duplicated in ``tools/snapshot_keyhashes.py``
-    (which must run inside historical trees that predate this
-    helper) — the two are pinned byte-equal by
-    tests/test_sweep_rotation.py::test_tool_hash_matches_registry_hash.
-    """
-    import hashlib as _hashlib
-    import inspect as _inspect
-
-    if fn is None:
-        fn = QUERIES[key]
-    if oracle is None:
-        from rsbsa_etl_spark.oracles import ORACLES as _O
-
-        oracle = _O.get(key, "")
-    inner = getattr(fn, "func", None) or getattr(fn, "__wrapped__", None)
-    if callable(inner):
-        fn = inner
-    try:
-        src = _inspect.getsource(fn)
-    except (OSError, TypeError):
-        src = (
-            f"{getattr(fn, '__module__', '?')}."
-            f"{getattr(fn, '__qualname__', '?')}"
-        )
-    h = _hashlib.sha256()
-    h.update((oracle or "").encode())
-    h.update(b"\x00")
-    h.update(src.encode())
-    return h.hexdigest()
-
-
-def _recorded_key_hashes() -> dict:
-    """KEYHASHES.json: per key, the code hash as of the key's latest
-    committed driver row (``tools/snapshot_keyhashes.py`` maintains
-    it — run at round start, when the new CORRECTNESS record lands
-    and the tree still equals what the driver tested)."""
-    import json as _json
-    from pathlib import Path as _Path
-
-    p = _Path(__file__).resolve().parent.parent / "KEYHASHES.json"
-    try:
-        data = _json.loads(p.read_text())
-    except (OSError, ValueError):
-        return {}
-    return data if isinstance(data, dict) else {}
-
-
-def _changed_since_checked(
-    green: set, recorded: dict | None = None
-) -> tuple[set, set]:
-    """(narrow_changed, closure_changed): greens whose CURRENT code
-    hash differs from the hash recorded at their latest driver row —
-    their evidence verified a previous implementation, so age alone
-    under-ranks them (the r9 ``sample_stratified`` lesson:
-    reimplemented in r9, newest driver row r7, and the age tier
-    could not see it).
-
-    Two tiers (r11, after the r10 closure-only form saturated at
-    253/253 flagged and degenerated into pure age order):
-
-    * narrow — the key's OWN registered fn source or oracle string
-      changed (``_key_narrow_hash``). Immune to shared-helper churn;
-      the strongest re-sweep signal.
-    * closure — anything in the key's transitive closure changed
-      (``_key_code_hash``). Sensitive but saturating; ranked second.
-
-    A green with NO recorded hash is treated as changed on both
-    tiers (unknown provenance ⇒ re-check). Keys recorded green in a
-    CORRECTNESS file but since removed/renamed from the registry are
-    skipped — a stale driver row must not crash registry import
-    (r10 advice item 4)."""
-    if recorded is None:
-        recorded = _recorded_key_hashes()
-    narrow: set = set()
-    closure: set = set()
-    for k in green:
-        if k not in QUERIES:
-            continue
-        rec = recorded.get(k)
-        if not isinstance(rec, dict):
-            narrow.add(k)
-            closure.add(k)
-            continue
-        if rec.get("narrow") != _key_narrow_hash(k):
-            narrow.add(k)
-        if rec.get("hash") != _key_code_hash(k):
-            closure.add(k)
-    return narrow, closure
-
-
-# Round-6 queue: zero reds; pending = the 32 round-5 leftovers plus
-# the 16 round-6 additions (value_ecdf sketch_hll window_ewma
-# skyline_pareto source_overlap_kmv ab_chisq seq_trigrams
-# basket_pairs attribution_first_touch trend_theil_sen(_capped)
-# stream_hll resample_interpolate group_percentiles join_nearest
-# window_zscore_rolling) — 48 keys, within ONE sweep budget, every
-# one replica-green at sf0.01 AND sf0.1 from /tmp
-# (LOCAL_SWEEP_r06.md). After this sweep every registered key has a
-# driver row. Key additions stop at 48 pending by design.
-# (Historical note, round-5 head was the two r4 reds + 48 untested —
-# all 50 drained green, see CORRECTNESS_r05.json.) The prior
-# round-6 remainder comment listed the
-# exact tail `rfm_segments hard_negatives graph_triangles
-# ts_autocorr k_anonymity feature_hashing quantile_bucketize
-# stream_cdc_apply window_rolling_median state_durations
-# dedup_containment_capped dedup_spans dedup_embedding_incremental
-# bpe_train bpe_segment hybrid_search_rrf mmr_rerank dsir_weights
-# dsir_resample rocchio_classify fingerprint_winnow bootstrap_ci
-# ab_cuped ann_mrr hybrid_mmr prf_expand dedup_spans_cut
-# dedup_recall l_diversity ts_changepoint benford_digits ab_kstest`
-# (now 32 keys)
-# (every one replica-green at sf0.01 AND sf0.1 from /tmp), after
-# which every registry key has a driver row and the rotation
-# degenerates to a stable order. The drain stays optimal by
-# construction — tests/test_sweep_rotation.py pins the
-# work-conserving ordering and the 3-budget queue cap.
-_UNTESTED_PRIORITY = [
-    # streaming — checkpointed state, watermark eviction: riskiest
-    "stream_late_drop", "stream_dedup", "stream_stateful_totals",
-    "stream_join", "stream_join_evicting", "stream_session",
-    "stream_tail",
-    # pipeline metrics + multimodal plumbing
-    "sync_metrics", "multimodal_meta", "multimodal_features",
-    "multimodal_chunks",
-    # curation family
-    "curation_pipeline", "pii_redact", "decontam_ngram",
-    "pack_sequences", "sample_temperature", "shuffle_shards",
-    "mix_interleave",
-    # window functions
-    "window_tumbling", "window_sliding", "window_session",
-    "window_ntile", "window_first_last", "window_cumdistinct",
-    # extension joins
-    "join_asof", "join_range", "join_full_outer_nullsafe",
-    "join_skew_salted", "join_spatial_grid", "join_temporal_validity",
-    "join_cross",
-    # dedup/ANN remainder (incl. the round-4 bipartite additions)
-    "dedup_minhash_est", "dedup_incremental", "decontam_fuzzy",
-    "knn_graph", "embedding_outliers",
-    "dedup_segments", "dedup_priority",
-    "graph_pagerank", "ann_lsh_multiprobe",
-    "ivf_train", "ivf_train2", "ivf_train3",
-    "embedding_quantize", "embedding_pq",
-    # provenance / UDTF / text tail
-    "scan_file_provenance", "udtf_chunk_tokens",
-    "repetition_score", "vocab_coverage",
-    # --- round-5 tranche starts here (see comment above) ---
-    "agg_time_rollup", "agg_grouping_sets", "term_topk", "bm25_topk",
-    "ngram_topk", "inverted_index", "term_pmi", "cms_topk",
-    "group_topk", "group_mode", "outlier_zscore", "outlier_mad",
-    "hhi_concentration", "corr_groups", "events_funnel",
-    "events_dau_mau", "retention_cohort", "event_transitions",
-    "activity_histogram", "snapshot_diff", "resample_ffill",
-    "ab_ttest", "agg_string_concat", "rolling_active", "skew_stats",
-    "validate_domains", "profile_stats", "agg_filtered_multi",
-    # round-4 late additions (no driver row yet — join the r5 tranche)
-    "join_bloom_pruned", "sample_token_budget", "quality_adaptive",
-    "compact_plan", "burst_detect", "novelty_score", "sample_fixed_n",
-    "stream_burst", "sketch_merge", "group_sample_n", "bpe_pairs",
-    "lang_confusion", "stream_sample", "multimodal_resize",
-    "window_gap_islands", "join_bucketed", "ts_decompose",
-    "scan_partition_pruned", "corpus_summary", "tokenize_offsets",
-    "rfm_segments", "hard_negatives", "graph_triangles",
-    "ts_autocorr", "k_anonymity", "feature_hashing",
-    "quantile_bucketize", "stream_cdc_apply",
-    "window_rolling_median", "state_durations",
-    # round-5 additions (join the round-6 remainder)
-    "dedup_containment_capped", "dedup_spans",
-    "dedup_embedding_incremental", "bpe_train", "bpe_segment",
-    "hybrid_search_rrf", "mmr_rerank", "dsir_weights",
-    "dsir_resample", "rocchio_classify", "fingerprint_winnow",
-    "bootstrap_ci", "ab_cuped", "ann_mrr", "hybrid_mmr",
-    "prf_expand", "dedup_spans_cut", "dedup_recall", "l_diversity",
-    "ts_changepoint", "benford_digits", "ab_kstest",
-    # round-6 additions
-    "value_ecdf", "sketch_hll", "window_ewma", "skyline_pareto",
-    "source_overlap_kmv", "ab_chisq", "seq_trigrams", "basket_pairs",
-    "attribution_first_touch", "trend_theil_sen", "stream_hll",
-    "trend_theil_sen_capped", "resample_interpolate",
-    "group_percentiles", "join_nearest", "window_zscore_rolling",
-    # round-7 additions
-    "source_overlap_kmv_sketch", "winsorize_stats", "token_gini",
-    "scan_jsonl_corrupt", "scan_csv_typed",
-    "scan_schema_evolution", "scan_orc_roundtrip",
-    # round-9 additions
-    "sample_stratified", "mix_epochs", "hard_negatives_ivf",
-    "ann_index_roundtrip", "tokenizer_fertility", "text_strip_markup",
-    # round-11 additions
-    "tokenizer_fertility_bpe",
-]
-
-_rows, _row_rounds = _driver_latest_rows_and_rounds()
-_red = [k for k in QUERIES if k in _rows and not _is_green(_rows[k])]
-_green = {k for k, r in _rows.items() if _is_green(r)}
-_untested = [k for k in _UNTESTED_PRIORITY if k in QUERIES and k not in _rows]
-_rest = [
-    k for k in QUERIES
-    if k not in set(_red) and k not in set(_untested) and k not in _green
-]
-# Age tier (round 7) + change tiers (round 10, split in round 11):
-# once every key is driver-green, the rotation would otherwise
-# degenerate to a frozen order and the driver's 50-key sweep would
-# re-confirm the same head forever. Instead, order the green tail:
-#
-#   1. NARROW-changed greens first — the key's own registered fn or
-#      oracle string differs from what its latest driver row attested
-#      (KEYHASHES.json): the evidence verified a previous
-#      implementation, stale regardless of how recent the row is
-#      (the r9 ``sample_stratified`` lesson: reimplemented in r9
-#      while its newest driver row, r7, silently attested to the old
-#      code). This tier is immune to shared-helper churn, so it
-#      cannot saturate the way the r10 closure-only tier did
-#      (253/253 flagged ⇒ pure age order ⇒ the motivating key missed
-#      two consecutive sweeps).
-#   2. then CLOSURE-changed greens — something in the key's
-#      transitive dependency closure changed;
-#   3. then by driver-row AGE — oldest committed round first (the
-#      round also orders keys WITHIN each changed tier; registry
-#      order breaks remaining ties, stable sort).
-#
-# Each round the driver re-confirms the ~50 stalest-or-changed greens
-# against CURRENT code, so "green many rounds of churn ago" and
-# "green for code that no longer exists" both convert into fresh
-# evidence automatically as new CORRECTNESS files land.
-_narrow_changed, _closure_changed = _changed_since_checked(_green)
-_tail = sorted(
-    (k for k in QUERIES if k in _green and k not in set(_red)),
-    key=lambda k: (
-        k not in _narrow_changed,
-        k not in _closure_changed,
-        _row_rounds.get(k, 0),
-    ),
-)
-QUERIES = {k: QUERIES[k] for k in (*_red, *_untested, *_rest, *_tail)}

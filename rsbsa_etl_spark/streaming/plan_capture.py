@@ -26,42 +26,9 @@ per query, all merged into the key's row.
 
 from __future__ import annotations
 
-class _CaptureBuffer:
-    """Runtime evidence buffer with a PINNED repr.
-
-    Deliberately not a plain list: the sweep rotation's closure-hash
-    walk (``registry._dep_closure``) reprs every module constant a
-    key's code reads, and ``finish`` below reads this buffer — a
-    mutating repr would re-flag every streaming key as
-    changed-since-checked the moment any replay ran in the same
-    process (caught by tests/test_sweep_rotation.py::
-    test_tool_hash_matches_registry_hash when the full suite runs
-    streaming tests before it). Captured plans are per-process
-    evidence, not code identity, so the repr is constant.
-    """
-
-    def __init__(self) -> None:
-        self._items: list[tuple[str, str]] = []
-
-    def append(self, item: tuple[str, str]) -> None:
-        self._items.append(item)
-
-    def clear(self) -> None:
-        self._items.clear()
-
-    def __iter__(self):
-        return iter(self._items)
-
-    def __len__(self) -> int:
-        return len(self._items)
-
-    def __repr__(self) -> str:  # stable: contents are not code identity
-        return "<streaming plan-capture buffer>"
-
-
 #: (tag, executed-plan string) per completed streaming query since
 #: the last ``CAPTURED.clear()`` — the audit clears per key.
-CAPTURED = _CaptureBuffer()
+CAPTURED: list[tuple[str, str]] = []
 
 
 class _LoopGate:
@@ -75,16 +42,10 @@ class _LoopGate:
     while the audit holds this gate open: the loops are hot paths
     (bpe_train runs in bench), and stringifying an executed plan per
     merge round would tax production callers for evidence only the
-    audit reads. Same pinned-repr discipline as ``_CaptureBuffer``
-    (the closure-hash walk reprs module constants read by key code;
-    a state-dependent repr would re-flag keys as changed whenever an
-    audit ran in-process)."""
+    audit reads."""
 
     def __init__(self) -> None:
         self.enabled = False
-
-    def __repr__(self) -> str:  # stable: gate state is not code identity
-        return "<driver-loop plan-capture gate>"
 
 
 #: open during ``plans.audit.audit_key`` builds only

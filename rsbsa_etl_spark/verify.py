@@ -236,7 +236,7 @@ def verify_key(
 def row_green(row: dict) -> bool:
     """the gate's strict green predicate — all three match flags true
     and no error. ONE definition shared by the CLI and the tests (the
-    driver-side rotation has its own, laxer ``registry._is_green``,
+    driver-side rotation has its own, laxer ``__spark_entry__._is_green``,
     which tolerates absent flags on historical rows-only records)."""
     return bool(
         row.get("rows_match")

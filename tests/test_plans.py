@@ -10,6 +10,8 @@ be visible in the executed plan, not just intended (SURVEY §4).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from rsbsa_etl_spark.registry import QUERIES
@@ -512,6 +514,21 @@ def test_curation_pipeline_fused(spark):
     assert "Join" not in plan, "composed pipeline grew a join stage"
     assert "FlatMapGroupsInPandas" not in plan
     assert "FlatMapGroupsInArrow" not in plan
+
+
+def test_curation_quality_gate_filters_above_the_regex_tree(spark):
+    # the F.shuffle(F.array(quality))[0] barrier in curation_pipeline
+    # (functions/curation.py) is non-deterministic to the optimizer,
+    # so the quality gate is NOT pushed below the projection with the
+    # ~30-regex score substituted in (that would evaluate the regex
+    # tree twice per row): the Filter compares the quality attribute
+    # itself, and no Filter evaluates an rlike
+    df = QUERIES["curation_pipeline"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln for ln in plan.splitlines() if "Filter " in ln]
+    gate = re.compile(r"\bquality#\d+ >= 0\.75\b")
+    assert any(gate.search(ln) for ln in filters), filters
+    assert not any("rlike" in ln.lower() for ln in filters), filters
 
 
 def test_dedup_embedding_is_tiled_not_driver_collected(spark):

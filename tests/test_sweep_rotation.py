@@ -1,36 +1,48 @@
-"""Guards the driver-sweep rotation (registry.py tail).
+"""Guards the driver-sweep rotation (``__spark_entry__.queries()``).
 
 The external correctness driver checks the first ~50 keys of
 ``queries()`` order each round. The rotation rule is: still-red keys
-first, then keys with no committed driver row, greens demoted to the
-tail. These tests parse the in-repo ``CORRECTNESS_r*.json`` records
-— the same source the registry itself reads — so the rotation is
-self-maintaining instead of hand-curated: if a new round's record
-lands and the ordering stops honoring it, this fails.
+first, then keys with no committed driver row, then greens by the
+round of their latest row, oldest first. The live-record tests parse
+the in-repo ``CORRECTNESS_r*.json`` records — the same source
+``queries()`` reads — so the rotation is self-maintaining instead of
+hand-curated: if a new round's record lands and the ordering stops
+honoring it, this fails. The synthetic-row tests pin the tiers the
+live records no longer exercise (no key is red or untested today).
 """
 
 from __future__ import annotations
 
+import ast
+import importlib
+import inspect
 import json
+import subprocess
+import sys
+import textwrap
+import types
+from fnmatch import fnmatch
 from pathlib import Path
 
-from __spark_entry__ import queries
-
+import __spark_entry__
 # the SAME predicate/merge the production rotation uses — importing
 # (rather than copy-pasting) means a bug fixed in one place can't
 # leave the guard test pinning stale logic
-from rsbsa_etl_spark.registry import (
-    _driver_latest_rows,
+from __spark_entry__ import (
     _driver_latest_rows_and_rounds,
     _is_green,
+    _sweep_order,
+    queries,
 )
 
 ROOT = Path(__file__).resolve().parent.parent
 SWEEP_BUDGET = 50
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
+         "err": None}
 
 
 def _latest_rows() -> dict:
-    rows = _driver_latest_rows()
+    rows, _rounds = _driver_latest_rows_and_rounds()
     # the production reader swallows unreadable files; the guard
     # additionally insists every committed record parses
     for p in sorted(ROOT.glob("CORRECTNESS_r*.json")):
@@ -109,21 +121,13 @@ def test_sweep_queue_is_work_conserving():
     )
 
 
-def test_green_tail_is_changed_then_age_ordered():
-    """Round-11 tail contract (replacing the round-7 pure-age form,
-    which the round-10 change tier made obsolete): the green tail is
-    partitioned into three segments —
-
-      [narrow-changed] [closure-only-changed] [unchanged]
-
-    and WITHIN each segment keys are ordered by the round of their
-    latest driver row, oldest first. Narrow-changed greens (own fn
-    or oracle edited since the driver last attested them) outrank
-    everything regardless of row freshness — a key reimplemented in
-    the round just swept must still re-enter the next head (the r9
-    ``sample_stratified`` lesson). Stability within (segment, round)
-    is the registry's own order, which we don't pin."""
-    from rsbsa_etl_spark.registry import _changed_since_checked
+def test_green_tail_is_age_ordered():
+    """The green tail — the maximal all-green suffix of the order — is
+    sorted by the round of each key's latest driver row, oldest
+    first, with registry order breaking ties. So each round the
+    driver re-confirms the ~50 stalest greens, and every key is
+    re-checked within ceil(keys / budget) rounds."""
+    from rsbsa_etl_spark.registry import QUERIES
 
     rows, rounds = _driver_latest_rows_and_rounds()
     order = list(queries())
@@ -138,404 +142,106 @@ def test_green_tail_is_changed_then_age_ordered():
         else:
             break
     suffix.reverse()
-    narrow, closure = _changed_since_checked(green)
-
-    def segment(k: str) -> int:
-        if k in narrow:
-            return 0
-        if k in closure:
-            return 1
-        return 2
-
-    keyed = [(segment(k), rounds[k]) for k in suffix]
-    assert keyed == sorted(keyed), (
-        "green tail violates (narrow-changed, closure-changed, age) "
-        "order — sweep budget is being spent on fresher/unchanged "
-        "keys while changed or staler ones wait"
+    position = {k: i for i, k in enumerate(QUERIES)}
+    assert suffix == sorted(suffix, key=lambda k: (rounds[k], position[k])), (
+        "green tail is not (age, registry) ordered — sweep budget is "
+        "being spent on fresher keys while staler ones wait"
     )
     # and when EVERYTHING is green, the whole order is the tail —
-    # i.e. the sweep head is exactly the changed-or-stalest keys
+    # i.e. the sweep head is exactly the stalest keys
     if len(green_tail) == len(order):
         assert suffix == order
 
 
-def test_change_tier_not_saturated():
-    """The r10 regression, pinned: the change tier is only useful if
-    it DISCRIMINATES. When every green is flagged changed, the sort
-    degenerates to pure age order and the motivating case (a
-    reimplemented key with a fresh-ish row) misses the sweep head.
-    The narrow tier hashes only each key's own fn + oracle, so
-    shared-helper churn cannot saturate it; if this fails, the
-    KEYHASHES round-start refresh was skipped or the seed used a
-    stale algorithm (r10 advice item 1)."""
-    from rsbsa_etl_spark.registry import _changed_since_checked
-
-    rows = _latest_rows()
-    green = {k for k, r in rows.items() if _is_green(r)}
-    if len(green) < SWEEP_BUDGET:
-        return  # too early in the build for saturation to mean anything
-    narrow, _closure = _changed_since_checked(green)
-    assert len(narrow) < len(green), (
-        f"narrow change tier saturated ({len(narrow)}/{len(green)} "
-        "greens flagged) — it no longer discriminates; re-run "
-        "tools/snapshot_keyhashes.py"
-    )
+def test_sweep_order_on_synthetic_rows():
+    """red → no row → greens oldest round first, on made-up rows. A
+    ``hash_match: False`` row is red, and a row for a key no longer
+    in the registry orders nothing and raises nothing."""
+    keys = ["g3", "g1", "untested", "red", "g2", "mismatch"]
+    rows = {
+        "g3": GREEN, "g1": GREEN, "g2": GREEN,
+        "red": {**GREEN, "rows_match": False},
+        "mismatch": {**GREEN, "hash_match": False},
+        "removed": {**GREEN, "rows_match": False},
+    }
+    rounds = {"g3": 3, "g1": 1, "g2": 2, "red": 3, "mismatch": 3,
+              "removed": 3}
+    assert _sweep_order(keys, rows, rounds) == [
+        "red", "mismatch", "untested", "g1", "g2", "g3",
+    ]
 
 
-def _keyhash_stale_keys(recorded: dict, rounds: dict, order: set,
-                        narrow_of, code_of, attested_of) -> list:
-    """The staleness predicate behind
-    ``test_keyhashes_not_staler_than_correctness``, factored out so a
-    companion test can prove it still fires on the real hazard.
-
-    Round-13 form (git-aware — closing the class, not the instance,
-    after two consecutive judge checkpoints red on the round-stamp
-    form): the invariant that makes the change tier sound is that a
-    key's recorded hash equals its hash in the tree its latest driver
-    row ACTUALLY TESTED (``attested_of(rnd)[k]``, resolved from git
-    history exactly as tools/snapshot_keyhashes.py resolves it — the
-    parent of the ``round N: verdict`` driver commit). Against that
-    anchor there is exactly one dangerous mis-state, and it is the
-    only one this predicate flags:
-
-      recorded == current tree  BUT  recorded != attested tree
-
-    i.e. the change tier sees "unchanged since checked" while the
-    current code was never driver-verified (the edit-before-refresh
-    hazard: a non-git-aware refresh stamped edited code with an old
-    round number). Every other mismatch is self-healing — recorded
-    != current flags the key as changed, so the rotation re-sweeps
-    it next round regardless of whether the anchor is right. In
-    particular the judge-checkpoint hand-off case (driver record
-    lands AFTER the builder's last refresh, attesting keys edited
-    that round) lands in the self-healing bucket and is tolerated:
-    recorded is the previous round's tree, current is the attested
-    tree, recorded != current. The old round-stamp predicate redded
-    exactly that honest state (r11: all 50 swept keys; r12: 17).
-
-    When the attested tree is unresolvable (shallow clone, rewritten
-    history) the old round-stamp form is the fallback: stale iff the
-    row is newer than the stamp AND recorded != current."""
-    stale = []
-    for k, rnd in rounds.items():
-        if k not in order:
-            continue
-        rec = recorded.get(k)
-        if (
-            not isinstance(rec, dict)
-            or "narrow" not in rec
-            or "hash" not in rec
-        ):
-            stale.append(k)
-            continue
-        att = attested_of(rnd)
-        att = att.get(k) if att else None
-        if att is None:
-            # fallback: attested tree unresolvable → round-stamp form
-            if rec.get("round", -1) >= rnd:
-                continue
-            if rec["narrow"] != narrow_of(k) or rec["hash"] != code_of(k):
-                stale.append(k)
-            continue
-        if rec["hash"] == code_of(k) and rec["hash"] != att["hash"]:
-            stale.append(k)
-        elif rec["narrow"] == narrow_of(k) and rec["narrow"] != att["narrow"]:
-            stale.append(k)
-    return sorted(stale)
+def test_sweep_order_ties_keep_registry_order():
+    keys = ["g_b", "red_b", "new_b", "g_a", "red_a", "new_a"]
+    red = {**GREEN, "err": "boom"}
+    rows = {"g_b": GREEN, "g_a": GREEN, "red_b": red, "red_a": red}
+    rounds = {"g_b": 5, "g_a": 5, "red_b": 2, "red_a": 7}
+    assert _sweep_order(keys, rows, rounds) == [
+        "red_b", "red_a", "new_b", "new_a", "g_b", "g_a",
+    ]
 
 
-def test_keyhashes_not_staler_than_correctness():
-    """KEYHASHES anchoring guard, git-aware (r12 verdict item 1):
-    every key's recorded hash must be consistent with the tree its
-    latest driver row tested — mis-anchored entries whose hash ALSO
-    matches the current tree would blind the change tier (key looks
-    unchanged-since-verified while the driver never saw this code).
-    Resolves each present round's attested tree from git history via
-    the same helper the refresh tool uses, so a driver record landing
-    after hand-off can never red an honestly-refreshed tree, while an
-    edit that predates the refresh still fails (companion test below
-    proves the predicate fires)."""
-    import functools
-    import json
-    import sys
-
-    from rsbsa_etl_spark.registry import _key_code_hash, _key_narrow_hash
-
-    sys.path.insert(0, str(ROOT / "tools"))
-    try:
-        from snapshot_keyhashes import attested_hashes
-    finally:
-        sys.path.pop(0)
-
+def test_latest_rows_follow_the_parsed_round(tmp_path, monkeypatch):
+    """Later rounds override earlier ones by PARSED round number
+    (r100 sorts after r99, which a filename sort gets wrong), and
+    non-row entries and unreadable records are skipped."""
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(
+        {"k": {**GREEN, "rows_match": False}, "only99": GREEN}))
+    (tmp_path / "CORRECTNESS_r100.json").write_text(json.dumps(
+        {"k": GREEN, "__sweep_sha__": "ab12cd34"}))
+    (tmp_path / "CORRECTNESS_r101.json").write_text("{not json")
+    monkeypatch.setattr(__spark_entry__, "_ROOT", tmp_path)
     rows, rounds = _driver_latest_rows_and_rounds()
-    recorded = json.loads((ROOT / "KEYHASHES.json").read_text())
-    stale = _keyhash_stale_keys(
-        recorded, rounds, set(queries()), _key_narrow_hash, _key_code_hash,
-        functools.lru_cache(maxsize=None)(attested_hashes),
+    assert rows == {"k": GREEN, "only99": GREEN}
+    assert rounds == {"k": 100, "only99": 99}
+
+
+def test_queries_returns_exactly_the_registry_keys():
+    from rsbsa_etl_spark.registry import QUERIES
+
+    order = list(queries())
+    assert len(order) == len(QUERIES)
+    assert set(order) == set(QUERIES)
+
+
+def _registry_definition_order() -> list[str]:
+    """The keys of the ``QUERIES`` dict literal, in source order."""
+    tree = ast.parse(
+        (ROOT / "rsbsa_etl_spark" / "registry.py").read_text()
     )
-    assert stale == [], (
-        f"KEYHASHES.json is mis-anchored for {len(stale)} keys (e.g. "
-        f"{stale[:5]}): recorded hash matches the current tree but not "
-        "the tree the key's latest driver row tested — run "
-        "`python tools/snapshot_keyhashes.py` (git-aware; safe at any "
-        "point in the round)"
-    )
+    for node in tree.body:
+        if (
+            isinstance(node, ast.AnnAssign)
+            and getattr(node.target, "id", None) == "QUERIES"
+        ):
+            return [k.value for k in node.value.keys]
+    raise AssertionError("registry.py no longer defines QUERIES literally")
 
 
-def test_keyhash_guard_fires_on_edit_before_refresh():
-    """The tripwire must still catch the real hazard: a refresh that
-    stamped EDITED code with an old round number (recorded == current
-    != attested), which would blind the change tier. Exercised against
-    the factored predicate with synthetic records so greening the
-    hand-off case cannot have silently disabled the guard."""
-    rounds = {
-        "k_misanchored": 12,     # rec == current != attested → STALE
-        "k_handoff": 12,         # rec = old tree, current == attested → ok
-        "k_anchored_edited": 12,  # rec == attested, current edited → ok
-        "k_missing": 12,         # malformed entry → STALE
-        "k_narrow_misanchor": 12,  # narrow tier blind → STALE
-    }
-    recorded = {
-        "k_misanchored": {"round": 12, "narrow": "N:k_misanchored",
-                          "hash": "C:k_misanchored"},
-        "k_handoff": {"round": 11, "narrow": "OLD", "hash": "OLD"},
-        "k_anchored_edited": {"round": 12, "narrow": "ATT", "hash": "ATT"},
-        "k_missing": {"round": 12, "hash": "C:k_missing"},
-        "k_narrow_misanchor": {"round": 12,
-                               "narrow": "N:k_narrow_misanchor",
-                               "hash": "ATT"},
-    }
-    attested = {
-        "k_misanchored": {"hash": "ATT", "narrow": "ATT"},
-        "k_handoff": {"hash": "C:k_handoff", "narrow": "N:k_handoff"},
-        "k_anchored_edited": {"hash": "ATT", "narrow": "ATT"},
-        "k_missing": {"hash": "ATT", "narrow": "ATT"},
-        "k_narrow_misanchor": {"hash": "ATT", "narrow": "ATT"},
-    }
-    stale = _keyhash_stale_keys(
-        recorded, rounds, set(rounds),
-        lambda k: f"N:{k}", lambda k: f"C:{k}",
-        lambda rnd: attested,
-    )
-    assert stale == ["k_misanchored", "k_missing", "k_narrow_misanchor"]
-
-
-def test_attested_ref_policy_newest_round_is_head():
-    """The round-14 class fix, pinned at the policy level: the NEWEST
-    round present in CORRECTNESS records has, by construction, no
-    ``round N: verdict`` commit at the judge checkpoint (that commit
-    is created AFTER judging) — yet the driver tested the committed
-    tree at hand-off, which IS current HEAD. Three consecutive
-    checkpoints (r11/r12/r13) redded on the fallback round-stamp
-    predicate because the r12 git-aware fix only resolved rounds
-    whose verdict commit already existed."""
-    import sys
-
-    sys.path.insert(0, str(ROOT / "tools"))
-    try:
-        from snapshot_keyhashes import _resolve_attested_ref
-    finally:
-        sys.path.pop(0)
-
-    # verdict commit exists → its parent, regardless of max round
-    assert _resolve_attested_ref(12, "abc123^", 14) == "abc123^"
-    # newest round, no verdict commit → the checkpoint state → HEAD
-    assert _resolve_attested_ref(14, None, 14) == "HEAD"
-    # OLDER round with no verdict commit → genuinely unresolvable
-    assert _resolve_attested_ref(12, None, 14) is None
-    # r15 (r14 advice item 1): a record that states the sweep-time
-    # sha anchors the newest round to THAT sha, not HEAD — closing
-    # the sweep→checkpoint commit window where HEAD drifts past the
-    # tree the driver actually tested
-    assert _resolve_attested_ref(15, None, 15, "deadbee") == "deadbee"
-    # ...but the verdict commit, once it exists, still wins (it is
-    # the proven path and, by construction, points at the same tree)
-    assert _resolve_attested_ref(15, "abc123^", 15, "deadbee") == "abc123^"
-    # the sha never leaks into older-round resolution
-    assert _resolve_attested_ref(12, None, 15, "deadbee") is None
-
-
-def test_record_sweep_sha_reads_and_validates(tmp_path):
-    """``_record_sweep_sha`` pulls the top-level ``__sweep_sha__``
-    string out of the round's CORRECTNESS record — and ONLY a
-    hex-sha-shaped string (a malformed value must not become a git
-    ref). String-valued top-level entries are invisible to the key
-    logic (``_latest_rows_and_rounds`` filters on dict values), so
-    the marker cannot masquerade as a query key."""
-    import json
-    import sys
-
-    sys.path.insert(0, str(ROOT / "tools"))
-    try:
-        from snapshot_keyhashes import (
-            _latest_rows_and_rounds,
-            _record_sweep_sha,
-        )
-    finally:
-        sys.path.pop(0)
-
-    rec = {
-        "__sweep_sha__": "ab12cd34ef56",
-        "some_key": {"rows_match": True, "schema_match": True,
-                     "hash_match": True, "err": None},
-    }
-    (tmp_path / "CORRECTNESS_r15.json").write_text(json.dumps(rec))
-    (tmp_path / "CORRECTNESS_r14.json").write_text(json.dumps(
-        {"other_key": {"rows_match": True}}))
-    assert _record_sweep_sha(15, tmp_path) == "ab12cd34ef56"
-    # no sha in the record → None (callers fall back to HEAD)
-    assert _record_sweep_sha(14, tmp_path) is None
-    # no record at all → None
-    assert _record_sweep_sha(13, tmp_path) is None
-    # malformed sha → rejected
-    (tmp_path / "CORRECTNESS_r16.json").write_text(json.dumps(
-        {"__sweep_sha__": "HEAD^{tree}; rm -rf"}))
-    assert _record_sweep_sha(16, tmp_path) is None
-    # the marker never surfaces as a key
-    rows, rounds = _latest_rows_and_rounds(tmp_path)
-    assert "__sweep_sha__" not in rows and "__sweep_sha__" not in rounds
-
-
-def test_attested_hashes_wires_head_for_untracked_newest_round(monkeypatch):
-    """End-to-end wiring of the checkpoint state through
-    ``attested_hashes``: an untracked newest-round correctness record
-    (max round N, no ``round N: verdict`` commit in history) must
-    hash the tree at HEAD — not return None and fall back to the
-    round-stamp predicate that redded 47 keys at the r13 checkpoint."""
-    import sys
-
-    sys.path.insert(0, str(ROOT / "tools"))
-    try:
-        import snapshot_keyhashes as SK
-    finally:
-        sys.path.pop(0)
-
-    requested = []
-    monkeypatch.setattr(SK, "_driver_commit_parent", lambda rnd: None)
-    monkeypatch.setattr(SK, "_max_round_present", lambda root=None: 99)
-    monkeypatch.setattr(
-        SK, "_hashes_at_ref",
-        lambda ref: requested.append(ref) or {"k": {"hash": "H",
-                                                    "narrow": "N"}},
-    )
-    assert SK.attested_hashes(99) == {"k": {"hash": "H", "narrow": "N"}}
-    assert requested == ["HEAD"]
-    # an older unresolvable round still degrades to None (fallback)
-    assert SK.attested_hashes(98) is None
-
-
-def test_keyhash_guard_tolerates_checkpoint_handoff_after_refactor():
-    """The EXACT r13 checkpoint failure state, simulated: the newest
-    round's driver sweep re-attested keys on the committed tree; an
-    in-round refactor had changed every key's full closure hash
-    (narrow hashes unchanged); KEYHASHES still carries the previous
-    round's stamps. With the attested tree resolved to HEAD (== the
-    current tree at the checkpoint), all such keys must land in the
-    self-healing bucket — NOT stale. The edit-before-refresh hazard
-    (recorded == current != attested) must still trip alongside."""
-    rounds = {"k_refactored": 14, "k_blind": 14}
-    recorded = {
-        # stamped at r13 with the pre-refactor closure hash; narrow
-        # unchanged — exactly the 47-key r13 state
-        "k_refactored": {"round": 13, "narrow": "N:k_refactored",
-                         "hash": "OLD_CLOSURE"},
-        # the real hazard: stamped with the CURRENT hash although the
-        # attested (HEAD) tree disagrees → change tier blinded
-        "k_blind": {"round": 13, "narrow": "N:k_blind",
-                    "hash": "C:k_blind"},
-    }
-    # at the checkpoint, HEAD == the current tree for honestly
-    # committed keys; for k_blind the attested tree disagrees
-    attested = {
-        "k_refactored": {"hash": "C:k_refactored",
-                         "narrow": "N:k_refactored"},
-        "k_blind": {"hash": "ATT", "narrow": "N:k_blind"},
-    }
-    stale = _keyhash_stale_keys(
-        recorded, rounds, set(rounds),
-        lambda k: f"N:{k}", lambda k: f"C:{k}",
-        lambda rnd: attested,
-    )
-    assert stale == ["k_blind"]
-
-
-def test_keyhash_guard_fallback_without_git_history():
-    """When the attested tree is unresolvable the predicate degrades
-    to the round-stamp form: newer driver row + recorded != current →
-    stale; round stamp at/beyond the row, or hashes matching the
-    current tree → tolerated."""
-    rounds = {"k_edited": 12, "k_unchanged": 12, "k_fresh_stamp": 12}
-    recorded = {
-        "k_edited": {"round": 11, "narrow": "OLD", "hash": "OLD"},
-        "k_unchanged": {"round": 11, "narrow": "N:k_unchanged",
-                        "hash": "C:k_unchanged"},
-        "k_fresh_stamp": {"round": 12, "narrow": "OLD", "hash": "OLD"},
-    }
-    stale = _keyhash_stale_keys(
-        recorded, rounds, set(rounds),
-        lambda k: f"N:{k}", lambda k: f"C:{k}",
-        lambda rnd: None,
-    )
-    assert stale == ["k_edited"]
-
-
-def test_tool_hash_matches_registry_hash():
-    """The lockstep invariant the whole change tier depends on:
-    ``tools/snapshot_keyhashes.py`` duplicates the two hash
-    algorithms (it must run inside historical trees whose registry
-    predates ``_key_code_hash``/``_key_narrow_hash``), so silent
-    drift between the copies would make every recorded hash
-    incomparable. Run the tool in ``--emit-json`` mode against the
-    CURRENT tree and require byte-equal digests for every key, both
-    tiers. (Promised by both docstrings since r10; this is the test
-    that was missing — r10 advice item 2.)"""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    from rsbsa_etl_spark.registry import _key_code_hash, _key_narrow_hash
-
+def test_registry_import_reads_no_driver_record():
+    """Importing the registry opens no driver record and keeps the
+    dict's definition order: the sweep rotation runs only inside
+    ``queries()``, not on every import (CLI, bench, each test)."""
+    probe = textwrap.dedent("""
+        import json, os, sys
+        opened = []
+        def hook(event, args):
+            if event == "open" and isinstance(args[0], (str, bytes)):
+                opened.append(os.fsdecode(args[0]))
+        sys.addaudithook(hook)
+        from rsbsa_etl_spark.registry import QUERIES
+        print(json.dumps({"opened": opened, "order": list(QUERIES)}))
+    """)
     out = subprocess.run(
-        [sys.executable, str(ROOT / "tools" / "snapshot_keyhashes.py"),
-         "--emit-json"],
-        capture_output=True, text=True, check=True,
-        env=dict(os.environ, PYTHONPATH=str(ROOT)), cwd=str(ROOT),
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        check=True, cwd=str(ROOT),
     ).stdout
-    tool = json.loads(out.strip().splitlines()[-1])
-    keys = queries()
-    assert set(tool) == set(keys)
-    mismatched = sorted(
-        k
-        for k in keys
-        if tool[k]["hash"] != _key_code_hash(k)
-        or tool[k]["narrow"] != _key_narrow_hash(k)
-    )
-    assert mismatched == [], (
-        f"hash algorithm drift between tools/snapshot_keyhashes.py and "
-        f"registry for {len(mismatched)} keys (e.g. {mismatched[:5]})"
-    )
-
-
-def test_dep_closure_resolves_function_local_imports():
-    """The round-12 walker fix, pinned: the registry wrapper style is
-    `from rsbsa_etl_spark.x import y` INSIDE the wrapper body, and
-    those names never reach __globals__ — a globals-only walk left
-    the entire implementation module out of ~150 keys' closures, so
-    implementation edits never re-entered the sweep head (found when
-    a full round of retrieval.py edits flagged zero keys). The
-    closure of a local-import wrapper must contain the imported
-    implementation function AND its transitive helpers."""
-    from rsbsa_etl_spark.registry import QUERIES, _dep_closure
-
-    closure = _dep_closure(QUERIES["mmr_rerank"])
-    assert "rsbsa_etl_spark.functions.retrieval.mmr_rerank" in closure
-    # transitive: the greedy fold the implementation calls
-    assert "rsbsa_etl_spark.functions.retrieval._greedy_mmr" in closure
-    # and a module-ALIAS local import (`from rsbsa_etl_spark import
-    # params as P` style) must resolve attribute reads through the
-    # alias — P.MMR_POOL_K etc. land as const entries
-    assert any(k.startswith("const.") for k in closure)
+    got = json.loads(out.strip().splitlines()[-1])
+    records = [
+        p for p in got["opened"] if fnmatch(Path(p).name, "CORRECTNESS_r*.json")
+    ]
+    assert records == [], f"registry import opened driver records: {records}"
+    assert got["order"] == _registry_definition_order()
 
 
 def test_readme_query_count_matches_registry():
@@ -629,9 +335,9 @@ LIBRARY_ENTRYPOINT_EXEMPTIONS = {
     "rsbsa_etl_spark.functions.multimodal.decode_wav_meta",
     "rsbsa_etl_spark.functions.multimodal.decode_bmp_meta",
     # oracle-side SQL-string builders: they run at oracles.py import
-    # time and their OUTPUT text is inside every oracle string a key
-    # hashes — they are exercised by every DuckDB comparison, just
-    # never from a Spark plan
+    # time and their OUTPUT text is inside the oracle strings — they
+    # are exercised by every DuckDB comparison, just never from a
+    # Spark plan
     "rsbsa_etl_spark.functions.numeric.sql_round",
     "rsbsa_etl_spark.functions.numeric.sql_sum_fixed",
     # documented O(n²)/no-Python REFERENCE arms: each exists as the
@@ -653,6 +359,67 @@ LIBRARY_ENTRYPOINT_EXEMPTIONS = {
 }
 
 
+def _reachable_functions(roots) -> set[str]:
+    """``module.qualname`` of every package function or class the
+    ``roots`` callables can reach, resolved statically from source:
+    bare names through each function's globals, function-local
+    ``rsbsa_etl_spark`` imports (the registry wrappers import their
+    implementation inside the body), and ``module.attr`` reads.
+    Blind spots: dispatch through strings and callables reached only
+    via data tables."""
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        obj = todo.pop()
+        inner = getattr(obj, "func", None) or getattr(obj, "__wrapped__", None)
+        if callable(inner):  # pandas_udf / functools wrappers
+            obj = inner
+        mod = getattr(obj, "__module__", None) or ""
+        if not (
+            mod.startswith("rsbsa_etl_spark")
+            and isinstance(obj, (types.FunctionType, type))
+        ):
+            continue
+        qual = f"{mod}.{obj.__qualname__}"
+        if qual in seen:
+            continue
+        seen.add(qual)
+        try:
+            tree = ast.parse(textwrap.dedent(inspect.getsource(obj)))
+        except (OSError, TypeError, SyntaxError):
+            continue
+        names = getattr(obj, "__globals__", None) or vars(sys.modules[mod])
+        local: dict = {}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and not node.level
+                and (node.module or "").startswith("rsbsa_etl_spark")
+            ):
+                m = importlib.import_module(node.module)
+                for a in node.names:
+                    if a.name == "*":
+                        continue
+                    if not hasattr(m, a.name):  # a not-yet-imported submodule
+                        importlib.import_module(f"{node.module}.{a.name}")
+                    local[a.asname or a.name] = getattr(m, a.name)
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("rsbsa_etl_spark") and a.asname:
+                        local[a.asname] = importlib.import_module(a.name)
+        todo.extend(local.values())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                todo.append(local.get(node.id, names.get(node.id)))
+            elif isinstance(node, ast.Attribute) and isinstance(
+                node.value, ast.Name
+            ):
+                base = local.get(node.value.id, names.get(node.value.id))
+                if isinstance(base, types.ModuleType):
+                    todo.append(getattr(base, node.attr, None))
+    return seen
+
+
 def test_functions_entry_points_reach_the_registry():
     """No silent registry bypass (r13 verdict item 4): every PUBLIC
     module-level function in ``rsbsa_etl_spark.functions.*`` must be
@@ -666,11 +433,9 @@ def test_functions_entry_points_reach_the_registry():
     import pkgutil
 
     import rsbsa_etl_spark.functions as FPKG
-    from rsbsa_etl_spark.registry import QUERIES, _dep_closure
+    from rsbsa_etl_spark.registry import QUERIES
 
-    reachable: set[str] = set()
-    for fn in QUERIES.values():
-        reachable.update(_dep_closure(fn))
+    reachable = _reachable_functions(QUERIES.values())
 
     orphans = []
     for info in pkgutil.iter_modules(FPKG.__path__):
