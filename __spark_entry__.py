@@ -54,10 +54,11 @@ def _driver_latest_rows_and_rounds() -> tuple[dict, dict]:
         except (OSError, ValueError):
             continue
         if isinstance(data, dict):
+            rnd = _round_of(p)
             for k, v in data.items():
                 if isinstance(v, dict):
                     rows[k] = v
-                    rounds[k] = _round_of(p)
+                    rounds[k] = rnd
     return rows, rounds
 
 
