@@ -698,13 +698,14 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ivf_train3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """the general n-iteration Lloyd loop (n=3): E-step (broadcast
-    centroids, per-row argmin fold, zero shuffle) then M-step (one
-    hash agg) per round. The centroid table (k·d rows) is
-    localCheckpointed between rounds — per-round lineage cuts keep
-    Catalyst's analysis cost constant instead of exponential (same
-    discipline as ``dedup_clusters``); the corpus itself is never
-    checkpointed, only re-scanned, which is the right trade at 100 TB
-    (centroids are tiny, the corpus is not).
+    centroids, per-row argmin in the Arrow assignment kernel, zero
+    shuffle) then M-step (one hash agg) per round. Each E-step
+    collects the centroid table (k·d rows) into its broadcast, which
+    cuts the per-round lineage — Catalyst's analysis cost stays
+    constant instead of exponential (the ``dedup_clusters``
+    discipline) with no localCheckpoint job; the corpus itself is
+    never checkpointed, only re-scanned, which is the right trade at
+    100 TB (centroids are tiny, the corpus is not).
 
     Centroid values are fixed-point (1e-6), so rebuilt vectors — and
     therefore distances and cell assignments — are engine-exact and
@@ -720,18 +721,12 @@ def ivf_train3(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _ec(assigned.select(F.col("cid").alias("label"), "embedding"))
         return out.select(F.col("label").alias("cid"), "dim", "centroid")
 
-    from rsbsa_etl_spark.functions.similarity import _use_arrow_assign
-
     emb = load(spark, sf_dir, "embeddings")
     cents = mstep(ivf_assignments(emb))
     for _ in range(2):  # iterations 2..3
-        # the Arrow assignment kernel COLLECTS cvec at build time —
-        # the collected matrix becomes a broadcast, which IS the
-        # lineage cut, so the eager per-round localCheckpoint was a
-        # second, redundant job per round (r16). The fold arm keeps
-        # no such collect, so it keeps the explicit cut.
-        if not _use_arrow_assign():
-            cents = cents.localCheckpoint(eager=True)
+        # the assignment kernel COLLECTS cvec at build time — the
+        # collected matrix becomes a broadcast, which IS the lineage
+        # cut, so no per-round localCheckpoint is needed (r16)
         cvec = cents.groupBy("cid").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "centroid"))),

@@ -39,7 +39,6 @@ from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
 from rsbsa_etl_spark.functions.similarity import (
     _collect_id_vecs,
     _topk_scores_arrow,
-    _use_arrow_score,
     dot,
     safe_div,
     with_norm,
@@ -105,7 +104,6 @@ def _hybrid_parts(
     queries = corpus.where(F.col("doc_id").isin(qset)).select(
         F.col("doc_id").alias("query_id"),
         F.col("norm").alias("q_norm"),
-        F.col("embedding").alias("q_emb"),
     )
     cand = corpus.where(~F.col("doc_id").isin(qset))
 
@@ -147,42 +145,23 @@ def _hybrid_parts(
     )
 
     # ---- vector arm: broadcast query vectors, one corpus scan -----
-    # default (r16): scored in the Arrow batch kernel (1e-4-rounded
-    # cosine, batch-local top-arm_k cut) — the per-pair dot fold and
-    # the corpus×queries window input disappear; fold arm under the
-    # dial. The bounded query-vector collect doubles as the eager
-    # materialization of the corpus cache (its consumers below read
-    # the cached rows either way).
-    vec_scores = None
-    if _use_arrow_score():
-        qrows = _collect_id_vecs(
-            corpus.where(F.col("doc_id").isin(qset)), "doc_id", "embedding"
-        )
-        vec_scores = _topk_scores_arrow(
-            cand.select("doc_id", "embedding"),
-            qrows,
-            "embedding",
-            "doc_id",
-            arm_k,
-            out_col="cos",
-            scale=4,
-            drop_null=True,
-        )
-    if vec_scores is None:
-        c = with_norm(cand.select("doc_id", "embedding"))
-        q = with_norm(
-            queries.select("query_id", F.col("q_emb").alias("embedding"))
-        ).select(
-            "query_id",
-            F.col("_vd").alias("qv"),
-            F.col("_norm").alias("qn"),
-        )
-        cos = safe_div(
-            dot(F.col("_vd"), F.col("qv")), F.col("_norm") * F.col("qn")
-        )
-        vec_scores = c.join(F.broadcast(q)).select(
-            "query_id", "doc_id", dec_round(cos, 4).alias("cos")
-        ).where(F.col("cos").isNotNull())
+    # scored in the Arrow batch kernel (1e-4-rounded cosine, batch-
+    # local top-arm_k cut). The bounded query-vector collect doubles
+    # as the eager materialization of the corpus cache (its consumers
+    # below read the cached rows either way).
+    qrows = _collect_id_vecs(
+        corpus.where(F.col("doc_id").isin(qset)), "doc_id", "embedding"
+    )
+    vec_scores = _topk_scores_arrow(
+        cand.select("doc_id", "embedding"),
+        qrows,
+        "embedding",
+        "doc_id",
+        arm_k,
+        out_col="cos",
+        scale=4,
+        drop_null=True,
+    )
     wv = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("doc_id").asc()
     )
@@ -262,65 +241,33 @@ def _mmr_pool(emb: DataFrame, qset: list, pool_k: int) -> DataFrame:
     1e-6 fixed-point relevance, (rel desc, doc_id asc) ranked
     window, self-matches and NULL relevance excluded.
 
-    Default (r16): the scoring runs in the Arrow batch kernel
-    (``_topk_scores_arrow`` — identical fold arithmetic and Spark
-    floor→long cast semantics, batch-local top-``pool_k`` cut), and
+    The scoring runs in the Arrow batch kernel
+    (``_topk_scores_arrow`` — the oracle's fold arithmetic and
+    Spark's floor→long cast, batch-local top-``pool_k`` cut), and
     the kernel carries each surviving row's (vd, nd) through so the
-    pool still costs ONE corpus scan — the old form dragged the
-    full embedding payload of corpus × queries rows through the
-    ranking window's exchange; the kernel window shuffles only
-    batch-local candidates. ``SPARK_GRAFT_SCORE_ARROW=0`` restores
-    the broadcast-NLJ fold arm."""
-    if _use_arrow_score():
-        qrows = _collect_id_vecs(
-            emb.where(F.col("vec_id").isin(qset)), "vec_id", "embedding"
-        )
-        scored = _topk_scores_arrow(
-            emb.select(F.col("vec_id").alias("doc_id"), "embedding"),
-            qrows,
-            "embedding",
-            "doc_id",
-            pool_k,
-            out_col="rel_i",
-            fixed_long=True,
-            drop_null=True,
-            keep_vec=True,
-        )
-        if scored is not None:
-            wp = Window.partitionBy("query_id").orderBy(
-                F.col("rel_i").desc(), F.col("doc_id").asc()
-            )
-            return (
-                scored.withColumn("rn", F.row_number().over(wp))
-                .where(F.col("rn") <= pool_k)
-                .select("query_id", "doc_id", "vd", "nd", "rel_i")
-            )
-    e = with_norm(emb)
-    queries = e.where(F.col("vec_id").isin(qset)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_vd").alias("vq"),
-        F.col("_norm").alias("nq"),
+    pool costs ONE corpus scan and the ranking window's exchange
+    carries batch-local candidates, not corpus × queries rows."""
+    qrows = _collect_id_vecs(
+        emb.where(F.col("vec_id").isin(qset)), "vec_id", "embedding"
     )
-    cand = e.select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("_vd").alias("vd"),
-        F.col("_norm").alias("nd"),
+    scored = _topk_scores_arrow(
+        emb.select(F.col("vec_id").alias("doc_id"), "embedding"),
+        qrows,
+        "embedding",
+        "doc_id",
+        pool_k,
+        out_col="rel_i",
+        fixed_long=True,
+        drop_null=True,
+        keep_vec=True,
     )
-    rel_i = F.floor(
-        safe_div(dot(F.col("vq"), F.col("vd")), F.col("nq") * F.col("nd"))
-        * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("long")
     wp = Window.partitionBy("query_id").orderBy(
         F.col("rel_i").desc(), F.col("doc_id").asc()
     )
     return (
-        cand.join(F.broadcast(queries), F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id", "vd", "nd", rel_i.alias("rel_i"))
-        .where(F.col("rel_i").isNotNull())
-        .withColumn("rn", F.row_number().over(wp))
+        scored.withColumn("rn", F.row_number().over(wp))
         .where(F.col("rn") <= pool_k)
-        .drop("rn")
+        .select("query_id", "doc_id", "vd", "nd", "rel_i")
     )
 
 

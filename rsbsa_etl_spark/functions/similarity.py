@@ -18,7 +18,7 @@ stored float vectors, matching the DuckDB oracle's promotion rules.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -68,6 +68,32 @@ def _row_count(df: DataFrame) -> int:
     aggregate, which AQE runs as two jobs; counting the rows of the
     empty projection's RDD runs one job with no exchange."""
     return df.select()._jdf.queryExecution().toRdd().count()
+
+
+def _cosine_rank(
+    scored: DataFrame,
+    k: int,
+    part: str = "query_id",
+    labels: Sequence[str] = (),
+) -> DataFrame:
+    """the ranking tail every cosine top-k operator shares: per
+    ``part``, ``row_number`` over (cosine desc, neighbor_id asc) —
+    NULL cosines last — keep ranks ≤ ``k``, then round the cosine to
+    4 places. Output: (part, neighbor_id, *labels, cosine, rank)."""
+    w = Window.partitionBy(part).orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            part,
+            "neighbor_id",
+            *labels,
+            dec_round(F.col("cosine"), 4).alias("cosine"),
+            F.col("rank").cast("int").alias("rank"),
+        )
+    )
 
 
 #: per-task cap on the materialized cosine-block size, in MATRIX
@@ -417,22 +443,7 @@ def knn_graph(
     per_block = (
         left.unionByName(right).groupBy("ta", "tb").applyInArrow(block, schema)
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    out_cols = [
-        F.col("vec_id"),
-        F.col("neighbor_id"),
-        dec_round(F.col("cosine"), 4).alias("cosine"),
-        F.col("rank").cast("int").alias("rank"),
-    ]
-    if diff_label:
-        out_cols[2:2] = [F.col("label"), F.col("neighbor_label")]
-    return (
-        per_block.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(*out_cols)
-    )
+    return _cosine_rank(per_block, k, "vec_id", names[3:])
 
 
 def knn_graph_auto(
@@ -548,16 +559,11 @@ def geometry_profile(emb: DataFrame, n_probes: int | None = None) -> DataFrame:
         * F.lit(1e6)
         + F.lit(0.5)
     ).cast("long")
-    nonprobe = e.where(F.col("vec_id") >= m)
-    if _use_arrow_assign():
-        picked = _assign_cells_arrow(
-            nonprobe.select("_vd", "_norm"), cents.select("cid", "vc"), "_vd"
-        )
-    else:
-        best = _argmin_cell(F.col("_vd"), F.col("cs"))
-        picked = nonprobe.join(
-            F.broadcast(_collected_centroids(cents.select("cid", "vc")))
-        ).select("_vd", "_norm", best["cid"].alias("cid"))
+    picked = _assign_cells_arrow(
+        e.where(F.col("vec_id") >= m).select("_vd", "_norm"),
+        cents.select("cid", "vc"),
+        "_vd",
+    )
     assigned = picked.join(F.broadcast(cents), "cid").select(
         cos_q.alias("cq")
     )
@@ -587,7 +593,7 @@ def detect_geometry(emb: DataFrame, n_probes: int | None = None) -> str:
     ``nprobe_for_recall`` (r15, the stretch half of r14 verdict item
     6): ONE assignment pass — each vector's cosine to its nearest of
     ``n_probes`` fixed probe centroids, the same zero-shuffle
-    broadcast argmin fold the IVF build runs — then compare the MEAN
+    assignment kernel the IVF build runs — then compare the MEAN
     assigned cosine against the analytic null: for an isotropic
     corpus in d dims, cos(v, c) ~ N(0, 1/d) per centroid, so the
     expected max over m probes is bounded by the EVT constant
@@ -708,16 +714,16 @@ def knn_graph_ivf(
     hand-picking; the default stays the measured knee.
 
     Plan shape: ONE distance pass of the corpus against the
-    broadcast centroid array scores every centroid per vector as a
-    pure expression fold (``_top_cells`` — the top-nprobe sibling of
-    ``_argmin_cell``), so BOTH the cell assignment and the probe
-    list come out of the same scan with ZERO shuffle: the sorted
-    probe array's position 0 IS the argmin member cell, so one
-    ``posexplode`` to n·nprobe rows carries each vector into its
-    probed cells with an ``is_member`` flag (pos==0) — no
-    corpus×ncents rank window, no embedding-payload shuffle, no
-    member/prober union (the r8 advisor flagged the windowed form
-    as re-introducing the exact shuffle the argmin fold avoids).
+    broadcast centroid matrix scores every centroid per vector in the
+    assignment kernel (``_assign_cells_arrow`` with ``nprobe``), so
+    BOTH the cell assignment and the probe list come out of the same
+    scan with ZERO shuffle: the sorted probe array's position 0 IS
+    the argmin member cell, so one ``posexplode`` to n·nprobe rows
+    carries each vector into its probed cells with an ``is_member``
+    flag (pos==0) — no corpus×ncents rank window, no
+    embedding-payload shuffle, no member/prober union (the r8
+    advisor flagged the windowed form as re-introducing the exact
+    shuffle the argmin avoids).
     Candidates then meet in ONE cid-keyed shuffle into per-cell
     BLAS blocks (``applyInArrow``: each cell arrives as one Arrow
     table whose vectors ``stack`` decodes with one ``flatten()``;
@@ -749,45 +755,27 @@ def knn_graph_ivf(
     is_cent = F.col("vec_id") < n_centroids
 
     # ONE pass scores the top-nprobe cell ids per vector (pos==0 is
-    # the argmin member cell — same (d2, cid) order as
-    # _argmin_cell): the Arrow kernel emits the probe array (r15,
-    # default) or the _top_cells expression fold does (fallback
-    # dial); either way it is posexploded to n·nprobe rows. Members
-    # and probers ride the same rows via the is_member flag: zero
-    # pre-shuffle, one scan, no union.
+    # the argmin member cell, (d2, cid) order), posexploded to
+    # n·nprobe rows. Members and probers ride the same rows via the
+    # is_member flag: zero pre-shuffle, one scan, no union. The
+    # kernel widens the stored vectors itself (float32 → float64 is
+    # exact), so the centroids need no ``_vd`` column.
     lab_cols = ["label"] if diff_label else []
-    if _use_arrow_assign():
-        # the kernel widens the stored vectors itself (float32 →
-        # float64 is exact), so the centroids need no ``_vd`` column
-        cents = emb.where(is_cent).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("vc")
-        )
-        probed = _assign_cells_arrow(
-            emb.select("vec_id", "embedding", *lab_cols),
-            cents,
-            "embedding",
-            out_col="probes",
-            nprobe=nprobe,
-        ).select(
-            "vec_id",
-            "embedding",
-            *lab_cols,
-            F.posexplode("probes").alias("pos", "cid"),
-        )
-    else:
-        e = with_norm(emb)
-        cents = e.where(is_cent).select(
-            F.col("vec_id").alias("cid"), F.col("_vd").alias("vc")
-        )
-        carr = F.broadcast(_collected_centroids(cents))
-        probe_cids = _top_cells(F.col("_vd"), F.col("cs"), nprobe)
-        probed = e.join(carr).select(
-            "vec_id",
-            "embedding",
-            *lab_cols,
-            F.posexplode(probe_cids).alias("pos", "cid"),
-        )
-    exploded = probed.select(
+    cents = emb.where(is_cent).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("vc")
+    )
+    exploded = _assign_cells_arrow(
+        emb.select("vec_id", "embedding", *lab_cols),
+        cents,
+        "embedding",
+        out_col="probes",
+        nprobe=nprobe,
+    ).select(
+        "vec_id",
+        "embedding",
+        *lab_cols,
+        F.posexplode("probes").alias("pos", "cid"),
+    ).select(
         "vec_id",
         "embedding",
         *lab_cols,
@@ -853,22 +841,7 @@ def knn_graph_ivf(
         ", label bigint, neighbor_label bigint" if diff_label else ""
     )
     per_cell = exploded.groupBy("cid").applyInArrow(block, schema)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    out_cols = [
-        F.col("vec_id"),
-        F.col("neighbor_id"),
-        dec_round(F.col("cosine"), 4).alias("cosine"),
-        F.col("rank").cast("int").alias("rank"),
-    ]
-    if diff_label:
-        out_cols[2:2] = [F.col("label"), F.col("neighbor_label")]
-    return (
-        per_cell.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(*out_cols)
-    )
+    return _cosine_rank(per_cell, k, "vec_id", names[3:])
 
 
 def hard_negatives_ivf(emb: DataFrame, k: int = ANN_TOP_K) -> DataFrame:
@@ -1073,76 +1046,22 @@ def brute_force_topk(
     Ranking uses the rounded similarity with vec_id tiebreak so the
     ordering is reproducible across engines and partitionings.
 
-    Default (r16): the scoring stage is the Arrow batch kernel
-    (``_topk_scores_arrow`` — bit-identical fold arithmetic, batch-
-    local top-k cut, guide §4.2); ``SPARK_GRAFT_SCORE_ARROW=0``
-    restores the broadcast-NLJ + expression-fold arm below.
-    ``_qrows`` lets composed harnesses (ann_eval/ann_recall/ann_mrr)
-    collect the query vectors once and share them across the four
-    index builds.
+    The scoring stage is the Arrow batch kernel
+    (``_topk_scores_arrow`` — the dot/norm fold arithmetic of the
+    DuckDB oracle, batch-local top-k cut, guide §4.2); only the
+    per-query ranking window stays in-plan. ``_qrows`` lets composed
+    harnesses (ann_eval/ann_recall/ann_mrr) collect the query vectors
+    once and share them across the four index builds.
     """
-    if _use_arrow_score():
-        qrows = (
-            _collect_id_vecs(
-                emb.where(
-                    F.col("vec_id").isin([int(q) for q in query_ids])
-                ),
-                "vec_id",
-                "embedding",
-            )
-            if _qrows is None
-            else _qrows
-        )
-        scored = _topk_scores_arrow(
-            emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-            qrows,
-            "embedding",
-            "neighbor_id",
-            k,
-        )
-        if scored is not None:
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("neighbor_id").asc()
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    dec_round(F.col("cosine"), 4).alias("cosine"),
-                    F.col("rank").cast("int").alias("rank"),
-                )
-            )
-    e = with_norm(emb)
-    corpus = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_vd").alias("vn"),
-        F.col("_norm").alias("nn"),
+    qrows = _query_rows(emb, query_ids) if _qrows is None else _qrows
+    scored = _topk_scores_arrow(
+        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        qrows,
+        "embedding",
+        "neighbor_id",
+        k,
     )
-    queries = e.where(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_vd").alias("vq"),
-        F.col("_norm").alias("nq"),
-    )
-    sim = dec_round(safe_div(dot(F.col("vq"), F.col("vn")), F.col("nq") * F.col("nn")), 6)
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dec_round(F.col("cosine"), 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _cosine_rank(scored, k)
 
 
 def ivf_topk(
@@ -1164,190 +1083,30 @@ def ivf_topk(
     *approximate* index oracle-checkable: cell assignment, probe
     set, and ranking are all pure functions of the data.
 
-    Scale shape: the centroid table is tiny → broadcast; assignment
-    is one narrow pass over the corpus; the cell id becomes a
-    partition/cluster key so each query touches ~nprobe/n_centroids
-    of the data. All distances are sequential-fold expressions
-    (``F.aggregate``), matching DuckDB's ``list_sum`` accumulation
-    order bit-for-bit.
-
-    Default (r16): ONE Arrow batch kernel does the corpus cell
-    assignment, the probed-cell candidate restriction (the cid
-    equi-join it replaces), the cosine scoring, and the batch-local
-    top-k — the probe sets are computed driver-side from the
-    collected centroid/query tables with the identical fold
-    arithmetic. ``SPARK_GRAFT_SCORE_ARROW=0`` restores the join +
-    fold arm below (which keeps its own r15 assignment-kernel dial).
+    Plan shape: ONE Arrow batch kernel (``_topk_scores_arrow``) does
+    the corpus cell assignment, the probed-cell candidate
+    restriction, the cosine scoring and the batch-local top-k; the
+    centroid and query tables are collected (both index-sized) and
+    the probe sets computed on the driver (``_py_nearest_cells``).
+    Every distance is the sequential fold of DuckDB's ``list_sum``,
+    in the same order, so cells, probes and ranks match the oracle
+    bit for bit. The corpus is scanned once, with no shuffle before
+    the per-query ranking window.
     """
-    if _use_arrow_score():
-        qrows = (
-            _collect_id_vecs(
-                emb.where(
-                    F.col("vec_id").isin([int(q) for q in query_ids])
-                ),
-                "vec_id",
-                "embedding",
-            )
-            if _qrows is None
-            else _qrows
-        )
-        crows = _collect_id_vecs(
-            emb.where(F.col("vec_id") < n_centroids), "vec_id", "embedding"
-        )
-        scored = None
-        if crows and _uniform_dim(crows) is not None and all(
-            v is not None for _, v in qrows
-        ):
-            probes = [
-                _py_nearest_cells(v, crows, nprobe) for _, v in qrows
-            ]
-            scored = _topk_scores_arrow(
-                emb.select(
-                    F.col("vec_id").alias("neighbor_id"), "embedding"
-                ),
-                qrows,
-                "embedding",
-                "neighbor_id",
-                k,
-                probes=probes,
-                cents_rows=crows,
-            )
-        if scored is not None:
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("neighbor_id").asc()
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    dec_round(F.col("cosine"), 4).alias("cosine"),
-                    F.col("rank").cast("int").alias("rank"),
-                )
-            )
-    e = with_norm(emb)
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"),
-        F.col("_vd").alias("vc"),
-        F.col("_norm").alias("nc"),
+    qrows = _query_rows(emb, query_ids) if _qrows is None else _qrows
+    crows = _collect_id_vecs(
+        emb.where(F.col("vec_id") < n_centroids), "vec_id", "embedding"
     )
-    # L2² distance, sequential fold (same order as the SQL oracle)
-    def l2sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def nearest_cells(side: DataFrame, vcol: str, idcol: str, n: int) -> DataFrame:
-        scored = side.join(F.broadcast(cents), F.lit(True)).select(
-            idcol, "cid", l2sq(F.col(vcol), F.col("vc")).alias("d2")
-        )
-        w = Window.partitionBy(idcol).orderBy(F.col("d2").asc(), F.col("cid").asc())
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= n)
-            .select(idcol, "cid")
-        )
-
-    corpus = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_vd").alias("vn"),
-        F.col("_norm").alias("nn"),
+    scored = _topk_scores_arrow(
+        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        qrows,
+        "embedding",
+        "neighbor_id",
+        k,
+        probe=lambda v: _py_nearest_cells(v, crows, nprobe),
+        cents_rows=crows,
     )
-    # corpus-side assignment is the scale-critical step: the Arrow
-    # kernel (default) or the argmin expression fold (fallback dial)
-    # attaches cid in the same narrow pass — no window shuffle, no
-    # corpus-sized re-join (the probe side below keeps the window
-    # form; the query set is tiny)
-    if _use_arrow_assign():
-        corpus_cells = _assign_cells_arrow(
-            corpus, cents.select("cid", "vc"), "vn"
-        )
-    else:
-        best = _argmin_cell(F.col("vn"), F.col("cs"))
-        corpus_cells = corpus.join(
-            F.broadcast(_collected_centroids(cents.select("cid", "vc")))
-        ).select("neighbor_id", "vn", "nn", best["cid"].alias("cid"))
-
-    queries = e.where(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_vd").alias("vq"),
-        F.col("_norm").alias("nq"),
-    )
-    probes = nearest_cells(queries, "vq", "query_id", nprobe)
-    q_probe = queries.join(probes, "query_id")
-
-    sim = dec_round(safe_div(dot(F.col("vq"), F.col("vn")), F.col("nq") * F.col("nn")), 6)
-    scored = (
-        corpus_cells.join(F.broadcast(q_probe), "cid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dec_round(F.col("cosine"), 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def sign_bucket(vec_col: str = "embedding", dims: int = LSH_SIGN_DIMS) -> Column:
-    """sign-LSH bucket id with a deterministic Hadamard rotation:
-    bit i = sign(Σ_j h[i+1][j]·v[j]) over the leading
-    ``LSH_MIX_WIDTH`` dims, h = ±1 Sylvester–Hadamard rows (DC row
-    skipped).
-
-    The earlier axis-aligned form (bit i = sign(v[i])) measured
-    0.0–0.5 recall on this corpus because its cluster structure
-    lives in the leading dimensions, making axis signs nearly
-    constant within clusters. The mixed projections are mutually
-    orthogonal pseudo-random hyperplanes — the standard
-    random-hyperplane LSH guarantee (P[bit agrees] = 1 − θ/π)
-    applies — while staying deterministic and SQL-portable: the
-    oracle emits the identical left-associative double-arithmetic
-    chain, so bucket ids are bit-equal across engines. Bucket count
-    (2^dims) is unchanged.
-    """
-    from rsbsa_etl_spark.params import LSH_MIX_WIDTH, hadamard_sign
-
-    # expression-size discipline: the unrolled ±v[0]±v[1]… chain
-    # (6 bits × 16 terms of getItem+cast+negate) built a ~100-node
-    # tree whose eager per-op re-analysis and codegen compile cost
-    # ~3 s of driver time per query — a constant that dominates at
-    # bench scale. The zip_with/aggregate fold below is a dozen
-    # nodes per bit and BIT-IDENTICAL numerically: x*(±1.0) is an
-    # exact IEEE sign flip, the fold adds left-to-right starting at
-    # 0.0 exactly like the oracle's left-associative chain, and
-    # 0.0+x == x for every x (a -0.0 sum still compares > 0 false
-    # either way).
-    head = F.transform(
-        F.slice(F.col(vec_col), 1, LSH_MIX_WIDTH),
-        lambda x: x.cast("double"),
-    )
-    b = F.lit(0)
-    for i in range(dims):
-        signs = F.array(
-            *[
-                F.lit(float(hadamard_sign(i + 1, j)))
-                for j in range(LSH_MIX_WIDTH)
-            ]
-        )
-        mixed = F.aggregate(
-            F.zip_with(head, signs, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        b = b + F.when(mixed > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return b.cast("int")
+    return _cosine_rank(scored, k)
 
 
 def lsh_topk(
@@ -1357,215 +1116,29 @@ def lsh_topk(
     _qrows: list | None = None,
 ) -> DataFrame:
     """approximate top-k: candidates restricted to the query's
-    sign-LSH bucket, then exact cosine rank within the bucket.
+    sign-LSH bucket (``_py_sign_bucket``), then exact cosine rank
+    within the bucket.
 
-    The cross join of brute force becomes a bucket equi-join: at
-    1000× corpus size the probe side still only meets ~1/2^dims of
-    the corpus per query, and the bucket column can back a partition
-    layout so each query touches a bounded slice.
+    The cross join of brute force becomes a bucket restriction: at
+    1000× corpus size each query still only meets ~1/2^dims of the
+    corpus, and the bucket can back a partition layout so each query
+    touches a bounded slice.
 
-    Default (r16): the bucket computation AND the in-bucket scoring
-    run inside the Arrow batch kernel (``_topk_scores_arrow`` with
-    the sign-mixing matrix in its broadcast — bit-identical bucket
-    bits and cosines, batch-local top-k); the bucket equi-join +
-    per-pair fold arm below stays under ``SPARK_GRAFT_SCORE_ARROW=0``.
+    This is ``lsh_multiprobe_topk`` at Hamming radius 0: the bucket
+    computation AND the in-bucket scoring run inside the Arrow batch
+    kernel (``_topk_scores_arrow`` with the sign-mixing matrix in its
+    broadcast — bucket bits and cosines bit-identical to the DuckDB
+    oracle's, batch-local top-k).
     """
-    if _use_arrow_score():
-        qrows = (
-            _collect_id_vecs(
-                emb.where(
-                    F.col("vec_id").isin([int(q) for q in query_ids])
-                ),
-                "vec_id",
-                "embedding",
-            )
-            if _qrows is None
-            else _qrows
-        )
-        probes = [
-            [_py_sign_bucket(v, LSH_SIGN_DIMS)] for _, v in qrows
-        ]
-        scored = _topk_scores_arrow(
-            emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-            qrows,
-            "embedding",
-            "neighbor_id",
-            k,
-            probes=probes,
-            lsh_bits=LSH_SIGN_DIMS,
-        )
-        if scored is not None:
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("neighbor_id").asc()
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    dec_round(F.col("cosine"), 4).alias("cosine"),
-                    F.col("rank").cast("int").alias("rank"),
-                )
-            )
-    e = with_norm(emb).withColumn("bucket", sign_bucket())
-    corpus = e.select(
-        "bucket",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_vd").alias("vn"),
-        F.col("_norm").alias("nn"),
+    return lsh_multiprobe_topk(
+        emb, query_ids, k, LSH_SIGN_DIMS, max_hamming=0, _qrows=_qrows
     )
-    queries = e.where(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("bucket"),
-        F.col("vec_id").alias("query_id"),
-        F.col("_vd").alias("vq"),
-        F.col("_norm").alias("nq"),
-    )
-    sim = dec_round(safe_div(dot(F.col("vq"), F.col("vn")), F.col("nq") * F.col("nn")), 6)
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            on="bucket",
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dec_round(F.col("cosine"), 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def _argmin_cell(vec: Column, cents_arr: Column) -> Column:
-    """argmin-by-(d2, cid) over a collected centroid-struct array —
-    a pure expression, so cell assignment costs ZERO shuffle.
-
-    The window form this replaces (cross-join 16 centroid rows per
-    vector + ``row_number`` over ``partitionBy(vec_id)``) shuffled
-    corpus×n_centroids rows — petabytes at 100 TB. Here the centroid
-    table is folded to ONE array row, broadcast, and each corpus row
-    evaluates ``array_min`` over per-centroid structs. Struct
-    comparison is lexicographic, so ``(d2, cid)`` ordering IS the
-    argmin-with-id-tiebreak, and d2 uses the identical sequential
-    ``zip_with``/``aggregate`` fold — bit-identical to the window
-    form and to the DuckDB oracle.
-
-    Trade-off, measured: nested higher-order functions evaluate
-    outside whole-stage codegen, so single-node CPU per row is ~2×
-    the joined+windowed form (ann_ivfpq 0.9 s → 1.7-2.0 s at sf0.1
-    local[32]). The windowed form's cost is a corpus×n_centroids
-    SHUFFLE, which grows with data; the fold's cost is bounded
-    per-row CPU. At the 100 TB design point the shuffle dominates by
-    orders of magnitude — this is the scale-correct side of the
-    trade.
-    """
-    scored = F.transform(
-        cents_arr,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c["vc"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return F.array_min(scored)
-
-
-def _top_cells(vec: Column, cents_arr: Column, nprobe: int) -> Column:
-    """top-``nprobe`` cell ids by (d2, cid) from the broadcast
-    centroid-struct array — the probe-list sibling of
-    ``_argmin_cell``. ``array_sort``'s lexicographic struct order is
-    the identical (d2 asc, cid asc) tie-break the old rank window
-    used, so the probe SET is bit-identical while the n·n_centroids
-    window shuffle (which carried the full embedding payload on
-    every row) disappears into a per-row expression. Position 0 of
-    the result is exactly ``_argmin_cell``'s cid."""
-    scored = F.transform(
-        cents_arr,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c["vc"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, nprobe), lambda c: c["cid"]
-    )
-
-
-def _collected_centroids(cents: DataFrame) -> DataFrame:
-    """(cid, vc) rows → a single-row array<struct{cid,vc}> for the
-    broadcast argmin fold. n_centroids is index-sized (≤ thousands),
-    so one row is cheap to build and ship."""
-    return cents.agg(F.collect_list(F.struct("cid", "vc")).alias("cs"))
-
-
-def _use_arrow_assign() -> bool:
-    """dial for the Arrow assignment kernel (the r15 A/B instrument,
-    kept as a paranoid fallback): ``SPARK_GRAFT_ASSIGN_ARROW=0``
-    restores the in-plan HOF fold. Default ON — the kernel is the
-    measured-faster arm at every SF (OPTIMIZATION_r15.md) and the
-    decision arithmetic is bit-identical by construction."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_ASSIGN_ARROW", "1") != "0"
-
-
-def _use_arrow_score() -> bool:
-    """dial for the r16 Arrow SCORING kernels (brute-force / LSH /
-    IVF cosine top-k, the MMR retrieval pool, the hybrid vector
-    arm): ``SPARK_GRAFT_SCORE_ARROW=0`` restores the in-plan
-    broadcast-join + expression-fold arms. Default ON — guide §4.2
-    applied to the remaining collected-array folds (r15 verdict
-    item 1): the per-pair ``dot``/norm higher-order-function folds
-    evaluate OUTSIDE whole-stage codegen, per interpreted expression
-    node, per row × query × dimension, and the joined rows then drag
-    the full embedding payload through the ranking window's
-    exchange. The kernel scores whole Arrow batches in NumPy with
-    the identical IEEE fold sequence and emits only batch-local
-    top-k candidate rows (a lossless cut under the same total
-    order), so the window shuffles candidates, not the corpus."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_SCORE_ARROW", "1") != "0"
-
-
-def _fold_dot(a, b) -> float:
-    """driver-side twin of ``dot``: 0.0 + a0·b0 + a1·b1 + … in index
-    order — each op a correctly-rounded IEEE double, identical to
-    the ``zip_with``/``aggregate`` fold and DuckDB's list_sum."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
-
-
-def _fold_norm(a) -> float:
-    """driver-side twin of ``with_norm``'s sumsq fold + sqrt."""
-    import math
-
-    acc = 0.0
-    for x in a:
-        acc = acc + x * x
-    return math.sqrt(acc)
 
 
 def _fold_l2sq(a, b) -> float:
-    """driver-side twin of the l2sq fold: acc += (x−y)² in order."""
+    """driver-side l2² fold: acc += (x−y)² in index order from 0.0 —
+    each op a correctly-rounded IEEE double, the exact sequence of
+    the kernels' per-dimension accumulation and DuckDB's list_sum."""
     acc = 0.0
     for x, y in zip(a, b):
         t = x - y
@@ -1590,48 +1163,119 @@ def _collect_id_vecs(df: DataFrame, id_col: str, vec_col: str) -> list:
     )
 
 
-def _uniform_dim(vec_rows: list) -> int | None:
-    """the single vector dimensionality of collected (id, vec) rows,
-    or None when any vector is NULL / lengths differ — the signal to
-    fall back to the in-plan fold arm, whose NULL-padded zip_with
-    semantics cover degenerate side tables exactly."""
-    if any(v is None for _, v in vec_rows):
-        return None
+def _query_rows(emb: DataFrame, query_ids: Sequence[int]) -> list:
+    """the collected (vec_id, vector) query set of the ANN operators."""
+    return _collect_id_vecs(
+        emb.where(F.col("vec_id").isin([int(q) for q in query_ids])),
+        "vec_id",
+        "embedding",
+    )
+
+
+def _uniform_dim(vec_rows: list, table: str) -> int | None:
+    """the one vector dimensionality of a collected (id, vec) side
+    table, or None when the table is empty. A NULL or ragged vector
+    raises ``ValueError`` naming ``table`` and the cause — the rule
+    the cosine block kernels' ``stack`` applies: a side-table vector
+    is a query, centroid or codeword, and a NULL or mis-sized one has
+    no defined score."""
+    nulls = [i for i, v in vec_rows if v is None]
+    if nulls:
+        raise ValueError(
+            f"{table} table: {len(nulls)} NULL embedding vector(s)"
+            f" (ids {nulls[:5]}); a NULL vector has no score"
+        )
     dims = {len(v) for _, v in vec_rows}
-    if len(dims) != 1:
-        return None
-    return dims.pop()
+    if len(dims) > 1:
+        raise ValueError(
+            f"{table} table: ragged embedding vectors (lengths"
+            f" {min(dims)}..{max(dims)}); every vector must have the"
+            " same dimension"
+        )
+    return dims.pop() if dims else None
+
+
+def _require_dim(d: int, need: int, table: str, what: str) -> None:
+    """raise ``ValueError`` when a side table's vectors are shorter
+    than the ``need`` leading dimensions ``what`` reads."""
+    if d < need:
+        raise ValueError(
+            f"{table} table: embedding vectors of dimension {d} are too"
+            f" short for {what} ({need} dimensions)"
+        )
+
+
+def _make_floor_long():
+    """factory for ``_floor_long``: a factory-made function pickles
+    BY VALUE into the kernels' closures (a module-level def would
+    pickle by name — see ``_make_cosine_parts``)."""
+    import numpy as np
+
+    lmax = np.iinfo(np.int64).max
+    lmin = np.iinfo(np.int64).min
+
+    def floor_long(v):
+        # Spark's FLOOR(double) → LONG: floor, then Java's (long)
+        # cast — NaN → 0, and ±inf or anything past ±2^63 saturates
+        # to Long.MAX/MIN
+        v = np.asarray(v, dtype=np.float64)
+        out = np.zeros(v.shape, dtype=np.int64)
+        big = v >= 9.223372036854776e18
+        small = v <= -9.223372036854776e18
+        mid = np.isfinite(v) & ~big & ~small
+        out[mid] = np.floor(v[mid]).astype(np.int64)
+        out[big] = lmax
+        out[small] = lmin
+        return out
+
+    return floor_long
+
+
+#: the one Spark floor→long cast of the kernels' fixed-point scores
+#: and distances (``dec_round``/``fixed_sum`` quantize through it):
+#: elementwise over a float array or scalar, int64 out
+_floor_long = _make_floor_long()
 
 
 def _py_sign_bucket(vec, dims: int) -> int:
-    """driver-side twin of ``sign_bucket``: bit i = (mixed > 0) with
-    Spark's NaN>0=true, mixed = the left-to-right ±1-weighted fold
-    over the leading ``LSH_MIX_WIDTH`` dims — pure-Python IEEE
-    doubles, so query buckets computed here are bit-equal to the
-    in-plan expression's. A NULL/short vector folds through NULL
-    padding to bucket 0 (every bit's ``when`` falls to otherwise)."""
+    """sign-LSH bucket id with a deterministic Hadamard rotation: bit
+    i = (Σ_j h[i+1][j]·v[j] > 0) over the leading ``LSH_MIX_WIDTH``
+    dims, h = ±1 Sylvester–Hadamard rows (DC row skipped), the sum
+    folded left to right from 0.0 in IEEE doubles, and Spark's
+    NaN > 0 = true.
+
+    The earlier axis-aligned form (bit i = sign(v[i])) measured
+    0.0–0.5 recall on this corpus because its cluster structure
+    lives in the leading dimensions, making axis signs nearly
+    constant within clusters. The mixed projections are mutually
+    orthogonal pseudo-random hyperplanes — the standard
+    random-hyperplane LSH guarantee (P[bit agrees] = 1 − θ/π)
+    applies — while staying deterministic and SQL-portable: the
+    oracle emits the identical left-associative double-arithmetic
+    chain, and the scoring kernel's corpus-side mixing fold the same
+    per-dimension sequence, so bucket ids are bit-equal across all
+    three. ``vec`` is a validated query vector (``_uniform_dim``),
+    at least ``LSH_MIX_WIDTH`` long."""
     import math
 
     from rsbsa_etl_spark.params import LSH_MIX_WIDTH, hadamard_sign
 
-    if vec is None or len(vec) < LSH_MIX_WIDTH:
-        return 0
-    head = [float(x) for x in vec[:LSH_MIX_WIDTH]]
     b = 0
     for i in range(dims):
         acc = 0.0
         for j in range(LSH_MIX_WIDTH):
-            acc = acc + head[j] * float(hadamard_sign(i + 1, j))
+            acc = acc + vec[j] * float(hadamard_sign(i + 1, j))
         if acc > 0 or math.isnan(acc):
             b |= 1 << i
     return b
 
 
 def _py_nearest_cells(qvec, cents_rows: list, nprobe: int) -> list:
-    """driver-side twin of the query-side ``nearest_cells`` window:
-    top-``nprobe`` cell ids by (d2 asc, cid asc), d2 = the exact
-    sequential l2² fold, NaN ranked last (Spark sorts NaN above
-    every double)."""
+    """a query's top-``nprobe`` cell ids by (d2 asc, cid asc), d2 =
+    the exact sequential l2² fold, NaN ranked last (Spark and DuckDB
+    sort NaN above every double) — the one probe rule of
+    ``ivf_topk``, ``ivfpq_topk`` and the persisted index's
+    ``query_ivf_index``."""
     import math
 
     scored = []
@@ -1654,47 +1298,47 @@ def _topk_scores_arrow(
     drop_null: bool = False,
     exclude_self: bool = True,
     keep_vec: bool = False,
-    probes: list | None = None,
+    probe: Callable[[list], list] | None = None,
     cents_rows: list | None = None,
     lsh_bits: int | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """batch-local cosine top-k against a collected query set — the
-    ``mapInArrow`` NumPy twin of the broadcast-NLJ + ``dot``-fold
-    scoring stage shared by ``brute_force_topk`` / ``lsh_topk`` /
-    ``lsh_multiprobe_topk`` / ``ivf_topk`` / ``_mmr_pool`` /
-    ``_hybrid_parts`` (guide §4.2). Emits, per Arrow batch and per
-    query, the top-``k`` scored candidate rows plus (unless
-    ``drop_null``) the first ``k`` NULL-score rows — a LOSSLESS cut:
-    the downstream ranking window's total order is (score desc,
-    id asc) with NULLs last, and a per-query global top-k is a
-    subset of the union of batch-local top-k under the same order.
+    ``mapInArrow`` NumPy scoring stage shared by ``brute_force_topk``
+    / ``lsh_topk`` / ``lsh_multiprobe_topk`` / ``ivf_topk`` /
+    ``_mmr_pool`` / ``_hybrid_parts`` (guide §4.2). Emits, per Arrow
+    batch and per query, the top-``k`` scored candidate rows plus
+    (unless ``drop_null``) the first ``k`` NULL-score rows — a
+    LOSSLESS cut: the downstream ranking window's total order is
+    (score desc, id asc) with NULLs last, and a per-query global
+    top-k is a subset of the union of batch-local top-k under the
+    same order.
 
-    BIT-IDENTICAL value arithmetic by construction (the
-    ``_assign_cells_arrow`` contract extended to scores):
+    BIT-IDENTICAL to the DuckDB oracles' arithmetic by construction
+    (the ``_assign_cells_arrow`` contract extended to scores):
 
     - dot and sumsq accumulate per dimension in ascending index
       order from 0.0 (NumPy in-place add over the row axis) — the
-      exact IEEE sequence of the ``zip_with``/``aggregate`` folds;
+      exact IEEE sequence of ``list_sum``;
     - the emitted score replicates ``dec_round``/1e-6 fixed-point
-      exactly INCLUDING Spark's floor(double)→LONG cast semantics
-      (NaN→0, ±inf→±Long.MAX/MIN) — so a NaN cosine surfaces as the
-      same 0.0 / 0 the in-plan expression produces;
+      exactly INCLUDING Spark's floor(double)→LONG cast
+      (``_floor_long``: NaN→0, ±inf→±Long.MAX/MIN);
     - ``safe_div``: a zero denominator emits a NULL score (the row
-      is kept and ranks last, like the fold arm), never a NaN;
-    - candidate restriction modes replicate the join they replace:
-      ``probes`` + ``cents_rows`` = the IVF cid equi-join (rows
-      whose argmin cell — first-win (d2, cid), NaN→+inf — is probed
-      by the query); ``probes`` + ``lsh_bits`` = the sign-LSH bucket
-      equi-join (bucket bits from the identical per-dimension mixing
-      fold, Spark's NaN>0=true included); ``probes=None`` = the
-      brute-force ``query_id != neighbor_id`` NLJ.
+      is kept and ranks last), never a NaN;
+    - candidate restriction: with ``cents_rows`` a corpus row is a
+      candidate when its argmin cell — first-win (d2, cid),
+      NaN→+inf — is among the query's ``probe(vec)`` cells (IVF);
+      with ``lsh_bits`` when its sign-LSH bucket (the per-dimension
+      mixing fold, Spark's NaN>0=true included) is among the
+      query's ``probe(vec)`` buckets; with neither, every row but
+      the query itself (brute force).
 
-    Returns None when the collected side tables are degenerate
-    (empty / NULL vectors / ragged dims) — callers fall back to the
-    in-plan fold arm, which defines semantics there. Rows whose
-    vector is NULL or of a different dimensionality score NULL
-    (brute/LSH; the fold arm's NULL-padded zip_with) or drop (IVF;
-    the NULL-cid inner join), exactly like the arms they replace.
+    Side tables: the query and centroid tables must be uniform and
+    non-NULL (``_uniform_dim`` raises ``ValueError`` naming the
+    table), and LSH needs ``LSH_MIX_WIDTH`` dimensions. An empty
+    query or centroid table returns an empty frame of the output
+    schema. Corpus rows whose vector is NULL or of another
+    dimensionality score NULL (brute/LSH) or drop (IVF: no cell),
+    as in the oracles.
 
     The collected matrices ship as ONE Spark broadcast variable
     (r15 verdict item 4) — per-executor, not per-task-closure.
@@ -1704,11 +1348,33 @@ def _topk_scores_arrow(
 
     from pyspark.sql import types as T
 
-    if not qrows:
-        return None
-    d = _uniform_dim(qrows)
-    if d is None or d == 0:
-        return None
+    from rsbsa_etl_spark.params import LSH_MIX_WIDTH, hadamard_sign
+
+    score_t = T.LongType() if fixed_long else T.DoubleType()
+    fields = [
+        T.StructField("query_id", T.LongType(), False),
+        T.StructField(id_col, T.LongType(), True),
+        T.StructField(out_col, score_t, True),
+    ]
+    if keep_vec:
+        fields += [
+            T.StructField("vd", T.ArrayType(T.DoubleType()), True),
+            T.StructField("nd", T.DoubleType(), True),
+        ]
+    out_schema = T.StructType(fields)
+
+    d = _uniform_dim(qrows, "query")
+    cd = None if cents_rows is None else _uniform_dim(cents_rows, "centroid")
+    if d is not None and cd is not None and cd != d:
+        raise ValueError(
+            f"centroid table: ragged embedding vectors (dimension {cd},"
+            f" query table {d}); every vector must have the same dimension"
+        )
+    if lsh_bits is not None and d is not None:
+        _require_dim(d, LSH_MIX_WIDTH, "query", "the sign-LSH mixing")
+    if d is None or (cents_rows is not None and cd is None):
+        return src.sparkSession.createDataFrame([], out_schema)
+
     qids_np = np.asarray([q[0] for q in qrows], dtype=np.int64)
     Q = np.asarray([q[1] for q in qrows], dtype=np.float64)
     # query norms: the same per-dimension fold, vectorized over the
@@ -1721,18 +1387,11 @@ def _topk_scores_arrow(
 
     cid_arr = cmat = None
     if cents_rows is not None:
-        cd = _uniform_dim(cents_rows)
-        if cd is None or cd != d or not cents_rows:
-            return None
         cid_arr = np.asarray([c[0] for c in cents_rows], dtype=np.int64)
         cmat = np.asarray([c[1] for c in cents_rows], dtype=np.float64)
 
     S = None
     if lsh_bits is not None:
-        from rsbsa_etl_spark.params import LSH_MIX_WIDTH, hadamard_sign
-
-        if d < LSH_MIX_WIDTH:
-            return None  # fold arm defines the NULL-padded semantics
         S = np.asarray(
             [
                 [float(hadamard_sign(i + 1, j)) for j in range(LSH_MIX_WIDTH)]
@@ -1743,8 +1402,8 @@ def _topk_scores_arrow(
 
     probes_np = (
         None
-        if probes is None
-        else [np.asarray(sorted(p), dtype=np.int64) for p in probes]
+        if probe is None
+        else [np.asarray(sorted(probe(v)), dtype=np.int64) for _, v in qrows]
     )
 
     bc = src.sparkSession.sparkContext.broadcast(
@@ -1759,18 +1418,6 @@ def _topk_scores_arrow(
         }
     )
 
-    score_t = T.LongType() if fixed_long else T.DoubleType()
-    fields = [
-        T.StructField("query_id", T.LongType(), False),
-        T.StructField(id_col, T.LongType(), True),
-        T.StructField(out_col, score_t, True),
-    ]
-    if keep_vec:
-        fields += [
-            T.StructField("vd", T.ArrayType(T.DoubleType()), True),
-            T.StructField("nd", T.DoubleType(), True),
-        ]
-    out_schema = T.StructType(fields)
     kk = int(k)
     want_vec = keep_vec
     emit_null = not drop_null
@@ -1778,21 +1425,7 @@ def _topk_scores_arrow(
     vname, iname, oname = vec_col, id_col, out_col
     as_long = fixed_long
     qscale = float(10**scale)
-    LMAX = np.iinfo(np.int64).max
     LMIN = np.iinfo(np.int64).min
-
-    def _floor_long(v):
-        # Java (long) cast of math.floor(double): NaN→0, ±inf and
-        # out-of-range saturate to Long.MAX/MIN — Spark's FLOOR
-        out = np.zeros(v.shape, dtype=np.int64)
-        fin = np.isfinite(v)
-        big = fin & (v >= 9.223372036854776e18)
-        small = fin & (v <= -9.223372036854776e18)
-        mid = fin & ~big & ~small
-        out[mid] = v[mid].astype(np.int64)
-        out[big | (v == np.inf)] = LMAX
-        out[small | (v == -np.inf)] = LMIN
-        return out
 
     def score(batches):
         env = bc.value
@@ -1841,7 +1474,7 @@ def _topk_scores_arrow(
             n = batch.num_rows
             icol = batch.column(batch.schema.get_field_index(iname))
             vcol = batch.column(batch.schema.get_field_index(vname))
-            if n == 0 or m == 0:
+            if n == 0:
                 yield out_batch(
                     np.array([], dtype=np.int64),
                     np.array([], dtype=np.int64),
@@ -1899,8 +1532,9 @@ def _topk_scores_arrow(
                         acc += X[:, j] * S_[bi, j]
                     bit = (acc > 0) | np.isnan(acc)
                     buck_ok |= bit.astype(np.int64) << bi
-                # ragged rows: bucket from the available prefix
-                # (fold-arm NULL-padding → bit 0 when len < width)
+                # ragged rows: bucket from the available prefix; a
+                # row shorter than the mixing width reads NULL
+                # elements, so every bit is 0 (the oracle's CASE)
                 key_all = np.zeros(n, dtype=np.int64)
                 key_all[okidx] = buck_ok
                 ragged = np.nonzero(id_ok & vva & (lens != d))[0]
@@ -1909,7 +1543,7 @@ def _topk_scores_arrow(
                     for ri in ragged:
                         L = int(lens[ri])
                         if L < width:
-                            continue  # NULL-padded fold → bucket 0
+                            continue  # bucket 0
                         v = flat[starts[ri] : starts[ri] + width]
                         b = 0
                         for bi in range(nbits):
@@ -2027,70 +1661,63 @@ def _assign_cells_arrow(
     nprobe: int | None = None,
 ) -> DataFrame:
     """corpus-side Voronoi assignment as a ``mapInArrow`` NumPy
-    kernel — the vectorized twin of ``_argmin_cell``/``_top_cells``
-    (optimization guide §4.2: hand whole batches to native code
-    instead of evaluating a nested higher-order-function tree, which
-    runs OUTSIDE whole-stage codegen, per interpreted expression node,
-    per row × per centroid × per dimension). Measured r15 at sf0.1:
-    2–20× per assignment stage (OPTIMIZATION_r15.md), growing with
-    the centroid count; the plan stays a narrow map — zero shuffle,
-    exactly like the fold it replaces.
+    kernel — the one assignment path of the IVF family (optimization
+    guide §4.2: hand whole batches to native code instead of
+    evaluating a nested higher-order-function tree, which runs
+    OUTSIDE whole-stage codegen, per interpreted expression node, per
+    row × per centroid × per dimension). Measured r15 at sf0.1: 2–20×
+    per assignment stage over that fold (OPTIMIZATION_r15.md),
+    growing with the centroid count; the plan is a narrow map — zero
+    shuffle.
 
     BIT-IDENTICAL decision arithmetic by construction:
 
     - d2 accumulates per dimension in ascending index order
       (``acc = acc + (x_i − c_i)²`` from a 0.0 start — NumPy in-place
       add over the row axis) — the exact left-to-right IEEE double
-      sequence of the ``zip_with``/``aggregate`` fold and of the
-      DuckDB oracle's ``list_sum``;
+      sequence of the DuckDB oracle's ``list_sum``;
     - only INTEGER ids leave the kernel (the argmin / top-``nprobe``
       cell ids); no kernel-computed float crosses the boundary, so
       there is no transport-precision question (Arrow passthrough of
       kept float columns is bit-exact regardless);
-    - ties and NaN replicate Spark's struct order: centroids are
+    - ties and NaN follow the oracle's (d2, cid) order: centroids are
       scanned in cid-ascending order with first-win comparisons
-      (``np.argmin`` / stable ``np.argsort`` = the (d2, cid)
-      lexicographic order of ``array_min``/``array_sort``), and NaN
-      d2 is substituted with +inf before ranking (an all-NaN row
-      degrades to the lowest cid under both forms).  One corner
-      NARROWS the bit-identity claim to finite/non-overflowing
-      inputs (r15 advice): Spark orders +inf strictly BELOW NaN, so
-      a row whose d2s contain both a genuine +inf (overflowed
-      squares, |x| ≳ 1e154) and a NaN ties them here and first-win
-      may pick the NaN centroid the fold would rank last.  Unreachable
-      on any fixture/generator (finite, unit-scale vectors); kept
-      out of the hot argmin on purpose.
+      (``np.argmin`` / stable ``np.argsort``), and NaN d2 is
+      substituted with +inf before ranking (an all-NaN row degrades
+      to the lowest cid).  One corner NARROWS the bit-identity claim
+      to finite/non-overflowing inputs (r15 advice): SQL orders +inf
+      strictly BELOW NaN, so a row whose d2s contain both a genuine
+      +inf (overflowed squares, |x| ≳ 1e154) and a NaN ties them here
+      and first-win may pick the NaN centroid the oracle ranks last.
+      Unreachable on any fixture/generator (finite, unit-scale
+      vectors); kept out of the hot argmin on purpose.
 
     ``cents`` is the (cid, vc) table, collected here — index-sized
-    (≤ thousands of rows), the same relation the broadcast build
-    already materialized on the driver, so the collect changes WHERE
-    the table lands (a closure instead of a broadcast), not how much
-    data moves. ``src`` must already be projected to exactly the
-    columns the caller wants out (plus ``vec_col``) — §4.1 column
-    discipline: everything passed crosses the boundary. The output
-    appends ``out_col`` (long cid, or array<long> of the
-    top-``nprobe`` cells when ``nprobe`` is set).
+    (≤ thousands of rows) — and shipped as one broadcast. A NULL or
+    ragged centroid vector raises ``ValueError`` (``_uniform_dim``).
+    ``src`` must already be projected to exactly the columns the
+    caller wants out (plus ``vec_col``) — §4.1 column discipline:
+    everything passed crosses the boundary. The output appends
+    ``out_col`` (long cid, or array<long> of the top-``nprobe``
+    cells when ``nprobe`` is set).
 
     Rows whose vector is NULL or whose length differs from the
-    centroid dim emit a NULL assignment. (The fixtures and both
-    generators are uniform-dim with non-null vectors; the in-plan
-    fold's NULL-padded zip_with semantics cannot arise on them —
-    this branch exists so malformed rows degrade to a droppable NULL
-    instead of crashing the kernel.)
+    centroid dim — and every row when the centroid table is empty —
+    get a NULL assignment, which the callers' cid joins drop. (The
+    fixtures and both generators are uniform-dim with non-null
+    vectors; this branch exists so malformed rows degrade to a
+    droppable NULL instead of crashing the kernel.)
     """
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql import types as T
 
-    rows = sorted(
-        ((int(r[0]), [float(x) for x in r[1]]) for r in cents.collect()),
-        key=lambda t: t[0],
-    )
+    rows = _collect_id_vecs(cents, "cid", "vc")
+    d_cent = _uniform_dim(rows, "centroid") or 0
     cid_arr = np.asarray([t[0] for t in rows], dtype=np.int64)
     cmat = np.asarray([t[1] for t in rows], dtype=np.float64)
     n_cents = len(rows)
-    d_cent = int(cmat.shape[1]) if n_cents else 0
     probe_n = None if nprobe is None else max(0, min(int(nprobe), n_cents))
     # centroids ship as ONE Spark broadcast variable — per executor,
     # not per pickled task closure (r15 verdict item 4: at scale-out
@@ -2189,117 +1816,6 @@ def _assign_cells_arrow(
     return src.mapInArrow(assign, out_schema)
 
 
-def _assign_codes_arrow(
-    subs: DataFrame,
-    seeds: DataFrame,
-    vec_col: str = "sv",
-    sub_col: str = "sub_id",
-    out_col: str = "cid",
-    with_d2: bool = False,
-) -> DataFrame:
-    """per-SUBSPACE codeword assignment as a ``mapInArrow`` NumPy
-    kernel — ``_assign_cells_arrow``'s product-quantization sibling:
-    each input row (…, ``sub_col``, ``vec_col``) ranks against the
-    codebook of ITS OWN subspace. Same bit-identity contract
-    (dimension-ordered d2 accumulation, first-win argmin = (d2, cid)
-    order, NaN→+inf); ``with_d2=True`` additionally emits the
-    winning d2 — a float, but Arrow float64 transport is bit-exact,
-    and the consumer (``embedding_pq``'s recon_err) quantizes it
-    through the same ``fixed_sum`` it always did.
-
-    ``seeds``: (c_sub, cid, cv) rows, collected here (m × codewords
-    rows — codebook-sized, the same relation the broadcast
-    join shipped).
-
-    Degenerate-input contract (r15 advice, documented divergence):
-    a row whose ``sub_col`` has NO codebook entry (or whose vector
-    length differs from that codebook's dim) emits a NULL ``cid``
-    here, where the in-plan fold arm's inner join on sub_id == c_sub
-    DROPS the row entirely.  Every registered consumer builds the
-    codebook from the same corpus it encodes, so absent sub_ids
-    cannot arise there; callers feeding foreign codebooks must
-    filter NULL cids if they want the join semantics."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    books: dict[int, tuple] = {}
-    grouped: dict[int, list] = {}
-    for r in seeds.collect():
-        grouped.setdefault(int(r[0]), []).append(
-            (int(r[1]), [float(x) for x in r[2]])
-        )
-    for s, rows in grouped.items():
-        rows.sort(key=lambda t: t[0])
-        books[s] = (
-            np.asarray([t[0] for t in rows], dtype=np.int64),
-            np.asarray([t[1] for t in rows], dtype=np.float64),
-        )
-    # codebooks ride a Spark broadcast, not the task closure (r15
-    # verdict item 4 — same reasoning as _assign_cells_arrow)
-    bc_books = subs.sparkSession.sparkContext.broadcast(books)
-
-    fields = list(subs.schema.fields) + [
-        T.StructField(out_col, T.LongType(), True)
-    ]
-    if with_d2:
-        fields.append(T.StructField("_d2", T.DoubleType(), True))
-    out_schema = T.StructType(fields)
-
-    def assign(batches):
-        for b in batches:
-            n = b.num_rows
-            names = list(b.schema.names) + [out_col] + (
-                ["_d2"] if with_d2 else []
-            )
-            vcol = b.column(b.schema.get_field_index(vec_col))
-            scol = b.column(b.schema.get_field_index(sub_col))
-            sub_ids = np.asarray(scol.fill_null(-1)).astype(np.int64)
-            lens = np.asarray(vcol.value_lengths().fill_null(0))
-            valid = np.asarray(vcol.is_valid())
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            flat = np.asarray(vcol.flatten(), dtype=np.float64)
-            out_ids = np.zeros(n, dtype=np.int64)
-            out_d2 = np.zeros(n, dtype=np.float64)
-            got = np.zeros(n, dtype=bool)
-            for s, (ids, cmat) in bc_books.value.items():
-                d = cmat.shape[1]
-                mask = valid & (sub_ids == s) & (lens == d)
-                idx = np.nonzero(mask)[0]
-                if not len(idx):
-                    continue
-                if mask.all():
-                    X = flat.reshape(n, d)
-                else:
-                    # vectorized gather (r15 advice item 3): the
-                    # mask.all() fast path is unreachable for m>1
-                    # because posexplode interleaves sub_ids within
-                    # every batch — a per-row Python slice loop here
-                    # undercut the kernel's vectorization
-                    X = flat[starts[idx][:, None] + np.arange(d)]
-                acc = np.zeros((X.shape[0], cmat.shape[0]))
-                for i in range(d):
-                    t = X[:, i : i + 1] - cmat[:, i]
-                    acc += t * t
-                # rank on a NaN→inf copy (Spark's NaN-ranks-last),
-                # but emit the RAW winning d2 — the in-plan fold's
-                # exact value, NaN included
-                ranked = np.where(np.isnan(acc), np.inf, acc)
-                best = np.argmin(ranked, axis=1)
-                out_ids[idx] = ids[best]
-                out_d2[idx] = acc[np.arange(len(idx)), best]
-                got[idx] = True
-            arrs = list(b.columns) + [
-                pa.array(out_ids, type=pa.int64(), mask=~got)
-            ]
-            if with_d2:
-                arrs.append(pa.array(out_d2, type=pa.float64(), mask=~got))
-            yield pa.RecordBatch.from_arrays(arrs, names=names)
-
-    return subs.mapInArrow(assign, out_schema)
-
-
 def lsh_multiprobe_topk(
     emb: DataFrame,
     query_ids: Sequence[int] = ANN_QUERY_IDS,
@@ -2318,18 +1834,20 @@ def lsh_multiprobe_topk(
     hyperplane agreement probability is 1 − θ/π ≈ 0.63 per bit and
     the EXPECTED recall of any 6-bit sign family is ~0.25 at radius
     1 and ~0.57 at radius 2 — the Hadamard rotation in
-    ``sign_bucket`` brings the measured recall to that theoretical
+    ``_py_sign_bucket`` brings the measured recall to that theoretical
     curve (the old axis-aligned form sat below it at 0.0-0.1 single
     bucket), and radius (default ``LSH_PROBE_HAMMING`` = 2) buys the
     rest. A geometry like this is IVF's home turf — the eval shows
     recall_ivf ≈ 1.0 — which is exactly the decision the
     oracle-checked eval exists to surface.
 
-    Plan shape: the query side explodes to Σ C(dims, ≤h) probe rows
-    (still query-sized), then the same broadcast bucket equi-join as
-    ``lsh_topk`` — corpus never shuffles, probe fan-out rides the
-    broadcast. Each corpus row has one bucket, probe buckets are
-    distinct, so no pair dedup is needed.
+    Plan shape: the buckets AND the in-bucket scoring run in the
+    Arrow batch kernel (``_topk_scores_arrow`` with ``lsh_bits``):
+    each query's probe set is its own bucket XOR every mask of
+    Hamming weight ≤ h, carried in the kernel broadcast — the corpus
+    is scanned once and never shuffles before the ranking window.
+    Each corpus row has one bucket and probe buckets are distinct, so
+    no pair dedup is needed.
     """
     from itertools import combinations
 
@@ -2341,87 +1859,17 @@ def lsh_multiprobe_topk(
         for r in range(1, h + 1)
         for bits in combinations(range(dims), r)
     ]
-    # default (r16): buckets + in-bucket scoring in the Arrow batch
-    # kernel — the probe fan-out becomes each query's bucket-ID SET
-    # in the kernel broadcast (masks XOR the query's own bucket);
-    # the probe-exploded equi-join arm stays under the dial
-    if _use_arrow_score():
-        qrows = (
-            _collect_id_vecs(
-                emb.where(
-                    F.col("vec_id").isin([int(q) for q in query_ids])
-                ),
-                "vec_id",
-                "embedding",
-            )
-            if _qrows is None
-            else _qrows
-        )
-        probes = [
-            [_py_sign_bucket(v, dims) ^ m for m in masks]
-            for _, v in qrows
-        ]
-        scored = _topk_scores_arrow(
-            emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-            qrows,
-            "embedding",
-            "neighbor_id",
-            k,
-            probes=probes,
-            lsh_bits=dims,
-        )
-        if scored is not None:
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("neighbor_id").asc()
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    dec_round(F.col("cosine"), 4).alias("cosine"),
-                    F.col("rank").cast("int").alias("rank"),
-                )
-            )
-    e = with_norm(emb).withColumn("bucket", sign_bucket(dims=dims))
-    corpus = e.select(
-        "bucket",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_vd").alias("vn"),
-        F.col("_norm").alias("nn"),
+    qrows = _query_rows(emb, query_ids) if _qrows is None else _qrows
+    scored = _topk_scores_arrow(
+        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        qrows,
+        "embedding",
+        "neighbor_id",
+        k,
+        probe=lambda v: [_py_sign_bucket(v, dims) ^ m for m in masks],
+        lsh_bits=dims,
     )
-    probe_arr = F.array(
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(m)).cast("int")
-            for m in masks
-        ],
-    )
-    queries = e.where(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_vd").alias("vq"),
-        F.col("_norm").alias("nq"),
-        F.explode(probe_arr).alias("bucket"),
-    )
-    sim = dec_round(safe_div(dot(F.col("vq"), F.col("vn")), F.col("nq") * F.col("nn")), 6)
-    scored = (
-        corpus.join(F.broadcast(queries), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dec_round(F.col("cosine"), 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _cosine_rank(scored, k)
 
 
 def ivf_assignments(
@@ -2429,47 +1877,27 @@ def ivf_assignments(
 ) -> DataFrame:
     """Voronoi cell assignment against the deterministic iteration-0
     centroids (first ``n_centroids`` vectors by vec_id) — the E-step
-    of Lloyd's algorithm, shared by ``ivf_topk`` (which inlines the
-    same construction for its own probe side) and ``ivf_train``.
+    of Lloyd's algorithm behind the ``ivf_train*`` keys.
 
     Returns the input rows plus their ``cid``. Centroids are
-    index-sized; the argmin runs as the vectorized Arrow kernel
-    (``_assign_cells_arrow`` — bit-identical decision arithmetic,
-    r15) or, under ``SPARK_GRAFT_ASSIGN_ARROW=0``, as the broadcast
-    per-row expression fold (``_argmin_cell``). Either way the
-    corpus is read once with no shuffle before the caller's next agg.
+    index-sized; the argmin runs in the Arrow assignment kernel
+    (``_assign_cells_arrow``), so the corpus is read once with no
+    shuffle before the caller's next agg.
     """
-    e = with_norm(emb)
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("_vd").alias("vc")
+    cents = emb.where(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("vc")
     )
-    if _use_arrow_assign():
-        return _assign_cells_arrow(
-            emb.select("vec_id", "embedding"), cents, "embedding"
-        )
-    best = _argmin_cell(F.col("_vd"), F.col("cs"))
-    return (
-        e.join(F.broadcast(_collected_centroids(cents)))
-        .select("vec_id", "embedding", best["cid"].alias("cid"))
-    )
+    return assign_to_centroids(emb, cents)
 
 
 def assign_to_centroids(emb: DataFrame, cvec: DataFrame) -> DataFrame:
     """Voronoi assignment against an arbitrary centroid table
-    (cid, vc: array<double>) — the E-step against *trained*
-    centroids, vs ``ivf_assignments``'s iteration-0 seed. Same plan
-    as there: Arrow kernel by default, broadcast expression fold
-    under the fallback dial, no shuffle either way.
+    (cid, vc) — the E-step against *trained* centroids, vs
+    ``ivf_assignments``'s iteration-0 seed. Same plan: the Arrow
+    assignment kernel, no shuffle.
     """
-    if _use_arrow_assign():
-        return _assign_cells_arrow(
-            emb.select("vec_id", "embedding"), cvec, "embedding"
-        )
-    e = with_norm(emb)
-    best = _argmin_cell(F.col("_vd"), F.col("cs"))
-    return (
-        e.join(F.broadcast(_collected_centroids(cvec)))
-        .select("vec_id", "embedding", best["cid"].alias("cid"))
+    return _assign_cells_arrow(
+        emb.select("vec_id", "embedding"), cvec, "embedding"
     )
 
 
@@ -2527,7 +1955,7 @@ def _pq_codes_arrow(
     seeds_rows: list,
     m: int,
     sub: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """single-pass product-quantization codes + reconstruction error
     as ONE ``mapInArrow`` kernel (r16, guide §2.4/§4.2): the explode
     → per-sub assignment → regroup pipeline shipped corpus×m rows
@@ -2544,23 +1972,30 @@ def _pq_codes_arrow(
 
     ``seeds_rows``: collected (vec_id, vector) codeword seeds; the
     per-sub codebooks are sliced driver-side and ship as one Spark
-    broadcast. Returns None on degenerate seeds (NULL / short
-    vectors) — the explode pipeline defines semantics there. Corpus
-    rows whose vector is NULL or shorter than a subspace's span get
-    NULL for that code (the fold's NULL-slice semantics); recon_err
-    sums the valid subspaces only (SQL SUM skips NULLs) and is NULL
-    when none are valid.
+    broadcast. A NULL, ragged or shorter-than-``m·sub`` seed vector
+    raises ``ValueError`` naming the seed table; an empty seed table
+    returns an empty frame of the output schema. Corpus rows whose
+    vector is NULL or shorter than a subspace's span get NULL for
+    that code (the oracle's NULL-slice semantics); recon_err sums the
+    valid subspaces only (SQL SUM skips NULLs) and is NULL when none
+    are valid.
     """
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql import types as T
 
-    dims_needed = m * sub
-    if not seeds_rows or any(
-        v is None or len(v) < dims_needed for _, v in seeds_rows
-    ):
-        return None
+    fields = [T.StructField("vec_id", T.LongType(), True)]
+    fields += [
+        T.StructField(f"code{j}", T.LongType(), True) for j in range(m)
+    ]
+    fields.append(T.StructField("recon_err", T.DoubleType(), True))
+    out_schema = T.StructType(fields)
+
+    d = _uniform_dim(seeds_rows, "PQ seed")
+    if d is None:
+        return src.sparkSession.createDataFrame([], out_schema)
+    _require_dim(d, m * sub, "PQ seed", f"{m} subspaces of {sub}")
     books = []
     for j in range(m):
         rows = sorted(
@@ -2573,26 +2008,6 @@ def _pq_codes_arrow(
             )
         )
     bc = src.sparkSession.sparkContext.broadcast(books)
-
-    fields = [T.StructField("vec_id", T.LongType(), True)]
-    fields += [
-        T.StructField(f"code{j}", T.LongType(), True) for j in range(m)
-    ]
-    fields.append(T.StructField("recon_err", T.DoubleType(), True))
-    out_schema = T.StructType(fields)
-    LMAX = np.iinfo(np.int64).max
-    LMIN = np.iinfo(np.int64).min
-
-    def _floor_long(v):
-        out = np.zeros(v.shape, dtype=np.int64)
-        fin = np.isfinite(v)
-        big = fin & (v >= 9.223372036854776e18)
-        small = fin & (v <= -9.223372036854776e18)
-        mid = fin & ~big & ~small
-        out[mid] = v[mid].astype(np.int64)
-        out[big | (v == np.inf)] = LMAX
-        out[small | (v == -np.inf)] = LMIN
-        return out
 
     def encode(batches):
         books_ = bc.value
@@ -2674,76 +2089,23 @@ def pq_codes(
     reconstruction error — the quality metric that drives codebook
     size choices.
 
-    Plan shape: codebooks derive from a filtered self-scan
-    (vec_id < k) and BROADCAST; the corpus explodes to m subvector
-    rows, folds the k-candidate argmin per row (row_number over a
-    (vec_id, sub_id) window — partition-local after one shuffle),
-    and regroups to one row per vector. At 100 TB the corpus is
-    touched twice (explode + regroup) with only narrow columns in
-    flight; the codebook side is O(k·m) and never shuffles.
+    Plan shape: codebooks derive from a collected self-scan
+    (vec_id < k, O(k·m)) and BROADCAST; ONE batch kernel
+    (``_pq_codes_arrow``) emits each vector's ``m`` codes and its
+    quantized error from a single narrow pass — no explode into
+    per-sub rows, no regroup — and the only exchange is the output
+    ordering.
 
     Determinism: distances are double folds in fixed element order;
-    the regrouped error re-quantizes each subspace distance to a
-    long before summing (order-independent); ties in the argmin
-    break on codeword id.
-
-    Default (r16): the whole explode → assign → regroup pipeline
-    runs as ONE batch kernel (``_pq_codes_arrow``) — codes and the
-    quantized error per vector from a single narrow pass, zero
-    shuffle before the output ordering. ``SPARK_GRAFT_SCORE_ARROW=0``
-    restores the exploded pipeline below (which keeps its own r15
-    per-sub assignment dial)."""
-    sub = dims // m
-    if _use_arrow_score():
-        seeds_rows = _collect_id_vecs(
-            emb.where(F.col("vec_id") < k), "vec_id", "embedding"
-        )
-        out = _pq_codes_arrow(
-            emb.select("vec_id", "embedding"), seeds_rows, m, sub
-        )
-        if out is not None:
-            return out.orderBy("vec_id")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    e = emb.select("vec_id", v.alias("v"))
-    slices = F.array(*[F.slice("v", j * sub + 1, sub) for j in range(m)])
-    subs = e.select("vec_id", F.posexplode(slices).alias("sub_id", "sv"))
-    seeds = subs.where(F.col("vec_id") < k).select(
-        F.col("sub_id").alias("c_sub"), F.col("vec_id").alias("cid"),
-        F.col("sv").alias("cv"),
+    the error re-quantizes each subspace distance to a long before
+    summing (order-independent); ties in the argmin break on
+    codeword id."""
+    seeds_rows = _collect_id_vecs(
+        emb.where(F.col("vec_id") < k), "vec_id", "embedding"
     )
-    # per-subspace codeword argmin, shuffle-free either way: the
-    # Arrow kernel (default — codebooks ride the closure) or the
-    # expression fold against broadcast per-sub codebook arrays
-    # (fallback dial); the former (vec_id, sub_id) window shuffled
-    # corpus×m×k rows
-    if _use_arrow_assign():
-        best = _assign_codes_arrow(
-            subs, seeds, with_d2=True
-        ).select("vec_id", "sub_id", "cid", F.col("_d2").alias("d2"))
-    else:
-        seeds_arr = seeds.groupBy("c_sub").agg(
-            F.collect_list(
-                F.struct("cid", F.col("cv").alias("vc"))
-            ).alias("cs")
-        )
-        bestc = _argmin_cell(F.col("sv"), F.col("cs"))
-        best = subs.join(
-            F.broadcast(seeds_arr), F.col("sub_id") == F.col("c_sub")
-        ).select(
-            "vec_id",
-            "sub_id",
-            bestc["cid"].alias("cid"),
-            bestc["d2"].alias("d2"),
-        )
-    code_cols = [
-        F.max(F.when(F.col("sub_id") == j, F.col("cid"))).alias(f"code{j}")
-        for j in range(m)
-    ]
-    return (
-        best.groupBy("vec_id")
-        .agg(*code_cols, fixed_sum(F.col("d2"), 6, "recon_err"))
-        .orderBy("vec_id")
-    )
+    return _pq_codes_arrow(
+        emb.select("vec_id", "embedding"), seeds_rows, m, dims // m
+    ).orderBy("vec_id")
 
 
 def _ivfpq_scores_arrow(
@@ -2756,43 +2118,54 @@ def _ivfpq_scores_arrow(
     m: int,
     sub: int,
     k: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """the whole IVF-PQ candidate + ADC pipeline as ONE batch kernel
     (r16, guide §2.4/§4.2): cell assignment, per-sub code
     assignment, probed-cell candidate restriction, and the ADC
-    fixed-point fold — the exploded-codes shuffle join
-    (cand ⋈ codes ⋈ dtab → groupBy) disappears; the ranking window
-    receives batch-local top-k rows only.
+    fixed-point fold — no exploded-codes shuffle join
+    (cand ⋈ codes ⋈ dtab → groupBy); the ranking window receives
+    batch-local top-k rows only.
 
-    Driver-side: probe sets via the exact l2² fold + (d2, cid)
-    order; the per-(query, sub, codeword) distance table is
-    pre-quantized with Java's floor→long cast (NaN→0), so the
-    kernel's ADC is a pure int64 gather-sum — exactly
-    ``fixed_sum(qd2, 6)`` over the joined rows. Returns None on
-    degenerate side tables (the fold arm defines semantics there);
-    corpus rows of deviant dimensionality drop, matching the
-    NULL-cid inner join of the assignment arm."""
-    import math
+    Driver-side: probe sets via ``_py_nearest_cells``; the
+    per-(query, sub, codeword) distance table is pre-quantized with
+    Spark's floor→long cast (``_floor_long``), so the kernel's ADC is
+    a pure int64 gather-sum — exactly the oracle's
+    ``fixed_sum(qd2, 6)`` over the joined rows.
 
+    Side tables: ``side_rows`` (the first max(n_centroids,
+    codewords) vectors: centroid and codeword seeds) and ``qrows``
+    must be uniform, non-NULL, of one dimension and at least
+    ``m·sub`` long, else ``ValueError`` names the table; an empty
+    query, centroid or seed table returns an empty frame of the
+    output schema. Corpus rows of deviant dimensionality drop (no
+    cell), as in the oracle."""
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql import types as T
 
-    if not qrows or any(v is None for _, v in qrows):
-        return None
-    d = _uniform_dim(qrows)
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType(), False),
+            T.StructField("neighbor_id", T.LongType(), True),
+            T.StructField("approx_d2", T.DoubleType(), True),
+        ]
+    )
+    d = _uniform_dim(qrows, "query")
+    sd = _uniform_dim(side_rows, "centroid/codeword seed")
+    if d is not None and sd is not None and sd != d:
+        raise ValueError(
+            f"centroid/codeword seed table: ragged embedding vectors"
+            f" (dimension {sd}, query table {d}); every vector must have"
+            " the same dimension"
+        )
+    for table, dim in (("query", d), ("centroid/codeword seed", sd)):
+        if dim is not None:
+            _require_dim(dim, m * sub, table, f"{m} subspaces of {sub}")
     cents_rows = [(i, v) for i, v in side_rows if i < n_centroids]
     seed_rows = [(i, v) for i, v in side_rows if i < codewords]
-    if (
-        d is None
-        or d < m * sub
-        or not cents_rows
-        or not seed_rows
-        or _uniform_dim(cents_rows) != d
-        or _uniform_dim(seed_rows) != d
-    ):
-        return None
+    if not (qrows and cents_rows and seed_rows):
+        return src.sparkSession.createDataFrame([], out_schema)
     qids = [q for q, _ in qrows]
     probes = [
         np.asarray(
@@ -2809,26 +2182,18 @@ def _ivfpq_scores_arrow(
         )
         books.append(np.asarray([s for _, s in rows], dtype=np.float64))
 
-    def _py_floor_long(x: float) -> int:
-        t = x * 1e6 + 0.5
-        if math.isnan(t):
-            return 0
-        if t == math.inf:
-            return 2**63 - 1
-        if t == -math.inf:
-            return -(2**63)
-        f = math.floor(t)
-        return max(-(2**63), min(2**63 - 1, f))
-
     # pre-quantized ADC table: (query, sub, codeword-position) int64
-    qd2q = np.zeros((len(qrows), m, len(seed_rows)), dtype=np.int64)
-    for qi, (_, qv) in enumerate(qrows):
-        for j in range(m):
-            qs = qv[j * sub : (j + 1) * sub]
-            for p in range(books[j].shape[0]):
-                qd2q[qi, j, p] = _py_floor_long(
-                    _fold_l2sq(qs, books[j][p])
-                )
+    qd2 = np.asarray(
+        [
+            [
+                [_fold_l2sq(qv[j * sub : (j + 1) * sub], cw) for cw in books[j]]
+                for j in range(m)
+            ]
+            for _, qv in qrows
+        ],
+        dtype=np.float64,
+    )
+    qd2q = _floor_long(qd2 * 1e6 + 0.5)
 
     bc = src.sparkSession.sparkContext.broadcast(
         {
@@ -2839,13 +2204,6 @@ def _ivfpq_scores_arrow(
             "books": books,
             "qd2q": qd2q,
         }
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), True),
-            T.StructField("approx_d2", T.DoubleType(), True),
-        ]
     )
     kk = int(k)
     mm_ = m
@@ -2976,172 +2334,39 @@ def ivfpq_topk(
     load — the property that lets a 100 TB corpus serve from RAM.
 
     Plan shape: centroids, codebooks, and the per-query
-    (subspace × codeword) distance table are all tiny derived
-    tables → broadcast; the corpus is scanned once for cell
-    assignment and once for code assignment (each a shuffle-free
-    argmin expression fold over collected broadcast codebooks);
-    ranking joins codes against the broadcast distance table and
-    folds m quantized longs per candidate — order-independent,
-    oracle-exact.
+    (subspace × codeword) distance table are all tiny collected
+    tables → broadcast; ONE batch kernel (``_ivfpq_scores_arrow``)
+    does the corpus cell assignment, the code assignment, the
+    probed-candidate restriction and the ADC fold of m quantized
+    longs per candidate in a single narrow pass — order-independent,
+    oracle-exact; only the per-query ranking window stays in-plan.
 
     Determinism: both seed sets follow the iteration-0 convention
     (first n vectors by vec_id); every distance is a sequential
     double fold matching DuckDB ``list_sum``; ADC re-quantizes each
     subspace distance to a long before summing; all ranks tie-break
-    on id.
-
-    Default (r16): the whole pipeline — cell assignment, codes,
-    probed-candidate restriction, ADC — runs as ONE batch kernel
-    (``_ivfpq_scores_arrow``); only the final per-query ranking
-    window stays in-plan. ``SPARK_GRAFT_SCORE_ARROW=0`` restores
-    the join pipeline below (with its own r15 assignment dials)."""
-    sub = dims // m
-    if _use_arrow_score():
-        side_rows = _collect_id_vecs(
-            emb.where(F.col("vec_id") < max(n_centroids, codewords)),
-            "vec_id",
-            "embedding",
-        )
-        qrows = _collect_id_vecs(
-            emb.where(F.col("vec_id").isin([int(q) for q in query_ids])),
-            "vec_id",
-            "embedding",
-        )
-        scored = _ivfpq_scores_arrow(
-            emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-            side_rows,
-            qrows,
-            n_centroids,
-            codewords,
-            nprobe,
-            m,
-            sub,
-            k,
-        )
-        if scored is not None:
-            wr = Window.partitionBy("query_id").orderBy(
-                F.col("approx_d2").asc(), F.col("neighbor_id").asc()
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(wr))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    dec_round(F.col("approx_d2"), 4).alias("approx_d2"),
-                    F.col("rank").cast("int").alias("rank"),
-                )
-            )
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    e = emb.select("vec_id", v.alias("v"))
-
-    def l2sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("vc")
+    on id."""
+    side_rows = _collect_id_vecs(
+        emb.where(F.col("vec_id") < max(n_centroids, codewords)),
+        "vec_id",
+        "embedding",
     )
-
-    def nearest_cells(side: DataFrame, idcol: str, n: int) -> DataFrame:
-        scored = side.join(F.broadcast(cents), F.lit(True)).select(
-            idcol, "cid", l2sq(F.col("v"), F.col("vc")).alias("d2")
-        )
-        w = Window.partitionBy(idcol).orderBy(F.col("d2").asc(), F.col("cid").asc())
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= n)
-            .select(idcol, "cid")
-        )
-
-    corpus = e.select(F.col("vec_id").alias("neighbor_id"), "v")
-    # corpus cell assignment: shuffle-free — Arrow kernel (default)
-    # or argmin fold (fallback dial); the window form stays only for
-    # the tiny nprobe query side below
-    if _use_arrow_assign():
-        cells = _assign_cells_arrow(corpus, cents, "v").select(
-            "neighbor_id", "cid"
-        )
-    else:
-        bestcell = _argmin_cell(F.col("v"), F.col("cs"))
-        cells = corpus.join(
-            F.broadcast(_collected_centroids(cents))
-        ).select("neighbor_id", bestcell["cid"].alias("cid"))
-
-    slices = F.array(*[F.slice("v", j * sub + 1, sub) for j in range(m)])
-    subs = e.select("vec_id", F.posexplode(slices).alias("sub_id", "sv"))
-    seeds = subs.where(F.col("vec_id") < codewords).select(
-        F.col("sub_id").alias("c_sub"), F.col("vec_id").alias("code"),
-        F.col("sv").alias("cv"),
-    )
-    # codeword assignment: same shuffle-free treatment — Arrow
-    # kernel (default, per-sub codebooks in the closure) or the
-    # expression fold over broadcast per-sub codebook arrays
-    # (fallback dial); the former (vec_id, sub_id) window shuffled
-    # corpus×m×k rows
-    if _use_arrow_assign():
-        codes = _assign_codes_arrow(subs, seeds).select(
-            F.col("vec_id").alias("neighbor_id"),
-            "sub_id",
-            F.col("cid").alias("code"),
-        )
-    else:
-        seeds_arr = seeds.groupBy("c_sub").agg(
-            F.collect_list(
-                F.struct(F.col("code").alias("cid"), F.col("cv").alias("vc"))
-            ).alias("cs")
-        )
-        bestcode = _argmin_cell(F.col("sv"), F.col("cs"))
-        codes = subs.join(
-            F.broadcast(seeds_arr), F.col("sub_id") == F.col("c_sub")
-        ).select(
-            F.col("vec_id").alias("neighbor_id"),
-            "sub_id",
-            bestcode["cid"].alias("code"),
-        )
-
-    queries = e.where(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("vq")
-    )
-    probes = nearest_cells(
-        queries.select(F.col("query_id"), F.col("vq").alias("v")), "query_id", nprobe
-    )
-    q_subs = queries.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[F.slice("vq", j * sub + 1, sub) for j in range(m)])
-        ).alias("sub_id", "qsv"),
-    )
-    dtab = q_subs.join(F.broadcast(seeds), F.col("sub_id") == F.col("c_sub")).select(
-        "query_id",
-        "sub_id",
-        "code",
-        F.aggregate(
-            F.zip_with(F.col("qsv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("qd2"),
-    )
-
-    cand = (
-        cells.join(F.broadcast(probes), "cid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(F.broadcast(dtab), ["query_id", "sub_id", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(fixed_sum(F.col("qd2"), 6, "approx_d2"))
+    scored = _ivfpq_scores_arrow(
+        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        side_rows,
+        _query_rows(emb, query_ids),
+        n_centroids,
+        codewords,
+        nprobe,
+        m,
+        dims // m,
+        k,
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.col("approx_d2").asc(), F.col("neighbor_id").asc()
     )
     return (
-        adc.withColumn("rank", F.row_number().over(wr))
+        scored.withColumn("rank", F.row_number().over(wr))
         .where(F.col("rank") <= k)
         .select(
             "query_id",
@@ -3166,14 +2391,14 @@ def semantic_dedup(
 
     Deterministic contract (what makes it oracle-checkable):
     - cells = iteration-0 centroids (first ``n_centroids`` vec_ids),
-      per-row argmin over the broadcast centroid table;
+      per-row argmin over the broadcast centroid matrix;
     - exemplar per cell = highest cosine to the centroid, vec_id
       tiebreak;
     - every other member is a duplicate iff cosine(member, exemplar)
       ≥ threshold. Exemplars are always kept.
 
     Plan shape at 100 TB: centroids broadcast (tiny); cell assignment
-    is a shuffle-free argmin fold on one narrow scan; exemplar choice
+    is a shuffle-free argmin kernel on one narrow scan; exemplar choice
     AND the member-vs-exemplar cosine ride the same per-cell window —
     ``first(...)`` over the full ordered frame pins the exemplar's
     vector onto every member row, so the whole operator is ONE corpus
@@ -3187,21 +2412,11 @@ def semantic_dedup(
         F.col("_vd").alias("vc"),
         F.col("_norm").alias("nc"),
     )
-    # cell assignment: shuffle-free — the Arrow kernel (default) or
-    # the argmin fold over collected broadcast centroids (fallback
-    # dial, see _argmin_cell); the chosen cell's centroid vector
-    # comes back via a broadcast hash join on cid either way
-    if _use_arrow_assign():
-        picked = _assign_cells_arrow(
-            e.select("vec_id", "_vd", "_norm"),
-            cents.select("cid", "vc"),
-            "_vd",
-        )
-    else:
-        best = _argmin_cell(F.col("_vd"), F.col("cs"))
-        picked = e.join(
-            F.broadcast(_collected_centroids(cents.select("cid", "vc")))
-        ).select("vec_id", "_vd", "_norm", best["cid"].alias("cid"))
+    # cell assignment: shuffle-free in the Arrow kernel; the chosen
+    # cell's centroid vector comes back via a broadcast hash join
+    picked = _assign_cells_arrow(
+        e.select("vec_id", "_vd", "_norm"), cents.select("cid", "vc"), "_vd"
+    )
     assigned = (
         picked.join(F.broadcast(cents), "cid")
         .select(
@@ -3311,17 +2526,9 @@ def ann_recall(
     over query×k rows, which is negligible at any corpus size.
     """
     # ONE query-vector collect shared by all four index builds (r16
-    # — the Arrow scoring kernels take the collected rows; without
+    # — the scoring kernels take the collected rows; without
     # threading, each build would run its own bounded collect job)
-    qrows = (
-        _collect_id_vecs(
-            emb.where(F.col("vec_id").isin([int(q) for q in query_ids])),
-            "vec_id",
-            "embedding",
-        )
-        if _use_arrow_score()
-        else None
-    )
+    qrows = _query_rows(emb, query_ids)
     # persisted AND eagerly materialized: the exact ranking feeds all
     # three hit joins plus the query base — lazily, branches within
     # one action can race the cache and rebuild the brute-force scan
@@ -3404,15 +2611,7 @@ def ann_eval(
     data. Sweep harnesses (bench.py, verify_key) clear the session
     cache per key, so the persist does not outlive its invocation.
     """
-    qrows = (
-        _collect_id_vecs(
-            emb.where(F.col("vec_id").isin([int(q) for q in query_ids])),
-            "vec_id",
-            "embedding",
-        )
-        if _use_arrow_score()
-        else None
-    )
+    qrows = _query_rows(emb, query_ids)
     exact = (
         brute_force_topk(emb, query_ids, k, _qrows=qrows)
         .select("query_id", "neighbor_id", "rank")
@@ -3570,15 +2769,7 @@ def ann_mrr(
     ann_recall contract); each join is query-set-sized. Index scans
     are the already-scale-shaped ann plans.
     """
-    qrows = (
-        _collect_id_vecs(
-            emb.where(F.col("vec_id").isin([int(q) for q in query_ids])),
-            "vec_id",
-            "embedding",
-        )
-        if _use_arrow_score()
-        else None
-    )
+    qrows = _query_rows(emb, query_ids)
     top1 = (
         brute_force_topk(emb, query_ids, k, _qrows=qrows)
         .where(F.col("rank") == 1)

@@ -166,8 +166,9 @@ _MMR_SIM = f"CAST(floor({_DOT} / (a.nrm * b.nrm) * 1000000.0 + 0.5) AS BIGINT)"
 
 def _sign_mix(row: int) -> str:
     """the Hadamard-row ±v[j] chain behind one sign-LSH bit —
-    identical left-associative double arithmetic to Spark's
-    ``similarity.sign_bucket``, so the bucket ids are bit-equal."""
+    identical left-associative double arithmetic to the engine's
+    ``similarity._py_sign_bucket`` and the scoring kernel's mixing
+    fold, so the bucket ids are bit-equal."""
     parts = []
     for j in range(P.LSH_MIX_WIDTH):
         sign = "-" if P.hadamard_sign(row, j) < 0 else "+"

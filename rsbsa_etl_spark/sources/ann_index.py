@@ -7,8 +7,8 @@ pattern (build once, query many). This module persists the index the
 Spark-native way:
 
 - ``build_ivf_index``: one corpus pass assigns each vector to its
-  argmin centroid cell (the shuffle-free ``_argmin_cell`` broadcast
-  fold), then writes the members table ``partitionBy("cid")`` — the
+  argmin centroid cell (the shuffle-free ``_assign_cells_arrow``
+  kernel), then writes the members table ``partitionBy("cid")`` — the
   inverted lists ARE the parquet partition directories — plus the
   tiny centroid table alongside.
 - ``query_ivf_index``: computes each query's nprobe nearest cells
@@ -21,11 +21,11 @@ Spark-native way:
   the corpus per query batch and scanning nprobe/n_centroids of it.
 
 Semantics are bit-identical to ``similarity.ivf_topk`` (same
-deterministic first-N centroids, same sequential-fold d2 with the
-(d2, cid) tie-break — the driver-side python loop performs the same
-IEEE double ops in the same order — same dec6→dec4 cosine, same
-rank), so the persisted path shares ``ann_ivf``'s DuckDB oracle
-verbatim: one semantics, two physical strategies.
+deterministic first-N centroids, same assignment kernel, the same
+probe rule ``_py_nearest_cells`` — sequential-fold d2, (d2, cid)
+order, NaN last — same dec6→dec4 cosine, same rank), so the persisted
+path shares ``ann_ivf``'s DuckDB oracle verbatim: one semantics, two
+physical strategies.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rsbsa_etl_spark.functions.numeric import dec_round
 from rsbsa_etl_spark.functions.similarity import (
@@ -41,10 +41,9 @@ from rsbsa_etl_spark.functions.similarity import (
     ANN_TOP_K,
     IVF_CENTROIDS,
     IVF_NPROBE,
-    _argmin_cell,
     _assign_cells_arrow,
-    _collected_centroids,
-    _use_arrow_assign,
+    _cosine_rank,
+    _py_nearest_cells,
     dot,
     safe_div,
     with_norm,
@@ -68,20 +67,11 @@ def build_ivf_index(
     cents = e.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cid"), F.col("_vd").alias("vc")
     )
-    if _use_arrow_assign():
-        members = _assign_cells_arrow(
-            e.select("vec_id", "embedding", F.col("_norm").alias("nrm")),
-            cents,
-            "embedding",
-        )
-    else:
-        best = _argmin_cell(F.col("_vd"), F.col("cs"))
-        members = e.join(F.broadcast(_collected_centroids(cents))).select(
-            "vec_id",
-            "embedding",
-            F.col("_norm").alias("nrm"),
-            best["cid"].alias("cid"),
-        )
+    members = _assign_cells_arrow(
+        e.select("vec_id", "embedding", F.col("_norm").alias("nrm")),
+        cents,
+        "embedding",
+    )
     members.write.mode("overwrite").partitionBy("cid").parquet(
         os.path.join(path, "members")
     )
@@ -100,7 +90,7 @@ def append_to_ivf_index(new_emb: DataFrame, path: str) -> None:
     the probe computation.
 
     At 100 TB this is the ingest path: one narrow pass over the
-    batch (broadcast argmin fold), a partitioned append, zero
+    batch (the assignment kernel), a partitioned append, zero
     contact with the existing members data.
     """
     spark = new_emb.sparkSession
@@ -111,20 +101,11 @@ def append_to_ivf_index(new_emb: DataFrame, path: str) -> None:
         ),
     )
     e = with_norm(new_emb)
-    if _use_arrow_assign():
-        members = _assign_cells_arrow(
-            e.select("vec_id", "embedding", F.col("_norm").alias("nrm")),
-            cents,
-            "embedding",
-        )
-    else:
-        best = _argmin_cell(F.col("_vd"), F.col("cs"))
-        members = e.join(F.broadcast(_collected_centroids(cents))).select(
-            "vec_id",
-            "embedding",
-            F.col("_norm").alias("nrm"),
-            best["cid"].alias("cid"),
-        )
+    members = _assign_cells_arrow(
+        e.select("vec_id", "embedding", F.col("_norm").alias("nrm")),
+        cents,
+        "embedding",
+    )
     members.write.mode("append").partitionBy("cid").parquet(
         os.path.join(path, "members")
     )
@@ -142,10 +123,10 @@ def query_ivf_index(
     persisted index — the serving path.
 
     The probe-cell computation runs on the driver over the collected
-    centroid table: sequential ``acc + (x-y)²`` fold in python
-    float64 — the SAME IEEE operations in the SAME order as the
-    engine's ``F.aggregate`` fold and the oracle's ``list_sum``, so
-    the probe set is bit-identical to ``ivf_topk``'s window form.
+    centroid table through ``_py_nearest_cells`` — the probe rule
+    ``ivf_topk`` uses (sequential ``acc + (x-y)²`` fold in python
+    float64, the oracle's ``list_sum`` order; (d2, cid) order with a
+    NaN distance ranked last), so the probe set is bit-identical.
     The result is a literal ``cid IN (...)`` on the partition
     column: the members scan shows ``PartitionFilters`` and reads
     only the probed directories.
@@ -160,17 +141,11 @@ def query_ivf_index(
         (r["cid"], [float(x) for x in r["embedding"]])
         for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
     )
-    probe_rows: list[tuple[int, int]] = []
-    for qid, vec in query_vecs:
-        scored = []
-        for cid, cv in cents:
-            d2 = 0.0
-            for x, y in zip(vec, cv):
-                d = float(x) - float(y)
-                d2 += d * d
-            scored.append((d2, cid))
-        scored.sort()
-        probe_rows += [(qid, cid) for _d2, cid in scored[:nprobe]]
+    probe_rows = [
+        (qid, cid)
+        for qid, vec in query_vecs
+        for cid in _py_nearest_cells([float(x) for x in vec], cents, nprobe)
+    ]
     probe_cids = sorted({cid for _q, cid in probe_rows})
 
     members = spark.read.parquet(os.path.join(path, "members"))
@@ -207,19 +182,7 @@ def query_ivf_index(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dec_round(F.col("cosine"), 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _cosine_rank(scored, k)
 
 
 def query_vectors_from_table(

@@ -1,4 +1,5 @@
-"""The grouped cosine block kernels' Arrow decode and sizing count.
+"""The Arrow cosine kernels' decode, degenerate-input rule and
+fixed-point cast.
 
 - ``_make_cosine_parts``' ``stack`` turns the ``list<float|double>``
   Arrow columns a group actually arrives as (multi-chunk, sliced with
@@ -7,7 +8,12 @@
 - NULL and ragged vectors fail the block with a ``ValueError`` naming
   the cause, where a plain ``reshape`` would silently misread them,
   while a NULL *element* still scores NaN and drops out;
-- ``_row_count`` sizes the auto and IVF arms with one narrow job.
+- ``_row_count`` sizes the auto and IVF arms with one narrow job;
+- the ANN scoring kernels apply the same rule to their collected
+  side tables (query, centroid, codeword seed): an empty table gives
+  an empty frame of the operator's schema, a NULL, ragged or too
+  short vector a ``ValueError`` naming the table and the cause;
+- ``_floor_long`` is Spark's floor→long cast.
 """
 
 from __future__ import annotations
@@ -18,7 +24,7 @@ import pytest
 from pyspark.errors import PythonException
 from pyspark.sql import functions as F, types as T
 
-from rsbsa_etl_spark.functions import similarity as S
+from rsbsa_etl_spark.functions import retrieval as R, similarity as S
 from rsbsa_etl_spark.sources.fixtures import load
 
 from tests.conftest import SF_DIR
@@ -140,3 +146,105 @@ def test_row_count_is_one_narrow_job(spark):
         # one stage: no Exchange, which would split the job in two
         assert len(list(tracker.getJobInfo(jobs[0]).stageIds)) == 1
     assert S._row_count(emb) > 0
+
+
+def _side_frames(spark, ids, vecs):
+    emb = spark.createDataFrame(list(zip(ids, vecs)), _SCHEMA)
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta w{i % 3}") for i in ids], "doc_id long, text string"
+    )
+    return emb, docs
+
+
+_D = 16  # LSH_MIX_WIDTH, and m=2 PQ subspaces of 8
+
+
+def _vec(i, d=_D):
+    return [float((i + 1) * (j + 3) % 7 - 3) for j in range(d)]
+
+
+#: the operators whose scoring kernel collects a side table; the
+#: query set, centroid table and PQ seed table are all vec_id < 2
+SIDE_TABLE_OPS = {
+    "brute": lambda emb, docs: S.brute_force_topk(emb, (0, 1), k=3),
+    "lsh": lambda emb, docs: S.lsh_topk(emb, (0, 1), k=3),
+    "multiprobe": lambda emb, docs: S.lsh_multiprobe_topk(emb, (0, 1), k=3),
+    "ivf": lambda emb, docs: S.ivf_topk(
+        emb, (0, 1), k=3, n_centroids=2, nprobe=1
+    ),
+    "ivfpq": lambda emb, docs: S.ivfpq_topk(
+        emb, (0, 1), k=3, n_centroids=2, nprobe=1, m=2, codewords=2,
+        dims=_D,
+    ),
+    "pq_codes": lambda emb, docs: S.pq_codes(emb, m=2, k=2, dims=_D),
+    "mmr_pool": lambda emb, docs: R._mmr_pool(emb, [0, 1], 3),
+    "hybrid": lambda emb, docs: R.hybrid_search_rrf(docs, emb, (0, 1)),
+}
+
+
+@pytest.mark.parametrize("case", ["empty", "null-vector", "ragged"])
+@pytest.mark.parametrize("op", sorted(SIDE_TABLE_OPS))
+def test_scoring_kernels_degenerate_side_tables(spark, op, case):
+    build = SIDE_TABLE_OPS[op]
+    ids = list(range(10))
+    vecs = [_vec(i) for i in ids]
+    if case == "empty":
+        # no vec_id < 2: empty query, centroid and seed tables
+        want = build(*_side_frames(spark, ids, vecs)).schema
+        got = build(*_side_frames(spark, [i + 10 for i in ids], vecs))
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want
+        ]
+        assert got.collect() == []
+        return
+    if case == "null-vector":
+        vecs[1], cause = None, "NULL embedding"
+    else:
+        vecs[1], cause = _vec(1, _D + 1), "ragged"
+    with pytest.raises(ValueError, match=cause):
+        build(*_side_frames(spark, ids, vecs)).collect()
+
+
+@pytest.mark.parametrize("op", ["lsh", "ivfpq", "pq_codes"])
+def test_scoring_kernels_reject_short_side_vectors(spark, op):
+    # LSH mixes the leading LSH_MIX_WIDTH dims; PQ splits m·sub dims
+    ids = list(range(10))
+    emb, docs = _side_frames(spark, ids, [_vec(i, _D - 1) for i in ids])
+    with pytest.raises(ValueError, match="too short"):
+        SIDE_TABLE_OPS[op](emb, docs).collect()
+
+
+def test_floor_long_is_sparks_floor_cast(spark):
+    lmax, lmin = np.iinfo(np.int64).max, np.iinfo(np.int64).min
+    xs = [float("nan"), float("inf"), float("-inf"), 2.0**63, -(2.0**63),
+          1e19, -1e19, 2.5, -0.7]
+    want = [0, lmax, lmin, lmax, lmin, lmax, lmin, 2, -1]
+    assert S._floor_long(np.array(xs)).tolist() == want
+    assert int(S._floor_long(-123456.2)) == -123457  # scalar in, floor
+    # and it is Spark's own FLOOR(double) → LONG on every value
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    assert [r[0] for r in df.select(F.floor("x")).collect()] == want
+
+
+def test_mmr_pool_relevance_floors_negative_cosines(spark):
+    # rel_i is Spark's floor(cos·1e6 + 0.5): on a negative cosine with
+    # a fraction, truncation toward zero would be one unit too high
+    ids = list(range(8))
+    emb = spark.createDataFrame([(i, _vec(i)) for i in ids], _SCHEMA)
+    pool = R._mmr_pool(emb, [0], len(ids) - 1).collect()
+    e = S.with_norm(emb)
+    q = e.where("vec_id = 0").select(
+        F.col("_vd").alias("vq"), F.col("_norm").alias("nq")
+    )
+    cos = S.safe_div(
+        S.dot(F.col("_vd"), F.col("vq")), F.col("_norm") * F.col("nq")
+    )
+    want = {
+        r.vec_id: r.rel_i
+        for r in e.where("vec_id != 0")
+        .crossJoin(q)
+        .select("vec_id", F.floor(cos * 1e6 + 0.5).alias("rel_i"))
+        .collect()
+    }
+    assert {r.doc_id: r.rel_i for r in pool} == want
+    assert sum(v < 0 for v in want.values()) >= 2

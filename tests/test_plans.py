@@ -139,15 +139,10 @@ def test_asof_join_single_shuffle(spark):
     assert plan.count("Exchange hashpartitioning(user_id") == 1
 
 
-def test_ivf_train_broadcasts_centroids(spark, monkeypatch):
+def test_ivf_train_broadcasts_centroids(spark):
     # assignment must never shuffle the corpus for the centroid
-    # table. Default (r15): the Arrow kernel carries the collected
-    # centroids in its closure — no join, no exchange, a narrow
-    # MapInArrow stage. Fallback dial: the centroid side broadcasts
-    # onto the corpus as before. Both arms PINNED (r15 advice item
-    # 4): an ambient SPARK_GRAFT_ASSIGN_ARROW=0 in the environment
-    # must not flip the first half.
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_ARROW", "1")
+    # table: the Arrow kernel carries the collected centroids in its
+    # broadcast — no join, no exchange, a narrow MapInArrow stage
     plan = _plan(QUERIES["ivf_train"](spark, SF_DIR))
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan
     assert "SortMergeJoin" not in plan
@@ -155,19 +150,12 @@ def test_ivf_train_broadcasts_centroids(spark, monkeypatch):
     # is the M-step's (label, dim) partial-agg shuffle
     assert "Join" not in plan
 
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_ARROW", "0")
-    plan = _plan(QUERIES["ivf_train"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
-
-def test_ann_scoring_is_arrow_kernel(spark, monkeypatch):
+def test_ann_scoring_is_arrow_kernel(spark):
     """r16: the ANN scoring stage (brute force / LSH / IVF / IVF-PQ)
     must run as the MapInArrow batch kernel with NO join operator of
     any kind — the corpus is one narrow scan feeding the kernel and
-    the per-query ranking window; the fallback dial restores the
-    broadcast-join + fold arm. Both arms pinned against ambient env."""
-    monkeypatch.setenv("SPARK_GRAFT_SCORE_ARROW", "1")
+    the per-query ranking window."""
     for key in ("ann_bruteforce", "ann_lsh", "ann_lsh_multiprobe",
                 "ann_ivf", "ann_ivfpq"):
         plan = _plan(QUERIES[key](spark, SF_DIR))
@@ -175,46 +163,66 @@ def test_ann_scoring_is_arrow_kernel(spark, monkeypatch):
         assert "Join" not in plan, key
         assert "BatchEvalPython" not in plan, key
 
-    monkeypatch.setenv("SPARK_GRAFT_SCORE_ARROW", "0")
-    plan = _plan(QUERIES["ann_bruteforce"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan
-    plan = _plan(QUERIES["ann_lsh"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
 
-
-def test_pq_encode_single_pass(spark, monkeypatch):
+def test_pq_encode_single_pass(spark):
     """r16: PQ encode must be ONE MapInArrow pass — no explode of
     the corpus into per-sub rows, no regroup aggregate; the only
     exchange left is the output ordering's range partitioning."""
-    monkeypatch.setenv("SPARK_GRAFT_SCORE_ARROW", "1")
     plan = _plan(QUERIES["embedding_pq"](spark, SF_DIR))
     assert "MapInArrow" in plan
     assert "Exchange hashpartitioning" not in plan
     assert "Generate" not in plan  # the posexplode is gone
 
 
-def test_score_kernel_dial_row_equality(spark, monkeypatch):
-    """r16: the Arrow scoring kernel and the in-plan fold arm must
-    agree ROW-FOR-ROW, including the degenerate classes the kernel
-    special-cases: a zero-norm vector (safe_div NULL — kept and
-    ranked last) and self-pair exclusion."""
-    from rsbsa_etl_spark.functions.similarity import brute_force_topk
+def test_brute_force_topk_matches_oracle_on_degenerate_rows(spark):
+    """the scoring kernel row-for-row against the DuckDB
+    ``ann_bruteforce`` oracle on a hand-built frame holding the
+    classes the kernel special-cases: a zero-norm query (safe_div
+    NULL — kept, ranked last, by id), a NULL corpus vector (NULL
+    score), self-pair exclusion, negative cosines (Spark's floor,
+    not truncation, at the 1e-6 quantization) and a top-k cut that
+    runs through the NULL scores."""
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
 
-    rows = [
-        (i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)])
-        for i in range(30)
+    from __spark_entry__ import oracle_sql
+    from rsbsa_etl_spark.functions.similarity import brute_force_topk
+    from rsbsa_etl_spark.params import ANN_QUERY_IDS, ANN_TOP_K
+    from rsbsa_etl_spark.verify import canon
+
+    vecs = [
+        [float((i * 7 + j * 3) % 11 - 5) for j in range(64)]
+        for i in range(12)
     ]
-    rows.append((30, [0.0] * 8))  # zero-norm: NULL cosine everywhere
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {}
-    for arm in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_SCORE_ARROW", arm)
-        got[arm] = sorted(
-            tuple(r) for r in brute_force_topk(emb, (0, 1, 30), k=5).collect()
-        )
-    assert got["1"] == got["0"]
-    # the zero-norm query returns NULL-cosine rows (ranked by id)
-    assert any(q == 30 and c is None for q, _, c, _ in got["1"])
+    vecs[3] = [0.0] * 64  # zero-norm: NULL cosine everywhere
+    vecs[7] = None  # NULL corpus vector: NULL score
+    assert 3 in ANN_QUERY_IDS and 7 not in ANN_QUERY_IDS
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(12), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        }
+    )
+    emb = spark.createDataFrame(
+        list(zip(range(12), vecs)), "vec_id long, embedding array<float>"
+    )
+    got = brute_force_topk(emb).toPandas()
+    con = duckdb.connect()
+    con.register("embeddings", table)
+    want = con.execute(oracle_sql()["ann_bruteforce"]).df()
+    con.close()
+    assert len(got) == len(want) == len(ANN_QUERY_IDS) * ANN_TOP_K
+    pd.testing.assert_frame_equal(
+        canon(got), canon(want), check_dtype=False, rtol=0, atol=1e-9
+    )
+    # the degenerate classes are really in the compared rows
+    assert got[got.query_id == 3].cosine.isna().all()
+    assert set(got[got.query_id == 3].neighbor_id) == set(range(11)) - {3}
+    ranked_null = got[(got.query_id == 0) & got.cosine.isna()]
+    assert list(ranked_null.neighbor_id) == [3]
+    assert list(ranked_null["rank"]) == [ANN_TOP_K]
+    assert (got.cosine < 0).any()
 
 
 def test_lm_score_partial_aggregates(spark):
@@ -1002,6 +1010,42 @@ def test_ann_index_query_prunes_partitions(spark, tmp_path):
     assert {tuple(r) for r in served.collect()} == {
         tuple(r) for r in ivf_topk(emb).collect()
     }
+
+
+def test_ann_index_probes_rank_a_nan_cell_last(spark, tmp_path):
+    """the serving path and ``ivf_topk`` share one probe rule: a
+    centroid holding a NaN has a NaN distance to every query and must
+    be probed LAST, as ``ivf_topk`` ranks it. A plain (d2, cid) tuple
+    sort leaves NaN wherever the sort put it — here it probed the NaN
+    cell 0 and skipped cell 1."""
+    from rsbsa_etl_spark.functions.similarity import ivf_topk
+    from rsbsa_etl_spark.sources.ann_index import (
+        build_ivf_index,
+        query_ivf_index,
+        query_vectors_from_table,
+    )
+
+    rows = [(0, [float("nan"), 0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.0, 1.0, 0.0, 0.0])]
+    rows += [
+        (i, [1.0 + 0.1 * (i % 3), 0.2 * (i % 2), 0.1 * (i % 5), 0.3])
+        for i in range(3, 9)
+    ]
+    rows += [
+        (i, [0.1 * (i % 3), 1.0 + 0.2 * (i % 2), 0.3, 0.1 * (i % 5)])
+        for i in range(9, 15)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    qids = (4, 10)
+    path = str(tmp_path / "index")
+    build_ivf_index(emb, path, n_centroids=3)
+    served = query_ivf_index(
+        spark, path, query_vectors_from_table(emb, qids), k=10, nprobe=2
+    )
+    want = ivf_topk(emb, qids, k=10, n_centroids=3, nprobe=2).collect()
+    assert {tuple(r) for r in served.collect()} == {tuple(r) for r in want}
+    assert 0 not in {r.neighbor_id for r in want}  # the NaN cell's member
+    assert len(want) == 2 * 10
 
 
 def test_ann_index_append_matches_full_build(spark, tmp_path):

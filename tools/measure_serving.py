@@ -57,28 +57,25 @@ def _dir_bytes(path: str) -> int:
 
 
 def _probed_cells(path: str, query_vecs, nprobe: int) -> list[int]:
-    """the same driver-side probe computation query_ivf_index runs —
-    reproduced here to price the pruned directories without touching
-    the served plan."""
+    """the cells query_ivf_index probes (the same
+    ``_py_nearest_cells`` rule), computed here to price the pruned
+    directories without touching the served plan."""
     from pyspark.sql import SparkSession
+
+    from rsbsa_etl_spark.functions.similarity import _py_nearest_cells
 
     spark = SparkSession.getActiveSession()
     cents = sorted(
         (r["cid"], [float(x) for x in r["embedding"]])
         for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
     )
-    probed: set[int] = set()
-    for _qid, vec in query_vecs:
-        scored = []
-        for cid, cv in cents:
-            d2 = 0.0
-            for x, y in zip(vec, cv):
-                d = float(x) - float(y)
-                d2 += d * d
-            scored.append((d2, cid))
-        scored.sort()
-        probed.update(cid for _d2, cid in scored[:nprobe])
-    return sorted(probed)
+    return sorted(
+        {
+            cid
+            for _qid, vec in query_vecs
+            for cid in _py_nearest_cells([float(x) for x in vec], cents, nprobe)
+        }
+    )
 
 
 def main() -> None:
