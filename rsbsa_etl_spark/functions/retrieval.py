@@ -148,20 +148,26 @@ def _hybrid_parts(
     # scored in the Arrow batch kernel (1e-4-rounded cosine, batch-
     # local top-arm_k cut). The bounded query-vector collect doubles
     # as the eager materialization of the corpus cache (its consumers
-    # below read the cached rows either way).
-    qrows = _collect_id_vecs(
-        corpus.where(F.col("doc_id").isin(qset)), "doc_id", "embedding"
-    )
-    vec_scores = _topk_scores_arrow(
-        cand.select("doc_id", "embedding"),
-        qrows,
-        "embedding",
-        "doc_id",
-        arm_k,
-        out_col="cos",
-        scale=4,
-        drop_null=True,
-    )
+    # below read the cached rows either way). Both steps raise on a
+    # NULL or ragged query vector; the corpus is released then, as no
+    # caller gets a handle to it.
+    try:
+        qrows = _collect_id_vecs(
+            corpus.where(F.col("doc_id").isin(qset)), "doc_id", "embedding"
+        )
+        vec_scores = _topk_scores_arrow(
+            cand.select("doc_id", "embedding"),
+            qrows,
+            "embedding",
+            "doc_id",
+            arm_k,
+            out_col="cos",
+            scale=4,
+            drop_null=True,
+        )
+    except Exception:
+        corpus.unpersist()
+        raise
     wv = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("doc_id").asc()
     )

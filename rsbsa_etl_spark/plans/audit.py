@@ -66,7 +66,8 @@ def audit_key(spark, key: str, sf_dir: str) -> dict:
 
     Driver-loop keys are captured the same way since round 12
     (closing the blind spot PLANAUDIT.md used to state): the build
-    runs with ``plan_capture.LOOP_GATE`` open, so each BPE merge
+    runs with ``plan_capture.AUDIT_GATE`` open (the streaming
+    capture above waits on the same gate), so each BPE merge
     round's argmax plan and the MMR driver fold's two bounded-collect
     plans land in ``CAPTURED`` (tagged ``loop:*``) and are SUMMED
     into the key's counters alongside any streaming micro-batch
@@ -74,16 +75,16 @@ def audit_key(spark, key: str, sf_dir: str) -> dict:
     ``loop_plans`` / ``micro_batch_plans``.
     """
     from rsbsa_etl_spark.registry import QUERIES
-    from rsbsa_etl_spark.streaming.plan_capture import CAPTURED, LOOP_GATE
+    from rsbsa_etl_spark.streaming.plan_capture import AUDIT_GATE, CAPTURED
 
     spark.catalog.clearCache()
     CAPTURED.clear()
-    LOOP_GATE.enabled = True
+    AUDIT_GATE.enabled = True
     try:
         df = QUERIES[key](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
-        LOOP_GATE.enabled = False
+        AUDIT_GATE.enabled = False
     row = plan_counters(plan)
     if CAPTURED:
         n_loop = 0

@@ -18,6 +18,13 @@ session:
   ``pyspark.zip`` on every task (0.13-0.24 s, about a third of a
   small retrieval op); this daemon re-reads a zip archive only when
   its ``(st_mtime_ns, st_size)`` stat changed.
+- streaming checkpoints go through Spark's
+  ``FileSystemBasedCheckpointFileManager``: the default FileContext
+  manager reaches ``file:`` paths through Hadoop's ``RawLocalFs``,
+  which, without the native-hadoop library, forks 8 ``readlink``
+  children per checkpoint-metadata write; on a two-table sync tick
+  the offset and commit writes took 0.131 s with it and 0.044 s
+  without (4 vCPUs).
 """
 
 from __future__ import annotations
@@ -80,6 +87,15 @@ def get_spark(
         # files exceed maxPartitionBytes anyway.
         .config("spark.sql.files.openCostInBytes", "65536")
         .config("spark.ui.enabled", "false")
+        # FileSystem-based checkpoint I/O (module docstring): its
+        # rename is not atomic against a second writer of the same
+        # file, so it relies on one writer per checkpoint, which Spark
+        # already enforces by refusing a second active query on it
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.python.daemon.module", "rsbsa_etl_spark.pydaemon")
         # lands after pyspark.zip and py4j on the worker's sys.path
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)

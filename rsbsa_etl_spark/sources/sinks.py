@@ -12,8 +12,7 @@ would:
 - incremental writes use **dynamic partition overwrite**
   (``spark.sql.sources.partitionOverwriteMode=dynamic``): only the
   buckets containing incoming keys are rewritten; untouched buckets'
-  files are left byte-identical (asserted in tests);
-- K1 append is a plain partitioned append.
+  files are left byte-identical (asserted in tests).
 
 Delta/Iceberg MERGE replaces the read-merge-rewrite of touched
 buckets with a transactional commit; the plan shape (bucket pruning,
@@ -57,15 +56,21 @@ def overwrite_by_key_into(
     key_col: str,
     n_buckets: int = 64,
 ) -> None:
-    """K3 (delete-then-insert per key) against parquet storage.
+    """K3 (delete-then-insert per key) against parquet storage, in
+    three Spark jobs: the collect of step 1 and the write's shuffle
+    and file stages.
 
-    1. the bucketed incoming frame is persisted once, and one collect
-       of its distinct (key, bucket) pairs yields both the touched
+    1. the bucketed incoming frame is persisted once, and one narrow
+       collect of its (key, bucket) pairs — deduplicated on the
+       driver, so no ``distinct`` shuffle — yields both the touched
        buckets and the incoming key list (an empty frame is a no-op;
        the list is batch-sized, as a broadcast key set would be);
     2. bucket-prune: only the touched ``key_bucket=`` directories that
        exist are read back (``basePath`` plus per-bucket paths,
-       existence checked on the Hadoop FileSystem);
+       existence checked on the Hadoop FileSystem), with the incoming
+       frame's schema, so no parquet schema-inference job runs — the
+       stored table is assumed to have that schema, as every write
+       through this module gives it;
     3. survivors: rows of those buckets whose key is NOT among the
        collected keys — a null-safe NOT IN with left-anti semantics:
        target rows with a NULL key survive, NULL incoming keys match
@@ -81,14 +86,18 @@ def overwrite_by_key_into(
     spark = incoming.sparkSession
     inc = incoming.withColumn(BUCKET_COL, bucket_of(key_col, n_buckets)).persist()
     try:
-        pairs = inc.select(key_col, BUCKET_COL).distinct().collect()
+        pairs = set(map(tuple, inc.select(key_col, BUCKET_COL).collect()))
         if not pairs:
             return
         keys = [k for k, _ in pairs if k is not None]
         parts = _existing_buckets(spark, path, sorted({b for _, b in pairs}))
         out = inc
         if parts:
-            existing = spark.read.option("basePath", path).parquet(*parts)
+            existing = (
+                spark.read.schema(inc.schema)
+                .option("basePath", path)
+                .parquet(*parts)
+            )
             incoming_key = F.coalesce(F.col(key_col).isin(keys), F.lit(False))
             out = inc.unionByName(existing.where(~incoming_key))
         (
@@ -176,17 +185,6 @@ def write_managed_table(
             )
             return candidate
     raise AssertionError("parquet is always available")  # pragma: no cover
-
-
-def append_into(df: DataFrame, path: str, key_col: str, n_buckets: int = 64) -> None:
-    """K1 bulk append into the bucketed layout."""
-    (
-        df.withColumn(BUCKET_COL, bucket_of(key_col, n_buckets))
-        .repartition(BUCKET_COL)
-        .write.mode("append")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
-    )
 
 
 def compact_files(

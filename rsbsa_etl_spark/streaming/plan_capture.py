@@ -1,6 +1,7 @@
 """Capture EXECUTED plans the final DataFrame doesn't carry:
 streaming micro-batches (round 11) and driver-loop iteration jobs
-(round 12 — see ``LOOP_GATE``/``record`` below).
+(round 12 — see ``record`` below), while the audit's
+``AUDIT_GATE`` is open.
 
 Until round 11 the plan-hygiene audit excluded every ``stream_*``
 key ("building the DataFrame runs real streaming jobs"), so the
@@ -18,6 +19,11 @@ PLANAUDIT row now counts its real stateful micro-batch plan
 (StateStoreSave, streaming dedup/session operators, any Python
 stages), not the trivial sink read-back.
 
+Both captures run only while the audit holds ``AUDIT_GATE`` open.
+Outside the audit nothing reads ``CAPTURED``, and a long-lived sync
+process would otherwise grow it by one plan string per finished
+query, without bound.
+
 Capture is best-effort by design: a missing plan must never fail a
 replay (the plan is evidence, the replay is the product). Multi-phase
 replays (checkpoint-restart tests run 2+ queries) append one entry
@@ -26,39 +32,41 @@ per query, all merged into the key's row.
 
 from __future__ import annotations
 
-#: (tag, executed-plan string) per completed streaming query since
-#: the last ``CAPTURED.clear()`` — the audit clears per key.
+#: (tag, executed-plan string) per completed streaming query or
+#: recorded driver-loop collect since the last ``CAPTURED.clear()``
+#: — the audit clears per key.
 CAPTURED: list[tuple[str, str]] = []
 
 
-class _LoopGate:
-    """Audit-time switch for DRIVER-LOOP plan capture.
+class _AuditGate:
+    """Audit-time switch for plan capture.
 
-    Round 11 closed the streaming blind spot; this closes the other
-    one PLANAUDIT.md stated plainly: a driver-loop key (the BPE merge
-    loop's per-round argmax, the MMR greedy fold's pool/pairs
+    Round 11 closed the streaming blind spot; round 12 closed the
+    other one PLANAUDIT.md stated plainly: a driver-loop key (the BPE
+    merge loop's per-round argmax, the MMR greedy fold's pool/pairs
     collects) launches intermediate jobs whose plans are not part of
-    the final DataFrame. ``record`` below captures them — but ONLY
-    while the audit holds this gate open: the loops are hot paths
-    (bpe_train runs in bench), and stringifying an executed plan per
-    merge round would tax production callers for evidence only the
-    audit reads."""
+    the final DataFrame. ``record`` and ``finish`` below capture them
+    — but ONLY while the audit holds this gate open: the loops are
+    hot paths (bpe_train runs in bench), sync ticks run forever in a
+    serving process, and stringifying an executed plan per merge
+    round or per query would tax production callers for evidence
+    only the audit reads."""
 
     def __init__(self) -> None:
         self.enabled = False
 
 
 #: open during ``plans.audit.audit_key`` builds only
-LOOP_GATE = _LoopGate()
+AUDIT_GATE = _AuditGate()
 
 
 def record(df, tag: str) -> None:
     """best-effort capture of a driver-loop intermediate DataFrame's
     executed plan into ``CAPTURED`` under ``loop:<tag>`` — a zero-cost
-    boolean check unless the audit opened ``LOOP_GATE``. Call at the
+    boolean check unless the audit opened ``AUDIT_GATE``. Call at the
     loop's collect site, BEFORE the collect, with exactly the
     DataFrame being collected."""
-    if not LOOP_GATE.enabled:
+    if not AUDIT_GATE.enabled:
         return
     try:
         CAPTURED.append(
@@ -70,8 +78,11 @@ def record(df, tag: str) -> None:
 
 def finish(q, tag: str) -> None:
     """``q.awaitTermination()`` + best-effort capture of the last
-    micro-batch's executed plan under ``tag``."""
+    micro-batch's executed plan under ``tag`` while ``AUDIT_GATE`` is
+    open."""
     q.awaitTermination()
+    if not AUDIT_GATE.enabled:
+        return
     try:
         jq = q._jsq
         # StreamingQueryWrapper holds the real StreamExecution behind

@@ -18,14 +18,22 @@ so a replayed batch converges to the same state — the property the
 reference gets from ``ON DUPLICATE KEY UPDATE``, tested here by
 re-running the stream over the same files.
 
+A tick runs four Spark jobs per table: the batch's key collect here,
+the sink's collect of the fetched rows' (key, bucket) pairs, and the
+write's shuffle and file stages. Its checkpoint writes go through the
+FileSystem-based checkpoint manager that ``session.get_spark`` sets,
+which forks no ``readlink`` per metadata file.
+
 At 100 TB: the stream carries only (key, table) tuples, and each
 micro-batch is read exactly once — one job collects its valid keys to
 the driver (deduped there, no ``distinct`` shuffle). The key set is
 bounded by the batch, not the table, and a broadcast join would route
 it through the driver anyway. The re-fetch filters the source by that
-literal key list; the sink caches the fetched rows once for its key
-and bucket collect and its write, and writes touch O(batch keys /
-n_buckets) partitions. Nothing in the plan grows with target size.
+literal key list; the sink caches the fetched rows once for one
+narrow (key, bucket) collect (deduped on the driver too) and its
+write, reads the touched buckets with the fetched rows' schema (no
+inference job), and writes touch O(batch keys / n_buckets)
+partitions. Nothing in the plan grows with target size.
 """
 
 from __future__ import annotations

@@ -201,8 +201,12 @@ def test_scoring_kernels_degenerate_side_tables(spark, op, case):
         vecs[1], cause = None, "NULL embedding"
     else:
         vecs[1], cause = _vec(1, _D + 1), "ragged"
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
     with pytest.raises(ValueError, match=cause):
         build(*_side_frames(spark, ids, vecs)).collect()
+    # a failed build strands no cache: no caller got a handle to it
+    assert set(jsc.getPersistentRDDs().keys()) <= before
 
 
 @pytest.mark.parametrize("op", ["lsh", "ivfpq", "pq_codes"])

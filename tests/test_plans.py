@@ -942,7 +942,7 @@ def test_committed_planaudit_matches_live_plans(spark):
     a streaming replay with captured micro-batch plans plus two
     previously-excluded build-executes-work keys, and — round 12 —
     two driver-loop keys whose rows sum the captured per-iteration
-    plans, exercising the LOOP_GATE open/close path) must match the
+    plans, exercising the AUDIT_GATE open/close path) must match the
     committed rows counter-for-counter at the audit's own SF; a
     mismatch means re-run the audit CLI and commit the refreshed
     JSON alongside the code change."""
