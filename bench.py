@@ -190,7 +190,6 @@ HEADLINE = [
     "tokenizer_fertility_bpe",  # trained-BPE fertility (round 11)
     "hybrid_search_rrf",
     "mmr_rerank",
-    "mmr_rerank_dist",  # distributed greedy arm (round 11)
     "mmr_rerank_ivf",  # IVF-pool MMR composition (round 12)
     "prf_requery",  # PRF re-retrieval final pass (round 12)
     "decontam_embedding",  # embedding-arm decontamination (round 12)

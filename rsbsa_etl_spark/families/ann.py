@@ -93,18 +93,6 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _m(load(spark, sf_dir, "embeddings"))
 
 
-def mmr_rerank_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``mmr_rerank`` with the DISTRIBUTED greedy arm forced — the
-    cogrouped per-query Arrow fold that serving-scale query batches
-    auto-select above ``MMR_DIST_MIN_QUERIES`` (the driver-fold arm
-    is serial in the query count, the r9/r10 verdicts' watch item).
-    Same kernel, same oracle unroll: the driver gate value-checks
-    that the distributed arm's picks are bit-identical."""
-    from rsbsa_etl_spark.functions.retrieval import mmr_rerank as _m
-
-    return _m(load(spark, sf_dir, "embeddings"), distributed=True)
-
-
 def mmr_rerank_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``mmr_rerank`` with the pool retrieved by the IVF probe
     instead of the brute-force scan — the billion-vector deployment

@@ -38,13 +38,11 @@ from rsbsa_etl_spark.functions.dedup import normalized_text
 from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
 from rsbsa_etl_spark.functions.similarity import (
     _collect_id_vecs,
+    _floor_long,
     _topk_scores_arrow,
-    dot,
-    safe_div,
     with_norm,
 )
 from rsbsa_etl_spark.functions.textstats import rational_idf
-from rsbsa_etl_spark.streaming import plan_capture
 from rsbsa_etl_spark.params import (
     ANN_QUERY_IDS,
     HYBRID_ARM_K,
@@ -208,40 +206,10 @@ def _hybrid_parts(
     return out, corpus
 
 
-def _pairwise_sims(pv: DataFrame) -> DataFrame:
-    """pairwise in-pool cosine similarities at the MMR quantization
-    — ONE construction (a/b aliasing, 1e-6 floor) shared by
-    mmr_rerank and hybrid_mmr, feeding ``_greedy_mmr``. Input:
-    (query_id, doc_id, vd, nd) pool rows with vectors and norms."""
-    a = pv.select(
-        "query_id",
-        F.col("doc_id").alias("a_id"),
-        F.col("vd").alias("va"),
-        F.col("nd").alias("na"),
-    )
-    b = pv.select(
-        "query_id",
-        F.col("doc_id").alias("b_id"),
-        F.col("vd").alias("vb"),
-        F.col("nd").alias("nb"),
-    )
-    sim_i = F.floor(
-        safe_div(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb"))
-        * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("long")
-    return (
-        a.join(b, ["query_id"])
-        .where(F.col("a_id") != F.col("b_id"))
-        .select("query_id", "a_id", "b_id", sim_i.alias("sim_i"))
-    )
-
-
 def _mmr_pool(emb: DataFrame, qset: list, pool_k: int) -> DataFrame:
-    """``mmr_rerank``'s retrieval-pool plan, factored so the scaling
-    harness (tools/measure_mmr_scale.py) measures the SHIPPED pool
-    construction instead of a hand-copied twin that could silently
-    drift (r11 advice item 4). Returns the UNPERSISTED
+    """``mmr_rerank``'s retrieval-pool plan, factored so the kernel
+    tests exercise the SHIPPED pool construction instead of a
+    hand-copied twin that could silently drift. Returns the lazy
     (query_id, doc_id, vd, nd, rel_i) top-``pool_k`` plan: the
     brute-force cosine retrieval with broadcast query vectors,
     1e-6 fixed-point relevance, (rel desc, doc_id asc) ranked
@@ -279,14 +247,14 @@ def _mmr_pool(emb: DataFrame, qset: list, pool_k: int) -> DataFrame:
 
 def _make_greedy_kernel():
     """factory for the per-query greedy MMR kernel — pure-Python
-    exact-integer arithmetic shared by the driver-side fold, the
-    distributed per-group fold, and the kernel unit tests.
+    exact-integer arithmetic shared by the grouped Arrow selection
+    (``_greedy_mmr``) and the kernel unit tests.
 
     A FACTORY, not a plain module-level def, for ship-by-reference
-    pickling: the cogrouped fold closes over this kernel and ships
-    it to Python workers — a module-level function pickles by NAME
-    and crashes workers with ModuleNotFoundError whenever the driver
-    runs outside the repo root (the /tmp driver contract; pytest's
+    pickling: ``_greedy_mmr``'s group function closes over this
+    kernel and ships it to Python workers — a module-level function
+    pickles by NAME and crashes workers with ModuleNotFoundError
+    whenever the driver runs outside the repo root (pytest's
     cwd=repo never catches it). A factory-made closure pickles by
     VALUE, and the λ weights are captured here as plain ints so the
     worker-side kernel never imports the package either.
@@ -296,10 +264,9 @@ def _make_greedy_kernel():
     pairs that EXIST as rows, pinning the oracle unroll's edge
     semantics (its rounds >= 2 INNER JOIN pool->pairs->selected: a
     pool doc with no candidate-oriented row to any selected doc is
-    UNPICKABLE after round 1 — e.g. a hybrid pool doc whose
-    embedding row was dropped by the pv inner join); ``sim`` holds
-    only NON-NULL sim_i (SQL max() skips NULLs — a NULL sim_i is
-    producible by safe_div on a zero-norm pool embedding). A
+    UNPICKABLE after round 1 — e.g. a hybrid pool doc with no
+    embedding row); ``sim`` holds only NON-NULL sim_i (SQL max()
+    skips NULLs — a zero-norm pool embedding gives a NULL sim_i). A
     candidate whose every sim-to-selected is NULL gets mmr_i = None,
     which ranks LAST (the oracle's ORDER BY mmr_i DESC under
     DuckDB's NULLS LAST default). The lookup is DIRECTIONAL — a
@@ -307,7 +274,7 @@ def _make_greedy_kernel():
     exactly the oracle join ``pr.a_id = p.doc_id AND s.doc_id =
     pr.b_id`` — so the two engines agree on ANY pairs input;
     producers of symmetric similarities must emit both orientations
-    (``_pairwise_sims`` does, by construction). Returns
+    (``_greedy_mmr`` does, by construction). Returns
     [(doc_id, rel_i, pick_order, mmr_i)] in pick order."""
     from rsbsa_etl_spark.params import MMR_W_DIV, MMR_W_REL
 
@@ -361,156 +328,115 @@ def _make_greedy_kernel():
     return fold_one
 
 
-def _greedy_mmr(
-    slim: DataFrame, pairs: DataFrame, k: int, distributed: bool = False
-) -> DataFrame:
-    """the greedy MMR selection loop — ONE kernel
-    (``_greedy_fold_one``) shared by ``mmr_rerank`` (cosine
-    relevance) and ``hybrid_mmr`` (RRF relevance), and mirrored
-    round-for-round by the oracles' shared unroll, so the
+def _greedy_mmr(pool: DataFrame, k: int) -> DataFrame:
+    """the greedy MMR selection — ONE lazy grouped Arrow kernel
+    shared by ``mmr_rerank``, ``mmr_rerank_ivf`` and ``hybrid_mmr``
+    (``mmr_rerank_auto`` and ``context_pack`` run through them) and
+    mirrored round for round by the oracles' shared unroll, so the
     integer-weight argmax semantics cannot drift between entry
-    points. Inputs: ``slim`` = (query_id, doc_id, rel_i) candidate
-    pool, ``pairs`` = (query_id, a_id, b_id, sim_i) pairwise pool
-    similarities — both 1e-6 fixed-point integers. Returns
-    (query_id, doc_id, rel_i, pick_order, mmr_i).
+    points. Input: the pool rows (query_id, doc_id, rel_i, vd, nd,
+    has_vec) — rel_i the 1e-6 fixed-point relevance, vd/nd the
+    double vector and its norm, has_vec whether the doc joined an
+    embedding row. Returns (query_id, doc_id, rel_i, pick_order,
+    mmr_i).
 
-    Execution shape — two arms, same kernel, same oracle:
+    Each query's group builds its in-pool similarities itself, with
+    the arithmetic of the oracles' ``_MMR_SIM`` (and of
+    ``_topk_scores_arrow``): the dot accumulates per dimension from
+    0.0, ``sim_i = floor(dot / (na·nb) · 1e6 + 0.5)`` through Spark's
+    floor→long cast (``_floor_long``), and sim_i is NULL when na·nb
+    is 0 or NULL, when either vector is NULL or holds a NULL element,
+    or when the two lengths differ. A pair (a ≠ b) is PRESENT when
+    both docs joined an embedding row, so a hybrid pool doc without
+    one is unpickable after round 1, as in the oracle's inner joins.
+    The group then runs ``_make_greedy_kernel``'s ``fold_one``.
 
-    - ``distributed=False`` (small query sets): the fold runs
-      DRIVER-SIDE over a collected pool — a deliberate bounded
-      collect (the repo's BPE-argmax exception class): the pool is
-      queries × pool_k rows and pairs ≤ queries × pool_k², both
-      CONSTANT in corpus size by construction (only the retrieval
-      stage ever touches the corpus). Zero shuffle and zero
-      Python-stage infrastructure: measured ~0.3-0.9s faster at
-      sf0.1 when the cogrouped arm's Python workers start cold
-      (isolated sessions); comparable in warm sessions (r11
-      BENCH_FULL: dist 0.633s vs driver 0.909s) — the driver arm's
-      real advantage is small interactive batches, its real limit
-      the serial wall above.
-    - ``distributed=True`` (serving-scale query batches): a
-      COGROUPED Arrow fold — both inputs shuffle by ``query_id``
-      (still pool-bounded) and each query's selection runs
-      independently as one pandas group, so the stage scales with
-      the QUERY SET instead of serializing on the driver (the
-      r9/r10 verdicts' linear-in-query-set watch item: a 10k-query
-      batch folds in parallel instead of ~30s serial). sim_i/rel_i
-      are 1e6-scaled longs, so Arrow's float64 transport of
-      nullable longs is exact far below 2^53.
+    The plan stays lazy: no persist, no driver job. The groupBy
+    needs the pool clustered by query_id, which the brute pool's
+    ranking window already provides, so the pool subtree runs once
+    under one exchange. The pool is queries × pool_k rows, constant
+    in corpus size, and every query folds in parallel."""
+    import numpy as np
+    import pyarrow as pa
 
-    Callers pick via ``MMR_DIST_MIN_QUERIES`` (params); the picks
-    are bit-identical either way — ``mmr_rerank_dist`` keeps the
-    distributed arm under the driver's oracle gate, and the kernel
-    unit tests run both arms.
-
-    An even earlier form ran k Spark jobs of joins + windows with a
-    localCheckpoint per pick — measured ~0.4s of scheduler overhead
-    per pick (2-4s per key at any SF, invariant in the data); both
-    current arms replaced it."""
-    import pandas as pd
-
-    # build the kernel PER CALL, not at module import: the factory is
-    # cheap and reading MMR_W_REL/MMR_W_DIV at use keeps the engine in
-    # lockstep with the oracle SQL, which interpolates the params at
-    # its own build time — an import-time instance would freeze the
-    # weights and silently diverge from a monkeypatched oracle
-    # (r11 advice item 3)
+    # build the kernel PER CALL, not at module import: reading
+    # MMR_W_REL/MMR_W_DIV at use keeps the engine in lockstep with the
+    # oracle SQL, which interpolates the params at its own build time
     fold_one = _make_greedy_kernel()
+    kk = int(k)
 
-    if not distributed:
-        spark = slim.sparkSession
-        # audit evidence: the driver arm's two bounded collects are
-        # the fold's only Spark jobs — capture their executed plans
-        # (gate-closed no-op outside the audit; see plan_capture)
-        slim_df = slim.select("query_id", "doc_id", "rel_i")
-        pairs_df = pairs.select("query_id", "a_id", "b_id", "sim_i")
-        plan_capture.record(slim_df, "mmr_pool")
-        plan_capture.record(pairs_df, "mmr_pairs")
-        pool_rows = slim_df.collect()
-        # group the pairs rows per query in ONE pass — a per-query
-        # filter over the flat collect would rescan queries × pairs
-        # rows, turning the serial arm quadratic in the query count
-        # (measured 247s at 1600 queries before this grouping vs
-        # 3s after; tools/measure_mmr_scale.py)
-        present_q: dict = {}
-        sim_q: dict = {}
-        for r in pairs_df.collect():
-            q, kk = r["query_id"], (r["a_id"], r["b_id"])
-            present_q.setdefault(q, set()).add(kk)
-            if r["sim_i"] is not None:
-                sim_q.setdefault(q, {})[kk] = r["sim_i"]
-        by_q: dict = {}
-        for r in pool_rows:
-            by_q.setdefault(r["query_id"], {})[r["doc_id"]] = r["rel_i"]
-        out = []
-        for qid in sorted(by_q):
-            picks = fold_one(
-                by_q[qid],
-                present_q.get(qid, set()),
-                sim_q.get(qid, {}),
-                k,
-            )
-            out.extend((qid, *row) for row in picks)
-        return spark.createDataFrame(
-            out,
-            "query_id long, doc_id long, rel_i long, "
-            "pick_order int, mmr_i long",
-        )
-
-    def _result(rows_q) -> "pd.DataFrame":
-        return pd.DataFrame(
+    def select(key, tbl):
+        ids = tbl.column("doc_id").to_pylist()
+        has = tbl.column("has_vec").to_pylist()
+        vecs = tbl.column("vd").to_pylist()
+        nds = tbl.column("nd").to_pylist()
+        present = {
+            (a, b)
+            for a, ha in zip(ids, has)
+            if ha
+            for b, hb in zip(ids, has)
+            if hb and a != b
+        }
+        # a non-NULL sim needs both vectors free of NULLs, equal
+        # lengths and both norms non-NULL: block the rows by length
+        by_len: dict = {}
+        for i, (h, v, nv) in enumerate(zip(has, vecs, nds)):
+            if h and v is not None and nv is not None and None not in v:
+                by_len.setdefault(len(v), []).append(i)
+        sim: dict = {}
+        for d, rows in by_len.items():
+            X = np.asarray([vecs[i] for i in rows], dtype=np.float64)
+            X = X.reshape(len(rows), d)
+            dots = np.zeros((len(rows), len(rows)), dtype=np.float64)
+            for j in range(d):
+                dots += np.multiply.outer(X[:, j], X[:, j])
+            nrm = np.asarray([nds[i] for i in rows], dtype=np.float64)
+            den = np.multiply.outer(nrm, nrm)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                s = _floor_long(dots / den * 1e6 + 0.5).tolist()
+            rid = [ids[i] for i in rows]
+            for x, y in zip(*np.nonzero(den != 0)):
+                if rid[x] != rid[y]:
+                    sim[(rid[x], rid[y])] = s[x][y]
+        cand = dict(zip(ids, tbl.column("rel_i").to_pylist()))
+        picks = fold_one(cand, present, sim, kk)
+        qid = key[0].as_py()
+        return pa.table(
             {
-                "query_id": pd.array([r[0] for r in rows_q], dtype="int64"),
-                "doc_id": pd.array([r[1] for r in rows_q], dtype="int64"),
-                "rel_i": pd.array([r[2] for r in rows_q], dtype="int64"),
-                "pick_order": pd.array(
-                    [r[3] for r in rows_q], dtype="int32"
-                ),
-                # nullable: an all-NULL-sims pick carries mmr_i NULL
-                "mmr_i": pd.array([r[4] for r in rows_q], dtype="Int64"),
+                "query_id": pa.array([qid] * len(picks), pa.int64()),
+                "doc_id": pa.array([p[0] for p in picks], pa.int64()),
+                "rel_i": pa.array([p[1] for p in picks], pa.int64()),
+                "pick_order": pa.array([p[2] for p in picks], pa.int32()),
+                # NULL when every sim to the selected docs is NULL
+                "mmr_i": pa.array([p[3] for p in picks], pa.int64()),
             }
         )
 
-    def fold(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
-        if len(left) == 0:
-            # cogroup emits keys present only in pairs: no pool rows,
-            # nothing pickable
-            return _result([])
-        qid = int(left["query_id"].iloc[0])
-        cand = {
-            int(d): int(r) for d, r in zip(left["doc_id"], left["rel_i"])
-        }
-        present: set = set()
-        sim: dict = {}
-        for a, b, s in zip(right["a_id"], right["b_id"], right["sim_i"]):
-            kk = (int(a), int(b))
-            present.add(kk)
-            if pd.notna(s):
-                sim[kk] = int(s)
-        return _result(
-            [(qid, *row) for row in fold_one(cand, present, sim, k)]
-        )
-
-    # both inputs usually derive from the same cached pool plan —
-    # re-alias every column (fresh expression ids) so the cogroup's
-    # internal self-join never sees the shared query_id attribute
-    # (AnalysisException: "Column query_id are ambiguous" otherwise)
-    def _fresh(df: DataFrame, cols: list) -> DataFrame:
-        return df.select(*[F.col(c).alias(c) for c in cols])
-
     return (
-        _fresh(slim, ["query_id", "doc_id", "rel_i"])
+        pool.select("query_id", "doc_id", "rel_i", "vd", "nd", "has_vec")
         .groupBy("query_id")
-        .cogroup(
-            _fresh(pairs, ["query_id", "a_id", "b_id", "sim_i"]).groupBy(
-                "query_id"
-            )
-        )
-        .applyInPandas(
-            fold,
+        .applyInArrow(
+            select,
             "query_id long, doc_id long, rel_i long, "
             "pick_order int, mmr_i long",
         )
+    )
+
+
+def _mmr_output(selected: DataFrame, rel_name: str = "relevance") -> DataFrame:
+    """the MMR entry points' shared output tail: fixed-point rel_i
+    and mmr_i back to doubles (``rel_name`` is ``relevance`` for the
+    cosine pools, ``rel_norm`` for hybrid_mmr's normalized RRF)."""
+    from rsbsa_etl_spark.params import MMR_FIXED_SCALE
+
+    return selected.select(
+        "query_id",
+        "doc_id",
+        "pick_order",
+        (F.col("rel_i").cast("double") / F.lit(1e6)).alias(rel_name),
+        (F.col("mmr_i").cast("double") / F.lit(MMR_FIXED_SCALE)).alias(
+            "mmr"
+        ),
     )
 
 
@@ -519,7 +445,6 @@ def mmr_rerank(
     query_ids=ANN_QUERY_IDS,
     pool_k: int | None = None,
     k: int | None = None,
-    distributed: bool | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance diversity re-rank (Carbonell &
     Goldstein, SIGIR'98): per query, greedily pick ``k`` documents
@@ -541,88 +466,23 @@ def mmr_rerank(
 
     Scale: the greedy stage never touches the corpus — it runs on
     the retrieved pool (``queries × pool_k`` rows; the pairwise
-    stage is pool-bounded at ``pool_k²`` per query, independent of
-    corpus size), which is the textbook deployment of MMR as a
-    re-ranker behind an ANN retriever. The corpus-sized work is one
-    broadcast-queries scan (the ann_bruteforce plan — swap in the
-    IVF/LSH arm at billion-vector scale; the re-rank stage is
-    unchanged). The greedy selection has two bit-identical arms
-    (see ``_greedy_mmr``): ``distributed=None`` auto-picks the
-    driver fold below ``MMR_DIST_MIN_QUERIES`` queries (measured
-    faster there) and the cogrouped per-query Arrow fold above it
-    (serving-scale batches fold in parallel instead of serializing
-    on the driver). BOTH arms release the pool persist before
-    returning: the driver fold is eager by construction; the
-    distributed fold is eagerly materialized into a result-sized
-    persist (queries × k rows) after the pool cache is filled with
-    one count() — so the fold's two lazy
-    consumers (slim + pairwise) read the retrieval output once
-    instead of race-building it inside one action (the ann_eval
-    lesson), and a long-lived serving caller never accumulates
-    POOL-sized cached blocks across calls (r11 advice item 2). The
-    distributed arm's returned frame does retain a result-sized
-    (queries × k) persist that the CALLER owns — a serving loop
-    should ``result.unpersist()`` once the picks are consumed
-    (r12 advice item 3).
+    similarities are pool-bounded at ``pool_k²`` per query,
+    independent of corpus size), which is the textbook deployment of
+    MMR as a re-ranker behind an ANN retriever. The corpus-sized work
+    is one broadcast-queries scan (the ann_bruteforce plan — swap in
+    the IVF/LSH arm at billion-vector scale; the re-rank stage is
+    unchanged). The result is a lazy plan (see ``_greedy_mmr``):
+    building it collects only the query vectors, and it holds no
+    cache, so a long-lived serving caller accumulates nothing.
     """
-    from rsbsa_etl_spark.params import (
-        MMR_DIST_MIN_QUERIES,
-        MMR_FIXED_SCALE,
-        MMR_POOL_K,
-        MMR_SELECT_K,
-    )
+    from rsbsa_etl_spark.params import MMR_POOL_K, MMR_SELECT_K
 
     pool_k = MMR_POOL_K if pool_k is None else pool_k
     k = MMR_SELECT_K if k is None else k
-    # normalize ONCE up front: the auto-switch length check and the
-    # pool build both consume query_ids — a one-shot iterator fed to
-    # len(list(...)) first would leave the pool's qset empty and
-    # silently return no rows (r11 advice item 1)
+    # normalize ONCE: a one-shot iterator must reach the pool build
     qset = [int(q) for q in query_ids]
-    if distributed is None:
-        distributed = len(qset) >= MMR_DIST_MIN_QUERIES
-    pool = _mmr_pool(emb, qset, pool_k).persist()
-    pairs = _pairwise_sims(pool)
-    slim = pool.select("query_id", "doc_id", "rel_i")
-    if distributed:
-        try:
-            # eager: ONE retrieval job fills the pool cache; the
-            # fold's two lazy consumers (slim + the pairwise
-            # self-join) then both read it — unmaterialized, they
-            # could race-build the corpus-sized subtree twice within
-            # one action (the ann_eval lesson). The fold itself is
-            # then eagerly materialized into a result-sized persist
-            # (kept plan-visible, unlike a localCheckpoint, so the
-            # arm-wiring plan guard still sees the cogroup stage) so
-            # the pool cache can release before return — a long-lived serving
-            # process calling repeatedly must not accumulate
-            # queries × pool_k cached blocks per call (r11 advice
-            # item 2); the retained checkpoint is result-sized
-            # (queries × k rows).
-            pool.count()
-            selected = _greedy_mmr(slim, pairs, k, distributed=True).persist()
-            selected.count()
-        finally:
-            pool.unpersist()
-    else:
-        try:
-            selected = _greedy_mmr(slim, pairs, k)
-        finally:
-            # the driver fold's result is a fresh createDataFrame —
-            # pool lineage is not referenced by it, so release even
-            # on a mid-fold failure (a retrying caller must not
-            # accumulate orphaned cached blocks); the slim collect
-            # fills the cache, the pairs collect reuses it
-            pool.unpersist()
-    return selected.select(
-        "query_id",
-        "doc_id",
-        "pick_order",
-        (F.col("rel_i").cast("double") / F.lit(1e6)).alias("relevance"),
-        (F.col("mmr_i").cast("double") / F.lit(MMR_FIXED_SCALE)).alias(
-            "mmr"
-        ),
-    )
+    pool = _mmr_pool(emb, qset, pool_k).withColumn("has_vec", F.lit(True))
+    return _mmr_output(_greedy_mmr(pool, k))
 
 
 def mmr_rerank_ivf(
@@ -630,7 +490,6 @@ def mmr_rerank_ivf(
     query_ids=ANN_QUERY_IDS,
     pool_k: int | None = None,
     k: int | None = None,
-    distributed: bool | None = None,
     n_centroids: int | None = None,
     nprobe: int | None = None,
 ) -> DataFrame:
@@ -640,8 +499,8 @@ def mmr_rerank_ivf(
     unchanged"), now shipped as its own oracle-checked operator:
     the pool comes from ``ivf_topk`` (broadcast centroid probe,
     ~nprobe/n_cells of the corpus touched per query) instead of the
-    brute-force scan, then the SAME pairwise quantization, greedy
-    kernel, auto-switch, and output contract as ``mmr_rerank``.
+    brute-force scan, then the SAME greedy kernel (in-pool
+    similarities included) and output contract as ``mmr_rerank``.
 
     Relevance is the IVF arm's cosine (already dec-rounded to 1e-4)
     requantized to the kernel's 1e-6 integer grid —
@@ -655,15 +514,12 @@ def mmr_rerank_ivf(
     Scale: corpus-sized work drops from ``mmr_rerank``'s
     O(corpus × queries) brute-force scan to the IVF probe's
     O(corpus + queries × corpus · nprobe/n_cells); the greedy stage
-    is unchanged and pool-bounded. Cache discipline matches
-    ``mmr_rerank`` exactly (both arms release the pool persist
-    before returning; the distributed fold materializes into a
-    result-sized — queries × k — persist that the CALLER owns and
-    should unpersist once consumed, r12 advice item 3)."""
+    is unchanged and pool-bounded. Like ``mmr_rerank`` the result is
+    a lazy plan that holds no cache."""
     from rsbsa_etl_spark.functions.similarity import ivf_topk
     from rsbsa_etl_spark.params import (
-        MMR_DIST_MIN_QUERIES,
-        MMR_FIXED_SCALE,
+        IVF_CENTROIDS,
+        IVF_NPROBE,
         MMR_POOL_K,
         MMR_SELECT_K,
     )
@@ -671,15 +527,11 @@ def mmr_rerank_ivf(
     pool_k = MMR_POOL_K if pool_k is None else pool_k
     k = MMR_SELECT_K if k is None else k
     qset = [int(q) for q in query_ids]
-    if distributed is None:
-        distributed = len(qset) >= MMR_DIST_MIN_QUERIES
     # the IVF dial passes through (defaults = the oracle-checked
     # params config; a production caller sizes n_centroids ~ sqrt(n)
     # like knn_graph_ivf so nprobe/n_cells actually prunes — the
     # fixture's 16-cell default probes half the corpus, see
     # SCALING.md "mmr_rerank_ivf vs mmr_rerank")
-    from rsbsa_etl_spark.params import IVF_CENTROIDS, IVF_NPROBE
-
     n_centroids = IVF_CENTROIDS if n_centroids is None else n_centroids
     nprobe = IVF_NPROBE if nprobe is None else nprobe
     e = with_norm(emb)
@@ -698,34 +550,12 @@ def mmr_rerank_ivf(
                 F.col("vec_id").alias("doc_id"),
                 F.col("_vd").alias("vd"),
                 F.col("_norm").alias("nd"),
+                F.lit(True).alias("has_vec"),
             ),
             "doc_id",
         )
-        .persist()
     )
-    pairs = _pairwise_sims(pool)
-    slim = pool.select("query_id", "doc_id", "rel_i")
-    if distributed:
-        try:
-            pool.count()
-            selected = _greedy_mmr(slim, pairs, k, distributed=True).persist()
-            selected.count()
-        finally:
-            pool.unpersist()
-    else:
-        try:
-            selected = _greedy_mmr(slim, pairs, k)
-        finally:
-            pool.unpersist()
-    return selected.select(
-        "query_id",
-        "doc_id",
-        "pick_order",
-        (F.col("rel_i").cast("double") / F.lit(1e6)).alias("relevance"),
-        (F.col("mmr_i").cast("double") / F.lit(MMR_FIXED_SCALE)).alias(
-            "mmr"
-        ),
-    )
+    return _mmr_output(_greedy_mmr(pool, k))
 
 
 def ivf_pool_min_queries(n_centroids: int, nprobe: int) -> int:
@@ -756,20 +586,17 @@ def mmr_rerank_auto(
     query_ids=ANN_QUERY_IDS,
     pool_k: int | None = None,
     k: int | None = None,
-    distributed: bool | None = None,
     n_centroids: int | None = None,
     nprobe: int | None = None,
 ) -> DataFrame:
-    """params-driven POOL auto-dial over the two MMR retrieval arms
-    (r12 verdict item 3 — the greedy-fold auto-switch
-    ``MMR_DIST_MIN_QUERIES`` already picks the fold arm; this picks
-    the POOL arm by the same principle, from the measured crossover
-    instead of a guess): batches below ``ivf_pool_min_queries(cells,
-    nprobe)`` keep the brute-force pool (one broadcast-queries scan —
-    measured 26× faster at 25 queries / 200 k vectors, where the IVF
-    assignment pass dwarfs everything), batches at or above it take
-    the in-plan IVF pool (measured 5.2× faster at 1000 queries, gap
-    growing linearly past the crossover as the assignment amortizes).
+    """params-driven POOL auto-dial over the two MMR retrieval arms,
+    from the measured crossover instead of a guess: batches below
+    ``ivf_pool_min_queries(cells, nprobe)`` keep the brute-force pool
+    (one broadcast-queries scan — measured 26× faster at 25 queries /
+    200 k vectors, where the IVF assignment pass dwarfs everything),
+    batches at or above it take the in-plan IVF pool (measured 5.2×
+    faster at 1000 queries, gap growing linearly past the crossover
+    as the assignment amortizes).
 
     Delegates verbatim — picks are bit-identical to the explicit arm
     on each side of the threshold (pinned by test), and both explicit
@@ -785,10 +612,9 @@ def mmr_rerank_auto(
     qset = [int(q) for q in query_ids]
     if len(qset) >= ivf_pool_min_queries(cells, probe):
         return mmr_rerank_ivf(
-            emb, qset, pool_k, k, distributed,
-            n_centroids=cells, nprobe=probe,
+            emb, qset, pool_k, k, n_centroids=cells, nprobe=probe
         )
-    return mmr_rerank(emb, qset, pool_k, k, distributed)
+    return mmr_rerank(emb, qset, pool_k, k)
 
 
 def hybrid_mmr(
@@ -796,7 +622,6 @@ def hybrid_mmr(
     emb: DataFrame,
     query_ids=ANN_QUERY_IDS,
     k: int | None = None,
-    distributed: bool | None = None,
 ) -> DataFrame:
     """the full modern retrieval stack, composed: hybrid
     lexical+vector retrieval (RRF-fused top-``HYBRID_TOP_K``) →
@@ -810,38 +635,27 @@ def hybrid_mmr(
     normalized per query to [0, 1] (``rrf / max(rrf)`` — RRF's
     absolute scale is meaningless across pool sizes) and quantized
     to 1e-6 integers; diversity is embedding cosine at the same
-    quantization; the selection loop is the SAME ``_greedy_mmr``
-    kernel (and the oracle the same SQL unroll) as ``mmr_rerank``,
-    so the two entry points cannot drift.
+    quantization; the selection is the SAME ``_greedy_mmr`` kernel
+    (and the oracle the same SQL unroll) as ``mmr_rerank``, so the
+    two entry points cannot drift. A pool doc with no embedding row
+    can win round 1 on relevance but is unpickable after it.
 
     Scale: the pool is ``queries × HYBRID_TOP_K`` rows — the greedy
-    stage never touches the corpus, and it has the two bit-identical
-    arms of ``_greedy_mmr`` (``distributed=None`` auto-picks by
-    ``MMR_DIST_MIN_QUERIES``); corpus-sized work is exactly the
+    stage never touches the corpus; corpus-sized work is exactly the
     hybrid retrieval's (posting-list join + one broadcast-query
-    vector scan), and it runs ONCE: the pool persist is eagerly
-    materialized, after which the hybrid corpus cache is released
-    immediately. BOTH arms release every cache before return: the
-    driver fold is eager by construction; the distributed fold
-    eagerly materializes into a result-sized persist (queries × k
-    rows) so a long-lived serving caller never accumulates POOL
-    blocks across calls (r11 advice item 2) — the returned
-    result-sized persist is the CALLER's to release once consumed
-    (r12 advice item 3).
+    vector scan), and it runs ONCE. The build is eager, because the
+    hybrid corpus cache must be released: one job materializes the
+    pool persist, the corpus cache is released, and a second job
+    materializes the selection into a result-sized persist (queries
+    × k rows) before the pool cache is released too. The returned
+    frame IS that persist: the CALLER owns it and should
+    ``unpersist()`` it once the picks are consumed.
     """
-    from rsbsa_etl_spark.params import (
-        MMR_DIST_MIN_QUERIES,
-        MMR_FIXED_SCALE,
-        MMR_SELECT_K,
-    )
+    from rsbsa_etl_spark.params import MMR_SELECT_K
 
     k = MMR_SELECT_K if k is None else k
-    # normalize ONCE: the length check and _hybrid_parts both consume
-    # query_ids (r11 advice item 1 — a one-shot iterator would leave
-    # the retrieval's query set empty after the len())
+    # normalize ONCE: a one-shot iterator must reach the retrieval
     query_ids = [int(q) for q in query_ids]
-    if distributed is None:
-        distributed = len(query_ids) >= MMR_DIST_MIN_QUERIES
     fused, corpus = _hybrid_parts(docs, emb, query_ids)
     wq = Window.partitionBy("query_id")
     pool = (
@@ -857,53 +671,30 @@ def hybrid_mmr(
         .persist()
     )
     e = with_norm(emb.select(F.col("vec_id").alias("doc_id"), "embedding"))
-    pv = pool.join(
+    # the inner join lets the tiny pool be the broadcast side; a left
+    # join straight onto the corpus would have to build the corpus
+    vecs = pool.join(
         e.select(
             "doc_id", F.col("_vd").alias("vd"), F.col("_norm").alias("nd")
         ),
         "doc_id",
+    ).select("query_id", "doc_id", "vd", "nd", F.lit(True).alias("has_vec"))
+    pv = pool.join(vecs, ["query_id", "doc_id"], "left").withColumn(
+        "has_vec", F.coalesce(F.col("has_vec"), F.lit(False))
     )
-    pairs = _pairwise_sims(pv)
-    if distributed:
-        try:
-            # eager: one job runs the whole hybrid retrieval into the
-            # pool cache (all four corpus subtrees execute inside it),
-            # after which the corpus cache can be released — the
-            # fold's lazy consumers read the materialized pool, not
-            # the retrieval subplan. The fold then materializes into
-            # a result-sized persist so the pool cache also
-            # releases before return (r11 advice item 2 — a serving
-            # caller must not accumulate pool blocks per call).
-            pool.count()
-            # happy-path early release (the fold's lazy consumers read
-            # the materialized pool, not the retrieval subplan); the
-            # finally repeats it so a mid-fold failure cannot strand
-            # the corpus-sized persist (unpersist is idempotent —
-            # r12 advice item 2)
-            corpus.unpersist()
-            selected = _greedy_mmr(pool, pairs, k, distributed=True).persist()
-            selected.count()
-        finally:
-            pool.unpersist()
-            corpus.unpersist()
-    else:
-        try:
-            # the driver fold's first collect fills the pool cache
-            # (no separate count job); its result is an eager
-            # createDataFrame, so every cache releases before return
-            selected = _greedy_mmr(pool, pairs, k)
-        finally:
-            pool.unpersist()
-            corpus.unpersist()
-    return selected.select(
-        "query_id",
-        "doc_id",
-        "pick_order",
-        (F.col("rel_i").cast("double") / F.lit(1e6)).alias("rel_norm"),
-        (F.col("mmr_i").cast("double") / F.lit(MMR_FIXED_SCALE)).alias(
-            "mmr"
-        ),
-    )
+    try:
+        # one job runs the whole hybrid retrieval into the pool cache
+        # (all four corpus subtrees execute inside it); the corpus
+        # cache is released right after, and again in the finally so
+        # a failed selection cannot strand it (unpersist is idempotent)
+        pool.count()
+        corpus.unpersist()
+        selected = _mmr_output(_greedy_mmr(pv, k), "rel_norm").persist()
+        selected.count()
+    finally:
+        pool.unpersist()
+        corpus.unpersist()
+    return selected
 
 
 def prf_expand(

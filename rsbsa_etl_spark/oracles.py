@@ -160,7 +160,8 @@ _DOT = "list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))"
 
 #: in-pool pairwise/query cosine at the MMR 1e-6 integer
 #: quantization — single-sourced for the mmr_rerank and hybrid_mmr
-#: oracles (the SQL twin of retrieval._pairwise_sims' expression)
+#: oracles (the SQL twin of the in-pool similarities that
+#: retrieval._greedy_mmr's grouped kernel computes)
 _MMR_SIM = f"CAST(floor({_DOT} / (a.nrm * b.nrm) * 1000000.0 + 0.5) AS BIGINT)"
 
 
@@ -4570,9 +4571,6 @@ FROM sel{P.MMR_SELECT_K}"""
 
 
 ORACLES["mmr_rerank"] = _mmr_sql()
-# the distributed-arm key: SAME unroll — the two arms are
-# bit-identical by construction, and the driver gate proves it
-ORACLES["mmr_rerank_dist"] = _mmr_sql()
 # the POOL auto-dial entry point (r13 verdict item 4): delegation is
 # verbatim and params-deterministic — at the registered defaults
 # (|ANN_QUERY_IDS| = 5 < ivf_pool_min_queries(16, 8) = 32) it runs

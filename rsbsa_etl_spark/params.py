@@ -512,18 +512,6 @@ MMR_W_DIV = _MMR_FRAC.denominator - _MMR_FRAC.numerator
 #: divisor turning the integer mmr score back into a double
 MMR_FIXED_SCALE = float(1e6 * _MMR_FRAC.denominator)
 
-#: query-count threshold where the MMR greedy fold auto-switches
-#: from the driver-side collect (serial in queries but zero
-#: shuffle/Python-stage overhead — measured faster below ~100
-#: queries: the cogrouped stage costs ~0.6-0.9s of fixed overhead
-#: at sf0.1) to the DISTRIBUTED cogrouped Arrow fold (one pandas
-#: group per query — linear driver time was the r9/r10 verdicts'
-#: watch item; a 10k-query serving batch folds in parallel instead
-#: of ~30s serial on the driver). Both arms run the identical
-#: exact-integer kernel and the same oracle unroll value-checks
-#: either (``mmr_rerank_dist`` pins the distributed arm).
-MMR_DIST_MIN_QUERIES = 128
-
 #: DSIR importance RESAMPLING: acceptance probability is
 #: min(1, weight / DSIR_RESAMPLE_REF) against a FIXED reference
 #: weight rather than the corpus max — keeps the decision a pure

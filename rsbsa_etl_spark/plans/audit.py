@@ -68,11 +68,10 @@ def audit_key(spark, key: str, sf_dir: str) -> dict:
     (closing the blind spot PLANAUDIT.md used to state): the build
     runs with ``plan_capture.AUDIT_GATE`` open (the streaming
     capture above waits on the same gate), so each BPE merge
-    round's argmax plan and the MMR driver fold's two bounded-collect
-    plans land in ``CAPTURED`` (tagged ``loop:*``) and are SUMMED
-    into the key's counters alongside any streaming micro-batch
-    plans; the row records the contributing counts separately as
-    ``loop_plans`` / ``micro_batch_plans``.
+    round's argmax plan lands in ``CAPTURED`` (tagged ``loop:*``)
+    and is SUMMED into the key's counters alongside any streaming
+    micro-batch plans; the row records the contributing counts
+    separately as ``loop_plans`` / ``micro_batch_plans``.
     """
     from rsbsa_etl_spark.registry import QUERIES
     from rsbsa_etl_spark.streaming.plan_capture import AUDIT_GATE, CAPTURED

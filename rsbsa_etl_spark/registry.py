@@ -258,7 +258,6 @@ QUERIES: dict[str, QueryFn] = {
     "bpe_segment": bpe_segment,
     "hybrid_search_rrf": hybrid_search_rrf,
     "mmr_rerank": mmr_rerank,
-    "mmr_rerank_dist": mmr_rerank_dist,
     "mmr_rerank_ivf": mmr_rerank_ivf,
     "mmr_rerank_auto": mmr_rerank_auto,
     "prf_requery": prf_requery,
@@ -429,11 +428,10 @@ AUDIT_EXCLUDE = frozenset({
     # per-round driver loops: building the DataFrame RUNS the loop
     "bpe_train", "bpe_segment", "tokenizer_fertility_bpe",
     "hybrid_search_rrf", "merge_cdc",
-    # building the DataFrame runs the driver-arm greedy fold
-    # eagerly (mmr_rerank/hybrid_mmr below MMR_DIST_MIN_QUERIES) or
-    # eagerly materializes the retrieval pool for the distributed
-    # cogrouped arm (mmr_rerank_dist; round 11)
-    "mmr_rerank", "hybrid_mmr", "mmr_rerank_dist",
+    # building the DataFrame runs two jobs: the hybrid retrieval into
+    # the MMR pool persist (so the corpus cache can be released) and
+    # the greedy selection into the result-sized persist it returns
+    "hybrid_mmr",
     # ingestion round-trips: building the DataFrame WRITES the
     # tempdir it then reads back (ann_index_roundtrip also collects
     # the centroid table driver-side to plant the partition filter)

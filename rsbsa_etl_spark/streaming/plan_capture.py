@@ -43,14 +43,13 @@ class _AuditGate:
 
     Round 11 closed the streaming blind spot; round 12 closed the
     other one PLANAUDIT.md stated plainly: a driver-loop key (the BPE
-    merge loop's per-round argmax, the MMR greedy fold's pool/pairs
-    collects) launches intermediate jobs whose plans are not part of
-    the final DataFrame. ``record`` and ``finish`` below capture them
-    — but ONLY while the audit holds this gate open: the loops are
-    hot paths (bpe_train runs in bench), sync ticks run forever in a
-    serving process, and stringifying an executed plan per merge
-    round or per query would tax production callers for evidence
-    only the audit reads."""
+    merge loop's per-round argmax) launches intermediate jobs whose
+    plans are not part of the final DataFrame. ``record`` and
+    ``finish`` below capture them — but ONLY while the audit holds
+    this gate open: the loops are hot paths (bpe_train runs in
+    bench), sync ticks run forever in a serving process, and
+    stringifying an executed plan per merge round or per tick would
+    tax production callers for evidence only the audit reads."""
 
     def __init__(self) -> None:
         self.enabled = False

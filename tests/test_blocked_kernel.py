@@ -350,68 +350,61 @@ def test_seq_trigrams_matches_bruteforce(spark, sf_dir):
     assert got == want
 
 
-def test_greedy_mmr_tiebreaks_and_directional_pairs(spark):
-    """driver-side MMR fold: equal mmr scores pick the smallest
-    doc_id; the pairs lookup is DIRECTIONAL, matching the oracle
-    unroll's rounds>=2 join exactly (a_id = candidate, b_id =
-    selected) — a row stored only in the REVERSE orientation does
-    NOT link the candidate (producers of symmetric sims must emit
-    both orientations, as _pairwise_sims does by construction), and
-    a pool doc with no candidate→selected row at all is UNPICKABLE
-    after round 1 (e.g. a hybrid pool doc whose embedding row was
-    dropped by the pv inner join)."""
-    from rsbsa_etl_spark.functions.retrieval import _greedy_mmr
+def test_greedy_mmr_tiebreaks_and_directional_pairs():
+    """the greedy kernel: equal mmr scores pick the smallest doc_id;
+    the pairs lookup is DIRECTIONAL, matching the oracle unroll's
+    rounds>=2 join exactly (a_id = candidate, b_id = selected) — a
+    pair present only in the REVERSE orientation does NOT link the
+    candidate (producers of symmetric sims must emit both
+    orientations, as _greedy_mmr does by construction), and a pool
+    doc with no candidate→selected pair at all is UNPICKABLE after
+    round 1 (e.g. a hybrid pool doc with no embedding row)."""
+    from rsbsa_etl_spark.functions.retrieval import _make_greedy_kernel
     from rsbsa_etl_spark.params import MMR_W_DIV, MMR_W_REL
 
-    slim = spark.createDataFrame(
-        [(1, 10, 100), (1, 11, 100), (1, 12, 90)],
-        "query_id long, doc_id long, rel_i long",
-    )
-    # (11→10): candidate-oriented row — links AND penalizes 11.
+    cand = {10: 100, 11: 100, 12: 90}
+    # (11→10): candidate-oriented pair — links AND penalizes 11.
     # (10→12): REVERSE-only for candidate 12 — by the oracle's join
-    # this does NOT link 12; doc 12 has no candidate-oriented row.
-    pairs = spark.createDataFrame(
-        [(1, 11, 10, 1_000_000), (1, 10, 12, 500_000)],
-        "query_id long, a_id long, b_id long, sim_i long",
-    )
+    # this does NOT link 12; doc 12 has no candidate-oriented pair.
+    present = {(11, 10), (10, 12)}
+    sim = {(11, 10): 1_000_000, (10, 12): 500_000}
     out = {
-        r["pick_order"]: (r["doc_id"], r["mmr_i"])
-        for r in _greedy_mmr(slim, pairs, 3).collect()
+        pick: (did, mmr_i)
+        for did, _rel, pick, mmr_i in _make_greedy_kernel()(
+            cand, present, sim, 3
+        )
     }
     # pick 1: rel tie 10 vs 11 → smallest doc_id (10)
     assert out[1][0] == 10
-    # pick 2: 12 is unlinked (its only row is reverse-oriented) so
+    # pick 2: 12 is unlinked (its only pair is reverse-oriented) so
     # the oracle's inner join excludes it; 11 wins even though
     # heavily penalized by sim(11→10)
     assert out[2] == (11, MMR_W_REL * 100 - MMR_W_DIV * 1_000_000)
-    # pick 3: only 12 remains, still no candidate-oriented row to
+    # pick 3: only 12 remains, still no candidate-oriented pair to
     # any selected doc → no further pick (the oracle's empty r3 CTE)
     assert 3 not in out and len(out) == 2
 
 
-def test_greedy_mmr_null_sims_rank_last(spark):
-    """oracle-parity for NULL sim_i (safe_div on a zero-norm pool
-    embedding): SQL max() skips NULLs, so a candidate whose every
-    sim-to-selected is NULL gets mmr_i = NULL and ranks LAST
-    (DuckDB's NULLS LAST under ORDER BY mmr_i DESC) — but remains
-    pickable when every candidate is NULL, smallest doc_id first.
-    The fold must not crash on None (the pre-fix TypeError) nor
-    silently treat NULL as sim 0."""
-    from rsbsa_etl_spark.functions.retrieval import _greedy_mmr
+def test_greedy_mmr_null_sims_rank_last():
+    """oracle-parity for NULL sim_i (a zero-norm pool embedding): SQL
+    max() skips NULLs, so a candidate whose every sim-to-selected is
+    NULL gets mmr_i = NULL and ranks LAST (DuckDB's NULLS LAST under
+    ORDER BY mmr_i DESC) — but remains pickable when every candidate
+    is NULL, smallest doc_id first. The kernel must not crash on
+    None nor silently treat NULL as sim 0."""
+    from rsbsa_etl_spark.functions.retrieval import _make_greedy_kernel
     from rsbsa_etl_spark.params import MMR_W_DIV, MMR_W_REL
 
-    slim = spark.createDataFrame(
-        [(1, 10, 100), (1, 11, 95), (1, 12, 10)],
-        "query_id long, doc_id long, rel_i long",
-    )
-    # 11→10 has a NULL sim (zero-norm); 12→10 a real tiny sim.
-    pairs = spark.createDataFrame(
-        [(1, 11, 10, None), (1, 12, 10, 5)],
-        "query_id long, a_id long, b_id long, sim_i long",
-    )
+    cand = {10: 100, 11: 95, 12: 10}
+    # 11→10 is present with a NULL sim (absent from ``sim``); 12→10
+    # has a real tiny sim
+    present = {(11, 10), (12, 10)}
+    sim = {(12, 10): 5}
     out = {
-        r["pick_order"]: (r["doc_id"], r["mmr_i"])
-        for r in _greedy_mmr(slim, pairs, 3).collect()
+        pick: (did, mmr_i)
+        for did, _rel, pick, mmr_i in _make_greedy_kernel()(
+            cand, present, sim, 3
+        )
     }
     assert out[1][0] == 10
     # round 2: 11's only sim is NULL → mmr NULL → ranks below 12's
@@ -421,73 +414,36 @@ def test_greedy_mmr_null_sims_rank_last(spark):
     assert out[3] == (11, None)
 
 
-def test_greedy_mmr_distributed_arm_bit_identical(spark):
-    """the cogrouped Arrow arm must reproduce the driver arm's picks
-    exactly — same directional-pairs exclusion, same NULL-sims
-    ranking, same tiebreaks — on BOTH kernel fixtures above plus a
-    two-query pool (the distributed arm's whole point is per-query
-    groups; a bug that leaks state between groups only shows with
-    >1 query)."""
-    from rsbsa_etl_spark.functions.retrieval import _greedy_mmr
+def test_greedy_kernel_folds_each_query_independently():
+    """one kernel instance folds many queries in turn (a Python
+    worker runs every group of its partition through the same
+    closure): no state may leak between calls. The two kernel
+    fixtures above as two queries, folded in both orders, must give
+    the per-query picks of a fresh kernel each."""
+    from rsbsa_etl_spark.functions.retrieval import _make_greedy_kernel
 
-    slim = spark.createDataFrame(
-        [(1, 10, 100), (1, 11, 100), (1, 12, 90),
-         (2, 10, 100), (2, 11, 95), (2, 12, 10)],
-        "query_id long, doc_id long, rel_i long",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 11, 10, 1_000_000), (1, 10, 12, 500_000),
-         (2, 11, 10, None), (2, 12, 10, 5)],
-        "query_id long, a_id long, b_id long, sim_i long",
-    )
-
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["pick_order"], r["doc_id"],
-             r["rel_i"], r["mmr_i"])
-            for r in df.collect()
-        )
-
-    driver = rows(_greedy_mmr(slim, pairs, 3))
-    dist = rows(_greedy_mmr(slim, pairs, 3, distributed=True))
-    assert driver == dist and len(driver) == 5  # q1 picks 2, q2 picks 3
-
-
-def test_mmr_auto_switch_picks_arm_by_query_count(spark, sf_dir):
-    """the MMR_DIST_MIN_QUERIES dial must actually flip the arm:
-    below the threshold the plan is the driver fold's scanned
-    createDataFrame result (no Python stage); at/above it the plan
-    carries the cogrouped Arrow stage (FlatMapCoGroupsInPandas).
-    Wiring-level — a silently-ignored `distributed` arg would leave
-    serving batches on the serial driver fold with no test noticing."""
-    from rsbsa_etl_spark.functions.retrieval import mmr_rerank
-    from rsbsa_etl_spark.params import MMR_DIST_MIN_QUERIES
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    few = [r[0] for r in
-           emb.select("vec_id").orderBy("vec_id").limit(3).collect()]
-    many = [r[0] for r in
-            emb.select("vec_id").orderBy("vec_id")
-            .limit(MMR_DIST_MIN_QUERIES).collect()]
-    assert len(many) >= MMR_DIST_MIN_QUERIES, "fixture too small"
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    assert "FlatMapCoGroupsInPandas" not in plan(
-        mmr_rerank(emb, query_ids=few)
-    )
-    assert "FlatMapCoGroupsInPandas" in plan(
-        mmr_rerank(emb, query_ids=many)
-    )
+    queries = {
+        1: ({10: 100, 11: 100, 12: 90}, {(11, 10), (10, 12)},
+            {(11, 10): 1_000_000, (10, 12): 500_000}),
+        2: ({10: 100, 11: 95, 12: 10}, {(11, 10), (12, 10)},
+            {(12, 10): 5}),
+    }
+    fresh = {
+        q: _make_greedy_kernel()(*args, 3) for q, args in queries.items()
+    }
+    shared = _make_greedy_kernel()
+    for order in ([1, 2, 1], [2, 1, 2]):
+        for q in order:
+            assert shared(*queries[q], 3) == fresh[q]
+    assert len(fresh[1]) + len(fresh[2]) == 5  # q1 picks 2, q2 picks 3
 
 
 def test_mmr_public_api_accepts_one_shot_iterator(spark, sf_dir):
     """query_ids is public API and a generator is a legal argument:
-    the auto-switch's length check and the pool build both consume
-    it, so without up-front normalization a one-shot iterator would
-    be drained by the len() and silently produce an EMPTY result —
-    the r11 advice regression. Both entry points pinned."""
+    the entry points consume it more than once (mmr_rerank_auto's
+    length check, the pool build), so without up-front normalization
+    a one-shot iterator would be drained early and silently produce
+    an EMPTY result. Both entry points pinned."""
     from rsbsa_etl_spark.functions.retrieval import hybrid_mmr, mmr_rerank
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -499,43 +455,198 @@ def test_mmr_public_api_accepts_one_shot_iterator(spark, sf_dir):
     assert len(from_list) > 0 and sorted(map(tuple, from_gen)) == sorted(
         map(tuple, from_list)
     )
-    assert len(hybrid_mmr(docs, emb, query_ids=iter(ids)).collect()) > 0
+    out = hybrid_mmr(docs, emb, query_ids=iter(ids))
+    assert len(out.collect()) > 0
+    out.unpersist()
 
 
-def test_greedy_kernel_reads_weights_at_call_time(spark, monkeypatch):
-    """the λ weights must be read when the fold RUNS, not frozen at
-    module import: the oracle SQL interpolates MMR_W_REL/MMR_W_DIV at
-    its own build time, so an import-time kernel instance would
-    silently diverge from a monkeypatched oracle (r11 advice item 3).
-    Patch the params, run the driver fold, expect the patched
-    arithmetic in mmr_i."""
-    from rsbsa_etl_spark.functions import retrieval
+def test_greedy_kernel_reads_weights_at_call_time(monkeypatch):
+    """the λ weights must be read when the kernel is BUILT —
+    ``_greedy_mmr`` builds it per call — not frozen at module import:
+    the oracle SQL interpolates MMR_W_REL/MMR_W_DIV at its own build
+    time, so an import-time kernel instance would silently diverge
+    from a monkeypatched oracle. Patch the params, build the kernel,
+    expect the patched arithmetic in mmr_i."""
     from rsbsa_etl_spark import params
+    from rsbsa_etl_spark.functions.retrieval import _make_greedy_kernel
 
     monkeypatch.setattr(params, "MMR_W_REL", 9)
     monkeypatch.setattr(params, "MMR_W_DIV", 1)
-    slim = spark.createDataFrame(
-        [(1, 10, 100), (1, 11, 95)],
-        "query_id long, doc_id long, rel_i long",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 11, 10, 7), (1, 10, 11, 7)],
-        "query_id long, a_id long, b_id long, sim_i long",
-    )
     out = {
-        r["pick_order"]: (r["doc_id"], r["mmr_i"])
-        for r in retrieval._greedy_mmr(slim, pairs, 2).collect()
+        pick: (did, mmr_i)
+        for did, _rel, pick, mmr_i in _make_greedy_kernel()(
+            {10: 100, 11: 95}, {(11, 10), (10, 11)},
+            {(11, 10): 7, (10, 11): 7}, 2,
+        )
     }
     assert out[1] == (10, 9 * 100)
     assert out[2] == (11, 9 * 95 - 1 * 7)
 
 
+def _reference_pairwise_sims(pv):
+    """the in-pool similarity expression the grouped MMR kernel
+    replaced, kept as the test's reference: a (query_id) self-join of
+    the pool's embedding rows, the zip_with/aggregate dot, safe_div
+    by the norm product, the 1e-6 floor — NULL on a zero or NULL norm
+    product, a NULL vector or element, or ragged lengths."""
+    from rsbsa_etl_spark.functions.similarity import dot, safe_div
+
+    a = pv.select(
+        "query_id",
+        F.col("doc_id").alias("a_id"),
+        F.col("vd").alias("va"),
+        F.col("nd").alias("na"),
+    )
+    b = pv.select(
+        "query_id",
+        F.col("doc_id").alias("b_id"),
+        F.col("vd").alias("vb"),
+        F.col("nd").alias("nb"),
+    )
+    sim_i = F.floor(
+        safe_div(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb"))
+        * F.lit(1e6)
+        + F.lit(0.5)
+    ).cast("long")
+    return (
+        a.join(b, ["query_id"])
+        .where(F.col("a_id") != F.col("b_id"))
+        .select("query_id", "a_id", "b_id", sim_i.alias("sim_i"))
+    )
+
+
+def test_greedy_mmr_degenerate_pool_matches_reference(spark):
+    """the grouped kernel's own similarities on a hand-built pool of
+    degenerate vectors must give the picks of ``fold_one`` over the
+    reference expression's sims: a zero-norm vector, a NULL vector,
+    a vector holding a NULL element, a NULL norm, a 63/64-length
+    ragged pair (and a real 63-length pair), and a hybrid-style doc
+    with no embedding row (has_vec false — unpickable after round
+    1). A second query checks that groups do not share state."""
+    import math
+
+    from rsbsa_etl_spark.functions.retrieval import (
+        _greedy_mmr,
+        _make_greedy_kernel,
+    )
+    from rsbsa_etl_spark.params import MMR_W_REL
+
+    def vec(seed, d=64):
+        return [float(((seed * 37 + i * 11) % 17) - 8) / 8.0 for i in range(d)]
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc = acc + x * x
+        return math.sqrt(acc)
+
+    near1 = [x + 0.01 * (i % 3) for i, x in enumerate(vec(1))]
+    v63a, v63b = vec(5, 63), vec(6, 63)
+    with_null = vec(4)
+    with_null[7] = None
+    # (query_id, doc_id, rel_i, vd, nd, has_vec)
+    rows = [
+        (1, 1, 900_000, vec(1), norm(vec(1)), True),
+        (1, 2, 850_000, [0.0] * 64, 0.0, True),  # zero norm
+        (1, 3, 800_000, None, None, True),  # NULL vector
+        (1, 4, 780_000, with_null, norm(vec(4)), True),  # NULL element
+        (1, 5, 760_000, v63a, norm(v63a), True),  # ragged vs the 64s
+        (1, 6, 740_000, near1, norm(near1), True),
+        (1, 7, 720_000, vec(9), norm(vec(9)), True),
+        (1, 8, 700_000, None, None, False),  # no embedding row
+        (1, 9, 650_000, v63b, norm(v63b), True),  # real 63-length pair
+        (1, 10, 600_000, vec(3), None, True),  # NULL norm
+        (2, 1, 500_000, vec(1), norm(vec(1)), True),
+        (2, 6, 500_000, near1, norm(near1), True),
+        (2, 7, 400_000, vec(9), norm(vec(9)), True),
+        (2, 8, 990_000, None, None, False),  # wins round 1, then stops
+    ]
+    pool = spark.createDataFrame(
+        rows,
+        "query_id long, doc_id long, rel_i long, vd array<double>, "
+        "nd double, has_vec boolean",
+    )
+    k = 9
+    got = sorted(
+        (r["query_id"], r["pick_order"], r["doc_id"], r["rel_i"], r["mmr_i"])
+        for r in _greedy_mmr(pool, k).collect()
+    )
+
+    present: dict = {}
+    sims: dict = {}
+    for r in _reference_pairwise_sims(pool.where("has_vec")).collect():
+        kk = (r["a_id"], r["b_id"])
+        present.setdefault(r["query_id"], set()).add(kk)
+        if r["sim_i"] is not None:
+            sims.setdefault(r["query_id"], {})[kk] = r["sim_i"]
+    fold_one = _make_greedy_kernel()
+    want = sorted(
+        (q, pick, did, rel, mmr_i)
+        for q in (1, 2)
+        for did, rel, pick, mmr_i in fold_one(
+            {r[1]: r[2] for r in rows if r[0] == q},
+            present.get(q, set()),
+            sims.get(q, {}),
+            k,
+        )
+    )
+    assert got == want
+    # the inputs reach the rules they are meant to: NULL sims for the
+    # zero-norm, NULL, NULL-element and ragged rows, a real sim for
+    # the 63-length pair, and no pair at all for doc 8
+    assert (5, 9) in sims[1] and (5, 1) not in sims[1]
+    assert not {(2, 1), (3, 1), (4, 1), (10, 1), (1, 2)} & set(sims[1])
+    assert all(8 not in kk for kk in present[1] | present[2])
+    picked = {(q, did) for q, _p, did, _r, _m in got}
+    assert (1, 8) not in picked
+    assert [g for g in got if g[0] == 2] == [
+        (2, 1, 8, 990_000, MMR_W_REL * 990_000)
+    ]
+    assert any(g[4] is None for g in got)  # an all-NULL-sims pick
+
+
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_mmr_plan_is_one_lazy_grouped_kernel(spark, sf_dir):
+    """mmr_rerank and mmr_rerank_ivf build a lazy plan: one grouped
+    Arrow selection stage (no cogroup, no driver fold), the brute
+    pool's scoring as ONE MapInArrow under ONE exchange (the ranking
+    window's query_id partitioning is reused by the groupBy), and no
+    cache left behind once the result is collected."""
+    from rsbsa_etl_spark.functions.retrieval import (
+        mmr_rerank,
+        mmr_rerank_ivf,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+    def n_persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    spark.catalog.clearCache()
+    for fn, brute in ((mmr_rerank, True), (mmr_rerank_ivf, False)):
+        base = n_persisted()
+        out = fn(emb)
+        assert len(out.collect()) > 0
+        plan = _final_plan(out)
+        assert plan.count("FlatMapGroupsInArrow") == 1, plan
+        assert "FlatMapCoGroupsIn" not in plan, plan
+        if brute:
+            assert plan.count("MapInArrow") == 1, plan
+            assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert n_persisted() == base, f"{fn.__name__} left a cache"
+
+
 def test_mmr_distributed_arm_releases_pool_cache(spark, sf_dir):
-    """the distributed arm's pool persist must release before return
-    (r11 advice item 2): a long-lived serving process calling
-    mmr_rerank per batch would otherwise accumulate queries × pool_k
-    cached blocks per call. After the call, the only surviving
-    persist is the result-sized selected frame."""
+    """no MMR entry point strands a pool-sized cache: a long-lived
+    serving process calling per batch would otherwise accumulate
+    queries × pool_k cached blocks per call. mmr_rerank is lazy and
+    holds no cache at all; hybrid_mmr's eager build releases its pool
+    and the hybrid corpus cache, so the only surviving persist is the
+    result-sized frame it returns."""
     from rsbsa_etl_spark.functions.retrieval import hybrid_mmr, mmr_rerank
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -548,43 +659,17 @@ def test_mmr_distributed_arm_releases_pool_cache(spark, sf_dir):
 
     spark.catalog.clearCache()
     base = n_persisted()
-    out = mmr_rerank(emb, query_ids=ids, distributed=True)
+    out = mmr_rerank(emb, query_ids=ids)
     assert len(out.collect()) > 0
-    assert n_persisted() - base <= 1, (
-        "mmr_rerank's distributed arm strands the pool persist"
-    )
+    assert n_persisted() - base == 0, "mmr_rerank left a persist behind"
     spark.catalog.clearCache()
-    out = hybrid_mmr(docs, emb, query_ids=ids, distributed=True)
+    out = hybrid_mmr(docs, emb, query_ids=ids)
     assert len(out.collect()) > 0
     assert n_persisted() <= 1, (
-        "hybrid_mmr's distributed arm strands the pool/corpus persists"
+        "hybrid_mmr strands the pool/corpus persists"
     )
-
-
-def test_hybrid_mmr_auto_switch_matches_mmr_rerank(spark, sf_dir):
-    """hybrid_mmr carries its own parallel copy of the auto-switch
-    wiring — pin it too (same failure mode as the mmr_rerank test:
-    a silently-ignored flag strands serving batches on the serial
-    fold). Forced arms checked instead of a 128-query hybrid build
-    (the hybrid retrieval is eager, so threshold-sized query sets
-    would make this test pay a full 128-query retrieval)."""
-    from rsbsa_etl_spark.functions.retrieval import hybrid_mmr
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    lazy_dist = hybrid_mmr(docs, emb, distributed=True)
-    assert "FlatMapCoGroupsInPandas" in plan(lazy_dist)
-    eager_drv = hybrid_mmr(docs, emb, distributed=False)
-    assert "FlatMapCoGroupsInPandas" not in plan(eager_drv)
-    # both arms, same picks — the end-to-end twin of the kernel test
-    key = lambda r: (r["query_id"], r["pick_order"], r["doc_id"])
-    assert sorted(map(key, lazy_dist.collect())) == sorted(
-        map(key, eager_drv.collect())
-    )
+    out.unpersist()
+    assert n_persisted() == 0, "the caller cannot release hybrid_mmr's result"
 
 
 def test_hll_estimate_within_error_bound(spark, sf_dir):
