@@ -975,12 +975,16 @@ def minhash_estimate_pairs(
     )
 
 
+#: ``pagerank`` cuts the rank vector's lineage with an eager
+#: localCheckpoint once per this many power iterations
+PAGERANK_CHECKPOINT_EVERY = 8
+
+
 def pagerank(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     n_iters: int = 3,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """PageRank over the undirected candidate-pair graph — the
     importance-scoring companion of ``dedup_clusters`` (same edge
@@ -1001,8 +1005,8 @@ def pagerank(
     Scale: per round, one shuffle for the inflow agg and one
     broadcast-able join of ranks onto edges (rank table is
     node-sized). The rank vector — never the edge table — is
-    localCheckpointed each round: constant-depth lineage for the
-    same reason as ``dedup_clusters``.
+    localCheckpointed every ``PAGERANK_CHECKPOINT_EVERY`` rounds:
+    bounded-depth lineage for the same reason as ``dedup_clusters``.
     """
     q = F.lit(10.0 ** 12)
     nodes = docs.select(F.col(id_col).alias("node"))
@@ -1032,17 +1036,15 @@ def pagerank(
         "node", quant(F.lit(1.0) / F.col("n")).alias("r")
     )
     for i in range(n_iters):
-        # lineage cut every ``checkpoint_every`` rounds, not every
-        # round (r16): each eager localCheckpoint is a separate
+        # lineage cut every ``PAGERANK_CHECKPOINT_EVERY`` rounds, not
+        # every round (r16): each eager localCheckpoint is a separate
         # serialized driver job — at the default 3 iterations that
         # was 3 blocking jobs before the caller's action even
         # started, while a 3-round join/agg chain is far below the
         # plan depth where Catalyst re-analysis hurts (the
         # dedup_clusters blowup started an order of magnitude
-        # deeper). Long power-iteration runs still get the cut;
-        # ``checkpoint_every=1`` restores the old per-round arm
-        # (the A/B dial for the r16 measurement).
-        if i and i % checkpoint_every == 0:
+        # deeper). Long power-iteration runs still get the cut.
+        if i and i % PAGERANK_CHECKPOINT_EVERY == 0:
             r = r.localCheckpoint(eager=True)
         contrib = (
             edges.join(r.withColumnRenamed("node", "src"), "src")

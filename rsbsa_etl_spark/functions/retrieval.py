@@ -39,6 +39,8 @@ from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
 from rsbsa_etl_spark.functions.similarity import (
     _collect_id_vecs,
     _floor_long,
+    _ivf_probe,
+    _query_rows,
     _topk_scores_arrow,
     with_norm,
 )
@@ -206,27 +208,34 @@ def _hybrid_parts(
     return out, corpus
 
 
-def _mmr_pool(emb: DataFrame, qset: list, pool_k: int) -> DataFrame:
-    """``mmr_rerank``'s retrieval-pool plan, factored so the kernel
-    tests exercise the SHIPPED pool construction instead of a
+def _mmr_pool(
+    emb: DataFrame, qset: list, pool_k: int, ivf: tuple[int, int] | None = None
+) -> DataFrame:
+    """the MMR entry points' retrieval-pool plan, factored so the
+    kernel tests exercise the SHIPPED pool construction instead of a
     hand-copied twin that could silently drift. Returns the lazy
-    (query_id, doc_id, vd, nd, rel_i) top-``pool_k`` plan: the
-    brute-force cosine retrieval with broadcast query vectors,
-    1e-6 fixed-point relevance, (rel desc, doc_id asc) ranked
-    window, self-matches and NULL relevance excluded.
+    (query_id, doc_id, vd, nd, rel_i) top-``pool_k`` plan: cosine
+    retrieval with broadcast query vectors, 1e-6 fixed-point
+    relevance, (rel desc, doc_id asc) ranked window, self-matches and
+    NULL relevance excluded.
 
     The scoring runs in the Arrow batch kernel
     (``_topk_scores_arrow`` — the oracle's fold arithmetic and
     Spark's floor→long cast, batch-local top-``pool_k`` cut), and
     the kernel carries each surviving row's (vd, nd) through so the
     pool costs ONE corpus scan and the ranking window's exchange
-    carries batch-local candidates, not corpus × queries rows."""
-    qrows = _collect_id_vecs(
-        emb.where(F.col("vec_id").isin(qset)), "vec_id", "embedding"
-    )
+    carries batch-local candidates, not corpus × queries rows.
+
+    ``ivf=(n_centroids, nprobe)`` restricts the candidates to the
+    probed cells (``ivf_topk``'s restriction, for ``mmr_rerank_ivf``).
+    Its relevance is then ``ivf_topk``'s cosine: ranked on the 1e-6
+    grid, rounded to 4 places and requantized,
+    ``floor(dec_round(cos, 4)·1e6 + 0.5)`` — an exact 1e-4-grid
+    double gives the same integer in both engines, so the oracle
+    composes the IVF SQL with the shared MMR unroll verbatim."""
     scored = _topk_scores_arrow(
         emb.select(F.col("vec_id").alias("doc_id"), "embedding"),
-        qrows,
+        _query_rows(emb, qset),
         "embedding",
         "doc_id",
         pool_k,
@@ -234,14 +243,19 @@ def _mmr_pool(emb: DataFrame, qset: list, pool_k: int) -> DataFrame:
         fixed_long=True,
         drop_null=True,
         keep_vec=True,
+        **({} if ivf is None else _ivf_probe(emb, *ivf)),
     )
     wp = Window.partitionBy("query_id").orderBy(
         F.col("rel_i").desc(), F.col("doc_id").asc()
     )
+    rel = F.col("rel_i")
+    if ivf is not None:
+        cos4 = dec_round(F.col("rel_i") / F.lit(1e6), 4)
+        rel = F.floor(cos4 * F.lit(1e6) + F.lit(0.5)).cast("long")
     return (
         scored.withColumn("rn", F.row_number().over(wp))
         .where(F.col("rn") <= pool_k)
-        .select("query_id", "doc_id", "vd", "nd", "rel_i")
+        .select("query_id", "doc_id", "vd", "nd", rel.alias("rel_i"))
     )
 
 
@@ -497,16 +511,17 @@ def mmr_rerank_ivf(
     billion-vector deployment shape ``mmr_rerank``'s docstring
     promises ("swap in the IVF arm at scale; the re-rank stage is
     unchanged"), now shipped as its own oracle-checked operator:
-    the pool comes from ``ivf_topk`` (broadcast centroid probe,
-    ~nprobe/n_cells of the corpus touched per query) instead of the
-    brute-force scan, then the SAME greedy kernel (in-pool
-    similarities included) and output contract as ``mmr_rerank``.
+    the pool is ``_mmr_pool`` under ``ivf_topk``'s restriction
+    (broadcast centroid probe, ~nprobe/n_cells of the corpus touched
+    per query) instead of the brute-force scan — one scoring kernel
+    that also carries the pool's vectors out, so the corpus is
+    scanned once — then the SAME greedy kernel (in-pool similarities
+    included) and output contract as ``mmr_rerank``.
 
-    Relevance is the IVF arm's cosine (already dec-rounded to 1e-4)
-    requantized to the kernel's 1e-6 integer grid —
-    ``floor(cos·1e6 + 0.5)`` of an exact 1e-4-grid double is the
-    same integer in both engines, so the oracle composes the IVF SQL
-    with the shared MMR unroll verbatim. A query's pool can hold
+    Relevance is the IVF arm's cosine (dec-rounded to 1e-4)
+    requantized to the kernel's 1e-6 integer grid (see
+    ``_mmr_pool``), so the oracle composes the IVF SQL with the
+    shared MMR unroll verbatim. A query's pool can hold
     fewer than ``pool_k`` docs (only probed cells compete — that is
     the approximation being bought); the kernel and the unroll both
     stop early on exhausted pools.
@@ -516,7 +531,6 @@ def mmr_rerank_ivf(
     O(corpus + queries × corpus · nprobe/n_cells); the greedy stage
     is unchanged and pool-bounded. Like ``mmr_rerank`` the result is
     a lazy plan that holds no cache."""
-    from rsbsa_etl_spark.functions.similarity import ivf_topk
     from rsbsa_etl_spark.params import (
         IVF_CENTROIDS,
         IVF_NPROBE,
@@ -534,28 +548,8 @@ def mmr_rerank_ivf(
     # SCALING.md "mmr_rerank_ivf vs mmr_rerank")
     n_centroids = IVF_CENTROIDS if n_centroids is None else n_centroids
     nprobe = IVF_NPROBE if nprobe is None else nprobe
-    e = with_norm(emb)
-    pool = (
-        ivf_topk(emb, qset, pool_k, n_centroids=n_centroids, nprobe=nprobe)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("doc_id"),
-            F.floor(F.col("cosine") * F.lit(1e6) + F.lit(0.5))
-            .cast("long")
-            .alias("rel_i"),
-        )
-        .where(F.col("rel_i").isNotNull())
-        .join(
-            e.select(
-                F.col("vec_id").alias("doc_id"),
-                F.col("_vd").alias("vd"),
-                F.col("_norm").alias("nd"),
-                F.lit(True).alias("has_vec"),
-            ),
-            "doc_id",
-        )
-    )
-    return _mmr_output(_greedy_mmr(pool, k))
+    pool = _mmr_pool(emb, qset, pool_k, ivf=(n_centroids, nprobe))
+    return _mmr_output(_greedy_mmr(pool.withColumn("has_vec", F.lit(True)), k))
 
 
 def ivf_pool_min_queries(n_centroids: int, nprobe: int) -> int:

@@ -1,19 +1,30 @@
 """Similarity search over embedding columns (extension surface).
 
-- **brute-force cosine top-k** — the exact baseline: query set ×
-  corpus, dot product via ``F.zip_with`` + ``F.aggregate`` (pure
-  column lambdas, JVM-side), window row_number for per-query top-k.
-- **sign-LSH bucketed ANN** — the scale path: hash every vector to a
-  bucket by the sign pattern of its leading dimensions (a fixed
-  axis-aligned random-hyperplane family), search only within the
-  query's bucket. Recall is tunable via bucket bits / multi-probe;
-  the plan shape is a bucket-equi-join instead of a cross join,
-  which is what survives 100× data growth.
-- **cosine near-dup pairs** — all pairs above a threshold (used by
-  ``dedup_embedding``).
+- **ANN top-k for a query set** — brute force, sign-LSH (single
+  bucket and Hamming multi-probe), IVF and IVF-PQ. The query,
+  centroid and codeword tables are index-sized: they are collected
+  and broadcast, and ONE ``mapInArrow`` scoring kernel per operator
+  (``_topk_scores_arrow``, ``_ivfpq_scores_arrow``) scans the corpus
+  once — candidate restriction (LSH bucket under a Hadamard-mixed
+  random-hyperplane family, probed IVF cell), the dot/norm folds and
+  a batch-local top-k cut — so only the per-query ranking window
+  shuffles. The persisted IVF index (``sources/ann_index.py``)
+  serves through the same scoring kernel.
+- **cell assignment and PQ codes** — ``_assign_cells_arrow`` and
+  ``_pq_codes_arrow``: one narrow pass, zero shuffle.
+- **all-pairs cosine and kNN graphs** — ``cosine_pairs``,
+  ``cosine_pairs_bipartite``, ``knn_graph`` (tiled) and
+  ``knn_graph_ivf`` (per IVF cell): one ``applyInArrow`` BLAS block
+  per group, swept in bounded row chunks, with a block-local top-k
+  for the graphs.
 
-All arithmetic is done in double after an explicit cast from the
-stored float vectors, matching the DuckDB oracle's promotion rules.
+Every kernel is built from ``_make_cosine_parts``' shared parts —
+the corpus decode, the nearest-cell fold, the codebooks, the
+side-table check, the chunk sweep and block top-k, the Arrow output
+assembler — so each rule has one implementation. All arithmetic is
+done in double after an explicit widening of the stored float
+vectors, in the fold order of the DuckDB oracles, so every operator
+is value-checked bit for bit.
 """
 
 from __future__ import annotations
@@ -112,37 +123,91 @@ MAX_BLOCK_ELEMS = 1 << 24
 
 
 def _make_cosine_parts():
-    """factory for the shared tiled-block BLAS primitives, shipped BY
-    VALUE into applyInArrow closures (a module-level function
-    referenced from a closure pickles by name and crashes Python
-    workers whenever the driver runs outside the repo root — see the
-    verify notes). Returns ``(stack, mm, table)``:
+    """factory for the parts every ANN Arrow kernel is built from,
+    shipped BY VALUE into the kernels' closures (a module-level
+    function referenced from a closure pickles by name and crashes
+    Python workers whenever the driver runs outside the repo root —
+    see the verify notes). One implementation of each primitive, so a
+    rule such as the probe order or the NULL-row rule cannot drift
+    between the scoring, assignment, PQ and block kernels. Returns a
+    namespace:
 
-    - ``stack`` decodes one block side's ``list<float|double>`` Arrow
-      column (an Array or a multi-chunk ChunkedArray) into a dense
-      float64 matrix + norms with ONE ``flatten()`` + ``reshape``.
-      Widening float32 to float64 is exact, so the matrix is
-      bit-identical to a per-row ``np.asarray(v, dtype=float64)``
-      decode; a NULL element decodes to NaN and is masked by the
-      callers like a zero norm. A NULL or ragged vector raises
-      ``ValueError``: ``flatten()`` skips NULL lists and ragged rows
-      can still sum to n·d (63 + 65 = 2·64), so a plain reshape would
-      silently misread both.
-    - ``mm`` multiplies any (sub)matrix pair into the 1e-4-quantized
-      cosine block — ONE implementation for cosine_pairs / knn_graph
-      / cosine_pairs_bipartite / the IVF cells, so the quantization
-      scale and the zero-norm (0/0 → NaN, masked by the callers)
-      contract cannot drift between an operator and its oracle.
-      Callers sweep the left side in row chunks against
-      ``MAX_BLOCK_ELEMS`` to keep the q matrix bounded.
-    - ``table`` concatenates the per-chunk output arrays into the
-      block's ``pa.Table`` (``cosine`` double, every other column
-      bigint), empty when no chunk ran. Each part holds one array per
-      name; arrays past the last name (the kNN kernels' labels when
-      ``diff_label`` is off) are dropped.
+    - ``decode(col, d, prefix=False, keep=None)`` → ``(ok, X)``: the
+      corpus decode of a ``list<float|double>`` Arrow column (Array
+      or ChunkedArray). ``ok`` marks the rows whose vector is
+      non-NULL and exactly ``d`` long (at least ``d`` with
+      ``prefix``), and'ed with ``keep``; ``X`` holds those rows'
+      first ``d`` elements as one dense float64 matrix — a
+      ``reshape`` of one ``flatten()`` when every row is alike, else
+      one vectorized gather. Widening float32 to float64 is exact, so
+      ``X`` is bit-identical to a per-row ``np.asarray(v, float64)``;
+      a NULL element decodes to NaN.
+    - ``stack(col)`` → ``(A, norms)``: the strict decode of a cosine
+      block side. A NULL or ragged vector raises ``ValueError``
+      (``flatten()`` skips NULL lists and ragged rows can still sum
+      to n·d, 63 + 65 = 2·64, so a plain reshape would silently
+      misread both).
+    - ``nearest(X, C, nprobe=None, with_d2=False)``: the l2²
+      nearest-cell fold of each ``X`` row against the centroid rows
+      ``C`` — d2 accumulates per dimension in index order from 0.0
+      (the IEEE sequence of DuckDB's ``list_sum``), NaN ranks as
+      +inf, ties go to the lower row of ``C`` (callers pass ``C`` in
+      cid order, so that is the (d2, cid) order). Returns positions
+      into ``C``: the argmin, the stable top-``nprobe``, or with
+      ``with_d2`` the argmin and its raw d2 (NaN kept). Rows run in
+      slabs of at most 4M accumulator elements (~32 MB per worker at
+      any batch or codebook size).
+    - ``side_dims(tables, need=0, what="")``: driver-side check of
+      the collected (id, vector) side tables ``[(name, rows)]`` —
+      query, centroid, codeword seed. Each must be non-NULL and
+      uniform, all must share the first table's dimension and be at
+      least ``need`` long (``what`` names the reader), else a
+      ``ValueError`` names the table and the cause. Returns each
+      table's dimension, None for an empty table.
+    - ``books(rows, m, sub)``: the per-subspace codebooks of the seed
+      rows, ``[(ids_j, C_j)]`` sorted by (cid, subvector).
+    - ``mm(A, na, B, nb)``: the 1e-4-quantized cosine block of any
+      (sub)matrix pair — one quantization scale and one zero-norm
+      rule (0/0 → NaN, masked by the callers) for every block kernel.
+    - ``sweep(A, na, B, nb)``: yields ``(lo, q)`` over the left side
+      in row chunks of ``MAX_BLOCK_ELEMS // |B|``, so no q block
+      holds more than ``MAX_BLOCK_ELEMS`` elements.
+    - ``topk(q, src, dst, k, src_lab=None, dst_lab=None)``: the
+      block-local top-``k`` per source row of one q chunk, in (cosine
+      desc, dst asc) order, with self pairs, non-finite cosines and
+      (given labels) same-label pairs masked. Returns ``(src, dst,
+      cosine[, src_lab, dst_lab])`` arrays.
+    - ``sweep_topk(A, na, src, B, nb, dst, k, src_lab=None,
+      dst_lab=None)``: ``topk`` over every ``sweep`` chunk, as a list
+      of parts.
+    - ``split(tbl)``: a tile-pair group's (left, right) sides by its
+      ``is_left`` flag.
+    - ``table(schema, parts)``: the one Arrow output assembler, for
+      the Spark output ``schema`` the kernel declares. Each part
+      holds one column chunk per field — an ndarray, a masked
+      ndarray (NULL where masked), a 2-D ndarray for a list field
+      (one row per list, masked rows NULL), or a pyarrow Array passed
+      through. Returns the concatenated ``pa.Table``, empty when no
+      part ran.
     """
     import numpy as np
     import pyarrow as pa
+
+    max_elems = MAX_BLOCK_ELEMS
+
+    def decode(col, d, prefix=False, keep=None):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        n = len(col)
+        lens = np.asarray(col.value_lengths().fill_null(0))
+        ok = np.asarray(col.is_valid()) & (lens >= d if prefix else lens == d)
+        if keep is not None:
+            ok &= keep
+        flat = np.asarray(col.flatten(), dtype=np.float64)
+        if n and ok.all() and (lens == lens[0]).all():
+            return ok, flat.reshape(n, int(lens[0]))[:, :d]
+        starts = np.cumsum(lens) - lens
+        return ok, flat[starts[ok][:, None] + np.arange(d)]
 
     def stack(col):
         if isinstance(col, pa.ChunkedArray):
@@ -160,24 +225,206 @@ def _make_cosine_parts():
                 f" {lens.min()}..{lens.max()}); every vector must have"
                 " the same dimension"
             )
-        flat = col.flatten().to_numpy(zero_copy_only=False)
-        A = flat.astype(np.float64).reshape(len(col), d)
+        A = decode(col, d)[1]
         return A, np.sqrt((A * A).sum(axis=1))
+
+    def nearest(X, C, nprobe=None, with_d2=False):
+        n, nc = X.shape[0], C.shape[0]
+        pos = np.empty((n,) if nprobe is None else (n, nprobe), np.int64)
+        d2 = np.empty(n) if with_d2 else None
+        slab = max(1, (1 << 22) // max(nc, 1))
+        for lo in range(0, n, slab):
+            Xs = X[lo : lo + slab]
+            acc = np.zeros((Xs.shape[0], nc), dtype=np.float64)
+            for i in range(C.shape[1]):
+                t = Xs[:, i : i + 1] - C[:, i]
+                acc += t * t
+            nan = np.isnan(acc)
+            np.copyto(acc, np.inf, where=nan)
+            if nprobe is not None:
+                pos[lo : lo + slab] = np.argsort(acc, axis=1, kind="stable")[
+                    :, :nprobe
+                ]
+                continue
+            best = np.argmin(acc, axis=1)
+            pos[lo : lo + slab] = best
+            if with_d2:
+                rows = np.arange(len(best))
+                w = acc[rows, best]
+                w[nan[rows, best]] = np.nan
+                d2[lo : lo + slab] = w
+        return (pos, d2) if with_d2 else pos
+
+    def uniform_dim(rows, name):
+        nulls = [i for i, v in rows if v is None]
+        if nulls:
+            raise ValueError(
+                f"{name} table: {len(nulls)} NULL embedding vector(s)"
+                f" (ids {nulls[:5]}); a NULL vector has no score"
+            )
+        dims = {len(v) for _, v in rows}
+        if len(dims) > 1:
+            raise ValueError(
+                f"{name} table: ragged embedding vectors (lengths"
+                f" {min(dims)}..{max(dims)}); every vector must have the"
+                " same dimension"
+            )
+        return dims.pop() if dims else None
+
+    def side_dims(tables, need=0, what=""):
+        dims = [uniform_dim(rows, name) for name, rows in tables]
+        first, d0 = tables[0][0], dims[0]
+        for (name, _), d in zip(tables[1:], dims[1:]):
+            if d0 is not None and d is not None and d != d0:
+                raise ValueError(
+                    f"{name} table: ragged embedding vectors (dimension"
+                    f" {d}, {first} table {d0}); every vector must have"
+                    " the same dimension"
+                )
+        for (name, _), d in zip(tables, dims):
+            if d is not None and d < need:
+                raise ValueError(
+                    f"{name} table: embedding vectors of dimension {d} are"
+                    f" too short for {what} ({need} dimensions)"
+                )
+        return dims
+
+    def books(rows, m, sub):
+        out = []
+        for j in range(m):
+            cw = sorted((c, v[j * sub : (j + 1) * sub]) for c, v in rows)
+            out.append(
+                (
+                    np.asarray([c for c, _ in cw], dtype=np.int64),
+                    np.asarray([s for _, s in cw], dtype=np.float64),
+                )
+            )
+        return out
 
     def mm(A, na, B, nb):
         return np.floor((A @ B.T) / np.outer(na, nb) * 1e4 + 0.5) / 1e4
 
-    def table(names, parts):
-        cols = list(zip(*parts)) if parts else [()] * len(names)
-        out = {}
-        for name, chunks in zip(names, cols):
-            dt = np.float64 if name == "cosine" else np.int64
-            out[name] = np.concatenate([np.empty(0, dt), *chunks]).astype(
-                dt, copy=False
-            )
-        return pa.table(out)
+    def sweep(A, na, B, nb):
+        step = max(1, max_elems // max(len(B), 1))
+        for lo in range(0, len(A), step):
+            yield lo, mm(A[lo : lo + step], na[lo : lo + step], B, nb)
 
-    return stack, mm, table
+    def topk(q, src, dst, k, src_lab=None, dst_lab=None):
+        # vectorized block-local top-k: columns sorted by dst asc, so
+        # a STABLE row-wise argsort on -sim keeps ties dst-ascending
+        # — the (cosine desc, neighbor asc) order. Masked candidates
+        # (self pairs, non-finite sims — a zero-norm 0/0 NaN drops
+        # out like safe_div's NULL — and same-label pairs) key to
+        # +inf and are cut by the validity check.
+        ord_d = np.argsort(dst, kind="stable")
+        sim = q[:, ord_d]
+        dst_s = dst[ord_d]
+        bad = ~np.isfinite(sim) | (dst_s[None, :] == src[:, None])
+        if src_lab is not None:
+            dlab_s = dst_lab[ord_d]
+            bad |= dlab_s[None, :] == src_lab[:, None]
+        key = np.where(bad, np.inf, -sim)
+        ord2 = np.argsort(key, axis=1, kind="stable")[:, : min(k, key.shape[1])]
+        ri, ci = np.nonzero(np.isfinite(np.take_along_axis(key, ord2, axis=1)))
+        picked = ord2[ri, ci]
+        out = (src[ri], dst_s[picked], sim[ri, picked])
+        if src_lab is not None:
+            out += (src_lab[ri], dlab_s[picked])
+        return out
+
+    def sweep_topk(A, na, src, B, nb, dst, k, src_lab=None, dst_lab=None):
+        return [
+            topk(
+                q,
+                src[lo : lo + len(q)],
+                dst,
+                k,
+                None if src_lab is None else src_lab[lo : lo + len(q)],
+                dst_lab,
+            )
+            for lo, q in sweep(A, na, B, nb)
+        ]
+
+    def split(tbl):
+        is_left = tbl.column("is_left").to_numpy()
+        return tbl.filter(is_left), tbl.filter(~is_left)
+
+    def column(typ, chunks):
+        if not chunks:
+            return pa.array([], type=typ)
+        if isinstance(chunks[0], pa.Array):
+            return chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
+        masked = any(np.ma.isMaskedArray(c) for c in chunks)
+        vals = (np.ma.concatenate if masked else np.concatenate)(chunks)
+        mask = np.ma.getmaskarray(vals) if masked else None
+        if mask is not None and not mask.any():
+            mask = None
+        vals = np.ma.getdata(vals)
+        if pa.types.is_list(typ):
+            rows = None if mask is None else mask.any(axis=1)
+            lens = np.full(len(vals), vals.shape[1], dtype=np.int32)
+            if rows is not None:
+                lens[rows] = 0
+                vals = vals[~rows]
+            offs = np.concatenate(([0], np.cumsum(lens, dtype=np.int32)))
+            return pa.ListArray.from_arrays(
+                pa.array(offs, type=pa.int32()),
+                pa.array(vals.ravel(), type=typ.value_type),
+                mask=None if rows is None else pa.array(rows),
+            )
+        return pa.array(
+            vals.astype(typ.to_pandas_dtype(), copy=False), type=typ, mask=mask
+        )
+
+    def table(schema, parts):
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        cols = list(zip(*parts)) if parts else [()] * len(schema.fields)
+        return pa.Table.from_arrays(
+            [column(to_arrow_type(f.dataType), c) for f, c in zip(schema, cols)],
+            names=schema.names,
+        )
+
+    from types import SimpleNamespace
+
+    return SimpleNamespace(
+        decode=decode,
+        stack=stack,
+        nearest=nearest,
+        side_dims=side_dims,
+        books=books,
+        mm=mm,
+        sweep=sweep,
+        topk=topk,
+        sweep_topk=sweep_topk,
+        split=split,
+        table=table,
+    )
+
+
+def _tile_pairs(emb: DataFrame, cols: Sequence[str], n_tiles: int):
+    """the tiled all-pairs replication of ``cosine_pairs`` and
+    ``knn_graph``: rows hash to ``n_tiles`` tiles (vec_id mod
+    n_tiles), and every unordered tile pair (ta ≤ tb) becomes one
+    group holding both tiles, the ta side flagged ``is_left``. Each
+    row is replicated n_tiles+1 ways through a single shuffle — the
+    O(n·√tasks) replication distributed exact all-pairs costs.
+    Returns the grouped data, ready for ``applyInArrow``."""
+    t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
+    e = emb.select(*cols, t.alias("t"))
+    left = e.select(
+        F.col("t").alias("ta"),
+        F.explode(F.sequence(F.col("t"), F.lit(n_tiles - 1))).alias("tb"),
+        *cols,
+        F.lit(True).alias("is_left"),
+    )
+    right = e.select(
+        F.explode(F.sequence(F.lit(0), F.col("t"))).alias("ta"),
+        F.col("t").alias("tb"),
+        *cols,
+        F.lit(False).alias("is_left"),
+    )
+    return left.unionByName(right).groupBy("ta", "tb")
 
 
 def cosine_pairs_hof(
@@ -234,49 +481,26 @@ def cosine_pairs(
     """
     import numpy as np
 
-    t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
-    e = emb.select("vec_id", "embedding", t.alias("t"))
-    left = e.select(
-        F.col("t").alias("ta"),
-        F.explode(F.sequence(F.col("t"), F.lit(n_tiles - 1))).alias("tb"),
-        "vec_id",
-        "embedding",
-        F.lit(True).alias("is_left"),
-    )
-    right = e.select(
-        F.explode(F.sequence(F.lit(0), F.col("t"))).alias("ta"),
-        F.col("t").alias("tb"),
-        "vec_id",
-        "embedding",
-        F.lit(False).alias("is_left"),
-    )
+    from pyspark.sql import types as T
 
-    stack, mm, table = _make_cosine_parts()
-    max_elems = MAX_BLOCK_ELEMS
+    P = _make_cosine_parts()
+    schema = T.StructType.fromDDL("vec_a bigint, vec_b bigint, cosine double")
 
     def block(key, tbl):
         diagonal = key[0].as_py() == key[1].as_py()
-        is_left = tbl.column("is_left").to_numpy()
-        L = tbl.filter(is_left)
-        R = tbl.filter(~is_left)
+        L, R = P.split(tbl)
         parts = []
         if L.num_rows and R.num_rows:
-            A, na = stack(L.column("embedding"))
-            B, nb = stack(R.column("embedding"))
+            A, na = P.stack(L.column("embedding"))
+            B, nb = P.stack(R.column("embedding"))
             all_la = L.column("vec_id").to_numpy()
             all_rb = R.column("vec_id").to_numpy()
-            # chunked sweep: never materialize more than MAX_BLOCK_ELEMS
-            # of the q matrix at once — at a fixed n_tiles the full
-            # tile² block grows quadratically with the corpus and OOMs
-            # workers
-            step = max(1, max_elems // max(len(all_rb), 1))
-            for lo in range(0, len(all_la), step):
-                q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)
+            for lo, q in P.sweep(A, na, B, nb):
                 # NaN (zero-norm 0/0) fails the >= comparison and drops
                 # out, same as safe_div's NULL under the threshold
                 # predicate; isfinite makes that contract explicit.
                 ia, ib = np.where(np.isfinite(q) & (q >= threshold))
-                la = all_la[lo : lo + step][ia]
+                la = all_la[lo : lo + len(q)][ia]
                 rb = all_rb[ib]
                 sims = q[ia, ib]
                 if diagonal:
@@ -290,12 +514,10 @@ def cosine_pairs(
                     parts.append(
                         (np.minimum(la, rb), np.maximum(la, rb), sims)
                     )
-        return table(("vec_a", "vec_b", "cosine"), parts)
+        return P.table(schema, parts)
 
-    return (
-        left.unionByName(right)
-        .groupBy("ta", "tb")
-        .applyInArrow(block, "vec_a bigint, vec_b bigint, cosine double")
+    return _tile_pairs(emb, ["vec_id", "embedding"], n_tiles).applyInArrow(
+        block, schema
     )
 
 
@@ -328,122 +550,54 @@ def knn_graph(
     and the output carries both endpoints' labels. Requires a
     ``label`` column.
     """
-    import numpy as np
-
-    t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
-    cols = ["vec_id", "embedding"] + (["label"] if diff_label else [])
-    e = emb.select(*cols, t.alias("t"))
-    left = e.select(
-        F.col("t").alias("ta"),
-        F.explode(F.sequence(F.col("t"), F.lit(n_tiles - 1))).alias("tb"),
-        *cols,
-        F.lit(True).alias("is_left"),
-    )
-    right = e.select(
-        F.explode(F.sequence(F.lit(0), F.col("t"))).alias("ta"),
-        F.col("t").alias("tb"),
-        *cols,
-        F.lit(False).alias("is_left"),
-    )
-
-    stack, mm, table = _make_cosine_parts()
+    P = _make_cosine_parts()
     max_elems = MAX_BLOCK_ELEMS
-    names = ("vec_id", "neighbor_id", "cosine") + (
-        ("label", "neighbor_label") if diff_label else ()
-    )
+    schema = _knn_schema(diff_label)
 
     def block(key, tbl):
         diagonal = key[0].as_py() == key[1].as_py()
-        is_left = tbl.column("is_left").to_numpy()
-        L = tbl.filter(is_left)
-        R = tbl.filter(~is_left)
-        parts = []  # one (srcs, dsts, sims, slabs, dlabs) per top-k pass
+        L, R = P.split(tbl)
         if not (L.num_rows and R.num_rows):
-            return table(names, parts)
-        A, na = stack(L.column("embedding"))
-        B, nb = stack(R.column("embedding"))
+            return P.table(schema, [])
+        A, na = P.stack(L.column("embedding"))
+        B, nb = P.stack(R.column("embedding"))
         la = L.column("vec_id").to_numpy()
         rb = R.column("vec_id").to_numpy()
-        if diff_label:
-            la_lab = L.column("label").to_numpy()
-            rb_lab = R.column("label").to_numpy()
+        la_lab = L.column("label").to_numpy() if diff_label else None
+        rb_lab = R.column("label").to_numpy() if diff_label else None
+        if not diagonal and len(la) * len(rb) <= max_elems:
+            # small off-diagonal block: one matmul, its transpose
+            # reused for the reverse direction
+            q = P.mm(A, na, B, nb)
+            parts = [
+                P.topk(q, la, rb, k, la_lab, rb_lab),
+                P.topk(q.T, rb, la, k, rb_lab, la_lab),
+            ]
         else:
-            la_lab = np.zeros(len(la), dtype=np.int64)
-            rb_lab = np.zeros(len(rb), dtype=np.int64)
-
-        def topk_rows(sim, src_ids, dst_ids, src_lab, dst_lab):
-            # vectorized block-local top-k (r16, guide §4.2): the old
-            # per-SOURCE-row Python loop ran ~6 numpy calls per row ×
-            # every row of every block; here the whole block sorts in
-            # three C-level ops. Same selection, same order: columns
-            # are pre-sorted by dst asc, so a STABLE row-wise argsort
-            # on -sim keeps ties in dst-ascending order — exactly the
-            # old np.lexsort((dst, -sim)). Masked candidates (self
-            # pairs, non-finite sims — zero-norm 0/0 NaN drops out
-            # like safe_div's NULL — and same-label pairs in the
-            # hard-negative variant) get a +inf key: ranked past
-            # every real candidate and cut by the validity check.
-            ord_d = np.argsort(dst_ids, kind="stable")
-            sim_s = sim[:, ord_d]
-            dst_s = dst_ids[ord_d]
-            dlab_s = dst_lab[ord_d]
-            bad = ~np.isfinite(sim_s) | (dst_s[None, :] == src_ids[:, None])
-            if diff_label:
-                bad |= dlab_s[None, :] == src_lab[:, None]
-            key = np.where(bad, np.inf, -sim_s)
-            kw = min(k, key.shape[1])
-            ord2 = np.argsort(key, axis=1, kind="stable")[:, :kw]
-            kk = np.take_along_axis(key, ord2, axis=1)
-            valid = np.isfinite(kk)
-            ri, ci = np.nonzero(valid)
-            picked = ord2[ri, ci]
-            parts.append(
-                (
-                    src_ids[ri],
-                    dst_s[picked],
-                    sim_s[ri, picked],
-                    src_lab[ri],
-                    dlab_s[picked],
-                )
-            )
-
-        if len(la) * len(rb) <= max_elems:
-            # small block: one matmul, transpose reused for the
-            # reverse direction (the pre-round-9 fast path)
-            q = mm(A, na, B, nb)
-            topk_rows(q, la, rb, la_lab, rb_lab)
-            # diagonal: L and R hold the same tile — one direction
-            # already covers every source in the tile
+            # one direction covers a diagonal tile (L and R hold the
+            # same rows); an off-diagonal block too big for one q
+            # matrix pays the reverse matmul again instead of
+            # transposing — memory-bounded beats 2× FLOPs exactly
+            # where blocks are too big to hold
+            parts = P.sweep_topk(A, na, la, B, nb, rb, k, la_lab, rb_lab)
             if not diagonal:
-                topk_rows(q.T, rb, la, rb_lab, la_lab)
-            return table(names, parts)
+                parts += P.sweep_topk(B, nb, rb, A, na, la, k, rb_lab, la_lab)
+        return P.table(schema, parts)
 
-        # large block: sweep each direction in bounded row chunks —
-        # at a fixed n_tiles the full tile² q matrix grows
-        # quadratically with the corpus and OOMs workers (measured at
-        # 200k vectors, round 9). Off-diagonal pays the reverse
-        # matmul again instead of transposing; memory-bounded beats
-        # 2× FLOPs exactly where blocks are too big to hold.
-        def sweep(S, ns, sids, slab, T, nt, tids, tlab):
-            step = max(1, max_elems // max(len(tids), 1))
-            for lo in range(0, len(sids), step):
-                qc = mm(S[lo : lo + step], ns[lo : lo + step], T, nt)
-                topk_rows(
-                    qc, sids[lo : lo + step], tids, slab[lo : lo + step], tlab
-                )
+    cols = ["vec_id", "embedding"] + (["label"] if diff_label else [])
+    per_block = _tile_pairs(emb, cols, n_tiles).applyInArrow(block, schema)
+    return _cosine_rank(per_block, k, "vec_id", schema.names[3:])
 
-        sweep(A, na, la, la_lab, B, nb, rb, rb_lab)
-        if not diagonal:
-            sweep(B, nb, rb, rb_lab, A, na, la, la_lab)
-        return table(names, parts)
 
-    schema = "vec_id bigint, neighbor_id bigint, cosine double" + (
-        ", label bigint, neighbor_label bigint" if diff_label else ""
+def _knn_schema(diff_label: bool):
+    """the kNN kernels' output schema — the labels only for the
+    hard-negative variant."""
+    from pyspark.sql import types as T
+
+    return T.StructType.fromDDL(
+        "vec_id bigint, neighbor_id bigint, cosine double"
+        + (", label bigint, neighbor_label bigint" if diff_label else "")
     )
-    per_block = (
-        left.unionByName(right).groupBy("ta", "tb").applyInArrow(block, schema)
-    )
-    return _cosine_rank(per_block, k, "vec_id", names[3:])
 
 
 def knn_graph_auto(
@@ -748,8 +902,6 @@ def knn_graph_ivf(
     """
     import math
 
-    import numpy as np
-
     if n_centroids is None:
         n_centroids = max(16, int(math.floor(math.sqrt(_row_count(emb)))))
     is_cent = F.col("vec_id") < n_centroids
@@ -783,65 +935,31 @@ def knn_graph_ivf(
         (F.col("pos") == 0).alias("is_member"),
     )
 
-    stack, mm, table = _make_cosine_parts()
-    max_elems = MAX_BLOCK_ELEMS
-    names = ("vec_id", "neighbor_id", "cosine") + (
-        ("label", "neighbor_label") if diff_label else ()
-    )
+    P = _make_cosine_parts()
+    schema = _knn_schema(diff_label)
 
     def block(tbl):
         member = tbl.column("is_member").to_numpy()
-        parts = []  # one (srcs, dsts, sims, slabs, dlabs) per chunk
         if not member.any():
-            return table(names, parts)
-        # every row probes this cell (members probe their own)
+            return P.table(schema, [])
+        # every row probes this cell (members probe their own); the
+        # chunk sweep bounds the q block, since a hot Voronoi cell on
+        # a clustered corpus can hold far more than √n rows
         emb_col = tbl.column("embedding")
-        A, na = stack(emb_col)
-        B, nb = stack(emb_col.filter(member))
-        src_all = tbl.column("vec_id").to_numpy()
-        dst = src_all[member]
-        if diff_label:
-            slab_all = tbl.column("label").to_numpy()
-        else:
-            slab_all = np.zeros(len(src_all), dtype=np.int64)
-        dlab = slab_all[member]
-        # columns pre-sorted by neighbor id so the stable row-wise
-        # argsort's ties resolve dst-ascending — the (cosine desc,
-        # neighbor asc) order the old per-row np.lexsort used
-        ord_d = np.argsort(dst, kind="stable")
-        dst_s = dst[ord_d]
-        dlab_s = dlab[ord_d]
-        # chunked sweep: a hot Voronoi cell on clustered corpora can
-        # hold far more than √n rows — bound the q block like the
-        # all-pairs tile operators do. Inside each chunk the block-
-        # local top-k is fully vectorized (r16, guide §4.2): masked
-        # candidates (self, non-finite — zero-norm NaN drops out like
-        # safe_div's NULL — same-label in the hard-negative variant)
-        # key to +inf and are cut by the validity check.
-        step = max(1, max_elems // max(len(dst), 1))
-        for lo in range(0, len(src_all), step):
-            q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)[:, ord_d]
-            src = src_all[lo : lo + step]
-            slab = slab_all[lo : lo + step]
-            bad = ~np.isfinite(q) | (dst_s[None, :] == src[:, None])
-            if diff_label:
-                bad |= dlab_s[None, :] == slab[:, None]
-            key = np.where(bad, np.inf, -q)
-            kw = min(k, key.shape[1])
-            ord2 = np.argsort(key, axis=1, kind="stable")[:, :kw]
-            kk = np.take_along_axis(key, ord2, axis=1)
-            ri, ci = np.nonzero(np.isfinite(kk))
-            picked = ord2[ri, ci]
-            parts.append(
-                (src[ri], dst_s[picked], q[ri, picked], slab[ri], dlab_s[picked])
-            )
-        return table(names, parts)
+        A, na = P.stack(emb_col)
+        B, nb = P.stack(emb_col.filter(member))
+        src = tbl.column("vec_id").to_numpy()
+        lab = tbl.column("label").to_numpy() if diff_label else None
+        return P.table(
+            schema,
+            P.sweep_topk(
+                A, na, src, B, nb, src[member], k,
+                lab, None if lab is None else lab[member],
+            ),
+        )
 
-    schema = "vec_id bigint, neighbor_id bigint, cosine double" + (
-        ", label bigint, neighbor_label bigint" if diff_label else ""
-    )
     per_cell = exploded.groupBy("cid").applyInArrow(block, schema)
-    return _cosine_rank(per_cell, k, "vec_id", names[3:])
+    return _cosine_rank(per_cell, k, "vec_id", schema.names[3:])
 
 
 def hard_negatives_ivf(emb: DataFrame, k: int = ANN_TOP_K) -> DataFrame:
@@ -1094,19 +1212,31 @@ def ivf_topk(
     the per-query ranking window.
     """
     qrows = _query_rows(emb, query_ids) if _qrows is None else _qrows
-    crows = _collect_id_vecs(
-        emb.where(F.col("vec_id") < n_centroids), "vec_id", "embedding"
-    )
     scored = _topk_scores_arrow(
         emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
         qrows,
         "embedding",
         "neighbor_id",
         k,
-        probe=lambda v: _py_nearest_cells(v, crows, nprobe),
-        cents_rows=crows,
+        **_ivf_probe(emb, n_centroids, nprobe),
     )
     return _cosine_rank(scored, k)
+
+
+def _ivf_probe(emb: DataFrame, n_centroids: int, nprobe: int) -> dict:
+    """the in-plan IVF restriction of ``_topk_scores_arrow``: the
+    first ``n_centroids`` vectors as the collected centroid table,
+    and each query's ``nprobe`` nearest cells (``_py_nearest_cells``)
+    as its probe set."""
+    crows = _collect_id_vecs(
+        emb.where(F.col("vec_id") < n_centroids), "vec_id", "embedding"
+    )
+    return {
+        "cents_rows": crows,
+        "probe": lambda rows: [
+            _py_nearest_cells(v, crows, nprobe) for _, v in rows
+        ],
+    }
 
 
 def lsh_topk(
@@ -1172,39 +1302,6 @@ def _query_rows(emb: DataFrame, query_ids: Sequence[int]) -> list:
     )
 
 
-def _uniform_dim(vec_rows: list, table: str) -> int | None:
-    """the one vector dimensionality of a collected (id, vec) side
-    table, or None when the table is empty. A NULL or ragged vector
-    raises ``ValueError`` naming ``table`` and the cause — the rule
-    the cosine block kernels' ``stack`` applies: a side-table vector
-    is a query, centroid or codeword, and a NULL or mis-sized one has
-    no defined score."""
-    nulls = [i for i, v in vec_rows if v is None]
-    if nulls:
-        raise ValueError(
-            f"{table} table: {len(nulls)} NULL embedding vector(s)"
-            f" (ids {nulls[:5]}); a NULL vector has no score"
-        )
-    dims = {len(v) for _, v in vec_rows}
-    if len(dims) > 1:
-        raise ValueError(
-            f"{table} table: ragged embedding vectors (lengths"
-            f" {min(dims)}..{max(dims)}); every vector must have the"
-            " same dimension"
-        )
-    return dims.pop() if dims else None
-
-
-def _require_dim(d: int, need: int, table: str, what: str) -> None:
-    """raise ``ValueError`` when a side table's vectors are shorter
-    than the ``need`` leading dimensions ``what`` reads."""
-    if d < need:
-        raise ValueError(
-            f"{table} table: embedding vectors of dimension {d} are too"
-            f" short for {what} ({need} dimensions)"
-        )
-
-
 def _make_floor_long():
     """factory for ``_floor_long``: a factory-made function pickles
     BY VALUE into the kernels' closures (a module-level def would
@@ -1254,8 +1351,8 @@ def _py_sign_bucket(vec, dims: int) -> int:
     oracle emits the identical left-associative double-arithmetic
     chain, and the scoring kernel's corpus-side mixing fold the same
     per-dimension sequence, so bucket ids are bit-equal across all
-    three. ``vec`` is a validated query vector (``_uniform_dim``),
-    at least ``LSH_MIX_WIDTH`` long."""
+    three. ``vec`` is a validated query vector, at least
+    ``LSH_MIX_WIDTH`` long."""
     import math
 
     from rsbsa_etl_spark.params import LSH_MIX_WIDTH, hadamard_sign
@@ -1296,25 +1393,24 @@ def _topk_scores_arrow(
     scale: int = 6,
     fixed_long: bool = False,
     drop_null: bool = False,
-    exclude_self: bool = True,
     keep_vec: bool = False,
     probe: Callable[[list], list] | None = None,
     cents_rows: list | None = None,
     lsh_bits: int | None = None,
+    cell_col: str | None = None,
 ) -> DataFrame:
     """batch-local cosine top-k against a collected query set — the
     ``mapInArrow`` NumPy scoring stage shared by ``brute_force_topk``
     / ``lsh_topk`` / ``lsh_multiprobe_topk`` / ``ivf_topk`` /
-    ``_mmr_pool`` / ``_hybrid_parts`` (guide §4.2). Emits, per Arrow
-    batch and per query, the top-``k`` scored candidate rows plus
-    (unless ``drop_null``) the first ``k`` NULL-score rows — a
-    LOSSLESS cut: the downstream ranking window's total order is
-    (score desc, id asc) with NULLs last, and a per-query global
-    top-k is a subset of the union of batch-local top-k under the
-    same order.
+    ``_mmr_pool`` / ``_hybrid_parts`` and the persisted index's
+    ``query_ivf_index`` (guide §4.2). Emits, per Arrow batch and per
+    query, the top-``k`` scored candidate rows plus (unless
+    ``drop_null``) the first ``k`` NULL-score rows — a LOSSLESS cut:
+    the downstream ranking window's total order is (score desc, id
+    asc) with NULLs last, and a per-query global top-k is a subset of
+    the union of batch-local top-k under the same order.
 
-    BIT-IDENTICAL to the DuckDB oracles' arithmetic by construction
-    (the ``_assign_cells_arrow`` contract extended to scores):
+    BIT-IDENTICAL to the DuckDB oracles' arithmetic by construction:
 
     - dot and sumsq accumulate per dimension in ascending index
       order from 0.0 (NumPy in-place add over the row axis) — the
@@ -1324,27 +1420,30 @@ def _topk_scores_arrow(
       (``_floor_long``: NaN→0, ±inf→±Long.MAX/MIN);
     - ``safe_div``: a zero denominator emits a NULL score (the row
       is kept and ranks last), never a NaN;
-    - candidate restriction: with ``cents_rows`` a corpus row is a
-      candidate when its argmin cell — first-win (d2, cid),
-      NaN→+inf — is among the query's ``probe(vec)`` cells (IVF);
-      with ``lsh_bits`` when its sign-LSH bucket (the per-dimension
-      mixing fold, Spark's NaN>0=true included) is among the
-      query's ``probe(vec)`` buckets; with neither, every row but
-      the query itself (brute force).
+    - candidate restriction, against each query's keys
+      ``probe(qrows)[j]``: with ``cents_rows`` a corpus row's key is
+      its argmin cell (the parts' ``nearest`` fold; IVF); with
+      ``cell_col`` the cell stored in that column (the persisted
+      index, which paid for the assignment at build time); with
+      ``lsh_bits`` its sign-LSH bucket (the per-dimension mixing
+      fold of the row's leading ``LSH_MIX_WIDTH`` elements, Spark's
+      NaN>0=true included; a shorter row reads NULL elements, so its
+      bucket is 0); with none, every row but the query itself (brute
+      force).
 
     Side tables: the query and centroid tables must be uniform and
-    non-NULL (``_uniform_dim`` raises ``ValueError`` naming the
-    table), and LSH needs ``LSH_MIX_WIDTH`` dimensions. An empty
+    non-NULL (the parts' ``side_dims`` raises ``ValueError`` naming
+    the table), and LSH needs ``LSH_MIX_WIDTH`` dimensions. An empty
     query or centroid table returns an empty frame of the output
-    schema. Corpus rows whose vector is NULL or of another
-    dimensionality score NULL (brute/LSH) or drop (IVF: no cell),
-    as in the oracles.
+    schema. Corpus rows with a NULL id drop; rows whose vector is
+    NULL or of another dimensionality score NULL (brute/LSH) or drop
+    (IVF: no cell), and so does a NULL stored cell. ``keep_vec``
+    carries each scored row's (vd, nd) out and needs ``drop_null``.
 
     The collected matrices ship as ONE Spark broadcast variable
     (r15 verdict item 4) — per-executor, not per-task-closure.
     """
     import numpy as np
-    import pyarrow as pa
 
     from pyspark.sql import types as T
 
@@ -1363,19 +1462,17 @@ def _topk_scores_arrow(
         ]
     out_schema = T.StructType(fields)
 
-    d = _uniform_dim(qrows, "query")
-    cd = None if cents_rows is None else _uniform_dim(cents_rows, "centroid")
-    if d is not None and cd is not None and cd != d:
-        raise ValueError(
-            f"centroid table: ragged embedding vectors (dimension {cd},"
-            f" query table {d}); every vector must have the same dimension"
-        )
-    if lsh_bits is not None and d is not None:
-        _require_dim(d, LSH_MIX_WIDTH, "query", "the sign-LSH mixing")
-    if d is None or (cents_rows is not None and cd is None):
+    P = _make_cosine_parts()
+    tables = [("query", qrows)]
+    if cents_rows is not None:
+        tables.append(("centroid", cents_rows))
+    dims = P.side_dims(
+        tables, 0 if lsh_bits is None else LSH_MIX_WIDTH, "the sign-LSH mixing"
+    )
+    d = dims[0]
+    if d is None or None in dims:
         return src.sparkSession.createDataFrame([], out_schema)
 
-    qids_np = np.asarray([q[0] for q in qrows], dtype=np.int64)
     Q = np.asarray([q[1] for q in qrows], dtype=np.float64)
     # query norms: the same per-dimension fold, vectorized over the
     # (tiny) query axis
@@ -1383,13 +1480,6 @@ def _topk_scores_arrow(
     for i in range(d):
         t = Q[:, i]
         qacc += t * t
-    qn = np.sqrt(qacc)
-
-    cid_arr = cmat = None
-    if cents_rows is not None:
-        cid_arr = np.asarray([c[0] for c in cents_rows], dtype=np.int64)
-        cmat = np.asarray([c[1] for c in cents_rows], dtype=np.float64)
-
     S = None
     if lsh_bits is not None:
         S = np.asarray(
@@ -1399,32 +1489,28 @@ def _topk_scores_arrow(
             ],
             dtype=np.float64,
         )
-
-    probes_np = (
-        None
-        if probe is None
-        else [np.asarray(sorted(probe(v)), dtype=np.int64) for _, v in qrows]
-    )
-
     bc = src.sparkSession.sparkContext.broadcast(
         {
-            "qids": qids_np,
+            "qids": np.asarray([q[0] for q in qrows], dtype=np.int64),
             "Q": Q,
-            "qn": qn,
-            "cids": cid_arr,
-            "cmat": cmat,
+            "qn": np.sqrt(qacc),
+            "cids": None
+            if cents_rows is None
+            else np.asarray([c[0] for c in cents_rows], dtype=np.int64),
+            "cmat": None
+            if cents_rows is None
+            else np.asarray([c[1] for c in cents_rows], dtype=np.float64),
             "S": S,
-            "probes": probes_np,
+            "probes": None
+            if probe is None
+            else [np.asarray(sorted(p), dtype=np.int64) for p in probe(qrows)],
         }
     )
 
     kk = int(k)
-    want_vec = keep_vec
     emit_null = not drop_null
-    excl = exclude_self
-    vname, iname, oname = vec_col, id_col, out_col
-    as_long = fixed_long
     qscale = float(10**scale)
+    null_t = np.int64 if fixed_long else np.float64
     LMIN = np.iinfo(np.int64).min
 
     def score(batches):
@@ -1432,76 +1518,19 @@ def _topk_scores_arrow(
         Q_, qids_, qn_ = env["Q"], env["qids"], env["qn"]
         cmat_, cids_ = env["cmat"], env["cids"]
         S_, probes_ = env["S"], env["probes"]
-        m = len(qids_)
-
-        def out_batch(oq, oi, os, onull, ovd, ond):
-            arrs = [
-                pa.array(oq, type=pa.int64()),
-                pa.array(oi, type=pa.int64()),
-                pa.array(
-                    os,
-                    type=pa.int64() if as_long else pa.float64(),
-                    mask=onull,
-                ),
-            ]
-            names = ["query_id", iname, oname]
-            if want_vec:
-                names += ["vd", "nd"]
-                nrows = len(oq)
-                offs = np.arange(0, (nrows + 1) * d, d, dtype=np.int32)
-                flatv = (
-                    np.concatenate(ovd)
-                    if ovd
-                    else np.array([], dtype=np.float64)
-                )
-                arrs.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(offs, type=pa.int32()),
-                        pa.array(flatv, type=pa.float64()),
-                    )
-                )
-                arrs.append(
-                    pa.array(
-                        np.concatenate(ond)
-                        if ond
-                        else np.array([], dtype=np.float64),
-                        type=pa.float64(),
-                    )
-                )
-            return pa.RecordBatch.from_arrays(arrs, names=names)
-
         for batch in batches:
-            n = batch.num_rows
-            icol = batch.column(batch.schema.get_field_index(iname))
-            vcol = batch.column(batch.schema.get_field_index(vname))
-            if n == 0:
-                yield out_batch(
-                    np.array([], dtype=np.int64),
-                    np.array([], dtype=np.int64),
-                    np.array([], dtype=np.int64)
-                    if as_long
-                    else np.array([], dtype=np.float64),
-                    np.array([], dtype=bool),
-                    [],
-                    [],
-                )
-                continue
+            icol = batch.column(id_col)
+            vcol = batch.column(vec_col)
             id_ok = np.asarray(icol.is_valid())
+            keep = id_ok
+            if cell_col is not None:
+                ccol = batch.column(cell_col)
+                keep = id_ok & np.asarray(ccol.is_valid())
+            ok, X = P.decode(vcol, d, keep=keep)
             ids = np.asarray(icol.fill_null(LMIN)).astype(np.int64)
-            lens = np.asarray(vcol.value_lengths().fill_null(0))
-            vva = np.asarray(vcol.is_valid())
-            ok = id_ok & vva & (lens == d)
-            flat = np.asarray(vcol.flatten(), dtype=np.float64)
-            okidx = np.nonzero(ok)[0]
-            if ok.all():
-                X = flat.reshape(n, d)
-            elif len(okidx):
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                X = flat[starts[okidx][:, None] + np.arange(d)]
-            else:
-                X = np.empty((0, d), dtype=np.float64)
+            oids = ids[ok]
             # per-dimension folds: dot (ok rows × queries) and sumsq
-            num = np.zeros((X.shape[0], m), dtype=np.float64)
+            num = np.zeros((X.shape[0], len(qids_)), dtype=np.float64)
             sacc = np.zeros(X.shape[0], dtype=np.float64)
             for i in range(d):
                 xi = X[:, i]
@@ -1511,144 +1540,72 @@ def _topk_scores_arrow(
             den = np.multiply.outer(nrm, qn_)
             zero_den = den == 0
             with np.errstate(divide="ignore", invalid="ignore"):
-                sim = num / den
-            rounded = _floor_long(sim * qscale + 0.5)
-            if as_long:
-                sc = rounded
-            else:
-                sc = rounded.astype(np.float64) / qscale
+                rounded = _floor_long(num / den * qscale + 0.5)
+            sc = rounded if fixed_long else rounded.astype(np.float64) / qscale
 
-            # candidate-restriction key per row (bucket / cell)
-            key_ok = None
+            # brute force and LSH keep the rows that cannot score (NULL
+            # or mis-sized vector) as NULL-score candidates; IVF has no
+            # cell for them
+            if emit_null and cmat_ is None and cell_col is None:
+                null_rows = id_ok & ~ok
+            else:
+                null_rows = np.zeros(len(ok), dtype=bool)
+            # the candidate key of each ok row: its cell, or its LSH
+            # bucket (which every row has)
             key_all = None
             if S_ is not None:
-                nbits = S_.shape[0]
-                width = S_.shape[1]
-                # uniform ok rows: vectorized per-dimension mixing
-                buck_ok = np.zeros(X.shape[0], dtype=np.int64)
-                for bi in range(nbits):
-                    acc = np.zeros(X.shape[0], dtype=np.float64)
-                    for j in range(width):
-                        acc += X[:, j] * S_[bi, j]
+                wide, W = P.decode(vcol, S_.shape[1], prefix=True)
+                key_all = np.zeros(len(ok), dtype=np.int64)
+                for bi in range(S_.shape[0]):
+                    acc = np.zeros(W.shape[0], dtype=np.float64)
+                    for j in range(S_.shape[1]):
+                        acc += W[:, j] * S_[bi, j]
                     bit = (acc > 0) | np.isnan(acc)
-                    buck_ok |= bit.astype(np.int64) << bi
-                # ragged rows: bucket from the available prefix; a
-                # row shorter than the mixing width reads NULL
-                # elements, so every bit is 0 (the oracle's CASE)
-                key_all = np.zeros(n, dtype=np.int64)
-                key_all[okidx] = buck_ok
-                ragged = np.nonzero(id_ok & vva & (lens != d))[0]
-                if len(ragged):
-                    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                    for ri in ragged:
-                        L = int(lens[ri])
-                        if L < width:
-                            continue  # bucket 0
-                        v = flat[starts[ri] : starts[ri] + width]
-                        b = 0
-                        for bi in range(nbits):
-                            acc = 0.0
-                            for j in range(width):
-                                acc = acc + v[j] * S_[bi, j]
-                            if acc > 0 or np.isnan(acc):
-                                b |= 1 << bi
-                        key_all[ri] = b
+                    key_all[wide] |= bit.astype(np.int64) << bi
+                key_ok = key_all[ok]
             elif cmat_ is not None:
-                # argmin cell over ok rows, slab-capped accumulator
-                nc = cmat_.shape[0]
-                picked = np.empty(X.shape[0], dtype=np.int64)
-                slab = max(1, (1 << 22) // max(nc, 1))
-                for lo in range(0, X.shape[0], slab):
-                    Xs = X[lo : lo + slab]
-                    acc = np.zeros((Xs.shape[0], nc), dtype=np.float64)
-                    for i in range(d):
-                        t = Xs[:, i : i + 1] - cmat_[:, i]
-                        acc += t * t
-                    np.copyto(acc, np.inf, where=np.isnan(acc))
-                    picked[lo : lo + slab] = cids_[np.argmin(acc, axis=1)]
-                key_ok = picked
+                key_ok = cids_[P.nearest(X, cmat_)]
+            elif cell_col is not None:
+                key_ok = np.asarray(ccol.fill_null(0)).astype(np.int64)[ok]
 
-            oq, oi, os_, onull, ovd, ond = [], [], [], [], [], []
-            for j in range(m):
-                if probes_ is None:
-                    cand_ok = np.ones(X.shape[0], dtype=bool)
-                    cand_null_extra = (
-                        np.nonzero(id_ok & ~ok)[0] if emit_null else []
-                    )
-                elif key_ok is not None:  # IVF: not-ok rows dropped
-                    cand_ok = np.isin(key_ok, probes_[j])
-                    cand_null_extra = []
-                else:  # LSH: bucket computed for every row
-                    cand_ok = np.isin(key_all[okidx], probes_[j])
-                    cand_null_extra = (
-                        np.nonzero(
-                            id_ok & ~ok & np.isin(key_all, probes_[j])
-                        )[0]
-                        if emit_null
-                        else []
-                    )
-                if excl:
-                    cand_ok &= ids[okidx] != qids_[j]
-                valid = cand_ok & ~zero_den[:, j]
-                vidx = np.nonzero(valid)[0]
+            parts = []
+            for j, qid in enumerate(qids_):
+                cand = np.ones(len(oids), dtype=bool)
+                extra = null_rows
+                if probes_ is not None:
+                    cand = np.isin(key_ok, probes_[j])
+                    if key_all is not None:
+                        extra = extra & np.isin(key_all, probes_[j])
+                cand &= oids != qid
+                vidx = np.nonzero(cand & ~zero_den[:, j])[0]
                 if len(vidx):
-                    vids = ids[okidx][vidx]
-                    vsc = sc[vidx, j]
-                    order = np.lexsort((vids, -vsc))[:kk]
-                    sel = vidx[order]
-                    take = len(order)
-                    oq.append(np.full(take, qids_[j], dtype=np.int64))
-                    oi.append(ids[okidx][sel])
-                    os_.append(sc[sel, j])
-                    onull.append(np.zeros(take, dtype=bool))
-                    if want_vec:
-                        ovd.extend(X[sel])
-                        ond.append(nrm[sel])
+                    sel = vidx[np.lexsort((oids[vidx], -sc[vidx, j]))[:kk]]
+                    part = (np.full(len(sel), qid), oids[sel], sc[sel, j])
+                    if keep_vec:
+                        part += (X[sel], nrm[sel])
+                    parts.append(part)
                 if emit_null:
                     # NULL-score rows: zero-denominator ok rows plus
                     # (brute/LSH) ragged/NULL-vector rows — ranked
                     # last, id-asc, first k kept
-                    znull = np.nonzero(cand_ok & zero_den[:, j])[0]
-                    nids = ids[okidx][znull]
-                    extra = np.asarray(cand_null_extra, dtype=np.int64)
-                    if excl and len(extra):
-                        extra = extra[ids[extra] != qids_[j]]
-                    allnull = np.concatenate((nids, ids[extra])) if len(
-                        extra
-                    ) else nids
-                    if len(allnull):
-                        allnull = np.sort(allnull)[:kk]
-                        take = len(allnull)
-                        oq.append(np.full(take, qids_[j], dtype=np.int64))
-                        oi.append(allnull)
-                        os_.append(
-                            np.zeros(take, dtype=np.int64)
-                            if as_long
-                            else np.zeros(take, dtype=np.float64)
-                        )
-                        onull.append(np.ones(take, dtype=bool))
-                        if want_vec:
-                            # unreachable: keep_vec callers drop_null
-                            ovd.extend(
-                                np.zeros((take, d), dtype=np.float64)
+                    extra_ids = ids[extra]
+                    allnull = np.sort(
+                        np.concatenate(
+                            (
+                                oids[cand & zero_den[:, j]],
+                                extra_ids[extra_ids != qid],
                             )
-                            ond.append(np.zeros(take, dtype=np.float64))
-            yield out_batch(
-                np.concatenate(oq) if oq else np.array([], dtype=np.int64),
-                np.concatenate(oi) if oi else np.array([], dtype=np.int64),
-                np.concatenate(os_)
-                if os_
-                else (
-                    np.array([], dtype=np.int64)
-                    if as_long
-                    else np.array([], dtype=np.float64)
-                ),
-                np.concatenate(onull)
-                if onull
-                else np.array([], dtype=bool),
-                ovd,
-                ond,
-            )
+                        )
+                    )[:kk]
+                    if len(allnull):
+                        parts.append(
+                            (
+                                np.full(len(allnull), qid),
+                                allnull,
+                                np.ma.masked_all(len(allnull), null_t),
+                            )
+                        )
+            yield from P.table(out_schema, parts).to_batches()
 
     return src.mapInArrow(score, out_schema)
 
@@ -1672,10 +1629,10 @@ def _assign_cells_arrow(
 
     BIT-IDENTICAL decision arithmetic by construction:
 
-    - d2 accumulates per dimension in ascending index order
-      (``acc = acc + (x_i − c_i)²`` from a 0.0 start — NumPy in-place
-      add over the row axis) — the exact left-to-right IEEE double
-      sequence of the DuckDB oracle's ``list_sum``;
+    - d2 is the parts' ``nearest`` fold: per dimension in ascending
+      index order (``acc = acc + (x_i − c_i)²`` from a 0.0 start) —
+      the exact left-to-right IEEE double sequence of the DuckDB
+      oracle's ``list_sum``;
     - only INTEGER ids leave the kernel (the argmin / top-``nprobe``
       cell ids); no kernel-computed float crosses the boundary, so
       there is no transport-precision question (Arrow passthrough of
@@ -1694,124 +1651,57 @@ def _assign_cells_arrow(
 
     ``cents`` is the (cid, vc) table, collected here — index-sized
     (≤ thousands of rows) — and shipped as one broadcast. A NULL or
-    ragged centroid vector raises ``ValueError`` (``_uniform_dim``).
-    ``src`` must already be projected to exactly the columns the
-    caller wants out (plus ``vec_col``) — §4.1 column discipline:
-    everything passed crosses the boundary. The output appends
-    ``out_col`` (long cid, or array<long> of the top-``nprobe``
-    cells when ``nprobe`` is set).
+    ragged centroid vector raises ``ValueError`` (the parts'
+    ``side_dims``). ``src`` must already be projected to exactly the
+    columns the caller wants out (plus ``vec_col``) — §4.1 column
+    discipline: everything passed crosses the boundary. The output
+    appends ``out_col`` (long cid, or array<long> of the
+    top-``nprobe`` cells when ``nprobe`` is set).
 
-    Rows whose vector is NULL or whose length differs from the
-    centroid dim — and every row when the centroid table is empty —
-    get a NULL assignment, which the callers' cid joins drop. (The
-    fixtures and both generators are uniform-dim with non-null
-    vectors; this branch exists so malformed rows degrade to a
-    droppable NULL instead of crashing the kernel.)
+    Degenerate rows: a row whose vector is NULL or whose length
+    differs from the centroid dim — and every row when the centroid
+    table is empty — gets a NULL assignment, which the callers' cid
+    joins and groupings drop; a NULL element decodes to NaN, so its
+    row lands in the lowest cid. The parts' ``decode`` picks those
+    rows out in one vectorized pass, with no per-row Python.
     """
     import numpy as np
-    import pyarrow as pa
 
     from pyspark.sql import types as T
 
+    P = _make_cosine_parts()
     rows = _collect_id_vecs(cents, "cid", "vc")
-    d_cent = _uniform_dim(rows, "centroid") or 0
-    cid_arr = np.asarray([t[0] for t in rows], dtype=np.int64)
-    cmat = np.asarray([t[1] for t in rows], dtype=np.float64)
+    d_cent = P.side_dims([("centroid", rows)])[0] or 0
     n_cents = len(rows)
     probe_n = None if nprobe is None else max(0, min(int(nprobe), n_cents))
     # centroids ship as ONE Spark broadcast variable — per executor,
     # not per pickled task closure (r15 verdict item 4: at scale-out
     # task counts an embedded n_cents×d float64 matrix multiplies
     # into every task binary; a broadcast moves it once per worker)
-    bc_cents = src.sparkSession.sparkContext.broadcast((cid_arr, cmat))
-
-    out_field = (
-        T.StructField(out_col, T.ArrayType(T.LongType()), True)
-        if nprobe is not None
-        else T.StructField(out_col, T.LongType(), True)
-    )
-    out_schema = T.StructType(list(src.schema.fields) + [out_field])
-
-    def _core(X: "np.ndarray") -> "np.ndarray":
-        # n×m distance accumulators, filled dimension by dimension
-        # in index order — each (row, centroid) cell sees the exact
-        # fold sequence 0.0 + t0² + t1² + … Rows are processed in
-        # bounded slabs (r15 verdict item 8): the accumulator is
-        # rows × n_cents float64, so an uncapped 10k-row Arrow batch
-        # against thousands of centroids would hold hundreds of MB
-        # per Python worker × every concurrent task; the 4M-element
-        # slab caps it at ~32 MB regardless of batch or codebook
-        # size, with per-cell arithmetic unchanged.
-        cid_a, cm = bc_cents.value
-        out_shape = (
-            (X.shape[0],) if probe_n is None else (X.shape[0], probe_n)
+    bc_cents = src.sparkSession.sparkContext.broadcast(
+        (
+            np.asarray([t[0] for t in rows], dtype=np.int64),
+            np.asarray([t[1] for t in rows], dtype=np.float64),
         )
-        out = np.empty(out_shape, dtype=np.int64)
-        slab = max(1, (1 << 22) // max(n_cents, 1))
-        for lo in range(0, X.shape[0], slab):
-            Xs = X[lo : lo + slab]
-            acc = np.zeros((Xs.shape[0], n_cents), dtype=np.float64)
-            for i in range(d_cent):
-                t = Xs[:, i : i + 1] - cm[:, i]
-                acc += t * t
-            np.copyto(acc, np.inf, where=np.isnan(acc))
-            if probe_n is None:
-                out[lo : lo + slab] = cid_a[np.argmin(acc, axis=1)]
-            else:
-                order = np.argsort(acc, axis=1, kind="stable")[
-                    :, :probe_n
-                ]
-                out[lo : lo + slab] = cid_a[order]
-        return out
+    )
+
+    out_type = T.LongType() if nprobe is None else T.ArrayType(T.LongType())
+    out_schema = T.StructType(
+        list(src.schema.fields) + [T.StructField(out_col, out_type, True)]
+    )
 
     def assign(batches):
+        cid_a, cm = bc_cents.value
         for b in batches:
-            n = b.num_rows
-            cols = list(b.columns)
-            names = list(b.schema.names) + [out_col]
-            col = b.column(b.schema.get_field_index(vec_col))
-            lens = np.asarray(col.value_lengths().fill_null(0))
-            valid = np.asarray(col.is_valid())
-            ok = valid & (lens == d_cent) if n else valid
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            if n and n_cents and ok.all():
-                picked = _core(flat.reshape(n, d_cent))
-                if probe_n is None:
-                    out = pa.array(picked, type=pa.int64())
-                else:
-                    offs = np.arange(0, (n + 1) * probe_n, probe_n)
-                    out = pa.ListArray.from_arrays(
-                        pa.array(offs, type=pa.int32()),
-                        pa.array(picked.ravel(), type=pa.int64()),
-                    )
-            else:
-                # degenerate rows (NULL / ragged vectors): per-row
-                # python build, NULL assignment where not ok
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                idx = np.nonzero(ok)[0]
-                if len(idx) and n_cents:
-                    X = np.empty((len(idx), d_cent), dtype=np.float64)
-                    for j, i in enumerate(idx):
-                        X[j] = flat[starts[i] : starts[i] + d_cent]
-                    picked = _core(X)
-                vals: list = [None] * n
-                for j, i in enumerate(idx):
-                    if not n_cents:
-                        break
-                    vals[i] = (
-                        int(picked[j])
-                        if probe_n is None
-                        else [int(c) for c in picked[j]]
-                    )
-                out = pa.array(
-                    vals,
-                    type=(
-                        pa.int64()
-                        if probe_n is None
-                        else pa.list_(pa.int64())
-                    ),
-                )
-            yield pa.RecordBatch.from_arrays(cols + [out], names=names)
+            # no centroids: no row has a cell
+            keep = None if n_cents else np.zeros(b.num_rows, dtype=bool)
+            ok, X = P.decode(b.column(vec_col), d_cent, keep=keep)
+            cell = np.ma.masked_all(
+                (b.num_rows,) if probe_n is None else (b.num_rows, probe_n),
+                np.int64,
+            )
+            cell[ok] = cid_a[P.nearest(X, cm, probe_n)]
+            yield from P.table(out_schema, [(*b.columns, cell)]).to_batches()
 
     return src.mapInArrow(assign, out_schema)
 
@@ -1866,7 +1756,9 @@ def lsh_multiprobe_topk(
         "embedding",
         "neighbor_id",
         k,
-        probe=lambda v: [_py_sign_bucket(v, dims) ^ m for m in masks],
+        probe=lambda rows: [
+            [_py_sign_bucket(v, dims) ^ m for m in masks] for _, v in rows
+        ],
         lsh_bits=dims,
     )
     return _cosine_rank(scored, k)
@@ -1963,112 +1855,57 @@ def _pq_codes_arrow(
     exchange to reassemble them; here each vector's ``m`` codes and
     its quantized error come out of the same batch, zero shuffle.
 
-    Bit-identical arithmetic: per-sub d2 is the dimension-ordered
-    fold; argmin is first-win over cid-sorted codebooks (the (d2,
-    cid) order) on a NaN→+inf ranked copy with the RAW winning d2
+    Bit-identical arithmetic: each subspace's code is the parts'
+    ``nearest`` fold over its cid-sorted codebook (first-win argmin,
+    the (d2, cid) order, NaN ranked as +inf) with the RAW winning d2
     kept; recon_err replicates ``fixed_sum(d2, 6)`` exactly —
     per-sub floor(d2·1e6 + 0.5) under Java's (long) cast (NaN→0),
     summed as int64, one final double division.
 
     ``seeds_rows``: collected (vec_id, vector) codeword seeds; the
-    per-sub codebooks are sliced driver-side and ship as one Spark
+    per-sub codebooks (the parts' ``books``) ship as one Spark
     broadcast. A NULL, ragged or shorter-than-``m·sub`` seed vector
     raises ``ValueError`` naming the seed table; an empty seed table
     returns an empty frame of the output schema. Corpus rows whose
     vector is NULL or shorter than a subspace's span get NULL for
-    that code (the oracle's NULL-slice semantics); recon_err sums the
-    valid subspaces only (SQL SUM skips NULLs) and is NULL when none
-    are valid.
+    that code; recon_err sums the valid subspaces only (SQL SUM
+    skips NULLs) and is NULL when none are valid.
     """
     import numpy as np
-    import pyarrow as pa
 
     from pyspark.sql import types as T
 
-    fields = [T.StructField("vec_id", T.LongType(), True)]
-    fields += [
-        T.StructField(f"code{j}", T.LongType(), True) for j in range(m)
-    ]
-    fields.append(T.StructField("recon_err", T.DoubleType(), True))
-    out_schema = T.StructType(fields)
+    out_schema = T.StructType(
+        [T.StructField("vec_id", T.LongType(), True)]
+        + [T.StructField(f"code{j}", T.LongType(), True) for j in range(m)]
+        + [T.StructField("recon_err", T.DoubleType(), True)]
+    )
 
-    d = _uniform_dim(seeds_rows, "PQ seed")
+    P = _make_cosine_parts()
+    d = P.side_dims([("PQ seed", seeds_rows)], m * sub, f"{m} subspaces of {sub}")[0]
     if d is None:
         return src.sparkSession.createDataFrame([], out_schema)
-    _require_dim(d, m * sub, "PQ seed", f"{m} subspaces of {sub}")
-    books = []
-    for j in range(m):
-        rows = sorted(
-            (cid, v[j * sub : (j + 1) * sub]) for cid, v in seeds_rows
-        )
-        books.append(
-            (
-                np.asarray([c for c, _ in rows], dtype=np.int64),
-                np.asarray([s for _, s in rows], dtype=np.float64),
-            )
-        )
-    bc = src.sparkSession.sparkContext.broadcast(books)
+    bc = src.sparkSession.sparkContext.broadcast(P.books(seeds_rows, m, sub))
 
     def encode(batches):
         books_ = bc.value
         for b in batches:
-            n = b.num_rows
-            icol = b.column(b.schema.get_field_index("vec_id"))
-            vcol = b.column(b.schema.get_field_index("embedding"))
-            lens = np.asarray(vcol.value_lengths().fill_null(0))
-            vva = np.asarray(vcol.is_valid())
-            flat = np.asarray(vcol.flatten(), dtype=np.float64)
-            code_cols = [
-                np.zeros(n, dtype=np.int64) for _ in range(m)
-            ]
-            code_ok = [np.zeros(n, dtype=bool) for _ in range(m)]
-            err_acc = np.zeros(n, dtype=np.int64)
-            any_ok = np.zeros(n, dtype=bool)
-            uniform = bool(n) and bool(vva.all()) and len(set(lens)) == 1
-            L = int(lens[0]) if uniform else 0
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            vcol = b.column("embedding")
+            err = np.zeros(b.num_rows, dtype=np.int64)
+            any_ok = np.zeros(b.num_rows, dtype=bool)
+            codes = []
             for j, (ids_j, cm_j) in enumerate(books_):
-                ok_j = vva & (lens >= (j + 1) * sub)
-                idx = np.nonzero(ok_j)[0]
-                if not len(idx):
-                    continue
-                if uniform and L >= (j + 1) * sub:
-                    X = flat.reshape(n, L)[:, j * sub : (j + 1) * sub]
-                    idx = np.arange(n)
-                else:
-                    X = flat[
-                        (starts[idx] + j * sub)[:, None] + np.arange(sub)
-                    ]
-                acc = np.zeros((X.shape[0], cm_j.shape[0]))
-                for i in range(sub):
-                    t = X[:, i : i + 1] - cm_j[:, i]
-                    acc += t * t
-                ranked = np.where(np.isnan(acc), np.inf, acc)
-                best = np.argmin(ranked, axis=1)
-                code_cols[j][idx] = ids_j[best]
-                code_ok[j][idx] = True
-                err_acc[idx] += _floor_long(
-                    acc[np.arange(len(idx)), best] * 1e6 + 0.5
-                )
-                any_ok[idx] = True
-            arrs = [icol]
-            names = ["vec_id"] + [f"code{j}" for j in range(m)] + [
-                "recon_err"
-            ]
-            for j in range(m):
-                arrs.append(
-                    pa.array(
-                        code_cols[j], type=pa.int64(), mask=~code_ok[j]
-                    )
-                )
-            arrs.append(
-                pa.array(
-                    err_acc.astype(np.float64) / 1e6,
-                    type=pa.float64(),
-                    mask=~any_ok,
-                )
-            )
-            yield pa.RecordBatch.from_arrays(arrs, names=names)
+                ok, X = P.decode(vcol, (j + 1) * sub, prefix=True)
+                pos, d2 = P.nearest(X[:, j * sub :], cm_j, with_d2=True)
+                code = np.ma.masked_all(b.num_rows, np.int64)
+                code[ok] = ids_j[pos]
+                codes.append(code)
+                err[ok] += _floor_long(d2 * 1e6 + 0.5)
+                any_ok |= ok
+            recon = np.ma.masked_array(err.astype(np.float64) / 1e6, mask=~any_ok)
+            yield from P.table(
+                out_schema, [(b.column("vec_id"), *codes, recon)]
+            ).to_batches()
 
     return src.mapInArrow(encode, out_schema)
 
@@ -2121,10 +1958,10 @@ def _ivfpq_scores_arrow(
 ) -> DataFrame:
     """the whole IVF-PQ candidate + ADC pipeline as ONE batch kernel
     (r16, guide §2.4/§4.2): cell assignment, per-sub code
-    assignment, probed-cell candidate restriction, and the ADC
-    fixed-point fold — no exploded-codes shuffle join
-    (cand ⋈ codes ⋈ dtab → groupBy); the ranking window receives
-    batch-local top-k rows only.
+    assignment (both the parts' ``nearest`` fold), probed-cell
+    candidate restriction, and the ADC fixed-point fold — no
+    exploded-codes shuffle join (cand ⋈ codes ⋈ dtab → groupBy); the
+    ranking window receives batch-local top-k rows only.
 
     Driver-side: probe sets via ``_py_nearest_cells``; the
     per-(query, sub, codeword) distance table is pre-quantized with
@@ -2137,10 +1974,9 @@ def _ivfpq_scores_arrow(
     must be uniform, non-NULL, of one dimension and at least
     ``m·sub`` long, else ``ValueError`` names the table; an empty
     query, centroid or seed table returns an empty frame of the
-    output schema. Corpus rows of deviant dimensionality drop (no
-    cell), as in the oracle."""
+    output schema. Corpus rows with a NULL id or of deviant
+    dimensionality drop (no cell)."""
     import numpy as np
-    import pyarrow as pa
 
     from pyspark.sql import types as T
 
@@ -2151,37 +1987,17 @@ def _ivfpq_scores_arrow(
             T.StructField("approx_d2", T.DoubleType(), True),
         ]
     )
-    d = _uniform_dim(qrows, "query")
-    sd = _uniform_dim(side_rows, "centroid/codeword seed")
-    if d is not None and sd is not None and sd != d:
-        raise ValueError(
-            f"centroid/codeword seed table: ragged embedding vectors"
-            f" (dimension {sd}, query table {d}); every vector must have"
-            " the same dimension"
-        )
-    for table, dim in (("query", d), ("centroid/codeword seed", sd)):
-        if dim is not None:
-            _require_dim(dim, m * sub, table, f"{m} subspaces of {sub}")
+    P = _make_cosine_parts()
+    d = P.side_dims(
+        [("query", qrows), ("centroid/codeword seed", side_rows)],
+        m * sub,
+        f"{m} subspaces of {sub}",
+    )[0]
     cents_rows = [(i, v) for i, v in side_rows if i < n_centroids]
     seed_rows = [(i, v) for i, v in side_rows if i < codewords]
     if not (qrows and cents_rows and seed_rows):
         return src.sparkSession.createDataFrame([], out_schema)
-    qids = [q for q, _ in qrows]
-    probes = [
-        np.asarray(
-            sorted(_py_nearest_cells(v, cents_rows, nprobe)), dtype=np.int64
-        )
-        for _, v in qrows
-    ]
-    cid_arr = np.asarray([c for c, _ in cents_rows], dtype=np.int64)
-    cmat = np.asarray([v for _, v in cents_rows], dtype=np.float64)
-    books = []
-    for j in range(m):
-        rows = sorted(
-            (cid, v[j * sub : (j + 1) * sub]) for cid, v in seed_rows
-        )
-        books.append(np.asarray([s for _, s in rows], dtype=np.float64))
-
+    books = [cw for _, cw in P.books(seed_rows, m, sub)]
     # pre-quantized ADC table: (query, sub, codeword-position) int64
     qd2 = np.asarray(
         [
@@ -2193,123 +2009,54 @@ def _ivfpq_scores_arrow(
         ],
         dtype=np.float64,
     )
-    qd2q = _floor_long(qd2 * 1e6 + 0.5)
-
     bc = src.sparkSession.sparkContext.broadcast(
         {
-            "qids": np.asarray(qids, dtype=np.int64),
-            "probes": probes,
-            "cids": cid_arr,
-            "cmat": cmat,
+            "qids": np.asarray([q for q, _ in qrows], dtype=np.int64),
+            "probes": [
+                np.asarray(
+                    sorted(_py_nearest_cells(v, cents_rows, nprobe)),
+                    dtype=np.int64,
+                )
+                for _, v in qrows
+            ],
+            "cids": np.asarray([c for c, _ in cents_rows], dtype=np.int64),
+            "cmat": np.asarray([v for _, v in cents_rows], dtype=np.float64),
             "books": books,
-            "qd2q": qd2q,
+            "qd2q": _floor_long(qd2 * 1e6 + 0.5),
         }
     )
     kk = int(k)
-    mm_ = m
-    sub_ = sub
-    dd = d
 
     def score(batches):
         env = bc.value
-        qids_, probes_ = env["qids"], env["probes"]
-        cids_, cmat_, books_, qd2q_ = (
-            env["cids"],
-            env["cmat"],
-            env["books"],
-            env["qd2q"],
-        )
-        nq = len(qids_)
+        qids_, probes_, qd2q_ = env["qids"], env["probes"], env["qd2q"]
         for b in batches:
-            n = b.num_rows
-            icol = b.column(b.schema.get_field_index("neighbor_id"))
-            vcol = b.column(b.schema.get_field_index("embedding"))
-            oq, oi, os_ = [], [], []
-            if n:
-                id_ok = np.asarray(icol.is_valid())
-                ids = np.asarray(icol.fill_null(0)).astype(np.int64)
-                lens = np.asarray(vcol.value_lengths().fill_null(0))
-                vva = np.asarray(vcol.is_valid())
-                ok = id_ok & vva & (lens == dd)
-                flat = np.asarray(vcol.flatten(), dtype=np.float64)
-                okidx = np.nonzero(ok)[0]
-                if ok.all():
-                    X = flat.reshape(n, dd)
-                elif len(okidx):
-                    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                    X = flat[starts[okidx][:, None] + np.arange(dd)]
-                else:
-                    X = np.empty((0, dd), dtype=np.float64)
-                nok = X.shape[0]
-                oids = ids[okidx]
-                # cell assignment (slab-capped fold)
-                cell = np.empty(nok, dtype=np.int64)
-                slab = max(1, (1 << 22) // max(cmat_.shape[0], 1))
-                for lo in range(0, nok, slab):
-                    Xs = X[lo : lo + slab]
-                    acc = np.zeros(
-                        (Xs.shape[0], cmat_.shape[0]), dtype=np.float64
-                    )
-                    for i in range(dd):
-                        t = Xs[:, i : i + 1] - cmat_[:, i]
-                        acc += t * t
-                    np.copyto(acc, np.inf, where=np.isnan(acc))
-                    cell[lo : lo + slab] = cids_[np.argmin(acc, axis=1)]
-                # per-sub code POSITIONS (first-win argmin = (d2,cid)
-                # order over the cid-sorted books)
-                pos = np.empty((mm_, nok), dtype=np.int64)
-                for j in range(mm_):
-                    cmj = books_[j]
-                    Xs = X[:, j * sub_ : (j + 1) * sub_]
-                    accj = np.zeros(
-                        (nok, cmj.shape[0]), dtype=np.float64
-                    )
-                    for i in range(sub_):
-                        t = Xs[:, i : i + 1] - cmj[:, i]
-                        accj += t * t
-                    np.copyto(accj, np.inf, where=np.isnan(accj))
-                    pos[j] = np.argmin(accj, axis=1)
-                for qi in range(nq):
-                    cand = np.isin(cell, probes_[qi]) & (
-                        oids != qids_[qi]
-                    )
-                    cix = np.nonzero(cand)[0]
-                    if not len(cix):
-                        continue
-                    adc = np.zeros(len(cix), dtype=np.int64)
-                    for j in range(mm_):
-                        adc += qd2q_[qi, j][pos[j][cix]]
-                    order = np.lexsort((oids[cix], adc))[:kk]
-                    sel = cix[order]
-                    take = len(order)
-                    oq.append(
-                        np.full(take, qids_[qi], dtype=np.int64)
-                    )
-                    oi.append(oids[sel])
-                    os_.append(adc[order].astype(np.float64) / 1e6)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(oq)
-                        if oq
-                        else np.array([], dtype=np.int64),
-                        type=pa.int64(),
-                    ),
-                    pa.array(
-                        np.concatenate(oi)
-                        if oi
-                        else np.array([], dtype=np.int64),
-                        type=pa.int64(),
-                    ),
-                    pa.array(
-                        np.concatenate(os_)
-                        if os_
-                        else np.array([], dtype=np.float64),
-                        type=pa.float64(),
-                    ),
-                ],
-                names=["query_id", "neighbor_id", "approx_d2"],
+            icol = b.column("neighbor_id")
+            ok, X = P.decode(
+                b.column("embedding"), d, keep=np.asarray(icol.is_valid())
             )
+            oids = np.asarray(icol.fill_null(0)).astype(np.int64)[ok]
+            cell = env["cids"][P.nearest(X, env["cmat"])]
+            # per-sub code POSITIONS in the cid-sorted books
+            pos = [
+                P.nearest(X[:, j * sub : (j + 1) * sub], cw)
+                for j, cw in enumerate(env["books"])
+            ]
+            parts = []
+            for qi, qid in enumerate(qids_):
+                cix = np.nonzero(np.isin(cell, probes_[qi]) & (oids != qid))[0]
+                adc = np.zeros(len(cix), dtype=np.int64)
+                for j, pj in enumerate(pos):
+                    adc += qd2q_[qi, j][pj[cix]]
+                order = np.lexsort((oids[cix], adc))[:kk]
+                parts.append(
+                    (
+                        np.full(len(order), qid),
+                        oids[cix[order]],
+                        adc[order].astype(np.float64) / 1e6,
+                    )
+                )
+            yield from P.table(out_schema, parts).to_batches()
 
     return src.mapInArrow(score, out_schema)
 
@@ -2703,6 +2450,8 @@ def cosine_pairs_bipartite(
     """
     import numpy as np
 
+    from pyspark.sql import types as T
+
     t = F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int")
     c = corpus.select(
         "vec_id", "embedding", t.alias("tb"), F.lit(False).alias("is_left")
@@ -2714,33 +2463,25 @@ def cosine_pairs_bipartite(
         F.lit(True).alias("is_left"),
     )
 
-    stack, mm, table = _make_cosine_parts()
-    max_elems = MAX_BLOCK_ELEMS
+    P = _make_cosine_parts()
+    schema = T.StructType.fromDDL(
+        "new_id bigint, corpus_id bigint, cosine double"
+    )
 
     def block(tbl):
-        is_left = tbl.column("is_left").to_numpy()
-        L = tbl.filter(is_left)
-        R = tbl.filter(~is_left)
+        L, R = P.split(tbl)
         parts = []
         if L.num_rows and R.num_rows:
-            A, na = stack(L.column("embedding"))
-            B, nb = stack(R.column("embedding"))
+            A, na = P.stack(L.column("embedding"))
+            B, nb = P.stack(R.column("embedding"))
             lids = L.column("vec_id").to_numpy()
             rids = R.column("vec_id").to_numpy()
-            # same bounded chunk sweep as cosine_pairs: batch × tile can
-            # exceed worker memory when both sides grow
-            step = max(1, max_elems // max(len(rids), 1))
-            for lo in range(0, len(lids), step):
-                q = mm(A[lo : lo + step], na[lo : lo + step], B, nb)
+            for lo, q in P.sweep(A, na, B, nb):
                 ia, ib = np.where(np.isfinite(q) & (q >= threshold))
-                parts.append((lids[lo : lo + step][ia], rids[ib], q[ia, ib]))
-        return table(("new_id", "corpus_id", "cosine"), parts)
+                parts.append((lids[lo : lo + len(q)][ia], rids[ib], q[ia, ib]))
+        return P.table(schema, parts)
 
-    return (
-        nw.unionByName(c)
-        .groupBy("tb")
-        .applyInArrow(block, "new_id bigint, corpus_id bigint, cosine double")
-    )
+    return nw.unionByName(c).groupBy("tb").applyInArrow(block, schema)
 
 
 def ann_mrr(

@@ -17,13 +17,18 @@ Spark-native way:
   filter into a LITERAL ``cid IN (...)``), so the members scan
   prunes to the probed partition directories at PLANNING time —
   ``PartitionFilters`` in the physical plan, zero I/O for every
-  unprobed cell. At 100 TB this is the difference between scanning
-  the corpus per query batch and scanning nprobe/n_centroids of it.
+  unprobed cell. The pruned scan then feeds the shared Arrow scoring
+  kernel (``_topk_scores_arrow``) with each member's STORED cid as
+  its candidate key: the index paid for the assignment at build
+  time, so serving runs no centroid fold, one ``MapInArrow`` and the
+  per-query ranking window — no join. At 100 TB this is the
+  difference between scanning the corpus per query batch and
+  scanning nprobe/n_centroids of it.
 
 Semantics are bit-identical to ``similarity.ivf_topk`` (same
 deterministic first-N centroids, same assignment kernel, the same
 probe rule ``_py_nearest_cells`` — sequential-fold d2, (d2, cid)
-order, NaN last — same dec6→dec4 cosine, same rank), so the persisted
+order, NaN last — and the same scoring kernel), so the persisted
 path shares ``ann_ivf``'s DuckDB oracle verbatim: one semantics, two
 physical strategies.
 """
@@ -35,18 +40,18 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from rsbsa_etl_spark.functions.numeric import dec_round
 from rsbsa_etl_spark.functions.similarity import (
     ANN_QUERY_IDS,
     ANN_TOP_K,
     IVF_CENTROIDS,
     IVF_NPROBE,
     _assign_cells_arrow,
+    _collect_id_vecs,
     _cosine_rank,
+    _make_cosine_parts,
     _py_nearest_cells,
-    dot,
-    safe_div,
-    with_norm,
+    _query_rows,
+    _topk_scores_arrow,
 )
 
 
@@ -54,7 +59,7 @@ def build_ivf_index(
     emb: DataFrame, path: str, n_centroids: int = IVF_CENTROIDS
 ) -> None:
     """write the IVF index at ``path``: ``members/`` parquet
-    partitioned by cell id (embedding + norm stored so queries never
+    partitioned by cell id (vec_id + embedding, so queries never
     touch the source table) and ``centroids/`` (cid, embedding).
 
     One corpus pass, one write shuffle-free except the partitioned
@@ -63,21 +68,18 @@ def build_ivf_index(
     vec_id — the deterministic k-means-iteration-0 init every ann_*
     key uses; swapping trained centroids in changes only this table.
     """
-    e = with_norm(emb)
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("_vd").alias("vc")
+    cents = emb.where(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), "embedding"
     )
     members = _assign_cells_arrow(
-        e.select("vec_id", "embedding", F.col("_norm").alias("nrm")),
-        cents,
+        emb.select("vec_id", "embedding"),
+        cents.withColumnRenamed("embedding", "vc"),
         "embedding",
     )
     members.write.mode("overwrite").partitionBy("cid").parquet(
         os.path.join(path, "members")
     )
-    emb.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
 
 def append_to_ivf_index(new_emb: DataFrame, path: str) -> None:
@@ -93,18 +95,11 @@ def append_to_ivf_index(new_emb: DataFrame, path: str) -> None:
     batch (the assignment kernel), a partitioned append, zero
     contact with the existing members data.
     """
-    spark = new_emb.sparkSession
-    cents = spark.read.parquet(os.path.join(path, "centroids")).select(
-        F.col("cid"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "vc"
-        ),
-    )
-    e = with_norm(new_emb)
+    cents = new_emb.sparkSession.read.parquet(
+        os.path.join(path, "centroids")
+    ).select("cid", F.col("embedding").alias("vc"))
     members = _assign_cells_arrow(
-        e.select("vec_id", "embedding", F.col("_norm").alias("nrm")),
-        cents,
-        "embedding",
+        new_emb.select("vec_id", "embedding"), cents, "embedding"
     )
     members.write.mode("append").partitionBy("cid").parquet(
         os.path.join(path, "members")
@@ -114,7 +109,7 @@ def append_to_ivf_index(new_emb: DataFrame, path: str) -> None:
 def query_ivf_index(
     spark: SparkSession,
     path: str,
-    query_vecs: Sequence[tuple[int, list[float]]],
+    query_vecs: Sequence[tuple[int, list[float] | None]],
     k: int = ANN_TOP_K,
     nprobe: int = IVF_NPROBE,
     prune: bool = True,
@@ -129,69 +124,49 @@ def query_ivf_index(
     NaN distance ranked last), so the probe set is bit-identical.
     The result is a literal ``cid IN (...)`` on the partition
     column: the members scan shows ``PartitionFilters`` and reads
-    only the probed directories.
+    only the probed directories. The scoring kernel restricts each
+    query to the members whose stored cid it probes. A NULL, ragged
+    or centroid-mismatched query vector raises ``ValueError`` naming
+    the table, before any probe is computed.
 
     ``prune=False`` is the MEASUREMENT CONTROL, never the serving
     path: it drops the literal cell filter so the members scan reads
-    every partition (the probe join still restricts rows afterward,
-    so the result is identical) — tools/measure_serving.py uses it
-    to price exactly what partition pruning saves.
+    every partition (the kernel's stored-cid restriction still
+    applies, so the result is identical) — tools/measure_serving.py
+    uses it to price exactly what partition pruning saves.
     """
-    cents = sorted(
-        (r["cid"], [float(x) for x in r["embedding"]])
-        for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
+    cents = _collect_id_vecs(
+        spark.read.parquet(os.path.join(path, "centroids")), "cid", "embedding"
     )
-    probe_rows = [
-        (qid, cid)
-        for qid, vec in query_vecs
-        for cid in _py_nearest_cells([float(x) for x in vec], cents, nprobe)
+    qrows = [
+        (int(i), None if v is None else [float(x) for x in v])
+        for i, v in query_vecs
     ]
-    probe_cids = sorted({cid for _q, cid in probe_rows})
+    _make_cosine_parts().side_dims([("query", qrows), ("centroid", cents)])
+    cells = [_py_nearest_cells(v, cents, nprobe) for _, v in qrows]
 
     members = spark.read.parquet(os.path.join(path, "members"))
     if prune:
         # literal → partition pruning at planning time
-        members = members.where(F.col("cid").isin(probe_cids))
-    members = (
-        members
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-                "vn"
-            ),
-            F.col("nrm").alias("nn"),
-            F.col("cid").cast("bigint").alias("cid"),
+        members = members.where(
+            F.col("cid").isin(sorted({c for cs in cells for c in cs}))
         )
-    )
-    q = with_norm(
-        spark.createDataFrame(
-            [(int(i), v) for i, v in query_vecs],
-            "query_id bigint, embedding array<float>",
-        )
-    ).select(
-        "query_id", F.col("_vd").alias("vq"), F.col("_norm").alias("nq")
-    )
-    qp = spark.createDataFrame(probe_rows, "query_id bigint, cid bigint")
-    q_probe = q.join(qp, "query_id")
-
-    sim = dec_round(
-        safe_div(dot(F.col("vq"), F.col("vn")), F.col("nq") * F.col("nn")), 6
-    )
-    scored = (
-        members.join(F.broadcast(q_probe), "cid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
+    scored = _topk_scores_arrow(
+        members.select(F.col("vec_id").alias("neighbor_id"), "embedding", "cid"),
+        qrows,
+        "embedding",
+        "neighbor_id",
+        k,
+        probe=lambda _rows: cells,
+        cell_col="cid",
     )
     return _cosine_rank(scored, k)
 
 
 def query_vectors_from_table(
     emb: DataFrame, query_ids: Sequence[int] = ANN_QUERY_IDS
-) -> list[tuple[int, list[float]]]:
+) -> list[tuple[int, list[float] | None]]:
     """fetch the benchmark query vectors from the embeddings table —
     |query_ids| rows, the bounded collect that stands in for an
-    external query batch."""
-    rows = emb.where(F.col("vec_id").isin(list(query_ids))).collect()
-    return sorted(
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in rows
-    )
+    external query batch (``_query_rows``)."""
+    return _query_rows(emb, query_ids)

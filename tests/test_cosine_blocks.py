@@ -13,7 +13,10 @@ fixed-point cast.
   side tables (query, centroid, codeword seed): an empty table gives
   an empty frame of the operator's schema, a NULL, ragged or too
   short vector a ``ValueError`` naming the table and the cause;
-- ``_floor_long`` is Spark's floor→long cast.
+- ``_floor_long`` is Spark's floor→long cast;
+- each ANN kernel's corpus-row rule (NULL vector, NULL element,
+  ragged vector, NULL id) is pinned row for row, and the persisted
+  index names a NULL query vector.
 """
 
 from __future__ import annotations
@@ -52,8 +55,7 @@ def _arrow_inputs():
     "col", [c for _, c in _arrow_inputs()], ids=[n for n, _ in _arrow_inputs()]
 )
 def test_stack_is_bit_identical_to_per_row_decode(col):
-    stack, _mm, _table = S._make_cosine_parts()
-    A, na = stack(col)
+    A, na = S._make_cosine_parts().stack(col)
     # the decode the pandas kernels ran on each group's Series
     ref = np.stack([np.asarray(v, dtype=np.float64) for v in col.to_pandas()])
     assert A.dtype == np.float64 and A.shape == ref.shape
@@ -62,7 +64,7 @@ def test_stack_is_bit_identical_to_per_row_decode(col):
 
 
 def test_stack_rejects_null_and_ragged_vectors():
-    stack, _mm, _table = S._make_cosine_parts()
+    stack = S._make_cosine_parts().stack
     f32 = pa.list_(pa.float32())
     with pytest.raises(ValueError, match="NULL embedding"):
         stack(pa.array([[1.0, 2.0], None, [3.0, 4.0]], type=f32))
@@ -252,3 +254,196 @@ def test_mmr_pool_relevance_floors_negative_cosines(spark):
     }
     assert {r.doc_id: r.rel_i for r in pool} == want
     assert sum(v < 0 for v in want.values()) >= 2
+
+
+def _degenerate_corpus():
+    """48 random 64-d vectors (the oracles' width; the first 16 are the
+    IVF centroids and PQ seeds, ids 0-4 the queries) with one corpus
+    row of each degenerate class."""
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((48, 64)).astype(np.float32).tolist()
+    ids = list(range(48))
+    vecs[20] = None  # NULL vector
+    vecs[21][5] = None  # NULL element, inside the LSH mixing width
+    vecs[22] = vecs[22][:15]  # ragged, shorter than LSH_MIX_WIDTH
+    vecs[23] = vecs[23][:17]  # ragged, past it and one PQ subspace
+    ids[24] = None  # NULL id
+    return ids, vecs
+
+
+_DEGENERATE = {20, 21, 22, 23, None}
+
+
+def _ivf_cells_sql():
+    """``ivf_assignments`` as SQL: the argmin-cell CTE of the IVF
+    oracles, over every corpus row."""
+    from rsbsa_etl_spark.oracles import _EMB_CTE
+    from rsbsa_etl_spark.params import IVF_CENTROIDS
+
+    return f"""
+WITH {_EMB_CTE.strip()},
+cents AS (SELECT vec_id AS cid, v AS vc FROM n WHERE vec_id < {IVF_CENTROIDS}),
+corp_d AS (
+  SELECT a.vec_id AS nid, c.cid,
+         list_sum(list_transform(range(1, 65),
+                  i -> (a.v[i] - c.vc[i]) * (a.v[i] - c.vc[i]))) AS d2
+  FROM n a, cents c
+)
+SELECT nid AS vec_id, cid FROM (
+  SELECT nid, cid,
+         row_number() OVER (PARTITION BY nid ORDER BY d2 ASC, cid ASC) AS rn
+  FROM corp_d) WHERE rn = 1
+"""
+
+
+def _served_index(spark, emb, tmp_path):
+    from rsbsa_etl_spark.sources.ann_index import (
+        build_ivf_index,
+        query_ivf_index,
+        query_vectors_from_table,
+    )
+
+    path = str(tmp_path / "index")
+    build_ivf_index(emb, path)
+    return query_ivf_index(spark, path, query_vectors_from_table(emb))
+
+
+#: op → (build(spark, emb, tmp_path), oracle key or None for the
+#: assignment CTE, the op's rows that hold a degenerate id, and the
+#: sha256 of all its rows on the degenerate corpus)
+CORPUS_ROW_OPS = {
+    "lsh_topk": (
+        lambda spark, emb, tmp: S.lsh_topk(emb),
+        "ann_lsh",
+        set(),
+        "b2c4a9c9359ff1016997fb47bc19fdc0bff828831d94a42bd863124188a007ab",
+    ),
+    "lsh_multiprobe_topk": (
+        lambda spark, emb, tmp: S.lsh_multiprobe_topk(emb),
+        "ann_lsh_multiprobe",
+        {(2, 21, 0.0, 7), (4, 21, 0.0, 10)},
+        "c340174761a9acdfc34c2c35608d711f6683fb734c02017917ba9a5941ec05f1",
+    ),
+    "ivf_topk": (
+        lambda spark, emb, tmp: S.ivf_topk(emb),
+        "ann_ivf",
+        set(),
+        "6678f4d80adcfcce71992d9c25caafe963ffb600dc4d3299b59e7f24673a6ead",
+    ),
+    "ivfpq_topk": (
+        lambda spark, emb, tmp: S.ivfpq_topk(emb),
+        "ann_ivfpq",
+        {(0, 21, 71.9297, 3)},
+        "5e61b5022e5e4ef9f905625509c13e5a2ee61350ff7b7d976973aba98fb9d316",
+    ),
+    "pq_codes": (
+        lambda spark, emb, tmp: S.pq_codes(emb),
+        "embedding_pq",
+        {
+            (None, 11, 3, 15, 0, 65.152644),
+            (20, None, None, None, None, None),
+            (21, 0, 7, 11, 7, 54.713352),
+            (22, None, None, None, None, None),
+            (23, 4, None, None, None, 15.455469),
+        },
+        "88e27eedac3debae09b278cb742b1ea725bc9ef7d8b24b57e3e50c7ab4c1a51e",
+    ),
+    "ivf_assignments": (
+        lambda spark, emb, tmp: S.ivf_assignments(emb).select("vec_id", "cid"),
+        None,
+        {(20, None), (21, 0), (22, None), (23, None), (None, 11)},
+        "f93273e474257d0a68b96ff333b2ae1c3e3d7770ba1166ed775233d2a8305430",
+    ),
+    # the served index shares ivf_topk's semantics, so its digest too
+    "query_ivf_index": (
+        _served_index,
+        "ann_index_roundtrip",
+        set(),
+        "6678f4d80adcfcce71992d9c25caafe963ffb600dc4d3299b59e7f24673a6ead",
+    ),
+}
+
+
+def _rows_digest(rows) -> str:
+    import hashlib
+    import json
+
+    def norm(v):
+        return v.hex() if isinstance(v, float) else v
+
+    lines = sorted(json.dumps([norm(v) for v in r]) for r in rows)
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("op", sorted(CORPUS_ROW_OPS))
+def test_ann_corpus_rows_pin_degenerate_semantics(spark, op, tmp_path):
+    """the corpus-row rule of every ANN kernel, pinned on one corpus
+    holding a NULL vector, a NULL element, 15- and 17-long ragged
+    vectors and a NULL id:
+
+    - on the corpus without those rows, the op equals its DuckDB
+      oracle row for row;
+    - on the full corpus, the rows that hold a degenerate id are
+      exactly the listed ones, and all rows hash to the recorded
+      digest. The kernels' rule is not the oracles' there: a NULL or
+      ragged vector gets a NULL score, cell or code, or drops, and a
+      NULL element reads as NaN (cosine 0, lowest cell), where the
+      oracles' ``list_sum`` skips the NULL products."""
+    import duckdb
+    import pandas as pd
+
+    from rsbsa_etl_spark.oracles import ORACLES
+    from rsbsa_etl_spark.verify import canon
+
+    build, key, want_degenerate, digest = CORPUS_ROW_OPS[op]
+    ids, vecs = _degenerate_corpus()
+    schema = "vec_id long, embedding array<float>"
+    clean = [(i, v) for i, v in zip(ids, vecs) if i not in _DEGENERATE]
+    got = build(spark, spark.createDataFrame(clean, schema), tmp_path / "clean")
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in clean], pa.int64()),
+                "embedding": pa.array(
+                    [v for _, v in clean], pa.list_(pa.float32())
+                ),
+            }
+        ),
+    )
+    want = con.execute(ORACLES[key] if key else _ivf_cells_sql()).df()
+    con.close()
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(
+        canon(got.toPandas()), canon(want), check_dtype=False, rtol=0, atol=1e-9
+    )
+
+    rows = build(
+        spark, spark.createDataFrame(list(zip(ids, vecs)), schema), tmp_path
+    ).collect()
+    id_cols = [c for c in ("vec_id", "neighbor_id") if c in rows[0]]
+    held = {
+        tuple(r)
+        for r in rows
+        if any(r[c] in _DEGENERATE for c in id_cols)
+    }
+    assert held == want_degenerate
+    assert _rows_digest(rows) == digest
+
+
+def test_query_ivf_index_rejects_a_null_query_vector(spark, tmp_path):
+    from rsbsa_etl_spark.sources.ann_index import (
+        build_ivf_index,
+        query_ivf_index,
+    )
+
+    ids, vecs = _degenerate_corpus()
+    emb = spark.createDataFrame(
+        [(i, v) for i, v in zip(ids, vecs) if i not in _DEGENERATE],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "index")
+    build_ivf_index(emb, path)
+    with pytest.raises(ValueError, match="query table: 1 NULL embedding"):
+        query_ivf_index(spark, path, [(0, vecs[0]), (1, None)])
