@@ -157,25 +157,22 @@ def main(argv: list[str] | None = None) -> int:
             q.stop()  # graceful stop — the reference's SIGTERM path
             return 0
         if args.cmd == "explain":
-            # the plan-shape audit tests/test_plans.py runs per-key,
-            # as an interactive tool: what would this query do to a
-            # 100 TB cluster? (key validated pre-session, above)
-            df = QUERIES[args.key](spark, args.sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            # one key's PLANAUDIT row, from the same build the audit
+            # runs (fresh cache, captured loop and micro-batch plans
+            # summed), as an interactive tool: what would this query
+            # do to a 100 TB cluster? (key validated pre-session)
             import re as _re
 
-            from rsbsa_etl_spark.plans.audit import (
-                COUNTER_PATTERNS,
-                plan_counters,
-            )
+            from rsbsa_etl_spark.plans.audit import LABELS, key_plans, plan_row
 
-            print(f"key: {args.key}")
-            for key, n in plan_counters(plan).items():
-                label = COUNTER_PATTERNS[key][0]
-                print(f"  {label + ':':<28}{n}")
+            df, plans = key_plans(spark, args.key, args.sf_dir)
+            row = plan_row(args.key, plans)
+            print(f"key: {row.pop('key')}")
+            for field, n in row.items():
+                print(f"  {LABELS[field] + ':':<28}{n}")
             # Spark elides long filter lists with "..." (no closing
             # bracket), so cut at the line end and cap the width
-            pushed = _re.findall(r"PushedFilters: \[[^\n]*", plan)
+            pushed = _re.findall(r"PushedFilters: \[[^\n]*", plans[0][1])
             for pf in pushed[:4]:
                 print(f"  {pf[:100]}")
             # scale-dial pointers (registry.SCALE_DIALS): if this
@@ -195,19 +192,17 @@ def main(argv: list[str] | None = None) -> int:
                     "see SCALING.md)"
                 )
             if args.full:
-                print(plan)
+                print(
+                    df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"
+                    )
+                )
             return 0
         if args.cmd == "audit":
-            # the registry-wide counterpart of `explain` — one row of
-            # plan counters per key, written as the committed
-            # PLANAUDIT.json record (previously regenerated ad hoc;
-            # a CLI command makes the audit reproducible). Round 11:
-            # ZERO exclusions — keys whose DataFrame build executes
-            # work simply run (the verify gate pays the same cost per
-            # key), and streaming replays contribute their real
-            # micro-batch executed plans via streaming.plan_capture
-            # (see plans.audit.audit_key, shared with the pytest
-            # drift guard).
+            # the registry-wide counterpart of `explain`: one
+            # plans.audit.audit_key row per key, written as the
+            # committed PLANAUDIT.json record that tests/test_plans.py
+            # checks against the live plans
             import json as _json
 
             from rsbsa_etl_spark.plans.audit import audit_key

@@ -421,7 +421,8 @@ def _sync_fixture_state(spark: SparkSession, sf_dir: str, table: str) -> DataFra
 def sync_pipeline_o2o(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.1 end-to-end, one-to-one branch: watermark scan → validity
     filter → per-table keys → keyed re-fetch → uppercase transform →
-    upsert merge. Returns the final customer state."""
+    keyed overwrite, one incoming row per key. Returns the final
+    customer state."""
     out = _sync_fixture_state(spark, sf_dir, "customer")
     return out.select(
         F.col("rsbsa_no").alias("c_custkey"), "c_name", "c_mktsegment"

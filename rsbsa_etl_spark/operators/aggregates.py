@@ -54,16 +54,6 @@ def distinct_keys(df: DataFrame, *cols: str) -> DataFrame:
     return df.select(*cols).distinct()
 
 
-def run_totals(df: DataFrame, group_col: str, amount_col: str) -> DataFrame:
-    """A5: per-group totals + grand-total-friendly shape. The
-    reference folds counters batch-by-batch on the driver; one
-    ``groupBy`` with partial aggregation replaces the loop."""
-    return df.groupBy(group_col).agg(
-        F.count("*").alias("n_records"),
-        decimal_sum(amount_col, 2, "total_amount"),
-    )
-
-
 def conditional_aggs(lineitem: DataFrame) -> DataFrame:
     """FILTER-clause aggregation: several differently-predicated
     aggregates over one scan (count_if / filtered fixed-point sums /

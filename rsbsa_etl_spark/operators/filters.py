@@ -39,11 +39,6 @@ def validity_tag(df: DataFrame, cond: Column, tag_col: str = "validity") -> Data
     return df.withColumn(tag_col, F.when(cond, F.lit("valid")).otherwise(F.lit("invalid")))
 
 
-def non_empty_lines(df: DataFrame, col: str = "value") -> DataFrame:
-    """P6: drop blank lines (``index.js:228``)."""
-    return df.where(F.length(F.trim(F.col(col))) > 0)
-
-
 def observed_validity(df: DataFrame, cond: Column):
     """P4/A5 accounting as ``df.observe()``: the processed/skipped
     counters of the reference (``services/etlService.js:604-607``)

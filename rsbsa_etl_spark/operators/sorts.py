@@ -49,20 +49,6 @@ def top_k_recent(df: DataFrame, ts_col: str, tiebreak_col: str, k: int) -> DataF
     return df.orderBy(F.col(ts_col).desc(), F.col(tiebreak_col).desc()).limit(k)
 
 
-def top_k_per_group(
-    df: DataFrame, group_col: str, rank_col: str, k: int, ascending: bool = False
-) -> DataFrame:
-    """Grouped top-k via window rank — the scalable form of O3 when
-    "recent per entity" is needed (extension surface)."""
-    order = F.col(rank_col).asc() if ascending else F.col(rank_col).desc()
-    w = Window.partitionBy(group_col).orderBy(order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
 def zorder_key(a: Column, b: Column, bits: int = 8) -> Column:
     """Morton (Z-order) key: interleave the low ``bits`` of two
     dimensions — the space-filling-curve layout key that makes a

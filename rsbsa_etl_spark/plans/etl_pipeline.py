@@ -29,8 +29,7 @@ from rsbsa_etl_spark.functions.numeric import dec_round
 from rsbsa_etl_spark.functions.strings import UPPERCASE_RULES, apply_table_rules
 from rsbsa_etl_spark.operators.joins import dependent_join
 from rsbsa_etl_spark.operators.scans import incremental_scan, keyed_scan_df
-from rsbsa_etl_spark.operators.sync import overwrite_by_key, upsert_merge
-from rsbsa_etl_spark.schemas import ONE_TO_ONE_TABLES
+from rsbsa_etl_spark.operators.sync import overwrite_by_key
 
 
 @dataclass
@@ -125,12 +124,11 @@ def sync_table(
       (the scalable form of ``WHERE rsbsa_no IN (?)``,
       ``etlService.js:29``)
     - transform: per-table uppercase rules (F1/F2)
-    - merge: upsert for one-to-one tables, keyed overwrite for
-      one-to-many (``etlService.js:47-50``)
+    - merge: keyed overwrite for both of the reference's table
+      classes (``etlService.js:47-50``): ``upsert_merge`` would return
+      the same rows, since a left-anti join ignores duplicate keys
     """
     batch = apply_table_rules(keyed_scan_df(source, key_col, keys), table)
-    if table in ONE_TO_ONE_TABLES:
-        return upsert_merge(target, batch, key_col)
     return overwrite_by_key(target, batch, key_col)
 
 

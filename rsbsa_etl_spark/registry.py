@@ -416,32 +416,3 @@ SCALE_DIAL_OF: dict[str, list[str]] = {}
 for _exact, (_dial, _why) in SCALE_DIALS.items():
     SCALE_DIAL_OF.setdefault(_dial, []).append(_exact)
 
-
-#: keys whose DataFrame BUILD executes work (streaming replays,
-#: write paths, iterative driver loops) — excluded from PLAN-ONLY
-#: test passes (tests/test_plans.py's window allowlist), where
-#: building must stay lazy. The `audit` CLI no longer excludes
-#: anything (round 11): it executes every key via
-#: plans.audit.audit_key, capturing streaming micro-batch plans.
-AUDIT_EXCLUDE_PREFIXES = ("stream_", "sync_", "upsert_", "overwrite_")
-AUDIT_EXCLUDE = frozenset({
-    # per-round driver loops: building the DataFrame RUNS the loop
-    "bpe_train", "bpe_segment", "tokenizer_fertility_bpe",
-    "hybrid_search_rrf", "merge_cdc",
-    # building the DataFrame runs two jobs: the hybrid retrieval into
-    # the MMR pool persist (so the corpus cache can be released) and
-    # the greedy selection into the result-sized persist it returns
-    "hybrid_mmr",
-    # ingestion round-trips: building the DataFrame WRITES the
-    # tempdir it then reads back (ann_index_roundtrip also collects
-    # the centroid table driver-side to plant the partition filter)
-    "scan_jsonl_corrupt", "scan_csv_typed",
-    "scan_schema_evolution", "scan_orc_roundtrip",
-    "ann_index_roundtrip",
-    # building the DataFrame runs the one-pass √n cell-count sizing
-    "knn_graph_ivf", "graph_triangles_ivf", "hard_negatives_ivf",
-    # building the DataFrame eagerly materializes the persisted exact
-    # ranking (one count() so the brute-force scan builds exactly
-    # once — r9; see ann_eval's docstring)
-    "ann_recall", "ann_mrr", "ann_eval",
-})

@@ -190,13 +190,6 @@ LIVELIHOOD_SCHEMA = T.StructType(
     ]
 )
 
-#: tables synced one-to-one (upsert) vs one-to-many (overwrite) —
-#: mirrors ``ONE_TO_ONE_TABLES`` (``etlService.js:10-12``).
-ONE_TO_ONE_TABLES = frozenset(
-    {"farmers_kyc1", "farmers_kyc2", "farmers_kyc3", "farmers_kyc4", "farmer_profile"}
-)
-
-
 # ------------------------------------- full 12-table DDL inventory (K4)
 
 # The reference manages exactly twelve target tables, each created

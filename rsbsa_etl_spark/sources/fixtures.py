@@ -78,8 +78,3 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every fixture table (lazy — nothing is scanned yet)."""
     return {t: load(spark, sf_dir, t) for t in FIXTURE_TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for the SQL API."""
-    for t, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(t)

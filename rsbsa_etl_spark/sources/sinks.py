@@ -121,72 +121,6 @@ def _existing_buckets(spark: SparkSession, path: str, buckets) -> list[str]:
     return [d for d in dirs if fs.exists(jvm.org.apache.hadoop.fs.Path(d))]
 
 
-def upsert_into(
-    updates: DataFrame, path: str, key_col: str, n_buckets: int = 64
-) -> None:
-    """K2 (last-write-wins upsert) against parquet storage: the same
-    bucket-pruned rewrite — an upsert IS a keyed overwrite whose
-    incoming batch carries exactly one row per key."""
-    overwrite_by_key_into(updates, path, key_col, n_buckets)
-
-
-#: table formats we know how to drive, in preference order. Delta
-#: and Iceberg need their runtime jars + catalog config on the
-#: cluster; this container ships neither, so availability is probed
-#: at call time and the caller can fall back to plain parquet.
-TABLE_FORMATS = ("delta", "iceberg", "parquet")
-
-
-def table_format_available(spark: SparkSession, fmt: str) -> bool:
-    """probe whether a lakehouse table format is usable in THIS
-    session. Parquet is built in; Delta/Iceberg are detected by
-    their DataSource registration (the jar must be on the Spark
-    classpath — a Python-side ``import delta`` alone is not enough,
-    so the probe asks the JVM, not pip)."""
-    if fmt == "parquet":
-        return True
-    if fmt not in TABLE_FORMATS:
-        return False
-    try:
-        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-            fmt, spark._jsparkSession.sessionState().conf()
-        )
-        return True
-    except Exception:
-        return False
-
-
-def write_managed_table(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    fmt: str = "delta",
-    n_buckets: int = 64,
-) -> str:
-    """write a key-bucketed target in a lakehouse format when its
-    runtime is present, falling back down ``TABLE_FORMATS`` to
-    parquet otherwise. Returns the format actually used.
-
-    On a real cluster the Delta/Iceberg path replaces
-    ``overwrite_by_key_into``'s read-merge-rewrite with a
-    transactional ``MERGE INTO`` commit; the bucket layout and plan
-    shape are identical (see module docstring), which is what lets
-    this fall back without changing any caller's semantics.
-    """
-    for candidate in (fmt, *TABLE_FORMATS):
-        if table_format_available(df.sparkSession, candidate):
-            (
-                df.withColumn(BUCKET_COL, bucket_of(key_col, n_buckets))
-                .repartition(BUCKET_COL)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .format(candidate)
-                .save(path)
-            )
-            return candidate
-    raise AssertionError("parquet is always available")  # pragma: no cover
-
-
 def compact_files(
     spark: SparkSession,
     path: str,

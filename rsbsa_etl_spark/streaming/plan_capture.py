@@ -11,10 +11,11 @@ riskiest surface got the least plan evidence. The fix is one shared
 helper: every replay's ``q.awaitTermination()`` call site becomes
 ``finish(q, tag)``, which waits exactly as before and then records
 the query's LAST micro-batch executed plan (Spark keeps the final
-``IncrementalExecution`` on the terminated query object). The audit
-CLI (``python -m rsbsa_etl_spark audit`` → ``plans.audit.audit_key``)
-clears ``CAPTURED`` before building a key and merges whatever
-accumulated into that key's counters — so a streaming key's
+``IncrementalExecution`` on the terminated query object). The plan
+audit (``plans.audit.key_plans``, behind the ``explain`` and ``audit``
+CLI commands and tests/test_plans.py) clears ``CAPTURED`` before
+building a key and merges whatever accumulated into that key's
+counters — so a streaming key's
 PLANAUDIT row now counts its real stateful micro-batch plan
 (StateStoreSave, streaming dedup/session operators, any Python
 stages), not the trivial sink read-back.
@@ -55,7 +56,7 @@ class _AuditGate:
         self.enabled = False
 
 
-#: open during ``plans.audit.audit_key`` builds only
+#: open during ``plans.audit.key_plans`` builds only
 AUDIT_GATE = _AuditGate()
 
 

@@ -32,7 +32,12 @@ def test_status_reports_session(spark, capsys):
 
 
 def test_explain_audits_plan(spark, capsys):
+    """`explain` prints the PLANAUDIT row of the same build `audit`
+    runs: a driver-loop key's captured merge-round plans and a
+    streaming replay's micro-batch plan are summed into its counters,
+    not dropped for the returned frame's plan alone."""
     from rsbsa_etl_spark.__main__ import main
+    from rsbsa_etl_spark.plans.audit import LABELS, audit_key
 
     from tests.conftest import SF_DIR
 
@@ -41,6 +46,25 @@ def test_explain_audits_plan(spark, capsys):
     assert "sort-merge joins:           0" in out
     assert "broadcast joins:            2" in out
     assert main(["explain", "no_such_key"]) == 2
+    assert main(
+        ["explain", "join_bloom_pruned", "--sf-dir", SF_DIR, "--full"]
+    ) == 0
+    assert "== Physical Plan ==" in capsys.readouterr().out
+
+    for key in ("bpe_train", "stream_tail"):
+        assert main(["explain", key, "--sf-dir", SF_DIR]) == 0
+        out = capsys.readouterr().out
+        printed = {}
+        for line in out.splitlines():
+            label, _sep, n = line.strip().rpartition(":")
+            if label in LABELS.values():
+                printed[label] = int(n)
+        row = audit_key(spark, key, SF_DIR)
+        assert row.pop("key") == key
+        assert printed == {LABELS[field]: n for field, n in row.items()}
+        assert row["scans"] > 0 and (
+            row.get("loop_plans") or row.get("micro_batch_plans")
+        )
 
 
 def test_explain_points_at_scale_dial(spark, capsys):

@@ -473,32 +473,6 @@ def test_tpch_plan_contracts(spark, key):
         assert "PushedFilters: [" in plan
 
 
-def test_registry_plan_hygiene(spark):
-    """engine-wide physical-plan invariants, every batch query:
-
-    - no CartesianProduct anywhere (join_cross is explicit and
-      compiles to BroadcastNestedLoopJoin, which is allowed);
-    - no BatchEvalPython (row-at-a-time Python UDF) — every Python
-      path must be Arrow-batched (MapInPandas / MapInArrow /
-      FlatMapGroupsInArrow / FlatMapCoGroupsInPandas /
-      ArrowEvalPython / PythonUDTF).
-
-    Streaming replays are excluded (building them runs real
-    streaming jobs; their semantics are value-checked elsewhere).
-    """
-    skip = {k for k in QUERIES if k.startswith("stream_")}
-    bad = []
-    for key, fn in QUERIES.items():
-        if key in skip:
-            continue
-        plan = _plan(fn(spark, SF_DIR))
-        if "CartesianProduct" in plan:
-            bad.append((key, "CartesianProduct"))
-        if "BatchEvalPython" in plan:
-            bad.append((key, "BatchEvalPython"))
-    assert not bad, bad
-
-
 def test_cumdistinct_single_exchange(spark):
     # the first-occurrence flag must ride the same user_id
     # partitioning as the cumulative sum — one exchange, two sorts
@@ -889,67 +863,75 @@ GLOBAL_WINDOW_ALLOWLIST = {
     "value_ecdf": 1,
 }
 
-#: plan-buildable batch keys: building these DataFrames is lazy. The
-#: exclusion set lives in the registry (shared with the `audit` CLI
-#: command so the two can't drift).
-from rsbsa_etl_spark.registry import (  # noqa: E402
-    AUDIT_EXCLUDE as _AUDIT_EXCLUDE,
-    AUDIT_EXCLUDE_PREFIXES as _AUDIT_EXCLUDE_PREFIXES,
-)
+
+@pytest.fixture(scope="module")
+def audit_rows(spark):
+    """every registry key's PLANAUDIT row, built once by the audit's
+    own ``audit_key`` (fresh cache, captured loop and micro-batch
+    plans summed) in the `audit` CLI's key order, at its default SF.
+    A key whose build raises is recorded as ``{"error": ...}``, so one
+    broken key fails the tests below by name instead of aborting the
+    walk."""
+    from rsbsa_etl_spark.plans.audit import audit_key
+
+    rows = {}
+    for k in sorted(QUERIES):
+        try:
+            rows[k] = audit_key(spark, k, SF_DIR)
+        except Exception as e:  # noqa: BLE001 — reported per key
+            rows[k] = {"key": k, "error": f"{type(e).__name__}: {e}"}
+    return rows
 
 
-def _unpartitioned_windows(plan: str) -> int:
-    import re
-
-    n = 0
-    for m in re.finditer(
-        r"windowspecdefinition\(([^)]*?)specifiedwindowframe", plan
-    ):
-        first = m.group(1).split(",")[0]
-        if " ASC" in first or " DESC" in first:
-            n += 1
-    return n
+def _build_errors(rows: dict) -> dict:
+    return {k: r["error"] for k, r in rows.items() if "error" in r}
 
 
-def test_no_unplanned_global_windows(spark):
+def test_registry_plan_hygiene(audit_rows):
+    """engine-wide physical-plan invariants, every registry key,
+    captured streaming micro-batch and driver-loop plans included:
+
+    - no CartesianProduct anywhere (join_cross is explicit and
+      compiles to BroadcastNestedLoopJoin, which is allowed);
+    - no BatchEvalPython (row-at-a-time Python UDF) — every Python
+      path must be Arrow-batched (MapInPandas / MapInArrow /
+      FlatMapGroupsInArrow / FlatMapCoGroupsInPandas /
+      ArrowEvalPython / PythonUDTF).
+    """
+    assert _build_errors(audit_rows) == {}
+    bad = {
+        k: {c: r[c] for c in ("cartesian", "rowpy") if r[c]}
+        for k, r in audit_rows.items()
+        if r["cartesian"] or r["rowpy"]
+    }
+    assert bad == {}
+
+
+def test_no_unplanned_global_windows(audit_rows):
     """registry-wide: every single-partition window must be on the
     documented allowlist with its exact count — the machine-checked
     replacement for the suppressed WindowExec warning."""
-    keys = [
-        k
-        for k in QUERIES
-        if not k.startswith(_AUDIT_EXCLUDE_PREFIXES)
-        and k not in _AUDIT_EXCLUDE
-    ]
-    got = {}
-    for k in keys:
-        plan = _plan(QUERIES[k](spark, SF_DIR))
-        n = _unpartitioned_windows(plan)
-        if n:
-            got[k] = n
+    assert _build_errors(audit_rows) == {}
+    got = {
+        k: r["global_windows"]
+        for k, r in audit_rows.items()
+        if r["global_windows"]
+    }
     assert got == GLOBAL_WINDOW_ALLOWLIST, (
         "unpartitioned-window audit drifted — new unplanned global "
         f"window or stale allowlist: got {got}"
     )
 
 
-def test_committed_planaudit_matches_live_plans(spark):
+def test_committed_planaudit_matches_live_plans(audit_rows):
     """drift guard for the committed PLANAUDIT.json: the record is
     regenerated by hand (`python -m rsbsa_etl_spark audit`), so a
-    code change that alters plan shape could silently stale it. A
-    deterministic sample of keys spanning the counter space (joins,
-    windows, Arrow stages, the round-7 additions, and — round 11 —
-    a streaming replay with captured micro-batch plans plus two
-    previously-excluded build-executes-work keys, and — round 12 —
-    two driver-loop keys whose rows sum the captured per-iteration
-    plans, exercising the AUDIT_GATE open/close path) must match the
-    committed rows counter-for-counter at the audit's own SF; a
-    mismatch means re-run the audit CLI and commit the refreshed
-    JSON alongside the code change."""
+    code change that alters plan shape could silently stale it.
+    Every key's live row must equal its committed row field for
+    field; a mismatch means re-run the audit CLI and commit the
+    refreshed JSON alongside the code change."""
     import json
     from pathlib import Path
-
-    from rsbsa_etl_spark.plans.audit import audit_key
 
     committed = {
         r["key"]: r
@@ -958,25 +940,11 @@ def test_committed_planaudit_matches_live_plans(spark):
             .read_text()
         )
     }
-    sample = [
-        "scan_filter_in", "join_semi", "agg_sum_groups",
-        "window_ewma", "dedup_minhash", "multimodal_features",
-        "source_overlap_kmv", "source_overlap_kmv_sketch",
-        "winsorize_stats", "token_gini",
-        "stream_tail", "ann_eval", "scan_orc_roundtrip",
-        "bpe_train", "mmr_rerank", "knn_graph_ivf",
-    ]
-    drift = {}
-    for k in sample:
-        assert k in committed, f"{k} missing from PLANAUDIT.json"
-        # the SAME row builder the audit CLI runs (fresh-cache
-        # discipline, streaming micro-batch capture) — importing it
-        # means the guard can't pin a stale re-implementation
-        live = audit_key(spark, k, "/root/testdata/sf0.001")
-        live.pop("key")
-        want = {c: committed[k].get(c) for c in live}
-        if live != want:
-            drift[k] = {"live": live, "committed": want}
+    drift = {
+        k: {"live": audit_rows.get(k), "committed": committed.get(k)}
+        for k in sorted(set(audit_rows) | set(committed))
+        if audit_rows.get(k) != committed.get(k)
+    }
     assert drift == {}, (
         "PLANAUDIT.json is stale for these keys — regenerate with "
         f"`python -m rsbsa_etl_spark audit` and commit: {drift}"

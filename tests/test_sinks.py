@@ -180,7 +180,7 @@ def test_upsert_into_matches_plan_semantics(spark, tmp_path):
         "c_name", F.upper(F.col("c_name"))
     )
     sinks.write_keyed_target(target, path, "c_custkey", N_BUCKETS)
-    sinks.upsert_into(updates, path, "c_custkey", N_BUCKETS)
+    sinks.overwrite_by_key_into(updates, path, "c_custkey", N_BUCKETS)
     got = sorted(
         map(
             tuple,
@@ -199,30 +199,11 @@ def test_upsert_into_is_idempotent(spark, tmp_path):
     target = cust.where(F.col("c_custkey") % 2 == 0)
     updates = cust.where(F.col("c_custkey") % 3 == 0)
     sinks.write_keyed_target(target, path, "c_custkey", N_BUCKETS)
-    sinks.upsert_into(updates, path, "c_custkey", N_BUCKETS)
+    sinks.overwrite_by_key_into(updates, path, "c_custkey", N_BUCKETS)
     once = sorted(map(tuple, sinks.read_keyed_target(spark, path).collect()))
-    sinks.upsert_into(updates, path, "c_custkey", N_BUCKETS)
+    sinks.overwrite_by_key_into(updates, path, "c_custkey", N_BUCKETS)
     twice = sorted(map(tuple, sinks.read_keyed_target(spark, path).collect()))
     assert once == twice
-
-
-def test_write_managed_table_falls_back_to_parquet(spark, tmp_path):
-    """no Delta/Iceberg runtime in this container: the probe must
-    say so and the writer must land a readable parquet table."""
-    assert sinks.table_format_available(spark, "parquet")
-    assert not sinks.table_format_available(spark, "delta")
-    assert not sinks.table_format_available(spark, "iceberg")
-    assert not sinks.table_format_available(spark, "no_such_format")
-
-    cust = load(spark, SF_DIR, "customer").select("c_custkey", "c_name")
-    path = str(tmp_path / "managed")
-    used = sinks.write_managed_table(cust, path, "c_custkey", fmt="delta")
-    assert used == "parquet"
-    back = spark.read.parquet(path)
-    assert back.count() == cust.count()
-    assert sorted(r.c_custkey for r in back.select("c_custkey").collect()) == sorted(
-        r.c_custkey for r in cust.select("c_custkey").collect()
-    )
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
