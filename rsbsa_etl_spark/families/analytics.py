@@ -8,28 +8,11 @@ every wrapper, and each key's oracle stays in oracles.ORACLES.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from rsbsa_etl_spark import params as P
-from rsbsa_etl_spark.functions import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-)
-from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
-from rsbsa_etl_spark.functions.strings import apply_table_rules
-from rsbsa_etl_spark.functions.temporal import duration_hms, format_manila
-from rsbsa_etl_spark.functions.textparse import parse_log_lines, render_log_lines
-from rsbsa_etl_spark.operators import aggregates, filters, joins, scans, sorts, sync
-from rsbsa_etl_spark.operators.aggregates import decimal_sum
+from rsbsa_etl_spark.functions import textstats
+from rsbsa_etl_spark.scratch import scratch_dir
 from rsbsa_etl_spark.sources.fixtures import load
-from rsbsa_etl_spark.streaming import windows as win
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,7 +177,6 @@ def scan_jsonl_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the sharded layout as-is.
     """
     import os
-    import tempfile
 
     from pyspark.sql.types import (
         LongType,
@@ -217,7 +199,7 @@ def scan_jsonl_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("doc_id"), F.lit(1)) % 97 == 0,
         F.substring(line, 1, F.length(line) - 1),
     ).otherwise(line)
-    path = os.path.join(tempfile.mkdtemp(prefix="rsbsa_jsonl_"), "docs")
+    path = os.path.join(scratch_dir("rsbsa_jsonl_"), "docs")
     docs.select(corrupted.alias("value")).coalesce(1).write.mode(
         "overwrite"
     ).text(path)
@@ -256,7 +238,6 @@ def scan_csv_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     original table — pinning that the CSV writer/parser pair loses
     nothing (doubles round-trip through Spark's repr)."""
     import os
-    import tempfile
 
     from pyspark.sql.types import (
         DoubleType,
@@ -272,7 +253,7 @@ def scan_csv_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="rsbsa_csv_"), "li")
+    path = os.path.join(scratch_dir("rsbsa_csv_"), "li")
     li.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
     schema = StructType(
@@ -312,10 +293,9 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-fill semantics either way.
     """
     import os
-    import tempfile
 
     orders = load(spark, sf_dir, "orders")
-    base = os.path.join(tempfile.mkdtemp(prefix="rsbsa_evo_"), "orders")
+    base = os.path.join(scratch_dir("rsbsa_evo_"), "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     a = orders.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", cents.alias("cents")
@@ -342,7 +322,6 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet — pinning that the second columnar path loses nothing
     (types, nulls, values)."""
     import os
-    import tempfile
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -351,7 +330,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("qty_cents"),
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="rsbsa_orc_"), "li")
+    path = os.path.join(scratch_dir("rsbsa_orc_"), "li")
     li.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("l_linestatus").agg(

@@ -8,28 +8,14 @@ every wrapper, and each key's oracle stays in oracles.ORACLES.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from rsbsa_etl_spark import params as P
-from rsbsa_etl_spark.functions import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-)
+from rsbsa_etl_spark.functions import curation, dedup, multimodal, textstats
 from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
-from rsbsa_etl_spark.functions.strings import apply_table_rules
-from rsbsa_etl_spark.functions.temporal import duration_hms, format_manila
-from rsbsa_etl_spark.functions.textparse import parse_log_lines, render_log_lines
-from rsbsa_etl_spark.operators import aggregates, filters, joins, scans, sorts, sync
-from rsbsa_etl_spark.operators.aggregates import decimal_sum
+from rsbsa_etl_spark.operators import filters
 from rsbsa_etl_spark.sources.fixtures import load
 from rsbsa_etl_spark.streaming import windows as win
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,8 +184,8 @@ def ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle) are ann_ivf's verbatim: one semantics, two physical
     strategies."""
     import os
-    import tempfile
 
+    from rsbsa_etl_spark.scratch import scratch_dir
     from rsbsa_etl_spark.sources.ann_index import (
         build_ivf_index,
         query_ivf_index,
@@ -207,7 +193,7 @@ def ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    path = os.path.join(tempfile.mkdtemp(prefix="rsbsa_ivf_"), "index")
+    path = os.path.join(scratch_dir("rsbsa_ivf_"), "index")
     build_ivf_index(emb, path)
     return query_ivf_index(spark, path, query_vectors_from_table(emb))
 

@@ -8,28 +8,10 @@ every wrapper, and each key's oracle stays in oracles.ORACLES.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from rsbsa_etl_spark import params as P
-from rsbsa_etl_spark.functions import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-)
-from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
-from rsbsa_etl_spark.functions.strings import apply_table_rules
-from rsbsa_etl_spark.functions.temporal import duration_hms, format_manila
-from rsbsa_etl_spark.functions.textparse import parse_log_lines, render_log_lines
-from rsbsa_etl_spark.operators import aggregates, filters, joins, scans, sorts, sync
-from rsbsa_etl_spark.operators.aggregates import decimal_sum
+from rsbsa_etl_spark.functions import curation, dedup, similarity
 from rsbsa_etl_spark.sources.fixtures import load
-from rsbsa_etl_spark.streaming import windows as win
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,28 +8,12 @@ every wrapper, and each key's oracle stays in oracles.ORACLES.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rsbsa_etl_spark import params as P
-from rsbsa_etl_spark.functions import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-)
-from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum
-from rsbsa_etl_spark.functions.strings import apply_table_rules
-from rsbsa_etl_spark.functions.temporal import duration_hms, format_manila
-from rsbsa_etl_spark.functions.textparse import parse_log_lines, render_log_lines
-from rsbsa_etl_spark.operators import aggregates, filters, joins, scans, sorts, sync
-from rsbsa_etl_spark.operators.aggregates import decimal_sum
+from rsbsa_etl_spark.functions.textparse import render_log_lines
 from rsbsa_etl_spark.sources.fixtures import load
 from rsbsa_etl_spark.streaming import windows as win
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,8 +23,8 @@ def stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     well-formed ``[ts] event_type``, so the engine output is
     value-checked against plain SQL over the same fixture."""
     import os
-    import tempfile
 
+    from rsbsa_etl_spark.scratch import scratch_dir
     from rsbsa_etl_spark.streaming.tail import run_tail_once
 
     ev = load(spark, sf_dir, "events")
@@ -51,7 +35,7 @@ def stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_s",
         "event_type",
     )
-    log_dir = os.path.join(tempfile.mkdtemp(prefix="rsbsa_tail_"), "logs")
+    log_dir = os.path.join(scratch_dir("rsbsa_tail_"), "logs")
     lines.coalesce(1).write.mode("overwrite").text(log_dir)
     return run_tail_once(spark, log_dir, query_name="stream_tail_out")
 

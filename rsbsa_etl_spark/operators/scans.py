@@ -93,10 +93,10 @@ def partition_pruned_scan(
     rewrite is layout-only, so the oracle is the plain filter over
     the original data.
     """
-    import tempfile
+    from rsbsa_etl_spark.scratch import scratch_dir
 
     spark = events.sparkSession
-    path = tempfile.mkdtemp(prefix="rsbsa_part_") + "/t"
+    path = scratch_dir("rsbsa_part_") + "/t"
     (
         events.select("event_id", "user_id", part_col)
         .write.mode("overwrite")

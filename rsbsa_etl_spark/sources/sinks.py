@@ -235,11 +235,12 @@ def bucketed_join(
     is a physical layout property, never semantics, which is what
     the oracle (the plain join SQL) pins.
     """
-    import tempfile
     import uuid
 
+    from rsbsa_etl_spark.scratch import scratch_dir
+
     if db_dir is None:
-        db_dir = tempfile.mkdtemp(prefix="rsbsa_buck_")
+        db_dir = scratch_dir("rsbsa_buck_")
     tag = uuid.uuid4().hex[:8]
     lt, rt = f"buck_l_{tag}", f"buck_r_{tag}"
     # explicit LOCATION per table: the warehouse dir is a static conf

@@ -14,14 +14,9 @@ phase 1's persisted state store.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, functions as F
 
-from rsbsa_etl_spark.streaming.plan_capture import finish
+from rsbsa_etl_spark.streaming.replay import Replay, file_sink
 
 
 def _phased_join_replay(
@@ -34,34 +29,17 @@ def _phased_join_replay(
     add phase-2 clicks, resume from the same checkpoint; read the
     union of emitted pairs."""
     spark = events.sparkSession
-    base = tempfile.mkdtemp(prefix="rsbsa_ssj_")
-    src_c, src_v = f"{base}/clicks", f"{base}/views"
-    ckpt, out = f"{base}/ckpt", f"{base}/out"
-    os.makedirs(src_c)
-    os.makedirs(src_v)
-
+    r = Replay(
+        spark,
+        "rsbsa_ssj_",
+        "event_id bigint, ts timestamp, user_id bigint",
+        sources=("clicks", "views"),
+    )
     proj = events.select("event_id", "ts", "user_id", "event_type")
-    schema = "event_id bigint, ts timestamp, user_id bigint"
-
-    def dump(df: DataFrame, dest: str, name: str) -> None:
-        tmp = f"{base}/_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], f"{dest}/{name}")
-        shutil.rmtree(tmp)
 
     def run_phase() -> None:
-        clicks = (
-            spark.readStream.schema(schema)
-            .parquet(src_c)
-            .withWatermark("ts", delay)
-            .alias("c")
-        )
-        views = (
-            spark.readStream.schema(schema)
-            .parquet(src_v)
-            .withWatermark("ts", delay)
-            .alias("v")
-        )
+        clicks = r.stream("clicks").withWatermark("ts", delay).alias("c")
+        views = r.stream("views").withWatermark("ts", delay).alias("v")
         joined = clicks.join(
             views,
             F.expr(
@@ -72,24 +50,16 @@ def _phased_join_replay(
             F.col("c.event_id").alias("click_id"),
             F.col("v.event_id").alias("view_id"),
         )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finish(q, "joins.run_phase")
+        r.drain(file_sink(joined, r.out), "joins.run_phase")
 
     views = proj.where(F.col("event_type") == "view").drop("event_type")
     clicks = proj.where(F.col("event_type") == "click").drop("event_type")
-    dump(views, src_v, "views.parquet")
-    dump(clicks.where(phase1_clicks), src_c, "clicks_p1.parquet")
+    r.dump(views, "views.parquet", "views")
+    r.dump(clicks.where(phase1_clicks), "clicks_p1.parquet", "clicks")
     run_phase()
-    dump(clicks.where(~phase1_clicks), src_c, "clicks_p2.parquet")
+    r.dump(clicks.where(~phase1_clicks), "clicks_p2.parquet", "clicks")
     run_phase()
-    return spark.read.parquet(out).select("click_id", "view_id")
+    return spark.read.parquet(r.out).select("click_id", "view_id")
 
 
 def click_view_join_replay(

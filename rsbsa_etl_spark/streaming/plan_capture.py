@@ -8,10 +8,11 @@ key ("building the DataFrame runs real streaming jobs"), so the
 0-row-python / no-cartesian invariants were never checked against
 the plans that actually execute inside the streaming engine — the
 riskiest surface got the least plan evidence. The fix is one shared
-helper: every replay's ``q.awaitTermination()`` call site becomes
-``finish(q, tag)``, which waits exactly as before and then records
-the query's LAST micro-batch executed plan (Spark keeps the final
-``IncrementalExecution`` on the terminated query object). The plan
+helper, ``finish(q, tag)``, called in place of ``q.awaitTermination()``
+by the replay scaffold's drain (``streaming.replay.Replay.drain``),
+the log tail and the sync stream: it waits exactly as before and
+then records the query's LAST micro-batch executed plan (Spark keeps
+the final ``IncrementalExecution`` on the terminated query object). The plan
 audit (``plans.audit.key_plans``, behind the ``explain`` and ``audit``
 CLI commands and tests/test_plans.py) clears ``CAPTURED`` before
 building a key and merges whatever accumulated into that key's

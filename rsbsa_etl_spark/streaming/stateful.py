@@ -32,13 +32,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from rsbsa_etl_spark.streaming.plan_capture import finish
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
     StructField,
     StructType,
+)
+
+from rsbsa_etl_spark.streaming.replay import (
+    Replay,
+    availablenow_replay,
+    fold_into_state,
+    state_replay,
 )
 
 TOTALS_OUTPUT = StructType(
@@ -138,45 +144,21 @@ def run_totals_replay(events: DataFrame) -> DataFrame:
     state is ``max`` over the emitted updates — and equals the plain
     batch aggregation, which is the DuckDB oracle.
     """
-    import os
-    import tempfile
-
     spark = events.sparkSession
-    base = tempfile.mkdtemp(prefix="rsbsa_stateful_")
-    src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
-    os.makedirs(src)
-    os.makedirs(out)
-
+    r = Replay(spark, "rsbsa_stateful_", "event_id bigint, user_id bigint, value double")
     proj = events.select("event_id", "user_id", "value")
-    schema = "event_id bigint, user_id bigint, value double"
 
-    def dump(df: DataFrame, name: str) -> None:
-        from rsbsa_etl_spark.streaming.windows import dump_single_file
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(r.out)
 
-        dump_single_file(df, base, src, name)
-
-    def run_phase() -> None:
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            running_user_totals(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finish(q, "stateful.run_phase")
-
-    dump(proj.where(F.col("event_id") % 2 == 0), "f1.parquet")
-    run_phase()
-    dump(proj.where(F.col("event_id") % 2 != 0), "f2.parquet")
-    run_phase()
-    updates = spark.read.parquet(out)
-    return updates.groupBy("user_id").agg(
+    r.phases(
+        [proj.where(F.col("event_id") % 2 == 0), proj.where(F.col("event_id") % 2 != 0)],
+        lambda stream: (
+            running_user_totals(stream).writeStream.outputMode("update").foreachBatch(sink)
+        ),
+        "stateful.run_totals_replay",
+    )
+    return spark.read.parquet(r.out).groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("total_value").alias("total_value"),
     )
@@ -199,52 +181,27 @@ def dedup_replay(events: DataFrame, redeliver_mod: int = 6) -> DataFrame:
     horizon, not per event ever seen; the delay is sized to the
     redelivery window, not the stream's lifetime.
     """
-    import os
-    import tempfile
-
     from rsbsa_etl_spark.functions.numeric import dec_round
-
-    spark = events.sparkSession
-    base = tempfile.mkdtemp(prefix="rsbsa_sdedup_")
-    src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
-    os.makedirs(src)
 
     proj = events.select(
         "event_id", "ts", "event_type", dec_round(F.col("value"), 2).alias("value")
     )
-    schema = "event_id bigint, ts timestamp, event_type string, value double"
-
-    def dump(df: DataFrame, name: str) -> None:
-        from rsbsa_etl_spark.streaming.windows import dump_single_file
-
-        dump_single_file(df, base, src, name)
-
-    def run_phase() -> None:
-        stream = spark.readStream.schema(schema).parquet(src)
-        deduped = stream.withWatermark("ts", "45 days").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finish(q, "stateful.run_phase")
-
     even = F.col("event_id") % 2 == 0
-    dump(proj.where(even), "f1.parquet")
-    run_phase()
-    dump(
-        proj.where(~even).unionByName(
-            proj.where(even & (F.col("event_id") % redeliver_mod == 0))
-        ),
-        "f2.parquet",
-    )
-    run_phase()
-    return spark.read.parquet(out).select("event_id", "event_type", "value")
+    redelivered = proj.where(even & (F.col("event_id") % redeliver_mod == 0))
+    return availablenow_replay(
+        events.sparkSession,
+        [proj.where(even), proj.where(~even).unionByName(redelivered)],
+        "event_id bigint, ts timestamp, event_type string, value double",
+        lambda stream: stream.withWatermark(
+            "ts", "45 days"
+        ).dropDuplicatesWithinWatermark(["event_id"]),
+        prefix="rsbsa_sdedup_",
+    ).select("event_id", "event_type", "value")
+
+
+def _by_parity(df: DataFrame, col: str) -> list[DataFrame]:
+    """two phases split by ``col`` parity, so both interleave keys."""
+    return [df.where(F.col(col) % 2 == 0), df.where(F.col(col) % 2 == 1)]
 
 
 def sample_stream_replay(docs: DataFrame, n: int | None = None) -> DataFrame:
@@ -264,167 +221,56 @@ def sample_stream_replay(docs: DataFrame, n: int | None = None) -> DataFrame:
     running "keep me a uniform sample of everything seen" job
     feasible.
 
-    Mechanics: file-source stream, ``maxFilesPerTrigger=1`` so the
-    two dumped files arrive as separate micro-batches in one
-    AvailableNow run; ``foreachBatch`` merges into a parquet state
-    dir (write-new-then-swap, since a job cannot overwrite its own
-    input).
+    Mechanics: ``state_replay`` — the two staged files arrive as
+    separate micro-batches of one AvailableNow run, each merged into
+    the state table by write-new-then-swap (a job cannot overwrite
+    its own input).
     """
-    import os
-    import shutil
-    import tempfile
-
     from rsbsa_etl_spark import params as P
-
-    n_keep = P.SAMPLE_N if n is None else n
-    spark = docs.sparkSession
-    base = tempfile.mkdtemp(prefix="rsbsa_res_")
-    src, ckpt, state = f"{base}/src", f"{base}/ckpt", f"{base}/state"
-    os.makedirs(src)
-
     from rsbsa_etl_spark.functions.numeric import salted_pri
 
+    n_keep = P.SAMPLE_N if n is None else n
     pri = salted_pri("fx1", F.col("doc_id"))
-    proj = docs.select("doc_id")
-
-    def dump(df: DataFrame, name: str) -> None:
-        from rsbsa_etl_spark.streaming.windows import dump_single_file
-
-        dump_single_file(df, base, src, name)
-
-    dump(proj.where(F.col("doc_id") % 2 == 0), "f0.parquet")
-    dump(proj.where(F.col("doc_id") % 2 == 1), "f1.parquet")
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        # hash-min reservoirs are content-idempotent under batch
-        # redelivery, but the swap still needs the crash-safe
-        # protocol: the old delete-then-rename ordering could lose
-        # the whole accumulated reservoir to a crash between the two
-        recover_state_dir(base)
-        b = batch.select("doc_id", pri.alias("pri"))
-        if os.path.isdir(state):
-            b = spark.read.parquet(state).unionByName(b)
-        merged = b.orderBy("pri", "doc_id").limit(n_keep)
-        merged.write.mode("overwrite").parquet(f"{base}/state_new")
-        swap_state_dir(base)
-
-    q = (
-        spark.readStream.schema("doc_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return state_replay(
+        docs.sparkSession,
+        _by_parity(docs.select("doc_id"), "doc_id"),
+        "doc_id bigint",
+        lambda batch: batch.select("doc_id", pri.alias("pri")),
+        lambda rows: rows.orderBy("pri", "doc_id").limit(n_keep),
+        "rsbsa_res_",
     )
-    finish(q, "stateful.q")
-    return spark.read.parquet(state)
 
 
-def recover_state_dir(base: str) -> None:
-    """crash recovery for the write-new-then-swap state protocol: a
-    failure between ``swap_state_dir``'s two renames leaves the
-    previous state parked at ``state_old`` — restore it; a failure
-    after rename-in but before delete-old leaves a stale superseded
-    copy — drop it so the next swap's rename-aside has a clear
-    destination."""
-    import os
-    import shutil
-
-    state = os.path.join(base, "state")
-    state_old = os.path.join(base, "state_old")
-    if not os.path.isdir(state) and os.path.isdir(state_old):
-        os.rename(state_old, state)
-    elif os.path.isdir(state) and os.path.isdir(state_old):
-        shutil.rmtree(state_old)
+def _cdc_rows(batch: DataFrame) -> DataFrame:
+    return batch.select(
+        "user_id", F.lit(1).cast("long").alias("n"), "ts_us", "event_id", "value"
+    )
 
 
-def swap_state_dir(base: str) -> None:
-    """swap ``base``/state_new into place: rename-aside → rename-in
-    → delete-old. Each rename is atomic, so no crash point leaves
-    BOTH the old and new state missing (the naive
-    delete-old-then-rename ordering has a window where a crash
-    destroys the accumulated state and a redelivered micro-batch
-    silently rebuilds it from scratch — the data-loss class
-    ``recover_state_dir`` + this protocol close for EVERY
-    foreachBatch state swap in this module)."""
-    import os
-    import shutil
-
-    state = os.path.join(base, "state")
-    state_old = os.path.join(base, "state_old")
-    if os.path.isdir(state):
-        os.rename(state, state_old)
-    os.rename(os.path.join(base, "state_new"), state)
-    if os.path.isdir(state_old):
-        shutil.rmtree(state_old)
+def _cdc_fold(rows: DataFrame) -> DataFrame:
+    """per-user (additive count, argmax-by-(ts, event_id) record)."""
+    last = F.max(F.struct(F.col("ts_us"), F.col("event_id"), F.col("value")))
+    return rows.groupBy("user_id").agg(
+        F.sum("n").cast("long").alias("n"),
+        last.alias("last"),
+    ).select(
+        "user_id",
+        "n",
+        F.col("last.ts_us").alias("ts_us"),
+        F.col("last.event_id").alias("event_id"),
+        F.col("last.value").alias("value"),
+    )
 
 
 def merge_cdc_batch(
     spark, base: str, batch: DataFrame, batch_id: int
 ) -> None:
-    """idempotent ``foreachBatch`` merge for the CDC apply: fold the
-    batch's per-key partial (additive count + argmax record) into
-    the parquet state dir at ``base``/state, write-new-then-swap.
-
-    Idempotence: the argmax component is re-merge-safe, but the
-    additive ``n`` count is NOT — a micro-batch re-delivered after a
-    failure would double-count. The standard foreachBatch guard
-    applies: the last-applied ``batch_id`` is persisted INSIDE the
-    state dir (``_last_batch_id`` — underscore-prefixed files are
-    invisible to parquet reads), so the high-water mark travels with
-    the state it describes, and any batch at or below it is skipped.
-
-    Crash safety: the swap is rename-aside → rename-in → delete-old.
-    Each rename is atomic, so no crash point leaves BOTH the old and
-    new state missing; a crash between the renames leaves the old
-    state parked at ``state_old``, which the next invocation (or a
-    reader via this module) restores before proceeding. The earlier
-    delete-then-rename ordering had a window where a crash destroyed
-    the accumulated state AND its marker, and the retry would have
-    silently rebuilt state from the one re-delivered batch.
-    Module-level (not a closure) because foreachBatch functions run
-    on the driver — no worker pickling — and this way the retry and
-    recovery paths are unit-testable.
-    """
-    import os
-    import shutil
-
-    state = os.path.join(base, "state")
-    recover_state_dir(base)
-    marker = os.path.join(state, "_last_batch_id")
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            if batch_id <= int(fh.read().strip()):
-                return  # re-delivered batch: already folded in
-
-    def fold(df: DataFrame) -> DataFrame:
-        last = F.max(
-            F.struct(F.col("ts_us"), F.col("event_id"), F.col("value"))
-        ).alias("last")
-        return df.groupBy("user_id").agg(
-            F.sum("n").cast("long").alias("n"),
-            last,
-        ).select(
-            "user_id",
-            "n",
-            F.col("last.ts_us").alias("ts_us"),
-            F.col("last.event_id").alias("event_id"),
-            F.col("last.value").alias("value"),
-        )
-
-    b = batch.withColumn("n", F.lit(1).cast("long"))
-    cols = ["user_id", "n", "ts_us", "event_id", "value"]
-    if os.path.isdir(state):
-        b = spark.read.parquet(state).unionByName(b.select(*cols))
-    else:
-        b = b.select(*cols)
-    # per-user state rows are few — single state file per batch
-    # (guide §6; the next micro-batch re-reads this directory)
-    fold(b).coalesce(1).write.mode("overwrite").parquet(f"{base}/state_new")
-    with open(f"{base}/state_new/_last_batch_id", "w") as fh:
-        fh.write(str(batch_id))
-    swap_state_dir(base)
+    """the CDC apply's ``foreachBatch`` merge: fold the batch's
+    per-key partial (additive count + argmax record) into the parquet
+    state dir at ``base``/state through ``fold_into_state``, whose
+    persisted batch-id fence keeps a re-delivered micro-batch from
+    double-counting the additive ``n``."""
+    fold_into_state(spark, base, batch_id, _cdc_rows(batch), _cdc_fold)
 
 
 def cdc_apply_replay(events: DataFrame) -> DataFrame:
@@ -442,21 +288,11 @@ def cdc_apply_replay(events: DataFrame) -> DataFrame:
     batch SQL). State is one row per live key — the bound that lets
     the apply job run forever.
 
-    Mechanics follow the reservoir replay: file-source stream with
-    ``maxFilesPerTrigger=1`` so the two dumped files arrive as
-    separate micro-batches of one AvailableNow run; ``foreachBatch``
-    delegates to ``merge_cdc_batch`` (write-new-then-swap, with the
-    last-applied batch_id persisted alongside the state so retried /
-    re-delivered micro-batches are skipped instead of double-counting
-    the additive ``n_updates`` component).
+    Mechanics follow the reservoir replay (``state_replay``); the
+    persisted batch-id fence of ``fold_into_state`` is what makes
+    the additive ``n_updates`` component safe under re-delivery.
     """
-    import os
-    import tempfile
-
-    spark = events.sparkSession
-    base = tempfile.mkdtemp(prefix="rsbsa_cdc_")
-    src, ckpt, state = f"{base}/src", f"{base}/ckpt", f"{base}/state"
-    os.makedirs(src)
+    from rsbsa_etl_spark.functions.numeric import dec_round
 
     proj = events.select(
         "event_id",
@@ -464,34 +300,15 @@ def cdc_apply_replay(events: DataFrame) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "value",
     )
-
-    def dump(df: DataFrame, name: str) -> None:
-        from rsbsa_etl_spark.streaming.windows import dump_single_file
-
-        dump_single_file(df, base, src, name)
-
-    # split by event id parity: both "arrival orders" interleave keys
-    dump(proj.where(F.col("event_id") % 2 == 0), "f0.parquet")
-    dump(proj.where(F.col("event_id") % 2 == 1), "f1.parquet")
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        merge_cdc_batch(spark, base, batch, batch_id)
-
-    q = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, ts_us bigint, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    state = state_replay(
+        events.sparkSession,
+        _by_parity(proj, "event_id"),
+        "event_id bigint, user_id bigint, ts_us bigint, value double",
+        _cdc_rows,
+        _cdc_fold,
+        "rsbsa_cdc_",
     )
-    finish(q, "stateful.q")
-    from rsbsa_etl_spark.functions.numeric import dec_round
-
-    return spark.read.parquet(state).select(
+    return state.select(
         "user_id",
         F.col("n").alias("n_updates"),
         F.col("ts_us").alias("last_ts_us"),
@@ -505,67 +322,29 @@ def hll_stream_replay(events: DataFrame) -> DataFrame:
     equivalence pin, and the one that demonstrates why sketches are
     the native streaming aggregate: the merge is idempotent AND
     commutative (max of maxes), so out-of-order or re-delivered
-    micro-batches cannot change the registers, no batch-id fencing
-    needed (contrast ``cdc_apply_replay``, whose additive count
-    component requires it).
+    micro-batches cannot change the registers (contrast
+    ``cdc_apply_replay``, whose additive count component depends on
+    the batch-id fence).
 
     Final state == the batch ``hll_sketch`` output EXACTLY (the
     oracle is that batch SQL verbatim). State is groups × 64
     register rows, constant forever at any event rate.
 
-    Mechanics follow the reservoir replay: file-source stream split
-    into two micro-batches (event-id parity interleaves users and
-    types across batches), ``foreachBatch`` merges registers through
-    the crash-safe write-new-then-swap protocol, AvailableNow run.
+    Mechanics follow the reservoir replay (``state_replay``), the
+    event-id parity split interleaving users and types across the
+    two micro-batches.
     """
-    import os
-    import tempfile
+    from rsbsa_etl_spark.operators.analytics import _hll_fold, _hll_registers
 
-    spark = events.sparkSession
-    base = tempfile.mkdtemp(prefix="rsbsa_shll_")
-    src, ckpt, state = f"{base}/src", f"{base}/ckpt", f"{base}/state"
-    os.makedirs(src)
-
-    proj = events.select("event_id", "user_id", "event_type")
-
-    def dump(df: DataFrame, name: str) -> None:
-        from rsbsa_etl_spark.streaming.windows import dump_single_file
-
-        dump_single_file(df, base, src, name)
-
-    dump(proj.where(F.col("event_id") % 2 == 0), "f0.parquet")
-    dump(proj.where(F.col("event_id") % 2 == 1), "f1.parquet")
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        from rsbsa_etl_spark.operators.analytics import _hll_registers
-
-        recover_state_dir(base)
-        regs = _hll_registers(batch)
-        if os.path.isdir(state):
-            regs = spark.read.parquet(state).unionByName(regs)
-        merged = regs.groupBy("event_type", "bucket").agg(
-            F.max("reg").alias("reg")
-        )
-        # state is groups × 64 rows — one file per micro-batch, not
-        # one per shuffle partition (guide §6: the NEXT batch re-reads
-        # this directory, so tiny-file fan-out is paid twice)
-        merged.coalesce(1).write.mode("overwrite").parquet(f"{base}/state_new")
-        swap_state_dir(base)
-
-    q = (
-        spark.readStream.schema("event_id bigint, user_id bigint, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    state = state_replay(
+        events.sparkSession,
+        _by_parity(events.select("event_id", "user_id", "event_type"), "event_id"),
+        "event_id bigint, user_id bigint, event_type string",
+        _hll_registers,
+        lambda regs: regs.groupBy("event_type", "bucket").agg(F.max("reg").alias("reg")),
+        "rsbsa_shll_",
     )
-    finish(q, "stateful.q")
-
     # fold the final registers through the SAME tail the batch
-    # operator uses — shared _hll_fold, so a constant fix cannot
-    # break the stream/batch equivalence pin
-    from rsbsa_etl_spark.operators.analytics import _hll_fold
-
-    return _hll_fold(spark.read.parquet(state))
+    # operator uses, so a constant fix cannot break the stream/batch
+    # equivalence pin
+    return _hll_fold(state)

@@ -17,9 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from rsbsa_etl_spark.streaming.plan_capture import finish
-
 from rsbsa_etl_spark.operators.aggregates import decimal_sum
+from rsbsa_etl_spark.streaming.replay import availablenow_replay
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -162,62 +161,6 @@ def tumbling_stream(events: DataFrame, width: str = "1 hour", watermark: str = "
     )
 
 
-def dump_single_file(df: DataFrame, base: str, src: str, name: str) -> None:
-    """write ``df`` as exactly ONE parquet file at ``src/name`` — the
-    replay harnesses append whole files so each arrives as one
-    micro-batch. Shared by every replay scaffold (this module and
-    streaming.stateful) so part-glob/compression handling lives in
-    one place."""
-    import glob
-    import shutil
-
-    tmp = f"{base}/_tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/{name}")
-    shutil.rmtree(tmp)
-
-
-def availablenow_replay(
-    spark,
-    phases: list[DataFrame],
-    schema: str,
-    build,
-    prefix: str = "rsbsa_replay_",
-) -> DataFrame:
-    """shared scaffold for deterministic multi-phase streaming
-    replays: each batch DataFrame in ``phases`` is appended (as one
-    parquet file) to a source directory, then one checkpointed
-    AvailableNow run drains it — the checkpoint carries watermark
-    state ACROSS phases, which is the whole point (late-data drops,
-    sentinel-driven state eviction). ``build`` maps the streaming
-    source to the sink-ready projection (watermark + agg + select).
-    Returns the batch read of the append sink.
-
-    One definition instead of a copy per replay operator, so fixes
-    to the plumbing (tempdir lifecycle, multi-part dumps) land
-    everywhere at once.
-    """
-    import os
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix=prefix)
-    src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
-    os.makedirs(src)
-    for i, df in enumerate(phases):
-        dump_single_file(df, base, src, f"f{i}.parquet")
-        q = (
-            build(spark.readStream.schema(schema).parquet(src))
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finish(q, "windows.availablenow_replay")
-    return spark.read.parquet(out)
-
-
 def late_data_replay(
     events: DataFrame,
     split_ts: str,
@@ -249,24 +192,15 @@ def late_data_replay(
         F.col("event_id") % straggler_mod != 0
     )
     proj = events.select("event_id", "ts", "event_type")
-
-    def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", delay)
-            .groupBy(F.window("ts", width).alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-            .select(F.col("w.start").alias("ws"), "event_type", "n_events")
-        )
-
     emitted = availablenow_replay(
         spark,
         [proj.where(ontime), proj.where(~ontime)],
         "event_id bigint, ts timestamp, event_type string",
-        build,
+        lambda stream: tumbling_stream(stream, width, delay),
         prefix="rsbsa_late_",
     )
     return emitted.select(
-        F.unix_seconds("ws").alias("window_start"), "event_type", "n_events"
+        F.unix_seconds("window_start").alias("window_start"), "event_type", "n_events"
     )
 
 
@@ -312,36 +246,21 @@ def session_replay(events: DataFrame, gap_s: int = 1800, delay: str = "48 hours"
     """
     spark = events.sparkSession
     proj = events.select("event_id", "ts", "user_id")
-    gap = f"{gap_s} seconds"
     sentinel = spark.sql(
         "SELECT CAST(-1 AS BIGINT) AS event_id, "
         "timestamp'2030-01-01 00:00:00' AS ts, CAST(-1 AS BIGINT) AS user_id"
     )
-
-    def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", delay)
-            .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "user_id",
-                F.col("w.start").alias("ws"),
-                F.col("w.end").alias("we"),
-                "n_events",
-            )
-        )
-
     emitted = availablenow_replay(
         spark,
         [proj, sentinel],
         "event_id bigint, ts timestamp, user_id bigint",
-        build,
+        lambda stream: session_window_stream(stream, f"{gap_s} seconds", delay),
         prefix="rsbsa_sess_",
     )
     return emitted.select(
         "user_id",
-        F.unix_micros("ws").alias("session_start_us"),
-        F.unix_micros("we").alias("session_end_us"),
+        F.unix_micros("session_start").alias("session_start_us"),
+        F.unix_micros("session_end").alias("session_end_us"),
         "n_events",
     )
 
@@ -372,28 +291,19 @@ def burst_replay(events: DataFrame, delay: str = "48 hours") -> DataFrame:
         "SELECT CAST(-1 AS BIGINT) AS event_id, "
         "timestamp'2030-01-01 00:00:00' AS ts, '__wm__' AS event_type"
     )
-
-    def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", delay)
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("ws"), "event_type", "n")
-        )
-
     emitted = availablenow_replay(
         spark,
         [proj, sentinel],
         "event_id bigint, ts timestamp, event_type string",
-        build,
+        lambda stream: tumbling_stream(stream, "1 hour", delay),
         prefix="rsbsa_burst_",
     )
     bins = (
         emitted.where(F.col("event_type") != "__wm__")
         .select(
             "event_type",
-            (F.unix_seconds("ws") / 3600).cast("long").alias("h"),
-            F.col("n").cast("long").alias("n"),
+            (F.unix_seconds("window_start") / 3600).cast("long").alias("h"),
+            F.col("n_events").cast("long").alias("n"),
         )
     )
     return burst_flags(bins)

@@ -309,7 +309,7 @@ def test_cdc_stream_restart_resumes_exactly(spark, tmp_path, sf_dir_param):
     from pyspark.errors import StreamingQueryException
 
     from rsbsa_etl_spark.streaming.stateful import merge_cdc_batch
-    from rsbsa_etl_spark.streaming.windows import dump_single_file
+    from rsbsa_etl_spark.streaming.replay import dump_single_file
 
     sf_dir = sf_dir_param or os.environ.get("RSBSA_RESTART_SF_DIR", SF_DIR)
     proj = load(spark, sf_dir, "events").select(
@@ -417,7 +417,7 @@ def test_stateful_totals_state_rolls_back_on_midbatch_crash(spark, tmp_path):
     from pyspark.errors import StreamingQueryException
 
     from rsbsa_etl_spark.streaming.stateful import running_user_totals
-    from rsbsa_etl_spark.streaming.windows import dump_single_file
+    from rsbsa_etl_spark.streaming.replay import dump_single_file
 
     base = str(tmp_path / "totals")
     src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
