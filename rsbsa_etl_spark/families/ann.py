@@ -150,15 +150,15 @@ def knn_graph_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r15: the recall-curve geometry pick as a one-row profiling
-    key — mean cosine to the nearest of 128 fixed probe centroids
-    (probe self-assignments excluded, per-row 1e-6 quantization for
-    order-independent cross-engine aggregation) compared against the
-    analytic EVT isotropic null sqrt(2·ln(m)/d), embedded as the
-    same Python literal in both plans. The verdict feeds
-    ``nprobe_for_recall``'s geometry argument; registering the
-    statistic makes the geometry DECISION oracle-value-checked, the
-    same discipline the cost auto-dials follow."""
+    """r15: the corpus geometry verdict (clustered vs isotropic) as
+    a one-row profiling key — mean cosine to the nearest of 128
+    fixed probe centroids (probe self-assignments excluded, per-row
+    1e-6 quantization for order-independent cross-engine
+    aggregation) compared against the analytic EVT isotropic null
+    sqrt(2·ln(m)/d), embedded as the same Python literal in both
+    plans. It tells which measured IVF recall curve (SCALING.md r9)
+    a corpus follows; registering the statistic makes that verdict
+    oracle-value-checked."""
     return similarity.geometry_profile(load(spark, sf_dir, "embeddings"))
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from rsbsa_etl_spark.functions.numeric import dec_round
 
 from rsbsa_etl_spark.params import (
+    CONTAINMENT_THRESHOLD,
     JACCARD_THRESHOLD,
     MINHASH_BANDS,
     MINHASH_BUCKET_CAP,
@@ -834,6 +835,37 @@ def _pair_intersections(
     )
 
 
+def _candidate_intersections(
+    docs: DataFrame,
+    text_col: str,
+    threshold: float,
+    containment: bool,
+    candidates: DataFrame | None,
+    sets: DataFrame | None,
+) -> DataFrame:
+    """the shared front half of the two exact verifiers: the
+    persisted doc→shingle-set arrays (unless the caller passes
+    them), prefix-filter candidates over their exploded view (unless
+    the caller passes its own), sizes joined onto candidates that
+    don't carry them (e.g. MinHash LSH pairs), then
+    ``_pair_intersections``."""
+    if sets is None:
+        sets = doc_shingle_sets(docs, text_col).persist()
+    if candidates is None:
+        sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
+        candidates = prefix_filter_candidates(sh, threshold, containment)
+    if not {"sz_a", "sz_b"} <= set(candidates.columns):
+        sizes = sets.select("doc_id", F.size("shingles").alias("sz"))
+        candidates = candidates.join(
+            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")),
+            "doc_a",
+        ).join(
+            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")),
+            "doc_b",
+        )
+    return _pair_intersections(sets, candidates)
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -860,23 +892,9 @@ def ngram_jaccard_pairs(
     exploded view of the same persisted arrays, and the verify is
     two pair⋈sets joins + a row-local ``array_intersect``.
     """
-    if sets is None:
-        sets = doc_shingle_sets(docs, text_col).persist()
-    if candidates is None:
-        sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
-        candidates = prefix_filter_candidates(sh, threshold)
-    if not {"sz_a", "sz_b"} <= set(candidates.columns):
-        # externally supplied candidates (e.g. MinHash LSH) don't
-        # carry sizes — join them on
-        sizes = sets.select("doc_id", F.size("shingles").alias("sz"))
-        candidates = candidates.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")),
-            "doc_a",
-        ).join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")),
-            "doc_b",
-        )
-    inter = _pair_intersections(sets, candidates)
+    inter = _candidate_intersections(
+        docs, text_col, threshold, False, candidates, sets
+    )
     jac = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
     return (
         inter.where(jac >= threshold)
@@ -1074,7 +1092,7 @@ def pagerank(
 def containment_pairs(
     docs: DataFrame,
     text_col: str = "text",
-    threshold: float = 0.8,
+    threshold: float = CONTAINMENT_THRESHOLD,
     candidates: DataFrame | None = None,
     sets: DataFrame | None = None,
 ) -> DataFrame:
@@ -1095,23 +1113,9 @@ def containment_pairs(
     undirected intersection count, making the result equal to the
     all-pairs oracle on any data.
     """
-    if sets is None:
-        sets = doc_shingle_sets(docs, text_col).persist()
-    if candidates is None:
-        sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
-        candidates = prefix_filter_candidates(
-            sh, threshold, containment=True
-        )
-    if not {"sz_a", "sz_b"} <= set(candidates.columns):
-        sizes = sets.select("doc_id", F.size("shingles").alias("sz"))
-        candidates = candidates.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")),
-            "doc_a",
-        ).join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")),
-            "doc_b",
-        )
-    both = _pair_intersections(sets, candidates).select(
+    both = _candidate_intersections(
+        docs, text_col, threshold, True, candidates, sets
+    ).select(
         F.col("doc_a").alias("doc_x"),
         F.col("doc_b").alias("doc_y"),
         F.col("sz_a").alias("sz_x"),
@@ -1145,11 +1149,45 @@ def containment_pairs(
     )
 
 
+def _shingle_pair_dial(
+    docs: DataFrame,
+    text_col: str,
+    threshold: float,
+    containment: bool,
+    volume,
+    budget_per_doc: int,
+    verify,
+) -> DataFrame:
+    """the body both shingle-pair auto-dials share: persist the
+    shingle sets, rank them once, sum the exact arm's per-shingle
+    join volume ``volume(ranked)`` (a shingle-keyed frame with one
+    ``v`` column) and count ``n_docs`` in ONE eager job, then feed
+    ``verify`` the exact arm's prefix-join candidates while
+    ``Σ v ≤ budget_per_doc × n_docs`` and capped-LSH candidates above
+    it (releasing the unused rank table). The rank window is paid
+    once: the exact arm consumes the same persisted ranked table the
+    statistic read."""
+    sets = doc_shingle_sets(docs, text_col).persist()
+    sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
+    ranked = _rank_by_rarity(sh, ["doc_id"])  # persisted inside
+    row = (
+        volume(ranked)
+        .agg(F.coalesce(F.sum("v"), F.lit(0)).alias("v"))
+        .crossJoin(docs.agg(F.count("*").alias("n_docs")))
+        .collect()[0]
+    )
+    if row["v"] <= budget_per_doc * row["n_docs"]:
+        cand = _prefix_join(ranked, threshold, containment)
+    else:
+        ranked.unpersist()
+        cand = minhash_capped_pairs(docs, text_col)
+    return verify(docs, text_col, threshold, candidates=cand, sets=sets)
+
+
 def containment_pairs_auto(
     docs: DataFrame,
     text_col: str = "text",
-    threshold: float = 0.8,
-    max_pairs_per_doc: int | None = None,
+    threshold: float = CONTAINMENT_THRESHOLD,
 ) -> DataFrame:
     """measured auto-dial over the two containment arms (r13 verdict
     item 5, mirroring ``mmr_rerank_auto``'s pattern): price the exact
@@ -1165,62 +1203,36 @@ def containment_pairs_auto(
     superlinear stage (SCALING.md: candidate volume grows with
     per-shingle posting density², exponent 0.84 and rising on the
     decade fixture, 25.8 s at sf1 vs the capped dial's 3.3 s), and V
-    prices it from two shingle-keyed partial aggregations over the
-    SAME ranked table the exact arm then consumes — the rank window
-    is paid once, and when the capped arm is picked the wasted work
-    is that aggregation, never a join.
+    prices it from one shingle-keyed partial aggregation over the
+    SAME ranked table the exact arm then consumes
+    (``_shingle_pair_dial``) — when the capped arm is picked the
+    wasted work is that aggregation, never a join.
 
-    Pick: exact while ``V ≤ max_pairs_per_doc × n_docs`` (full
-    recall stays the default wherever it is tractable); above it the
-    capped-LSH candidate arm (exact verify, LSH recall). The budget
-    default ``CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC`` sits at the
-    measured wall-clock crossover (SCALING.md r14: V/doc 12.1 →
-    exact wins, 72.6 → capped wins, 955.7 → capped by 15×; the
-    per-doc form is scale-free — it bounds the exact join at
-    `budget` rows/doc, linear in corpus size). V is pure integer
-    arithmetic on
-    distinct-shingle postings, so a SQL oracle replicates the pick
-    bit-identically — the auto key is value-checked END-TO-END
+    Pick: exact while ``V ≤ CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC ×
+    n_docs`` (full recall stays the default wherever it is
+    tractable); above it the capped-LSH candidate arm (exact verify,
+    LSH recall). The budget sits at the measured wall-clock
+    crossover (SCALING.md r14: V/doc 12.1 → exact wins, 72.6 →
+    capped wins, 955.7 → capped by 15×; the per-doc form is
+    scale-free — it bounds the exact join at `budget` rows/doc,
+    linear in corpus size). V is pure integer arithmetic on
+    distinct-shingle postings and the budget is the one ``params``
+    constant the oracle also reads, so a SQL oracle replicates the
+    pick bit-identically — the auto key is value-checked END-TO-END
     including the dial decision, and both explicit arms stay
     registered as the manual overrides."""
     from rsbsa_etl_spark.params import CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC
 
-    budget = (
-        CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC
-        if max_pairs_per_doc is None
-        else max_pairs_per_doc
-    )
-    sets = doc_shingle_sets(docs, text_col).persist()
-    sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
-    ranked = _rank_by_rarity(sh, ["doc_id"])  # persisted inside
-    # one conditional aggregation instead of pc ⋈ fc: per shingle,
-    # n = postings and p = prefix postings counted in the SAME
-    # groupBy (a shingle with p=0 contributes p·n=0, exactly what
-    # the old inner join dropped), and n_docs rides the same collect
-    # as a single-row crossJoin — ONE eager job where there were
-    # two, and one pass over `ranked` where there were two (r16 §2.4)
-    row = (
-        ranked.groupBy("shingle")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.when(_prefix_cond(threshold), F.lit(1)).otherwise(F.lit(0))
-            ).alias("p"),
+    def volume(ranked: DataFrame) -> DataFrame:
+        # postings × prefix postings per shingle, from ONE groupBy
+        in_prefix = F.when(_prefix_cond(threshold), F.lit(1)).otherwise(F.lit(0))
+        return ranked.groupBy("shingle").agg(
+            (F.count("*") * F.sum(in_prefix)).alias("v")
         )
-        .agg(F.coalesce(F.sum(F.col("p") * F.col("n")), F.lit(0)).alias("v"))
-        .crossJoin(docs.agg(F.count("*").alias("n_docs")))
-        .collect()[0]
-    )
-    n_docs = row["n_docs"]
-    if row["v"] <= budget * n_docs:
-        cand = _prefix_join(ranked, threshold, containment=True)
-        return containment_pairs(
-            docs, text_col, threshold, candidates=cand, sets=sets
-        )
-    ranked.unpersist()
-    cand = minhash_capped_pairs(docs, text_col)
-    return containment_pairs(
-        docs, text_col, threshold, candidates=cand, sets=sets
+
+    return _shingle_pair_dial(
+        docs, text_col, threshold, True, volume,
+        CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC, containment_pairs,
     )
 
 
@@ -1228,7 +1240,6 @@ def jaccard_pairs_auto(
     docs: DataFrame,
     text_col: str = "text",
     threshold: float = JACCARD_THRESHOLD,
-    max_pairs_per_doc: int | None = None,
 ) -> DataFrame:
     """the Jaccard sibling of ``containment_pairs_auto`` — the exact
     AllPairs arm carried the suite's worst measured growth law
@@ -1240,48 +1251,29 @@ def jaccard_pairs_auto(
 
     (both sides take prefixes under the symmetric Jaccard bound, so
     the volume is pairs WITHIN each prefix posting list). Same
-    machinery as the containment dial: V comes from one shingle-keyed
-    aggregation over the ranked table the exact arm then consumes;
-    exact (recall 1) while V/doc stays under the measured budget
-    ``JACCARD_AUTO_MAX_PAIRS_PER_DOC``, capped-LSH candidates (exact
-    verify, LSH recall) above it. Integer statistic ⇒ the oracle
-    value-checks the dial decision AND the picked rows."""
+    machinery as the containment dial (``_shingle_pair_dial``): V
+    comes from one shingle-keyed aggregation over the ranked table
+    the exact arm then consumes; exact (recall 1) while V/doc stays
+    under the measured budget ``JACCARD_AUTO_MAX_PAIRS_PER_DOC``,
+    capped-LSH candidates (exact verify, LSH recall) above it.
+    Integer statistic ⇒ the oracle value-checks the dial decision
+    AND the picked rows."""
     from rsbsa_etl_spark.params import JACCARD_AUTO_MAX_PAIRS_PER_DOC
 
-    budget = (
-        JACCARD_AUTO_MAX_PAIRS_PER_DOC
-        if max_pairs_per_doc is None
-        else max_pairs_per_doc
-    )
-    sets = doc_shingle_sets(docs, text_col).persist()
-    sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
-    ranked = _rank_by_rarity(sh, ["doc_id"])  # persisted inside
-    # v2 = Σ p·(p−1) = 2·V — kept doubled so the whole comparison
-    # stays in BIGINT (p·(p−1) is even; dividing in either engine
-    # would detour through doubles)
-    row = (
-        ranked.where(_prefix_cond(threshold))
-        .groupBy("shingle")
-        .agg(F.count("*").alias("p"))
-        .agg(
-            F.coalesce(
-                F.sum(F.col("p") * (F.col("p") - F.lit(1))), F.lit(0)
-            ).alias("v2")
+    def volume(ranked: DataFrame) -> DataFrame:
+        # p·(p−1) = 2·C(p, 2) against a doubled budget: the whole
+        # comparison stays in BIGINT (dividing in either engine would
+        # detour through doubles)
+        p = F.count("*")
+        return (
+            ranked.where(_prefix_cond(threshold))
+            .groupBy("shingle")
+            .agg((p * (p - F.lit(1))).alias("v"))
         )
-        # n_docs rides the same collect (one eager job, not two — r16)
-        .crossJoin(docs.agg(F.count("*").alias("n_docs")))
-        .collect()[0]
-    )
-    n_docs = row["n_docs"]
-    if row["v2"] <= 2 * budget * n_docs:
-        cand = _prefix_join(ranked, threshold, containment=False)
-        return ngram_jaccard_pairs(
-            docs, text_col, threshold, candidates=cand, sets=sets
-        )
-    ranked.unpersist()
-    cand = minhash_capped_pairs(docs, text_col)
-    return ngram_jaccard_pairs(
-        docs, text_col, threshold, candidates=cand, sets=sets
+
+    return _shingle_pair_dial(
+        docs, text_col, threshold, False, volume,
+        2 * JACCARD_AUTO_MAX_PAIRS_PER_DOC, ngram_jaccard_pairs,
     )
 
 

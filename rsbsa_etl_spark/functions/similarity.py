@@ -600,58 +600,30 @@ def _knn_schema(diff_label: bool):
     )
 
 
-def knn_graph_auto(
-    emb: DataFrame,
-    k: int = ANN_TOP_K,
-    max_vectors: int | None = None,
-    target_recall: float | None = None,
-    geometry: str = "clustered",
-) -> DataFrame:
+def knn_graph_auto(emb: DataFrame, k: int = ANN_TOP_K) -> DataFrame:
     """measured auto-dial over the two kNN-graph arms (r14,
     completing the auto-dial family alongside ``mmr_rerank_auto``
     and ``containment_pairs_auto``): ONE corpus count, then the
-    exact tiled all-pairs graph while ``n ≤ max_vectors`` and the
-    IVF-bucketed arm above it. The exact arm is O(n²/tiles) FLOPs by
-    definition and the IVF arm O(n^1.5·nprobe); the measured
-    wall-clock crossover on this host sits between 5k and 10k
-    vectors (SCALING.md r14 — exact 1.6 s vs IVF 2.8 s at 5k, 3.3 s
-    vs 3.0 s at 10k, 6.2 s vs 3.7 s at 20k), and the default budget
-    ``KNN_GRAPH_AUTO_MAX_VECTORS`` = 8000 sits in that gap,
-    conservative toward the full-recall arm. The count is the only
-    statistic, so the pick is data-deterministic and a SQL oracle
-    replicates it exactly; both explicit arms stay registered as
-    manual overrides, and ``nprobe_for_recall`` sizes the IVF side's
-    recall knob when the dial fires.
-
-    ``target_recall`` (r15, r14 verdict item 6): when set, the IVF
-    arm's nprobe is sized by ``nprobe_for_recall(target_recall,
-    geometry)`` — the stored measured curve as a function — instead
-    of the static measured-knee default; the exact arm ignores it
-    (recall is 1 by construction, so any target is met). ``geometry``
-    is caller-declared ("clustered" unless the embeddings are known
-    structureless); a cheap data-driven pick exists as
-    ``detect_geometry`` — one argmin cell-assignment pass whose
-    cell-mass concentration statistic separates the two measured
-    curves (SCALING.md r15)."""
+    exact tiled all-pairs graph while ``n ≤ KNN_GRAPH_AUTO_MAX_VECTORS``
+    and the IVF-bucketed arm (default nprobe) above it. The exact
+    arm is O(n²/tiles) FLOPs by definition and the IVF arm
+    O(n^1.5·nprobe); the measured wall-clock crossover on this host
+    sits between 5k and 10k vectors (SCALING.md r14 — exact 1.6 s vs
+    IVF 2.8 s at 5k, 3.3 s vs 3.0 s at 10k, 6.2 s vs 3.7 s at 20k),
+    and the budget (8000) sits in that gap, conservative toward the
+    full-recall arm. The count is the only statistic and the budget
+    is the one ``params`` constant the oracle also reads, so the
+    pick is data-deterministic and the SQL oracle replicates it
+    exactly; both explicit arms stay registered as manual
+    overrides."""
     from rsbsa_etl_spark.params import KNN_GRAPH_AUTO_MAX_VECTORS
 
-    budget = (
-        KNN_GRAPH_AUTO_MAX_VECTORS if max_vectors is None else max_vectors
-    )
-    if _row_count(emb) <= budget:
+    if _row_count(emb) <= KNN_GRAPH_AUTO_MAX_VECTORS:
         return knn_graph(emb, k)
-    if target_recall is not None:
-        if geometry == "auto":
-            # one extra assignment scan, only on the IVF side and
-            # only when a recall target makes the curve choice matter
-            geometry = detect_geometry(emb)
-        return knn_graph_ivf(
-            emb, k, nprobe=nprobe_for_recall(target_recall, geometry)
-        )
     return knn_graph_ivf(emb, k)
 
 
-#: fixed probe-centroid count for ``detect_geometry`` — corpus-
+#: fixed probe-centroid count for ``geometry_profile`` — corpus-
 #: independent by design: the statistic's null baseline depends only
 #: on (probe count, dim), so fixing the probes keeps the decision
 #: boundary analytic at every corpus size (using the index's own
@@ -660,12 +632,21 @@ def knn_graph_auto(
 GEOMETRY_PROBE_CENTROIDS = 128
 
 
-def geometry_profile(emb: DataFrame, n_probes: int | None = None) -> DataFrame:
-    """the ``detect_geometry`` statistic as a one-row PROFILING
-    DataFrame — registered as the ``ann_geometry`` key so the
-    geometry decision itself is oracle-value-checked (the r15
-    auto-dial discipline applied to the recall-curve pick):
-    (n_vectors, n_probes, mean_cos_assigned, evt_null, geometry).
+def geometry_profile(emb: DataFrame) -> DataFrame:
+    """the corpus geometry verdict as a one-row PROFILING DataFrame,
+    registered as the ``ann_geometry`` key so the verdict is
+    oracle-value-checked: (n_vectors, n_probes, mean_cos_assigned,
+    evt_null, geometry).
+
+    ONE assignment pass — each vector's cosine to its nearest of
+    ``GEOMETRY_PROBE_CENTROIDS`` fixed probe centroids, the same
+    zero-shuffle assignment kernel the IVF build runs — then the
+    MEAN assigned cosine against the analytic EVT null
+    sqrt(2·ln(m)/d), which bounds the expected max over m probes of
+    an isotropic corpus (cos(v, c) ~ N(0, 1/d) per centroid).
+    Clustered corpora exceed it and structureless ones sit below it
+    at every measured scale, with no fitted constant (SCALING.md r15
+    "geometry detection").
 
     Cross-engine float discipline: each vector's assigned cosine is
     quantized to a 1e-6 integer BEFORE aggregation (order-independent
@@ -686,11 +667,7 @@ def geometry_profile(emb: DataFrame, n_probes: int | None = None) -> DataFrame:
         F.count("*"), F.first(F.size("embedding"), ignorenulls=True)
     ).first()
     n = int(n)
-    m = (
-        min(GEOMETRY_PROBE_CENTROIDS, n)
-        if n_probes is None
-        else min(n_probes, n)
-    )
+    m = min(GEOMETRY_PROBE_CENTROIDS, n)
     null6 = (
         math.floor(
             math.sqrt(2.0 * math.log(max(m, 2)) / max(dim, 1)) * 1e6 + 0.5
@@ -742,94 +719,6 @@ def geometry_profile(emb: DataFrame, n_probes: int | None = None) -> DataFrame:
     )
 
 
-def detect_geometry(emb: DataFrame, n_probes: int | None = None) -> str:
-    """data-driven pick of the recall-curve geometry for
-    ``nprobe_for_recall`` (r15, the stretch half of r14 verdict item
-    6): ONE assignment pass — each vector's cosine to its nearest of
-    ``n_probes`` fixed probe centroids, the same zero-shuffle
-    assignment kernel the IVF build runs — then compare the MEAN
-    assigned cosine against the analytic null: for an isotropic
-    corpus in d dims, cos(v, c) ~ N(0, 1/d) per centroid, so the
-    expected max over m probes is bounded by the EVT constant
-    sqrt(2·ln(m)/d). Clustered corpora exceed the null (most vectors
-    have a probe inside their cluster at intra-cluster cosine ≈ 0.5
-    with gen_sf's tau=1); structureless corpora sit below it.
-    Measured on the recall-curve fixtures (SCALING.md r15 "geometry
-    detection"): isotropic 0.287/0.328/0.340 vs null 0.344/0.393/
-    0.407 at 2k/20k/40k; Zipf-200-cluster 0.427/0.500/0.520 —
-    separated at every scale with the ANALYTIC boundary, no fitted
-    constant. Cost: one corpus scan + one tiny agg — negligible next
-    to the graph build it parameterizes.
-
-    Cell-mass concentration (normalized HHI) was evaluated first and
-    REJECTED: with √n centroids drawn from the corpus, dense regions
-    get proportionally many centroids, so cell masses stay
-    near-uniform on clustered data (measured 1.40 vs 1.01 — no
-    separation). That equalization is exactly why IVF recall is
-    better there; the signal lives in the assigned DISTANCES, not
-    the cell sizes.
-
-    One implementation: this is ``geometry_profile``'s verdict
-    column collected (the profile DataFrame is the registered,
-    oracle-checked ``ann_geometry`` key).
-    """
-    return geometry_profile(emb, n_probes).collect()[0]["geometry"]
-
-
-#: the round-9 measured graph-recall@10 curves for ``knn_graph_ivf``
-#: (tools/measure_recall.py — 20k vectors / 141 cells / k=10, both
-#: geometries through the same engine arms with exact ``knn_graph``
-#: as truth; SCALING.md "knn_graph_ivf — recall dial"). "clustered"
-#: is the Zipf-weighted 200-cluster mixture real embedding corpora
-#: look like; "isotropic" is the structureless adversarial floor.
-IVF_GRAPH_RECALL_CURVE: dict[str, tuple[tuple[int, float], ...]] = {
-    "isotropic": ((4, 0.19), (8, 0.30), (16, 0.46), (32, 0.66)),
-    "clustered": ((4, 0.66), (8, 0.78), (16, 0.88), (32, 0.95)),
-}
-
-
-def nprobe_for_recall(
-    target_recall: float, geometry: str = "clustered"
-) -> int:
-    """size ``knn_graph_ivf``'s nprobe from a RECALL TARGET using
-    the stored measured curve (r13 verdict item 8 — the measurement
-    existed, the dial was static): the smallest measured nprobe
-    whose graph recall meets the target, extrapolated past the
-    measured range by the curve's final per-doubling gain. Probe
-    work scales ∝ nprobe, so this is a cost floor, not a tweak —
-    callers pick the geometry that matches their corpus ("clustered"
-    unless the embeddings are known structureless). A returned
-    nprobe approaching the cell count (~√n) means the target is not
-    reachable by probing — use the exact ``knn_graph`` arm instead
-    (probing every cell IS the exact computation with extra steps).
-
-    ``target_recall`` is clamped to [0, 1] on entry (recall is a
-    probability; a target above 1.0 is unreachable by definition and
-    previously looped forever — the extrapolated recall saturates at
-    1.0 while the per-doubling gain stays positive). A flat measured
-    tail (zero gain) with the target still unmet raises ``ValueError``
-    instead of returning an nprobe that silently misses the target.
-    """
-    target_recall = min(1.0, max(0.0, target_recall))
-    curve = IVF_GRAPH_RECALL_CURVE[geometry]
-    for nprobe, recall in curve:
-        if recall >= target_recall:
-            return nprobe
-    (n_lo, r_lo), (n_hi, r_hi) = curve[-2], curve[-1]
-    gain = r_hi - r_lo  # per doubling, at the measured tail
-    if gain <= 0:
-        raise ValueError(
-            f"recall target {target_recall} unreachable: the measured "
-            f"{geometry!r} curve tops out flat at {r_hi} — use the "
-            "exact knn_graph arm"
-        )
-    nprobe, recall = n_hi, r_hi
-    while recall < target_recall:
-        nprobe *= 2
-        recall = min(1.0, recall + gain)
-    return nprobe
-
-
 def knn_graph_ivf(
     emb: DataFrame,
     k: int = ANN_TOP_K,
@@ -863,9 +752,7 @@ def knn_graph_ivf(
     200-cluster mixture, the geometry real embedding corpora have.
     nprobe=8 is the knee of the clustered curve (~0.8 recall); each
     doubling past it buys ~+0.1 recall for 2× probe work. ``nprobe``
-    is a CALLER-OWNED knob: size it with ``nprobe_for_recall(target,
-    geometry)`` — the stored curve as a function — rather than
-    hand-picking; the default stays the measured knee.
+    is a caller-owned knob; the default stays the measured knee.
 
     Plan shape: ONE distance pass of the corpus against the
     broadcast centroid matrix scores every centroid per vector in the
@@ -2210,17 +2097,15 @@ def semantic_dedup(
 
 
 def embedding_dedup_auto(
-    emb: DataFrame,
-    threshold: float = COSINE_THRESHOLD,
-    max_vectors: int | None = None,
+    emb: DataFrame, threshold: float = COSINE_THRESHOLD
 ) -> DataFrame:
     """measured auto-dial over the two embedding-dedup arms (r15,
     closing the last quadratic kernel whose scale dial was
     documentation instead of a wired crossover — r14 verdict item 2):
     ONE corpus count, then the exact tiled all-pairs cosine join
     (``cosine_pairs`` — full recall by construction) while
-    ``n ≤ max_vectors``, and the linear SemDeDup cluster-then-prune
-    arm (``semantic_dedup``) above it.
+    ``n ≤ DEDUP_EMBEDDING_AUTO_MAX_VECTORS``, and the linear SemDeDup
+    cluster-then-prune arm (``semantic_dedup``) above it.
 
     Both arms emit the same DUPLICATE-PAIR contract
     ``(vec_a < vec_b, cosine ≥ threshold)``: the exact arm's rows are
@@ -2232,19 +2117,15 @@ def embedding_dedup_auto(
     one cell-keyed shuffle. Measured wall-clock crossover on this
     host sits in the 5k→10k gap (SCALING.md r15: exact 0.65 s vs
     0.85 s at 5k, 1.20 s vs 0.74 s at 10k, 16.0 s vs 1.45 s at 40k)
-    and the default budget ``DEDUP_EMBEDDING_AUTO_MAX_VECTORS`` =
-    8000 sits inside it, conservative toward full recall. The count
-    is the only statistic, so the pick is data-deterministic and the
-    SQL oracle replicates the decision AND the picked arm's rows;
-    both explicit arms stay registered as manual overrides."""
+    and the budget (8000) sits inside it, conservative toward full
+    recall. The count is the only statistic and the budget is the
+    one ``params`` constant the oracle also reads, so the pick is
+    data-deterministic and the SQL oracle replicates the decision
+    AND the picked arm's rows; both explicit arms stay registered as
+    manual overrides."""
     from rsbsa_etl_spark.params import DEDUP_EMBEDDING_AUTO_MAX_VECTORS
 
-    budget = (
-        DEDUP_EMBEDDING_AUTO_MAX_VECTORS
-        if max_vectors is None
-        else max_vectors
-    )
-    if _row_count(emb) <= budget:
+    if _row_count(emb) <= DEDUP_EMBEDDING_AUTO_MAX_VECTORS:
         return cosine_pairs(emb, threshold)
     sem = semantic_dedup(emb, threshold)
     return sem.where(~F.col("keep")).select(

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum, salted_pri
 from rsbsa_etl_spark.operators.aggregates import decimal_sum
+from rsbsa_etl_spark.params import THEIL_SEN_CAP
 
 
 def moving_stats(
@@ -2085,40 +2086,34 @@ def _ts_points(events: DataFrame) -> DataFrame:
     )
 
 
-def trend_theil_sen_capped(events: DataFrame, cap: int = 32) -> DataFrame:
+def trend_theil_sen_capped(events: DataFrame) -> DataFrame:
     """the documented skew dial for ``trend_theil_sen``: a
-    deterministic hash-min sample of ≤ ``cap`` events per user
-    BEFORE pairing bounds the per-user work at cap·(cap−1)/2 pairs
-    (496 at the default) regardless of how power-law the activity
-    distribution is — the ``dedup_containment_capped`` pattern
-    applied to robust trends. The sample is a pure function of
-    (salt, event_id), so the capped estimate is reproducible and the
-    oracle replays it exactly. On users at or under the cap the two
-    keys agree exactly.
+    deterministic hash-min sample of ≤ ``THEIL_SEN_CAP`` (32) events
+    per user BEFORE pairing bounds the per-user work at 496 pairs
+    regardless of how power-law the activity distribution is — the
+    ``dedup_containment_capped`` pattern applied to robust trends.
+    The sample is a pure function of (salt, event_id), so the capped
+    estimate is reproducible and the oracle replays it exactly. On
+    users at or under the cap the two keys agree exactly.
     """
-    return _theil_sen(_ts_points_capped(_ts_points(events), cap))
+    return _theil_sen(_ts_points_capped(_ts_points(events)))
 
 
-def _ts_points_capped(pts: DataFrame, cap: int) -> DataFrame:
-    """deterministic ≤``cap`` hash-min sample per user — split out
-    (r14) so the auto-dial reuses the same arm byte-for-byte."""
-    from rsbsa_etl_spark.functions.numeric import salted_pri
-
+def _ts_points_capped(pts: DataFrame) -> DataFrame:
+    """deterministic ≤``THEIL_SEN_CAP`` hash-min sample per user —
+    split out (r14) so the auto-dial reuses the same arm
+    byte-for-byte."""
     wk = Window.partitionBy("user_id").orderBy(
         salted_pri("tsen", F.col("event_id")), "event_id"
     )
     return (
         pts.withColumn("rn", F.row_number().over(wk))
-        .where(F.col("rn") <= cap)
+        .where(F.col("rn") <= THEIL_SEN_CAP)
         .drop("rn")
     )
 
 
-def trend_theil_sen_auto(
-    events: DataFrame,
-    cap: int = 32,
-    max_points_per_user: int | None = None,
-) -> DataFrame:
+def trend_theil_sen_auto(events: DataFrame) -> DataFrame:
     """the SKEW auto-dial for Theil–Sen (r14, completing the
     auto-dial family on its skew axis): the exact arm is quadratic
     PER USER, so its distributed wall is the straggler task of the
@@ -2131,16 +2126,12 @@ def trend_theil_sen_auto(
     10 000 (53 s, one ~50M-pair task) while the capped arm stays
     ~1 s throughout — the budget default
     ``THEIL_SEN_AUTO_MAX_POINTS_PER_USER`` = 5000 sits in that gap.
-    Exact (every pair) below the budget; the deterministic ≤cap
-    hash-min sample above it. Integer statistic ⇒ the oracle
-    value-checks the dial decision along with the picked rows."""
+    Exact (every pair) below the budget; the deterministic
+    ≤``THEIL_SEN_CAP`` hash-min sample above it. Integer statistic
+    and one ``params`` budget ⇒ the oracle value-checks the dial
+    decision along with the picked rows."""
     from rsbsa_etl_spark.params import THEIL_SEN_AUTO_MAX_POINTS_PER_USER
 
-    budget = (
-        THEIL_SEN_AUTO_MAX_POINTS_PER_USER
-        if max_points_per_user is None
-        else max_points_per_user
-    )
     # no persist: the point set is a narrow projection the explicit
     # arms also re-read per self-join alias — keeping the picked
     # arm's plan byte-identical to the explicit key matters more
@@ -2153,9 +2144,9 @@ def trend_theil_sen_auto(
         .agg(F.coalesce(F.max("n"), F.lit(0)).alias("m"))
         .collect()[0]["m"]
     )
-    if max_n <= budget:
+    if max_n <= THEIL_SEN_AUTO_MAX_POINTS_PER_USER:
         return _theil_sen(pts)
-    return _theil_sen(_ts_points_capped(pts, cap))
+    return _theil_sen(_ts_points_capped(pts))
 
 
 def _theil_sen(pts: DataFrame) -> DataFrame:

@@ -3888,7 +3888,7 @@ directed AS (
 )
 SELECT doc_contained, doc_container,
        {_dec('containment', 4)} AS containment
-FROM directed WHERE containment >= 0.8
+FROM directed WHERE containment >= {P.CONTAINMENT_THRESHOLD}
 """
 
 # capped-LSH-prefiltered containment: the SAME deterministic capped
@@ -3922,7 +3922,7 @@ directed AS (
 )
 SELECT doc_contained, doc_container,
        {_dec('containment', 4)} AS containment
-FROM directed WHERE containment >= 0.8
+FROM directed WHERE containment >= {P.CONTAINMENT_THRESHOLD}
 """
 
 # the containment AUTO-DIAL (r14): replicate the pick statistic —
@@ -3945,7 +3945,7 @@ ranked AS (
 ),
 pc AS (
   SELECT shingle, count(*) AS p FROM ranked
-  WHERE pos <= sz - ceil(0.8 * sz - 1e-9) + 1
+  WHERE pos <= sz - ceil({P.CONTAINMENT_THRESHOLD} * sz - 1e-9) + 1
   GROUP BY shingle
 ),
 stat AS (
@@ -5748,7 +5748,7 @@ WITH pts AS (
                     event_id) AS prn
   FROM pts
 ), pts_c AS (
-  SELECT user_id, event_id, x_ms, y_q FROM ranked_pts WHERE prn <= 32
+  SELECT user_id, event_id, x_ms, y_q FROM ranked_pts WHERE prn <= {P.THEIL_SEN_CAP}
 ), slopes AS (
   SELECT a.user_id,
          CAST(floor(

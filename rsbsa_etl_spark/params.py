@@ -159,6 +159,11 @@ MINHASH_MOD = (1 << 61) - 1  # Mersenne prime 2^61-1
 #: web-corpus deployment uses O(100-1000).
 MINHASH_BUCKET_CAP = 2
 
+#: containment near-dup threshold: a doc counts as contained when
+#: ≥ this fraction of its distinct shingles occur in the container
+#: (``dedup_containment`` and its capped/auto siblings).
+CONTAINMENT_THRESHOLD = 0.8
+
 #: containment auto-dial budget: keep the exact (full-recall) prefix
 #: join while its exact pre-prune cardinality V = Σ_s prefix(s)·full(s)
 #: stays ≤ this × n_docs; above it switch to the capped-LSH candidate
@@ -218,6 +223,12 @@ JACCARD_AUTO_MAX_PAIRS_PER_DOC = 150
 #: wall at 10 000 (53 s, one ~50M-pair task); the capped arm stays
 #: ~1 s throughout. 5000 sits in the measured gap.
 THEIL_SEN_AUTO_MAX_POINTS_PER_USER = 5000
+
+#: per-user sample cap of the capped Theil–Sen arm: ≤ this many
+#: events per user (hash-min sample), so ≤ C(32, 2) = 496 slope
+#: pairs per user whatever the activity skew.
+THEIL_SEN_CAP = 32
+
 MINHASH_COEFFS = tuple(
     (
         ((p * 2654435761 + 1) % (1 << 29)) | 1,

@@ -224,7 +224,7 @@ def bucketed_join(
     db_dir: str | None = None,
 ) -> DataFrame:
     """co-located join via BUCKETED TABLES: write both sides
-    ``bucketBy(key)`` as managed tables, then join the bucketed
+    ``bucketBy(key)`` as tables, then join the bucketed
     reads — Spark matches the bucket specs and elides BOTH shuffle
     exchanges (asserted in tests/test_sinks.py).
 
@@ -260,4 +260,10 @@ def bucketed_join(
         .option("path", f"{db_dir}/{rt}")
         .saveAsTable(rt)
     )
-    return spark.table(lt).join(spark.table(rt), key)
+    joined = spark.table(lt).join(spark.table(rt), key)
+    # the built frame holds both resolved relations (bucket specs
+    # included), so the catalog entries can go now; the tables are
+    # external, so their files stay until the scratch root is removed
+    for t in (lt, rt):
+        spark.sql(f"DROP TABLE {t}")
+    return joined

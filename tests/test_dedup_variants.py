@@ -7,6 +7,7 @@ implementations (the 'same answer, better plan' contract):
 
 from __future__ import annotations
 
+from rsbsa_etl_spark import params
 from rsbsa_etl_spark.functions import dedup
 from rsbsa_etl_spark.sources.fixtures import load
 
@@ -61,12 +62,13 @@ def test_semantic_dedup_invariants(spark):
                 assert r.keep  # exemplar always kept
 
 
-def test_containment_auto_picks_bit_identical_arm(spark):
+def test_containment_auto_picks_bit_identical_arm(spark, monkeypatch):
     """the r14 containment auto-dial (mirroring the r13 MMR pool
     auto-dial contract): on EACH side of the budget boundary the
     auto entry point's rows must be bit-identical to the explicit
     arm it delegates to — the dial only chooses, never changes
-    results. Budget overrides force both sides on the same corpus;
+    results. Patching the ``params`` budget forces both sides on the
+    same corpus;
     the default budget's data-driven picks at the fixture SFs are
     oracle-checked by the registered key."""
     docs = load(spark, SF_DIR, "documents")
@@ -81,16 +83,19 @@ def test_containment_auto_picks_bit_identical_arm(spark):
         )
     )
     # a huge budget keeps the full-recall exact arm
-    assert rows(dedup.containment_pairs_auto(docs, max_pairs_per_doc=1 << 40)) == exact
+    monkeypatch.setattr(params, "CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC", 1 << 40)
+    assert rows(dedup.containment_pairs_auto(docs)) == exact
     # a zero budget forces the capped-LSH arm
-    assert rows(dedup.containment_pairs_auto(docs, max_pairs_per_doc=0)) == capped
+    monkeypatch.setattr(params, "CONTAINMENT_AUTO_MAX_PAIRS_PER_DOC", 0)
+    assert rows(dedup.containment_pairs_auto(docs)) == capped
     assert len(exact) > 0  # non-vacuous fixture
 
 
-def test_jaccard_auto_picks_bit_identical_arm(spark):
+def test_jaccard_auto_picks_bit_identical_arm(spark, monkeypatch):
     """r14 Jaccard auto-dial, same contract as the containment dial:
-    budget overrides force each side of the boundary on one corpus
-    and the auto rows must equal the explicit arm exactly."""
+    patching the ``params`` budget forces each side of the boundary
+    on one corpus and the auto rows must equal the explicit arm
+    exactly."""
     docs = load(spark, SF_DIR, "documents")
 
     def rows(df):
@@ -102,8 +107,10 @@ def test_jaccard_auto_picks_bit_identical_arm(spark):
             docs, candidates=dedup.minhash_capped_pairs(docs)
         )
     )
-    assert rows(dedup.jaccard_pairs_auto(docs, max_pairs_per_doc=1 << 40)) == exact
-    assert rows(dedup.jaccard_pairs_auto(docs, max_pairs_per_doc=0)) == capped
+    monkeypatch.setattr(params, "JACCARD_AUTO_MAX_PAIRS_PER_DOC", 1 << 40)
+    assert rows(dedup.jaccard_pairs_auto(docs)) == exact
+    monkeypatch.setattr(params, "JACCARD_AUTO_MAX_PAIRS_PER_DOC", 0)
+    assert rows(dedup.jaccard_pairs_auto(docs)) == capped
     assert len(exact) > 0
 
 

@@ -2093,65 +2093,14 @@ def test_intra_doc_spans_degenerate_repetition_doc(spark):
     assert cut[2]["clean_md5"] == hashlib.md5(control.encode()).hexdigest()
 
 
-def test_nprobe_for_recall_tracks_the_measured_curve():
-    """the r14 nprobe sizing helper must reproduce the stored r9
-    measurement exactly inside the measured range, extrapolate by
-    the tail's per-doubling gain above it, and be monotone in the
-    target (more recall never costs fewer probes)."""
-    from rsbsa_etl_spark.functions.similarity import (
-        IVF_GRAPH_RECALL_CURVE,
-        nprobe_for_recall,
-    )
-
-    # measured points are exact lookups (smallest nprobe meeting it)
-    for geom, curve in IVF_GRAPH_RECALL_CURVE.items():
-        for nprobe, recall in curve:
-            assert nprobe_for_recall(recall, geom) == nprobe, (geom, nprobe)
-    # the documented knee: ~0.8 clustered → the default 8
-    assert nprobe_for_recall(0.78, "clustered") == 8
-    # between points → the next measured step up
-    assert nprobe_for_recall(0.80, "clustered") == 16
-    # above the measured range → tail-gain doublings (clustered tail
-    # gain 0.07/doubling: 0.95→64:1.0 capped ⇒ 0.97 needs 64)
-    assert nprobe_for_recall(0.97, "clustered") == 64
-    # monotone in the target, both geometries
-    for geom in IVF_GRAPH_RECALL_CURVE:
-        picks = [nprobe_for_recall(t / 100, geom) for t in range(5, 100, 5)]
-        assert picks == sorted(picks), geom
-    # the structureless floor needs far more probes for the same
-    # target — the reason geometry is caller-declared
-    assert nprobe_for_recall(0.6, "isotropic") > nprobe_for_recall(
-        0.6, "clustered"
-    )
-    # r14 advice item 3: a target above 1.0 previously looped forever
-    # (extrapolated recall saturates at 1.0 while gain stays
-    # positive) — it must clamp to 1.0 and terminate, identically to
-    # asking for perfect recall
-    assert nprobe_for_recall(1.5, "clustered") == nprobe_for_recall(
-        1.0, "clustered"
-    )
-    assert nprobe_for_recall(-0.5, "clustered") == 4  # clamps to 0.0
-    # a flat measured tail with the target unmet must raise, not
-    # return an nprobe that silently misses the target
-    from rsbsa_etl_spark.functions import similarity as _sim
-
-    flat = {"flat": ((4, 0.5), (8, 0.5))}
-    orig = _sim.IVF_GRAPH_RECALL_CURVE
-    _sim.IVF_GRAPH_RECALL_CURVE = flat
-    try:
-        with pytest.raises(ValueError, match="unreachable"):
-            nprobe_for_recall(0.9, "flat")
-        assert nprobe_for_recall(0.5, "flat") == 4  # reachable: fine
-    finally:
-        _sim.IVF_GRAPH_RECALL_CURVE = orig
-
-
-def test_knn_graph_auto_picks_bit_identical_arm(spark):
+def test_knn_graph_auto_picks_bit_identical_arm(spark, monkeypatch):
     """r14 kNN-graph auto-dial: on each side of the vector-count
     budget the auto entry point must be bit-identical to the
     explicit arm it delegates to (the dial chooses, never changes
-    results). Budget overrides force both sides on one corpus; the
-    registered key's default pick is oracle-checked."""
+    results). Patching the ``params`` budget forces both sides on
+    one corpus; the registered key's default pick is
+    oracle-checked."""
+    from rsbsa_etl_spark import params
     from rsbsa_etl_spark.functions import similarity
     from rsbsa_etl_spark.sources.fixtures import load
     from tests.conftest import SF_DIR
@@ -2163,49 +2112,15 @@ def test_knn_graph_auto_picks_bit_identical_arm(spark):
 
     exact = rows(similarity.knn_graph(emb))
     ivf = rows(similarity.knn_graph_ivf(emb))
-    assert rows(similarity.knn_graph_auto(emb, max_vectors=1 << 40)) == exact
-    assert rows(similarity.knn_graph_auto(emb, max_vectors=0)) == ivf
+    monkeypatch.setattr(params, "KNN_GRAPH_AUTO_MAX_VECTORS", 1 << 40)
+    assert rows(similarity.knn_graph_auto(emb)) == exact
+    monkeypatch.setattr(params, "KNN_GRAPH_AUTO_MAX_VECTORS", 0)
+    assert rows(similarity.knn_graph_auto(emb)) == ivf
     assert len(exact) > 0 and exact != ivf  # the dial is a real choice
 
 
-def test_knn_graph_auto_target_recall_sizes_nprobe(spark):
-    """r15 (r14 verdict item 6): a recall target passed to the auto
-    key must flow through nprobe_for_recall into the IVF arm when
-    the dial fires — bit-identical to the explicitly-sized arm —
-    and be ignored by the exact arm (recall 1 by construction)."""
-    from rsbsa_etl_spark.functions import similarity
-    from rsbsa_etl_spark.sources.fixtures import load
-    from tests.conftest import SF_DIR
-
-    emb = load(spark, SF_DIR, "embeddings")
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    # the sizing contract itself (stored-curve lookups)
-    assert similarity.nprobe_for_recall(0.88, "clustered") == 16
-    # dial fired (max_vectors=0) + target → the nprobe-16 IVF arm
-    assert rows(
-        similarity.knn_graph_auto(emb, max_vectors=0, target_recall=0.88)
-    ) == rows(similarity.knn_graph_ivf(emb, nprobe=16))
-    # exact side ignores the target — identical to the plain arm
-    assert rows(
-        similarity.knn_graph_auto(
-            emb, max_vectors=1 << 40, target_recall=0.88
-        )
-    ) == rows(similarity.knn_graph(emb))
-    # geometry="auto" detects the fixture as isotropic and sizes
-    # from THAT curve (0.6 → nprobe 32 isotropic vs 4 clustered)
-    assert similarity.nprobe_for_recall(0.6, "isotropic") == 32
-    assert rows(
-        similarity.knn_graph_auto(
-            emb, max_vectors=0, target_recall=0.6, geometry="auto"
-        )
-    ) == rows(similarity.knn_graph_ivf(emb, nprobe=32))
-
-
-def test_detect_geometry_separates_the_curves(spark):
-    """r15 geometry detection (the stretch half of item 6): the
+def test_geometry_profile_separates_the_curves(spark):
+    """r15 geometry detection (``geometry_profile``'s verdict): the
     mean-assigned-cosine statistic vs the analytic EVT null must
     call the driver fixture's isotropic gaussian corpus 'isotropic'
     (its mean sits BELOW sqrt(2·ln(m)/64) — probe self-assignments
@@ -2219,8 +2134,11 @@ def test_detect_geometry_separates_the_curves(spark):
     from rsbsa_etl_spark.sources.fixtures import load
     from tests.conftest import SF_DIR
 
+    def verdict(df):
+        return similarity.geometry_profile(df).collect()[0]["geometry"]
+
     emb = load(spark, SF_DIR, "embeddings")
-    assert similarity.detect_geometry(emb) == "isotropic"
+    assert verdict(emb) == "isotropic"
     base = emb.where(SF.col("vec_id") < 5).select(
         SF.col("vec_id").alias("b"), SF.col("embedding").alias("bv")
     )
@@ -2229,17 +2147,19 @@ def test_detect_geometry_separates_the_curves(spark):
         .join(base, "b")
         .select("vec_id", SF.col("bv").alias("embedding"))
     )
-    assert similarity.detect_geometry(clustered) == "clustered"
+    assert verdict(clustered) == "clustered"
 
 
-def test_embedding_dedup_auto_picks_bit_identical_arm(spark):
+def test_embedding_dedup_auto_picks_bit_identical_arm(spark, monkeypatch):
     """r15 embedding-dedup auto-dial (the last quadratic kernel's
-    wired crossover): budget overrides force each side on one corpus;
+    wired crossover): patching the ``params`` budget forces each side
+    on one corpus;
     the exact side must be bit-identical to cosine_pairs, and the
     semantic side must be exactly dedup_semantic's member→exemplar
     prune edges in the shared (vec_a < vec_b, cosine) pair contract."""
     from pyspark.sql import functions as SF
 
+    from rsbsa_etl_spark import params
     from rsbsa_etl_spark.functions import similarity
     from rsbsa_etl_spark.sources.fixtures import load
     from tests.conftest import SF_DIR
@@ -2259,8 +2179,10 @@ def test_embedding_dedup_auto_picks_bit_identical_arm(spark):
             SF.col("cos_exemplar").alias("cosine"),
         )
     )
-    auto_exact = similarity.embedding_dedup_auto(emb, max_vectors=1 << 40)
-    auto_sem = similarity.embedding_dedup_auto(emb, max_vectors=0)
+    monkeypatch.setattr(params, "DEDUP_EMBEDDING_AUTO_MAX_VECTORS", 1 << 40)
+    auto_exact = similarity.embedding_dedup_auto(emb)
+    monkeypatch.setattr(params, "DEDUP_EMBEDDING_AUTO_MAX_VECTORS", 0)
+    auto_sem = similarity.embedding_dedup_auto(emb)
     # the two sides share one column contract (driver-stable schema)
     assert auto_exact.columns == auto_sem.columns == [
         "vec_a", "vec_b", "cosine"
@@ -2275,10 +2197,11 @@ def test_embedding_dedup_auto_picks_bit_identical_arm(spark):
     assert all(c >= COSINE_THRESHOLD for _, _, c in sem_edges)
 
 
-def test_theil_sen_auto_picks_bit_identical_arm(spark):
-    """r14 Theil-Sen SKEW auto-dial: budget overrides force each
-    side on one corpus; the auto rows must equal the explicit arm
-    exactly (the dial chooses, never changes results)."""
+def test_theil_sen_auto_picks_bit_identical_arm(spark, monkeypatch):
+    """r14 Theil-Sen SKEW auto-dial: patching the ``params`` budget
+    forces each side on one corpus; the auto rows must equal the
+    explicit arm exactly (the dial chooses, never changes results)."""
+    from rsbsa_etl_spark import params
     from rsbsa_etl_spark.operators.analytics import (
         trend_theil_sen,
         trend_theil_sen_auto,
@@ -2294,6 +2217,8 @@ def test_theil_sen_auto_picks_bit_identical_arm(spark):
 
     exact = rows(trend_theil_sen(ev))
     capped = rows(trend_theil_sen_capped(ev))
-    assert rows(trend_theil_sen_auto(ev, max_points_per_user=1 << 40)) == exact
-    assert rows(trend_theil_sen_auto(ev, max_points_per_user=0)) == capped
+    monkeypatch.setattr(params, "THEIL_SEN_AUTO_MAX_POINTS_PER_USER", 1 << 40)
+    assert rows(trend_theil_sen_auto(ev)) == exact
+    monkeypatch.setattr(params, "THEIL_SEN_AUTO_MAX_POINTS_PER_USER", 0)
+    assert rows(trend_theil_sen_auto(ev)) == capped
     assert len(exact) > 0 and exact != capped  # the dial is a real choice

@@ -241,6 +241,28 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
+def test_join_bucketed_leaves_the_catalog_as_it_was(spark):
+    """``bucketed_join`` registers two bucketed tables only to read
+    them back; once the join frame is built their catalog entries
+    are dropped, so repeated builds in one long-lived session do not
+    grow the catalog. The dropped entries change neither the rows
+    nor the shuffle-free plan."""
+    from rsbsa_etl_spark.registry import QUERIES
+
+    def names():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = names()
+    rows = []
+    for _ in range(3):
+        df = QUERIES["join_bucketed"](spark, SF_DIR)
+        rows.append(sorted(map(tuple, df.collect())))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning" not in plan
+    assert names() == before
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+
+
 def test_compact_files_reduces_file_count(spark, tmp_path):
     """many small files in, few target-sized files out, data
     byte-identical (the OPTIMIZE maintenance job)."""

@@ -352,10 +352,6 @@ LIBRARY_ENTRYPOINT_EXEMPTIONS = {
     # shares shingle_windows with the registered exploded form and
     # its oracle mirror is SHINGLES_CTE (oracles.py:54)
     "rsbsa_etl_spark.functions.dedup.shingles_col",
-    # pure sizing helper over the r9 MEASURED recall curve (no Spark
-    # plan, no DataFrame): turns a caller's recall target into the
-    # knn_graph_ivf nprobe knob; unit-tested in tests/test_property.py
-    "rsbsa_etl_spark.functions.similarity.nprobe_for_recall",
 }
 
 
