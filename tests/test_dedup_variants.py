@@ -68,9 +68,8 @@ def test_containment_auto_picks_bit_identical_arm(spark, monkeypatch):
     auto entry point's rows must be bit-identical to the explicit
     arm it delegates to — the dial only chooses, never changes
     results. Patching the ``params`` budget forces both sides on the
-    same corpus;
-    the default budget's data-driven picks at the fixture SFs are
-    oracle-checked by the registered key."""
+    same corpus; the default budget's data-driven picks at the
+    fixture SFs are oracle-checked by the registered key."""
     docs = load(spark, SF_DIR, "documents")
 
     def rows(df):
