@@ -5,10 +5,19 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+     "sf": ..., "cpus": k, ...}
 
-Each query is materialized with ``df.count()`` after a warm-up of the
-input file listing — we time the engine, not the JVM cold start.
+Each query is built and materialized with ``df.count()``, best of 3
+repeats (2 under ``--sf1-headline``), after a warm-up of the input
+file listing and the Python worker pool — we time the engine, not the
+JVM cold start. ``cpus`` is the k of the session's ``local[k]``. The
+full per-key map goes to BENCH_FULL.json (BENCH_SF1.json under
+``--sf1-headline``). When the record it replaces was taken at the same
+``sf`` on the same ``cpus``, the new record also carries the raw total
+ratio over the keys both timed (``common_set_*``); a record at another
+scale or core count does not compare. Speed claims come from
+interleaved same-session A/B runs; this ratio only corroborates them.
 """
 
 from __future__ import annotations
@@ -263,8 +272,9 @@ HEADLINE = [
 #: once-per-round sf1 record compares the same work across rounds.
 #: Rationale: the TPC-H decade rows (SCALING.md) measured sf0.1 as
 #: overhead-dominated (growth exponents 0.32-0.84), so a pure-sf0.1
-#: bench can hide a data-bound regression behind the per-key floor;
-#: one decade up, the expensive keys are data-bound enough to show it.
+#: bench can hide a data-bound regression behind the fixed per-key
+#: overhead; one decade up, the expensive keys are data-bound enough
+#: to show it.
 SF1_HEADLINE = [
     "ann_eval", "hybrid_mmr", "ann_index_roundtrip",
     "curation_pipeline", "dedup_containment", "prf_expand",
@@ -315,33 +325,41 @@ def _ensure_sf1_fixture() -> str:
     return SF1_DIR
 
 
-def _probe_floors(spark, sf_dir: str, best_of: int = 2) -> tuple[float, float]:
-    """One (scan_floor, cpu_floor) sample of the CURRENT host window.
+def read_record(path: str) -> dict | None:
+    """the bench record at ``path``, or None when it is missing or
+    not valid JSON."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
 
-    r15 (r14 verdict item 1): the start-of-run floors cannot see
-    mid-run tenant arrivals — five same-tree r14 runs spread
-    125-171 s from load that landed AFTER calibration. The bench now
-    re-probes every SPARK_GRAFT_FLOOR_EVERY keys and records which
-    probe segment each key ran in, so (a) the record carries its own
-    intra-run drift, and (b) round-over-round comparison can
-    normalize PER KEY against the floor context that key actually
-    experienced. The cpu probe is the axis that tracks external
-    32-thread contention (the r7 observation: tenant load leaves the
-    IO-bound scan floor nearly untouched while stealing a
-    proportional slice of every wide stage)."""
-    f = float("inf")
-    for _ in range(best_of):
-        t0 = time.perf_counter()
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-        f = min(f, time.perf_counter() - t0)
-    c = float("inf")
-    for _ in range(best_of):
-        t0 = time.perf_counter()
-        spark.range(20_000_000).selectExpr(
-            "xxhash64(id) % 1024 AS k", "id AS v"
-        ).groupBy("k").sum("v").count()
-        c = min(c, time.perf_counter() - t0)
-    return round(f, 3), round(c, 3)
+
+def common_set_comparison(
+    prev: dict | None, timings: dict[str, float], sf: float | None, cpus: int
+) -> dict:
+    """raw total ratio over the keys this run and the previous record
+    both timed, or {} when the two do not compare: no previous record,
+    or one taken at another ``sf`` (a one-off sf0.01 run would make
+    the ratio a ~10x artifact) or on another core count."""
+    if not (
+        isinstance(prev, dict)
+        and isinstance(prev.get("queries"), dict)
+        and prev.get("sf") == sf
+        and prev.get("cpus") == cpus
+    ):
+        return {}
+    common = [k for k in timings if k in prev["queries"]]
+    prev_sum = sum(prev["queries"][k] for k in common)
+    now_sum = sum(timings[k] for k in common)
+    if not common or prev_sum <= 0:
+        return {}
+    return {
+        "common_set_n": len(common),
+        "common_set_prev_sec": round(prev_sum, 3),
+        "common_set_now_sec": round(now_sum, 3),
+        "common_set_ratio_raw": round(now_sum / prev_sum, 3),
+    }
 
 
 def main() -> None:
@@ -355,6 +373,7 @@ def main() -> None:
     from rsbsa_etl_spark.session import get_spark
 
     spark = get_spark(app_name="rsbsa_bench")
+    cpus = int(spark.sparkContext.master[len("local["):-1])
 
     # warm-up: JVM + file listing + parquet footers + Python worker
     # pool (mapInPandas paths fork one worker per core on first use —
@@ -367,119 +386,29 @@ def main() -> None:
     # best-of-N per query: the host is shared and noisy, and a single
     # timing can be 30-50% off; the min over repeats estimates the
     # engine's actual cost (repeat 1 also warms each query's own scan)
-    repeats = max(
-        1,
-        int(
-            os.environ.get(
-                "SPARK_GRAFT_BENCH_REPEATS", "2" if sf1_mode else "3"
-            )
-        ),
-    )
+    repeats = 2 if sf1_mode else 3
 
-    # host-noise calibration: warm-scan + cpu floors, best-of-3 at
-    # start of run. Query code never touches these numbers — they
-    # move only with the environment (the r4 record was globally
-    # ~1.5x slow purely from a degraded host window), so readers can
-    # normalize cross-round comparisons against the floor ratio of
-    # the two records, not 1.0. Since r15 the floors are ALSO
-    # re-probed mid-run (see _probe_floors): the start-of-run floor
-    # cannot see mid-run tenant arrivals.
-    scan_floor, cpu_floor = _probe_floors(spark, sf_dir, best_of=3)
-    # third calibration axis: OS load average BEFORE this run's own
-    # work — external tenant load on the shared host steals a roughly
-    # proportional slice from every 32-thread stage while leaving the
-    # IO-bound scan floor (and a short cpu probe) nearly untouched;
-    # round 7 measured a broad ~10% query drift at BETTER floors that
-    # matched a 3.9/32 background load exactly. Recorded so future
-    # cross-round comparisons can see all three environment axes.
+    # OS load average BEFORE this run's own work: external tenant load
+    # on the shared host steals a slice of every stage, so a reader
+    # comparing two records can see whether the host was busy
     load_1m, load_5m, _ = os.getloadavg()
-    probe_every = int(os.environ.get("SPARK_GRAFT_FLOOR_EVERY", "25"))
-    floor_probes: list[dict] = [
-        {"after_n_keys": 0, "scan": scan_floor, "cpu": cpu_floor}
-    ]
-    key_floor_seg: dict[str, int] = {}
-    key_spread: dict[str, float] = {}
     timings: dict[str, float] = {}
     bench_keys = (
         SF1_HEADLINE + SF1_HEADLINE_V2 if sf1_mode else HEADLINE
     )
-    for i, name in enumerate(bench_keys):
-        if probe_every and i and i % probe_every == 0:
-            s, c = _probe_floors(spark, sf_dir)
-            floor_probes.append({"after_n_keys": i, "scan": s, "cpu": c})
+    for name in bench_keys:
         samples = []
         for _ in range(repeats):
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).count()
             samples.append(time.perf_counter() - t0)
         timings[name] = round(min(samples), 3)
-        key_floor_seg[name] = len(floor_probes) - 1
-        if repeats > 2:
-            # repeat-to-repeat spread of THIS key in THIS run — the
-            # within-run sampling noise the best-of-N min rides on.
-            # The FIRST repeat is excluded: it warms the key's own
-            # scan/plan and measures warmup, not noise (at small SFs
-            # it dominates: ~2x the warm repeats).
-            warm = samples[1:]
-            if min(warm) > 0:
-                key_spread[name] = round(
-                    (max(warm) - min(warm)) / min(warm), 3
-                )
         # several operators persist() intermediates (LSH bands, fuzzy
         # variants, PageRank edges); each bench call pins a fresh copy
         # and the accumulation evicts/GC-thrashes later queries —
         # measured 5x slowdowns late in the run. Clear between queries
         # so each is timed against an empty cache.
         spark.catalog.clearCache()
-
-    # headline floors = the BEST window observed across all probes
-    # (the true floor of this run's environment); intra-run drift =
-    # worst/best probe ratio per axis — the record's own evidence of
-    # mid-run tenant arrivals the start-of-run calibration missed.
-    scan_floor = min(p["scan"] for p in floor_probes)
-    cpu_floor = min(p["cpu"] for p in floor_probes)
-
-    def _med(vals: list) -> float:
-        s = sorted(vals)
-        return s[len(s) // 2]
-
-    floor_drift = {
-        # max/min — the worst window this run saw (a spike detector)
-        "scan": round(max(p["scan"] for p in floor_probes) / scan_floor, 3),
-        "cpu": round(max(p["cpu"] for p in floor_probes) / cpu_floor, 3),
-        # median/min — SUSTAINED elevation (robust to one GC-pause
-        # probe; tenant load that matters holds for minutes and lifts
-        # several consecutive probes, which moves the median)
-        "scan_med": round(
-            _med([p["scan"] for p in floor_probes]) / scan_floor, 3
-        ),
-        "cpu_med": round(
-            _med([p["cpu"] for p in floor_probes]) / cpu_floor, 3
-        ),
-    }
-    spreads = sorted(key_spread.values())
-    dispersion = {
-        "key_spread_median": spreads[len(spreads) // 2] if spreads else None,
-        "key_spread_p90": (
-            spreads[min(len(spreads) - 1, int(len(spreads) * 0.9))]
-            if spreads
-            else None
-        ),
-    }
-    # the record's own error bar on the TOTAL, from the two noise
-    # axes this run itself measured: median per-key warm-repeat
-    # spread (within-run sampling noise) and SUSTAINED intra-run
-    # floor drift (environment moved under the run; the median-based
-    # drift, so one outlier probe cannot blow up the bar). Two
-    # same-tree runs should agree within the sum of their bars
-    # (validated r15, LOCAL_SWEEP_r15.md).
-    error_bar_frac = round(
-        max(
-            dispersion["key_spread_median"] or 0.0,
-            max(floor_drift["scan_med"], floor_drift["cpu_med"]) - 1.0,
-        ),
-        3,
-    )
 
     # in sf1 mode the headline total stays the FROZEN v1 set (the
     # three-point lineage metric); v2 gets its own total field so
@@ -505,164 +434,30 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)),
         "BENCH_SF1.json" if sf1_mode else "BENCH_FULL.json",
     )
-
-    # Round-over-round comparison, machine-derived: before overwriting
-    # the committed BENCH_FULL.json (the previous round's record),
-    # compute the common-key-set total ratio — raw, and normalized by
-    # the scan-floor ratio of the two windows, so "is this round
-    # actually slower or was the host just busier" stops being a
-    # hand-computed claim. Only comparable records compare: a prior
-    # record at a DIFFERENT scale factor (e.g. a one-off sf0.01 run)
-    # would make every ratio a bogus ~10x artifact, so the comparison
-    # is emitted only when prev.sf == this run's sf.
-    metric = "sf1_headline_total" if sf1_mode else "headline_queries_total"
-    comparison: dict = {}
-    try:
-        with open(full_path) as fh:
-            prev = json.load(fh)
-    except (OSError, ValueError):
-        prev = None
-    if (
-        prev
-        and isinstance(prev.get("queries"), dict)
-        and prev.get("sf") == sf_val
-    ):
-        common = [k for k in timings if k in prev["queries"]]
-        prev_sum = sum(prev["queries"][k] for k in common)
-        now_sum = sum(timings[k] for k in common)
-        if common and prev_sum > 0:
-            raw = now_sum / prev_sum
-            pf = prev.get("scan_floor_sec")
-            comparison = {
-                "common_set_n": len(common),
-                "common_set_prev_sec": round(prev_sum, 3),
-                "common_set_now_sec": round(now_sum, 3),
-                "common_set_ratio_raw": round(raw, 3),
-                "prev_scan_floor_sec": pf,
-            }
-            if pf and scan_floor:
-                comparison["common_set_ratio_normalized"] = round(
-                    raw / (scan_floor / pf), 3
-                )
-            # r15: per-KEY floor normalization — each key's time is
-            # rescaled by the cpu-floor ratio of the probe segment it
-            # ran in (this run vs the previous record), so a tenant
-            # spike that hit only the middle of one run no longer
-            # smears the whole ratio (the r14 instrument hazard: five
-            # same-tree runs spread 125-171 s). cpu floor is the axis
-            # that tracks external 32-thread contention; requires the
-            # previous record to carry per-key floor context (r15+).
-            prev_probes = prev.get("floor_probes")
-            prev_seg = prev.get("key_floor_seg")
-            if (
-                isinstance(prev_probes, list)
-                and isinstance(prev_seg, dict)
-                and all(p.get("cpu") for p in prev_probes)
-            ):
-                num = den = 0.0
-                # r16 (r15 verdict item 7): the per-KEY keyfloor-
-                # normalized ratio and a noise-robust status label,
-                # emitted by the bench itself so round-over-round
-                # improved/flat/regressed calls stop being computed
-                # on raw seconds out of a drifting window. The label
-                # band is each key's own measured warm-repeat spread
-                # (both runs', when the previous record carries one)
-                # with a 10% floor — a key is only "improved" or
-                # "regressed" when its floor-normalized movement
-                # exceeds what the two records themselves measured
-                # as sampling noise.
-                per_key_ratio: dict[str, float] = {}
-                per_key_status: dict[str, str] = {}
-                prev_spread = prev.get("key_spread") or {}
-                for k in common:
-                    if k not in prev_seg or k not in key_floor_seg:
-                        continue
-                    pc = prev_probes[prev_seg[k]]["cpu"]
-                    nc = floor_probes[key_floor_seg[k]]["cpu"]
-                    if not (pc and nc):
-                        continue
-                    num += timings[k] * (pc / nc)
-                    den += prev["queries"][k]
-                    if prev["queries"][k] > 0:
-                        r = (timings[k] * (pc / nc)) / prev["queries"][k]
-                        per_key_ratio[k] = round(r, 3)
-                        band = max(
-                            0.10,
-                            float(key_spread.get(k, 0.0)),
-                            float(prev_spread.get(k, 0.0)),
-                        )
-                        per_key_status[k] = (
-                            "improved"
-                            if r <= 1.0 - band
-                            else ("regressed" if r >= 1.0 + band else "flat")
-                        )
-                if den > 0:
-                    comparison["common_set_ratio_keyfloor_normalized"] = (
-                        round(num / den, 3)
-                    )
-                    comparison["per_key_normalized_ratio"] = per_key_ratio
-                    comparison["per_key_status"] = per_key_status
-                    comparison["n_improved_normalized"] = sum(
-                        1 for s in per_key_status.values() if s == "improved"
-                    )
-                    comparison["n_regressed_normalized"] = sum(
-                        1 for s in per_key_status.values() if s == "regressed"
-                    )
-
+    record = {
+        "metric": "sf1_headline_total" if sf1_mode else "headline_queries_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf_val,
+        "cpus": cpus,
+        "n_queries": len(timings),
+        "load_avg_prerun": [round(load_1m, 2), round(load_5m, 2)],
+        **v2_fields,
+        # read before the write below replaces the previous record
+        **common_set_comparison(read_record(full_path), timings, sf_val, cpus),
+    }
     with open(full_path, "w") as fh:
-        json.dump(
-            {
-                "metric": metric,
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "scan_floor_sec": scan_floor,
-                "cpu_floor_sec": cpu_floor,
-                "load_avg_prerun": [round(load_1m, 2), round(load_5m, 2)],
-                "floor_probes": floor_probes,
-                "key_floor_seg": key_floor_seg,
-                "key_spread": key_spread,
-                "floor_drift": floor_drift,
-                "dispersion": dispersion,
-                "error_bar_frac": error_bar_frac,
-                **v2_fields,
-                **comparison,
-            },
-            fh,
-            indent=1,
-        )
+        json.dump(record, fh, indent=1)
 
     # Final stdout line stays compact (slowest 10 only) so the tail
-    # capture can always parse it; the per-key normalized maps stay
-    # in the file record.
-    slim_comparison = {
-        k: v
-        for k, v in comparison.items()
-        if k not in ("per_key_normalized_ratio", "per_key_status")
-    }
+    # capture can always parse it.
     slowest = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
     print(
         json.dumps(
-            {
-                "metric": metric,
-                "value": total,
-                "unit": "sec",
-                "queries": slowest,
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "scan_floor_sec": scan_floor,
-                "cpu_floor_sec": cpu_floor,
-                "load_avg_prerun": [round(load_1m, 2), round(load_5m, 2)],
-                "floor_drift": floor_drift,
-                "error_bar_frac": error_bar_frac,
-                **v2_fields,
-                **slim_comparison,
-                "full": os.path.basename(full_path),
-            },
+            {**record, "queries": slowest, "full": os.path.basename(full_path)},
             separators=(",", ":"),
         )
     )

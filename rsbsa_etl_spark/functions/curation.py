@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from rsbsa_etl_spark import params as P
 from rsbsa_etl_spark.functions.dedup import shingle_rows, tokens_col
-from rsbsa_etl_spark.functions.numeric import dec_round, salted_pri
+from rsbsa_etl_spark.functions.numeric import dec_round, hex_bigint, salted_pri
 
 # ------------------------------------------------------- repetition scoring
 
@@ -321,7 +321,7 @@ def temperature_sample(docs: DataFrame) -> DataFrame:
         F.floor(F.lit(float(P.SAMPLE_K) * 4294967296.0) / F.sqrt(F.col("c_d"))),
     )
     hashed = domained.withColumn(
-        "u32", F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
+        "u32", hex_bigint(F.md5(F.col("doc_id").cast("string")))
     )
     return (
         hashed.join(F.broadcast(thr), "domain")
@@ -472,17 +472,10 @@ def weighted_sample(
         spark.range(kk)
         .select(
             F.col("id").alias("draw_id"),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit("wsm"), F.col("id").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h60"),
+            hex_bigint(
+                F.md5(F.concat_ws("|", F.lit("wsm"), F.col("id").cast("string"))),
+                ndigits=15,
+            ).alias("h60"),
         )
         .join(F.broadcast(total))
         .select("draw_id", F.pmod(F.col("h60"), F.col("W")).alias("u"))
@@ -892,9 +885,7 @@ def deterministic_shuffle(docs: DataFrame, n_shards: int = 8) -> DataFrame:
     order, both reproducible across cluster sizes.
     """
     key = F.md5(F.concat_ws(":", F.lit("seed42"), F.col("doc_id")))
-    shard = F.pmod(
-        F.conv(F.substring(key, 1, 8), 16, 10).cast("long"), F.lit(n_shards)
-    )
+    shard = F.pmod(hex_bigint(key), F.lit(n_shards))
     w = Window.partitionBy("shard").orderBy("sort_key")
     return (
         docs.select(
@@ -971,18 +962,7 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text") -> DataFrame:
         hashed.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") == 1)
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit("v1"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = salted_pri("v1", F.col("doc_id")) % 100
     return (
         deduped.withColumn("bucket", bucket.cast("int"))
         .where(F.col("bucket") < 90)

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from rsbsa_etl_spark.functions.numeric import dec_round
+from rsbsa_etl_spark.functions.numeric import dec_round, hex_bigint
 
 from rsbsa_etl_spark.params import (
     CONTAINMENT_THRESHOLD,
@@ -251,8 +251,8 @@ def minhash_signature(
     base = shingles if shingles is not None else shingle_rows(docs, text_col)
     rows = base.select(
         "doc_id",
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("h2"),
+        hex_bigint(h).alias("h1"),
+        hex_bigint(h, 9).alias("h2"),
     )
     mins = [
         F.min(
@@ -1675,9 +1675,7 @@ def winnow_fingerprints(
     g = gram_position_rows(docs, text_col, kk).select(
         "doc_id",
         "pos",
-        F.conv(F.substring(F.md5("raw"), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("h"),
+        hex_bigint(F.md5("raw")).alias("h"),
     )
     combined = (F.col("h") * F.lit(B) - F.col("pos")).cast("long")
     frame = (

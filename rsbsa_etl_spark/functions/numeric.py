@@ -72,6 +72,14 @@ def sql_sum_fixed(expr: str, scale: int) -> str:
     )
 
 
+def hex_bigint(hex_col: Column | str, start: int = 1, ndigits: int = 8) -> Column:
+    """``ndigits`` hex digits of ``hex_col`` (an md5 hex string) from
+    1-based ``start`` as BIGINT — the one Spark-side hex-prefix hash;
+    its DuckDB twin is ``oracles._hexpoly``. ``ndigits`` ≤ 15 keeps
+    the value inside BIGINT."""
+    return F.conv(F.substring(hex_col, start, ndigits), 16, 10).cast("bigint")
+
+
 def salted_pri(salt: str, col: Column) -> Column:
     """deterministic 32-bit priority hash: first 8 hex digits of
     ``md5(salt || '|' || key)`` as BIGINT — the sampling/sharding
@@ -79,12 +87,4 @@ def salted_pri(salt: str, col: Column) -> Column:
     the streaming reservoir. One definition so the scheme (and its
     DuckDB twin, ``oracles._hexpoly``) can never drift per call
     site."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(salt), col.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-    )
+    return hex_bigint(F.md5(F.concat_ws("|", F.lit(salt), col.cast("string"))))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rsbsa_etl_spark.functions.dedup import normalized_text
-from rsbsa_etl_spark.functions.numeric import dec_round
+from rsbsa_etl_spark.functions.numeric import dec_round, hex_bigint, salted_pri
 from rsbsa_etl_spark.streaming import plan_capture
 from rsbsa_etl_spark.params import (
     CMS_DEPTH,
@@ -364,14 +364,7 @@ def split_assign(
     joinable — any table keyed by the same id lands on the same side.
     Pure column expressions, zero shuffle, fully codegen'd.
     """
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = salted_pri(salt, F.col(id_col)) % 100
     return docs.select(
         id_col,
         bucket.cast("int").alias("bucket"),
@@ -417,8 +410,8 @@ def cms_term_estimates(
     ch = tc.select(
         "term",
         "n",
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("h2"),
+        hex_bigint(h).alias("h1"),
+        hex_bigint(h, 9).alias("h2"),
     )
     buckets = [
         ((F.col("h1") * a + F.col("h2") * b + F.lit(c)) % MINHASH_MOD) % width
@@ -566,18 +559,7 @@ def stratified_sample(
     Pure column expressions: no shuffle, fully codegen'd.
     """
     rates = rates or {"error": 100, "click": 50}
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = salted_pri(salt, F.col(id_col)) % 100
     pct = F.lit(default_pct)
     for stratum, rate in sorted(rates.items()):
         pct = F.when(F.col(strata_col) == stratum, F.lit(rate)).otherwise(pct)
@@ -985,10 +967,7 @@ def feature_hash_vectors(docs: DataFrame, text_col: str = "text") -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(tokens_col(F.col(text_col))).alias("tok")
     )
-    slot = F.pmod(
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint"),
-        F.lit(D),
-    ).cast("int")
+    slot = F.pmod(hex_bigint(F.md5("tok")), F.lit(D)).cast("int")
     sparse = (
         tok.select("doc_id", slot.alias("slot"))
         .groupBy("doc_id", "slot")
@@ -1271,10 +1250,7 @@ def hashed_slot_counts(
         F.col("lang"),
         F.explode(tokens_col(F.col(text_col))).alias("tok"),
     ).where(F.length("tok") > 0)
-    slot = F.pmod(
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint"),
-        F.lit(int(dim)),
-    ).cast("int")
+    slot = F.pmod(hex_bigint(F.md5("tok")), F.lit(int(dim))).cast("int")
     return (
         tok.select("doc_id", "lang", slot.alias("slot"))
         .groupBy("doc_id", "lang", "slot")

@@ -23,7 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from rsbsa_etl_spark.functions.numeric import dec_round, fixed_sum, salted_pri
+from rsbsa_etl_spark.functions.numeric import (
+    dec_round,
+    fixed_sum,
+    hex_bigint,
+    salted_pri,
+)
 from rsbsa_etl_spark.operators.aggregates import decimal_sum
 from rsbsa_etl_spark.params import THEIL_SEN_CAP
 
@@ -406,10 +411,7 @@ def kmv_distinct(
     stays O(k) per group — expressible via applyInPandas if the
     distinct set itself ever dominates.
     """
-    h = (
-        F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-    )
+    h = hex_bigint(F.md5(F.col(key_col).cast("string")))
     hashed = df.select(F.col(group_col).alias("grp"), h.alias("h")).distinct()
     ranked = hashed.select(
         "grp",
@@ -989,10 +991,7 @@ def kmv_merge_eval(docs: DataFrame, k: int | None = None) -> DataFrame:
     from rsbsa_etl_spark.functions.dedup import shingle_windows
 
     k = P.SKETCH_MERGE_K if k is None else k
-    h = (
-        F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10)
-        .cast("bigint")
-    )
+    h = hex_bigint(F.md5(F.col("term")))
     # universe = k-word shingles (thousands of distinct values at
     # every SF — the fixture's flat TOKEN vocabulary is only ~31
     # strings, which would always fall back to exact counting and
@@ -1788,10 +1787,7 @@ def source_overlap_kmv(
     from rsbsa_etl_spark.functions.dedup import shingle_windows
 
     k = P.SKETCH_MERGE_K if k is None else k
-    h = (
-        F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10)
-        .cast("bigint")
-    )
+    h = hex_bigint(F.md5(F.col("term")))
     sh = (
         docs.select(
             "source", F.explode(shingle_windows(F.col("text"))).alias("term")

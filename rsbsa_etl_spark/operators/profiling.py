@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from rsbsa_etl_spark.functions.numeric import dec_round
+from rsbsa_etl_spark.functions.numeric import dec_round, hex_bigint, salted_pri
 
 
 def _fixed(col: Column, scale: int) -> Column:
@@ -198,22 +198,7 @@ def _arm() -> Column:
     """deterministic two-arm hash split on user_id (salt 'ab1') —
     ONE definition shared by ab_ttest and ab_cuped, whose contract
     is that both readouts see the same assignment."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit("ab1"), F.col("user_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    return salted_pri("ab1", F.col("user_id")) % 2
 
 
 def ab_ttest(events: DataFrame) -> DataFrame:
@@ -357,22 +342,16 @@ def bootstrap_ci(events: DataFrame) -> DataFrame:
         vi.alias("vi"),
         F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("rep"),
     )
-    u32 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(BOOTSTRAP_SALT),
-                    F.col("rep").cast("string"),
-                    F.col("event_id").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u32 = hex_bigint(
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.lit(BOOTSTRAP_SALT),
+                F.col("rep").cast("string"),
+                F.col("event_id").cast("string"),
+            )
+        )
+    )
     # project the draw ONCE so the 7-branch CASE chain references a
     # column, not 7 copies of the md5 subtree (the oracle's d-CTE
     # shape; bounds the hash to one evaluation per exploded row)

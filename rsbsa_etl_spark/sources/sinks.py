@@ -260,7 +260,10 @@ def bucketed_join(
         .option("path", f"{db_dir}/{rt}")
         .saveAsTable(rt)
     )
-    joined = spark.table(lt).join(spark.table(rt), key)
+    # the merge hint keeps the planner from broadcasting a small side:
+    # a broadcast join reads both tables with bucketing disabled, so
+    # only a sort-merge join uses the layout paid for above
+    joined = spark.table(lt).join(spark.table(rt).hint("merge"), key)
     # the built frame holds both resolved relations (bucket specs
     # included), so the catalog entries can go now; the tables are
     # external, so their files stay until the scratch root is removed

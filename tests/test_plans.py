@@ -725,12 +725,15 @@ def test_bloom_prune_rejects_mismatched_key_types(spark):
 
 def test_registry_bucketed_join_has_no_exchange(spark):
     # both sides are bucketed+sorted on the join key, so the join
-    # must run with ZERO shuffle exchanges — the pay-once-at-write
-    # co-location contract
+    # must run as a sort-merge join over both bucketed scans with
+    # ZERO shuffle exchanges — the pay-once-at-write co-location
+    # contract (a broadcast join would read both tables unbucketed)
     from tests.conftest import SF_DIR
 
     plan = _plan(QUERIES["join_bucketed"](spark, SF_DIR))
     assert "Exchange hashpartitioning" not in plan
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+    assert plan.count("Bucketed: true") == 2
 
 
 def test_partitioned_scan_prunes_directories(spark):

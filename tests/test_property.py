@@ -5,6 +5,9 @@ where the portability layer is the thing under test.
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import duckdb
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -59,6 +62,21 @@ def test_portable_sum_is_order_independent(xs):
     ).fetchone()
     assert d == total / q
     con.close()
+
+
+def test_hex_prefix_hash_has_one_spark_home():
+    """``conv`` (hex digits → BIGINT, the hash ``oracles._hexpoly``
+    mirrors) is called only in ``functions/numeric.py``, so no call
+    site can drift from the oracle's scheme."""
+    pkg = Path(__file__).resolve().parent.parent / "rsbsa_etl_spark"
+    sites = set()
+    for path in sorted(pkg.rglob("*.py")):
+        for call in ast.walk(ast.parse(path.read_text())):
+            if isinstance(call, ast.Call) and "conv" in (
+                getattr(call.func, "attr", None), getattr(call.func, "id", None)
+            ):
+                sites.add(path.relative_to(pkg).as_posix())
+    assert sites == {"functions/numeric.py"}
 
 
 names = st.one_of(st.none(), st.text(min_size=0, max_size=20))
